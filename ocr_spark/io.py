@@ -141,15 +141,10 @@ def _checkpoint_df(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def processed_urls(spark: SparkSession, path: str) -> DataFrame | None:
-    """urls already extracted successfully; None when no checkpoint exists."""
-    df = _checkpoint_df(spark, path)
-    if df is None:
-        return None
-    return df.filter(F.col("status") == "COMPLETED").select("url")
-
-
 def _exhausted_from(df: DataFrame, max_attempts: int) -> DataFrame:
+    """urls whose FAILED attempt count has reached the retry budget —
+    deterministic failures (e.g. PARSE_ERROR on a corrupt payload) must not
+    be retried forever or the resume loop never converges to 0."""
     return (
         df.filter(F.col("status") == "FAILED")
         .groupBy("url")
@@ -157,18 +152,6 @@ def _exhausted_from(df: DataFrame, max_attempts: int) -> DataFrame:
         .filter(F.col("_n") >= max_attempts)
         .select("url")
     )
-
-
-def exhausted_urls(
-    spark: SparkSession, path: str, max_attempts: int
-) -> DataFrame | None:
-    """urls whose FAILED attempt count has reached the retry budget —
-    deterministic failures (e.g. PARSE_ERROR on a corrupt payload) must not
-    be retried forever or the resume loop never converges to 0."""
-    df = _checkpoint_df(spark, path)
-    if df is None:
-        return None
-    return _exhausted_from(df, max_attempts)
 
 
 def pending_pages(

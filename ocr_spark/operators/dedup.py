@@ -37,6 +37,94 @@ def _hash_col(col: Column, mode: str) -> Column:
     return portable_hash_col(col) if mode == "portable" else xxhash_col(col)
 
 
+def _hot_keys(posts: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """``(keys…, n_docs)`` for every key whose posting list holds more
+    than ``cap`` rows: the exclusion list of a capped
+    :func:`_posting_pairs` and, as-is, every ``*_hot_*`` audit view — one
+    definition, so an audit names exactly the keys its cap drops."""
+    return (
+        posts.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n_docs"))
+        .filter(F.col("n_docs") > cap)
+    )
+
+
+def _posting_pairs(
+    posts: DataFrame,
+    keys: list[str],
+    id_col: str,
+    cap: int | None = None,
+    other: DataFrame | None = None,
+) -> DataFrame:
+    """The candidate-pair engine behind every bucket/posting pair
+    operator: an equi-join on ``keys`` (band bucket, shingle, fingerprint,
+    cell), never a cross join.  Without ``other`` it self-joins ``posts``
+    with ``a.id < b.id``; with ``other`` it joins new (``posts``) × old
+    (``other``).  Returns the raw join rows ``(keys…, doc_a, doc_b)`` plus
+    every other posting column once per side as ``<col>_a`` / ``<col>_b``;
+    the caller applies its own post-join step (distinct, verify, count).
+
+    Pair joins carry ids: hand it postings only — payloads (vectors,
+    text) rejoin after the pair set exists, or a hot key multiplies them
+    by its candidate count (measured 13× on cosine_pairs).
+
+    ``cap`` is OPT-IN (it bounds recall, so the caller must pass it AND
+    log the matching audit view): keys with more than ``cap`` postings
+    are dropped by count + anti-join (the count is map-side combined and
+    AQE broadcasts the small hot list).  In a cross join the count is
+    taken on the OLD side only — the accumulated big side, and a cap
+    there already bounds each key's product linearly in the new side; an
+    equi-join never matches a key missing from one side, so only that
+    side is filtered.  The audit is :func:`_hot_keys` over the same
+    frame the cap counted."""
+    right = posts if other is None else other
+    if cap is not None:
+        hot = _hot_keys(right, keys, cap).select(*keys)
+        right = right.join(hot, keys, "left_anti")
+    left = right if other is None else posts
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if other is None:
+        on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    carried = [c for c in posts.columns if c != id_col and c not in keys]
+    return left.alias("a").join(right.alias("b"), on).select(
+        *[F.col(f"a.{k}").alias(k) for k in keys],
+        F.col(f"a.{id_col}").alias("doc_a"),
+        F.col(f"b.{id_col}").alias("doc_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carried for s in "ab"],
+    )
+
+
+def _check_frame(
+    frame: DataFrame,
+    name: str,
+    cols: list[str],
+    meta_col: str,
+    build: str,
+    **params,
+) -> None:
+    """Shared-frame guard: refuse a precomputed ``sig=`` / ``shingled=``
+    / ``fps=`` / ``banded=`` / ``cells=`` frame that lacks ``cols``, or
+    whose ``meta_col`` metadata records a build parameter other than the
+    one this call passed (``params``: metadata key → expected value; a
+    None expectation or an unstamped key is not checked).  Producers stamp
+    the metadata so a mismatch fails loudly instead of silently bucketing
+    under the wrong geometry."""
+    missing = set(cols) - set(frame.columns)
+    if missing:
+        raise ValueError(
+            f"{name} frame lacks columns {sorted(missing)} — build it "
+            f"with {build}"
+        )
+    meta = frame.schema[meta_col].metadata or {}
+    for key, want in params.items():
+        got = meta.get(key)
+        if want is not None and got is not None and got != want:
+            raise ValueError(
+                f"{name} frame was built with {key}={got!r}; this call "
+                f"passed {want!r} — rebuild it with {build}"
+            )
+
+
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -158,11 +246,10 @@ def lsh_hot_buckets(
     """Audit view of the buckets the guard in :func:`lsh_candidate_pairs`
     will exclude: (band, key, n_docs) with n_docs > max_bucket.  Run/log
     this alongside a dedup job — the cap must never be silent."""
-    return (
-        _banded_keys(signatures, id_col, num_perm, bands)
-        .groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
+    return _hot_keys(
+        _banded_keys(signatures, id_col, num_perm, bands),
+        ["band", "key"],
+        max_bucket,
     )
 
 
@@ -181,8 +268,7 @@ def lsh_candidate_pairs(
     Hot-bucket guard: real corpora have degenerate band keys (empty and
     near-empty texts all share a signature), and ONE such bucket makes the
     self-join quadratic.  Buckets larger than ``max_bucket`` are excluded
-    (count per key + anti-join — the count aggregate is map-side combined
-    and AQE broadcasts the tiny hot-key list).  Members of a degenerate
+    (the :func:`_posting_pairs` cap).  Members of a degenerate
     bucket are mega-cluster near-identical content whose duplicates are
     the province of :func:`exact_dedup` (16-byte digest shuffle), not
     pairwise LSH.
@@ -193,29 +279,9 @@ def lsh_candidate_pairs(
     :func:`lsh_hot_buckets` alongside so every excluded bucket is named
     (examples/training_pipeline.py shows the pairing)."""
     exploded = _banded_keys(signatures, id_col, num_perm, bands)
-    if max_bucket is not None:
-        hot = (
-            exploded.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .filter(F.col("n_docs") > max_bucket)
-            .select("band", "key")
-        )
-        exploded = exploded.join(hot, ["band", "key"], "left_anti")
-    left = exploded.alias("a")
-    right = exploded.alias("b")
     return (
-        left.join(
-            right,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.key") == F.col("b.key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
+        _posting_pairs(exploded, ["band", "key"], id_col, max_bucket)
+        .select("doc_a", "doc_b")
         .distinct()
     )
 
@@ -225,43 +291,6 @@ def _SIG_META(bits: int, hash_mode: str) -> dict:
     a consumer handed a precomputed ``sig=`` frame can refuse a
     parameter mismatch instead of silently slicing wrong-width bands."""
     return {"simhash_bits": bits, "hash_mode": hash_mode}
-
-
-def _check_sig(sig: DataFrame, bits: int, hash_mode: str) -> None:
-    if "simhash" not in sig.columns:
-        raise ValueError(
-            "sig frame lacks a 'simhash' column — build it with "
-            "simhash(df, ...)"
-        )
-    meta = sig.schema["simhash"].metadata or {}
-    got = meta.get("simhash_bits")
-    if got is not None and int(got) != bits:
-        raise ValueError(
-            f"sig frame was built with bits={got}; this call passed "
-            f"bits={bits} — the band arithmetic would be silently wrong"
-        )
-    hm = meta.get("hash_mode")
-    if hm is not None and hm != hash_mode:
-        raise ValueError(
-            f"sig frame was built with hash_mode={hm!r}; this call "
-            f"passed hash_mode={hash_mode!r}"
-        )
-
-
-def _check_shingled(shingled: DataFrame, id_col: str, n: int) -> None:
-    missing = {id_col, "shingle"} - set(shingled.columns)
-    if missing:
-        raise ValueError(
-            f"shingled frame lacks columns {sorted(missing)} — build it "
-            f"with shingle_postings(df, text_col, {id_col!r}, n)"
-        )
-    meta = shingled.schema["shingle"].metadata or {}
-    got = meta.get("shingle_n")
-    if got is not None and int(got) != n:
-        raise ValueError(
-            f"shingled frame was built with n={got}; this call passed "
-            f"n={n} — the Jaccard width would be silently wrong"
-        )
 
 
 def ngram_jaccard_pairs(
@@ -289,33 +318,11 @@ def ngram_jaccard_pairs(
     sharing ONE persisted ``(id, shingle)`` frame between the two calls
     via ``shingled`` (build it with :func:`shingle_postings`; the capped
     plan references the shingle explode four times otherwise)."""
-    if shingled is None:
-        sh = shingle_postings(df, text_col, id_col, n)
-    else:
-        _check_shingled(shingled, id_col, n)
-        sh = shingled.select(id_col, "shingle")
+    sh = _shingle_posts(df, shingled, text_col, id_col, n)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    if max_posting is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_posting)
-            .select("shingle")
-        )
-        sh = sh.join(hot, "shingle", "left_anti")
-    a, b = sh.alias("a"), sh.alias("b")
     common = (
-        a.join(
-            b,
-            on=[
-                F.col("a.shingle") == F.col("b.shingle"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
+        _posting_pairs(sh, ["shingle"], id_col, max_posting)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("common"))
     )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
@@ -794,18 +801,31 @@ def jaccard_hot_shingles(
     never be silent (same contract as :func:`lsh_hot_buckets`); share the
     capped run's persisted :func:`shingle_postings` frame via
     ``shingled``."""
+    return _hot_keys(
+        _shingle_posts(df, shingled, text_col, id_col, n),
+        ["shingle"],
+        max_posting,
+    )
+
+
+def _shingle_posts(
+    df: DataFrame | None,
+    shingled: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    n: int,
+) -> DataFrame:
+    """``(id_col, shingle)`` postings: built from ``df``, or the caller's
+    shared :func:`shingle_postings` frame after the param guard."""
     if shingled is None:
         if df is None:
             raise ValueError("pass df or a precomputed shingled frame")
-        sh = shingle_postings(df, text_col, id_col, n)
-    else:
-        _check_shingled(shingled, id_col, n)
-        sh = shingled.select(id_col, "shingle")
-    return (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_posting)
+        return shingle_postings(df, text_col, id_col, n)
+    _check_frame(
+        shingled, "shingled", [id_col, "shingle"], "shingle",
+        f"shingle_postings(df, text_col, {id_col!r}, n)", shingle_n=n,
     )
+    return shingled.select(id_col, "shingle")
 
 
 def simhash(
@@ -889,6 +909,26 @@ def simhash(
     )
 
 
+def _sig_frame(
+    df: DataFrame,
+    sig: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    bits: int,
+    hash_mode: str,
+) -> DataFrame:
+    """The :func:`simhash` frame: built from ``df``, or the caller's
+    shared ``sig`` frame after the param guard (a wrong ``bits`` would
+    silently slice wrong-width bands)."""
+    if sig is None:
+        return simhash(df, text_col, id_col, bits, hash_mode)
+    _check_frame(
+        sig, "sig", ["simhash"], "simhash", "simhash(df, ...)",
+        simhash_bits=bits, hash_mode=hash_mode,
+    )
+    return sig
+
+
 def _sig_buckets(
     sig: DataFrame, id_col: str, sig_col: str, bits: int, max_hamming: int
 ) -> DataFrame:
@@ -949,10 +989,7 @@ def simhash_hot_buckets(
     Pass the capped run's persisted :func:`simhash` frame via ``sig`` so
     the audit reuses the per-token hashing instead of recomputing it
     (caller owns the persist lifecycle — bloom-bitmap contract)."""
-    if sig is None:
-        sig = simhash(df, text_col, id_col, bits, hash_mode)
-    else:
-        _check_sig(sig, bits, hash_mode)
+    sig = _sig_frame(df, sig, text_col, id_col, bits, hash_mode)
     return hamming_hot_buckets(
         sig, bits, max_hamming, id_col=id_col, max_bucket=max_bucket
     )
@@ -984,10 +1021,7 @@ def simhash_near_dup_pairs(
     plan references the signature subtree three times and the audit a
     fourth; Spark does not reuse-merge them — CLAUDE.md).  At corpus
     scale use ``bits=64`` so the band keyspace doesn't saturate."""
-    if sig is None:
-        sig = simhash(df, text_col, id_col, bits, hash_mode)
-    else:
-        _check_sig(sig, bits, hash_mode)
+    sig = _sig_frame(df, sig, text_col, id_col, bits, hash_mode)
     return hamming_near_dup_pairs(
         sig, bits, max_hamming, id_col=id_col, max_bucket=max_bucket
     )
@@ -1010,34 +1044,17 @@ def hamming_near_dup_pairs(
     Exact-recall pigeonhole banding (``max_hamming + 1`` bands — any
     within-budget pair agrees on a whole band), then an xor+bit_count
     verify; the band equi-join carries (id, signature) rows only.  The
-    ``max_bucket`` cap stays OPT-IN with the standard audit contract
-    (:func:`hamming_hot_buckets` with the same parameters)."""
+    ``max_bucket`` cap is the :func:`_posting_pairs` one, audited by
+    :func:`hamming_hot_buckets` with the same parameters."""
     buck = _sig_buckets(sig, id_col, sig_col, bits, max_hamming)
-    if max_bucket is not None:
-        hot = (
-            buck.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket)
-            .select("band", "key")
-        )
-        buck = buck.join(hot, ["band", "key"], "left_anti")
-    a, b = buck.alias("a"), buck.alias("b")
-    pairs = a.join(
-        b,
-        on=[
-            F.col("a.band") == F.col("b.band"),
-            F.col("a.key") == F.col("b.key"),
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-        ],
-    ).select(
-        F.col(f"a.{id_col}").alias("doc_a"),
-        F.col(f"b.{id_col}").alias("doc_b"),
-        F.expr("a._sig ^ b._sig").alias("xor"),
-    )
     return (
-        pairs.withColumn("hamming", F.bit_count("xor"))
+        _posting_pairs(buck, ["band", "key"], id_col, max_bucket)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.bit_count(F.expr("_sig_a ^ _sig_b")).alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
         .distinct()
     )
 
@@ -1053,11 +1070,10 @@ def hamming_hot_buckets(
     """Audit view for a capped :func:`hamming_near_dup_pairs` run — the
     band buckets the cap would exclude, same never-cap-silently contract
     as every pair operator."""
-    return (
-        _sig_buckets(sig, id_col, sig_col, bits, max_hamming)
-        .groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
+    return _hot_keys(
+        _sig_buckets(sig, id_col, sig_col, bits, max_hamming),
+        ["band", "key"],
+        max_bucket,
     )
 
 
@@ -1276,28 +1292,19 @@ def lsh_cross_pairs(
 
     The opt-in ``max_bucket`` guard excludes band keys whose OLD-side
     bucket exceeds the cap (the old corpus is the accumulated big side;
-    a degenerate key there makes the join product quadratic) — excluded
-    from BOTH sides so the measure is symmetric.  Same never-silent
-    contract as every cap: pass it explicitly and run/log
+    a degenerate key there makes the join product quadratic); the
+    equi-join then never matches it from the new side either.  Same
+    never-silent contract as every cap: pass it explicitly and run/log
     :func:`lsh_hot_buckets` over ``old_sigs`` alongside."""
-    a = _banded_keys(new_sigs, id_col, num_perm, bands)
-    b = _banded_keys(old_sigs, id_col, num_perm, bands)
-    if max_bucket is not None:
-        hot = (
-            b.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .filter(F.col("n_docs") > max_bucket)
-            .select("band", "key")
-        )
-        a = a.join(hot, ["band", "key"], "left_anti")
-        b = b.join(hot, ["band", "key"], "left_anti")
     return (
-        a.alias("n")
-        .join(b.alias("o"), ["band", "key"])
-        .select(
-            F.col(f"n.{id_col}").alias("new_id"),
-            F.col(f"o.{id_col}").alias("old_id"),
+        _posting_pairs(
+            _banded_keys(new_sigs, id_col, num_perm, bands),
+            ["band", "key"],
+            id_col,
+            max_bucket,
+            other=_banded_keys(old_sigs, id_col, num_perm, bands),
         )
+        .select(F.col("doc_a").alias("new_id"), F.col("doc_b").alias("old_id"))
         .distinct()
     )
 
@@ -1457,25 +1464,32 @@ def winnow_fingerprints(
     )
 
 
-def _check_fps(fps: DataFrame, id_col: str, k: int, w: int,
-               hash_mode: str) -> None:
-    missing = {id_col, "fp"} - set(fps.columns)
-    if missing:
-        raise ValueError(
-            f"fps frame lacks columns {sorted(missing)} — build it with "
-            f"winnow_fingerprints(df, ..., {id_col!r})"
+def _winnow_posts(
+    df: DataFrame | None,
+    fps: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    k: int,
+    w: int,
+    hash_mode: str,
+) -> DataFrame:
+    """Distinct ``(id_col, fp)`` postings from ``df``, or from the
+    caller's shared :func:`winnow_fingerprints` frame after the param
+    guard.  Two windows selecting the same gram yield one posting; two
+    POSITIONS with an identical hash (a repeated passage within one doc)
+    also collapse — shared counts tally distinct shared CONTENT, not
+    occurrences."""
+    if fps is None:
+        if df is None:
+            raise ValueError("pass df or a precomputed fps frame")
+        fps = winnow_fingerprints(df, text_col, id_col, k, w, hash_mode)
+    else:
+        _check_frame(
+            fps, "fps", [id_col, "fp"], "fp",
+            f"winnow_fingerprints(df, ..., {id_col!r})",
+            winnow_k=k, winnow_w=w, hash_mode=hash_mode,
         )
-    meta = fps.schema["fp"].metadata or {}
-    for key, want in (
-        ("winnow_k", k), ("winnow_w", w), ("hash_mode", hash_mode)
-    ):
-        got = meta.get(key)
-        if got is not None and got != want:
-            raise ValueError(
-                f"fps frame was built with {key}={got!r}; this call "
-                f"passed {want!r} — the fingerprint space would be "
-                f"silently mismatched"
-            )
+    return fps.select(id_col, "fp").distinct()
 
 
 def winnow_pairs(
@@ -1508,38 +1522,10 @@ def winnow_pairs(
     Output: ``(doc_a, doc_b, shared)`` with ``doc_a < doc_b``."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    if fps is None:
-        if df is None:
-            raise ValueError("pass df or a precomputed fps frame")
-        fps = winnow_fingerprints(df, text_col, id_col, k, w, hash_mode)
-    else:
-        _check_fps(fps, id_col, k, w, hash_mode)
-    # distinct hashes per doc: two windows selecting the same gram yield
-    # one posting; two POSITIONS with an identical hash (a repeated
-    # passage within one doc) also collapse — shared counts tally
-    # distinct shared CONTENT, not occurrences
-    posts = fps.select(id_col, "fp").distinct()
-    if max_posting is not None:
-        hot = (
-            posts.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_posting)
-            .select("fp")
-        )
-        posts = posts.join(hot, "fp", "left_anti")
-    a, b = posts.alias("a"), posts.alias("b")
+    posts = _winnow_posts(df, fps, text_col, id_col, k, w, hash_mode)
     return (
-        a.join(
-            b,
-            on=[
-                F.col("a.fp") == F.col("b.fp"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
+        _posting_pairs(posts, ["fp"], id_col, max_posting)
+        .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )
@@ -1560,18 +1546,10 @@ def winnow_hot_fps(
     ``n_docs > max_posting``.  Run/log alongside any capped pair job
     (cap-audit contract of :func:`jaccard_hot_shingles`); share the
     capped run's persisted fingerprint frame via ``fps``."""
-    if fps is None:
-        if df is None:
-            raise ValueError("pass df or a precomputed fps frame")
-        fps = winnow_fingerprints(df, text_col, id_col, k, w, hash_mode)
-    else:
-        _check_fps(fps, id_col, k, w, hash_mode)
-    return (
-        fps.select(id_col, "fp")
-        .distinct()
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_posting)
+    return _hot_keys(
+        _winnow_posts(df, fps, text_col, id_col, k, w, hash_mode),
+        ["fp"],
+        max_posting,
     )
 
 
@@ -1605,45 +1583,25 @@ def winnow_cross_pairs(
     gram) and pass them via ``old_fps`` — the incremental-signature
     convention of :func:`incremental_near_dedup`.  ``max_posting``
     (opt-in, audited: log :func:`winnow_hot_fps` over the OLD side —
-    boilerplate lives there) caps postings on BOTH sides before the
-    join.
+    boilerplate lives there) drops fingerprints whose OLD-side posting
+    list exceeds the cap, the :func:`lsh_cross_pairs` rule — so that
+    audit names every dropped fingerprint.
 
     Output: ``(new_id, old_id, shared)``."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    if new_fps is None:
-        new_fps = winnow_fingerprints(
-            new_df, text_col, id_col, k, w, hash_mode
-        )
-    else:
-        _check_fps(new_fps, id_col, k, w, hash_mode)
-    if old_fps is None:
-        old_fps = winnow_fingerprints(
-            old_df, text_col, id_col, k, w, hash_mode
-        )
-    else:
-        _check_fps(old_fps, id_col, k, w, hash_mode)
-    nps = new_fps.select(id_col, "fp").distinct()
-    ops = old_fps.select(id_col, "fp").distinct()
-    if max_posting is not None:
-        for side in ("n", "o"):
-            posts = nps if side == "n" else ops
-            hot = (
-                posts.groupBy("fp")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > max_posting)
-                .select("fp")
-            )
-            if side == "n":
-                nps = nps.join(hot, "fp", "left_anti")
-            else:
-                ops = ops.join(hot, "fp", "left_anti")
-    a, b = nps.alias("a"), ops.alias("b")
     return (
-        a.join(b, on=[F.col("a.fp") == F.col("b.fp")])
+        _posting_pairs(
+            _winnow_posts(new_df, new_fps, text_col, id_col, k, w, hash_mode),
+            ["fp"],
+            id_col,
+            max_posting,
+            other=_winnow_posts(
+                old_df, old_fps, text_col, id_col, k, w, hash_mode
+            ),
+        )
         .groupBy(
-            F.col(f"a.{id_col}").alias("new_id"),
-            F.col(f"b.{id_col}").alias("old_id"),
+            F.col("doc_a").alias("new_id"), F.col("doc_b").alias("old_id")
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("shared"))
         .filter(F.col("shared") >= min_shared)

@@ -18,6 +18,8 @@ import hashlib
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .dedup import _check_frame, _hot_keys, _posting_pairs
+
 
 def plane_signs(planes: int, dim: int) -> list[list[int]]:
     """Deterministic ±1 hyperplane weights: sign = parity of the first md5
@@ -70,8 +72,39 @@ def _cos_guarded(na: str, nb: str, a: str, b: str) -> str:
     )
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("norm", F.expr(_norm(vec_col)))
+def _rerank_pairs(
+    pairs: DataFrame,
+    vecs: DataFrame,
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact cosine rerank of an id-only candidate frame ``(…, doc_a,
+    doc_b)``: ``pairs``' columns plus ``cos``, for pairs with cos ≥
+    ``threshold``.  The vectors rejoin once per side AFTER the pair set
+    exists; each norm is folded once per id in the pre-join projection
+    (not once per pair — a hot doc in many pairs used to re-fold both
+    norms per pair), zero-guarded like every cosine path."""
+    side = vecs.select(
+        F.col(id_col),
+        F.col(vec_col).alias("_v"),
+        F.expr(_norm(vec_col)).alias("_n"),
+    )
+
+    def one(s: str) -> DataFrame:
+        return side.select(
+            F.col(id_col).alias(f"doc_{s}"),
+            F.col("_v").alias(f"_v{s}"),
+            F.col("_n").alias(f"_n{s}"),
+        )
+
+    return (
+        pairs.join(one("a"), "doc_a")
+        .join(one("b"), "doc_b")
+        .withColumn("cos", F.expr(_cos_guarded("_na", "_nb", "_va", "_vb")))
+        .filter(F.col("cos") >= threshold)
+        .select(*pairs.columns, "cos")
+    )
 
 
 def _two_stage_topk(
@@ -680,31 +713,26 @@ def hyperplane_buckets(
     )
 
 
-def _check_banded(
-    banded: DataFrame,
+def _banded_frame(
+    df: DataFrame | None,
+    banded: DataFrame | None,
+    vec_col: str,
     id_col: str,
-    planes: int | None = None,
-    vec_col: str | None = None,
-) -> None:
-    missing = {id_col, "band", "key"} - set(banded.columns)
-    if missing:
-        raise ValueError(
-            f"banded frame lacks columns {sorted(missing)} — build it "
-            f"with hyperplane_buckets(df, vec_col, {id_col!r}, ...)"
-        )
-    meta = banded.schema["key"].metadata or {}
-    got = meta.get("planes")
-    if planes is not None and got is not None and int(got) != planes:
-        raise ValueError(
-            f"banded frame was built with planes={got}; this call passed "
-            f"planes={planes}"
-        )
-    gotv = meta.get("vec_col")
-    if vec_col is not None and gotv is not None and gotv != vec_col:
-        raise ValueError(
-            f"banded frame was built over vec_col={gotv!r}; this call "
-            f"passed vec_col={vec_col!r}"
-        )
+    planes: int,
+    signs: list[list[int]] | None,
+) -> DataFrame:
+    """The :func:`hyperplane_buckets` frame: built from ``df``, or the
+    caller's shared ``banded`` frame after the param guard."""
+    if banded is None:
+        if df is None:
+            raise ValueError("pass df or a precomputed banded frame")
+        return hyperplane_buckets(df, vec_col, id_col, planes, signs)
+    _check_frame(
+        banded, "banded", [id_col, "band", "key"], "key",
+        f"hyperplane_buckets(df, vec_col, {id_col!r}, ...)",
+        planes=planes, vec_col=vec_col,
+    )
+    return banded
 
 
 def cosine_hot_buckets(
@@ -724,17 +752,8 @@ def cosine_hot_buckets(
     ``banded`` so the audit reuses its signature computation instead of
     repeating the whole embedding→signature pipeline (the r4 bench paid
     10 s for exactly that recompute)."""
-    if banded is None:
-        if df is None:
-            raise ValueError("pass df or a precomputed banded frame")
-        banded = hyperplane_buckets(df, vec_col, id_col, planes, signs)
-    else:
-        _check_banded(banded, id_col, planes, vec_col)
-    return (
-        banded.groupBy("band", "key")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_bucket)
-    )
+    banded = _banded_frame(df, banded, vec_col, id_col, planes, signs)
+    return _hot_keys(banded, ["band", "key"], max_bucket)
 
 
 def cosine_pairs(
@@ -762,19 +781,7 @@ def cosine_pairs(
     capped plan references the banded subtree three times (hot counts +
     the two self-join sides) and the audit a fourth, each a full
     signature recompute without the shared persisted frame."""
-    if banded is None:
-        banded = hyperplane_buckets(df, vec_col, id_col, planes, signs)
-    else:
-        _check_banded(banded, id_col, planes, vec_col)
-        banded = banded.select(id_col, "band", "key")
-    if max_bucket is not None:
-        hot = (
-            banded.groupBy("band", "key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket)
-            .select("band", "key")
-        )
-        banded = banded.join(hot, ["band", "key"], "left_anti")
+    banded = _banded_frame(df, banded, vec_col, id_col, planes, signs)
     # The bucket self-join and the distinct carry ONLY ids: a candidate
     # pair is 16 bytes, not 2 × dim doubles.  (Measured r4: joining the
     # vectors through the bucket join made a degenerate-bucket corpus —
@@ -784,49 +791,12 @@ def cosine_pairs(
     # once per side below — a hash join the optimizer broadcasts when
     # the embedding table is small.)
     keyed = banded.select("band", "key", id_col)
-    a, b = keyed.alias("a"), keyed.alias("b")
     pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.key") == F.col("b.key"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
+        _posting_pairs(keyed, ["band", "key"], id_col, max_bucket)
+        .select("doc_a", "doc_b")
         .distinct()
     )
-    # norms folded once per id in the pre-join projections (not once per
-    # pair — a hot doc in many pairs used to re-fold both norms per
-    # pair), zero-guarded like every cosine path
-    emb = df.select(
-        F.col(id_col), F.col(vec_col), F.expr(_norm(vec_col)).alias("_n")
-    )
-    return (
-        pairs.join(
-            emb.select(
-                F.col(id_col).alias("doc_a"),
-                F.col(vec_col).alias("va"),
-                F.col("_n").alias("_na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            emb.select(
-                F.col(id_col).alias("doc_b"),
-                F.col(vec_col).alias("vb"),
-                F.col("_n").alias("_nb"),
-            ),
-            "doc_b",
-        )
-        .withColumn("cos", F.expr(_cos_guarded("_na", "_nb", "va", "vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("doc_a", "doc_b", "cos")
-    )
+    return _rerank_pairs(pairs, df, id_col, vec_col, threshold)
 
 
 def ann_recall_report(
@@ -1530,25 +1500,30 @@ def _check_cells(
     vec_col: str,
     n_cents: int | None = None,
 ) -> None:
-    missing = {id_col, vec_col, "cell"} - set(cells.columns)
-    if missing:
-        raise ValueError(
-            f"cells frame lacks columns {sorted(missing)} — build it with "
-            f"assign_cells(df, cents, {vec_col!r}, {id_col!r})"
-        )
-    meta = cells.schema["cell"].metadata or {}
-    got = meta.get("n_cents")
-    if n_cents is not None and got is not None and int(got) != n_cents:
-        raise ValueError(
-            f"cells frame was assigned against {got} centroids; this call "
-            f"passed {n_cents}"
-        )
-    gotv = meta.get("vec_col")
-    if gotv is not None and gotv != vec_col:
-        raise ValueError(
-            f"cells frame was assigned over vec_col={gotv!r}; this call "
-            f"passed vec_col={vec_col!r}"
-        )
+    _check_frame(
+        cells, "cells", [id_col, vec_col, "cell"], "cell",
+        f"assign_cells(df, cents, {vec_col!r}, {id_col!r}) over this "
+        f"call's centroids",
+        n_cents=n_cents, vec_col=vec_col,
+    )
+
+
+def _cells_frame(
+    df: DataFrame | None,
+    cents: list[tuple[int, list[float]]] | None,
+    cells: DataFrame | None,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """The :func:`assign_cells` frame: assigned from ``(df, cents)``, or
+    the caller's shared ``cells`` frame after the param guard."""
+    if cells is None:
+        if df is None or cents is None:
+            raise ValueError("pass (df, cents) or a precomputed cells frame")
+        return assign_cells(df.select(id_col, vec_col), cents, vec_col, id_col)
+    _check_cells(cells, id_col, vec_col,
+                 len(cents) if cents is not None else None)
+    return cells
 
 
 def semdedup_hot_cells(
@@ -1563,18 +1538,8 @@ def semdedup_hot_cells(
     :func:`semdedup_pairs` — same never-cap-silently contract as every
     pair operator's audit.  Pass the capped run's persisted
     :func:`assign_cells` frame via ``cells`` to share the assignment."""
-    if cells is None:
-        if df is None or cents is None:
-            raise ValueError("pass (df, cents) or a precomputed cells frame")
-        cells = assign_cells(df, cents, vec_col, id_col)
-    else:
-        _check_cells(cells, id_col, vec_col,
-                     len(cents) if cents is not None else None)
-    return (
-        cells.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") > max_cell)
-    )
+    cells = _cells_frame(df, cents, cells, vec_col, id_col)
+    return _hot_keys(cells, ["cell"], max_cell)
 
 
 def semdedup_pairs(
@@ -1603,65 +1568,11 @@ def semdedup_pairs(
     recall is never bounded silently) and log :func:`semdedup_hot_cells`
     alongside, sharing the persisted ``cells`` frame with the audit.
     """
-    if cells is None:
-        if df is None or cents is None:
-            raise ValueError("pass (df, cents) or a precomputed cells frame")
-        cells = assign_cells(
-            df.select(id_col, vec_col), cents, vec_col, id_col
-        )
-    else:
-        _check_cells(cells, id_col, vec_col,
-                     len(cents) if cents is not None else None)
-    keyed = cells.select("cell", id_col)
-    if max_cell is not None:
-        hot = (
-            keyed.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_cell)
-            .select("cell")
-        )
-        keyed = keyed.join(hot, "cell", "left_anti")
-    a, b = keyed.alias("a"), keyed.alias("b")
-    pairs = a.join(
-        b,
-        on=[
-            F.col("a.cell") == F.col("b.cell"),
-            F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-        ],
-    ).select(
-        F.col("a.cell").alias("cell"),
-        F.col(f"a.{id_col}").alias("doc_a"),
-        F.col(f"b.{id_col}").alias("doc_b"),
+    cells = _cells_frame(df, cents, cells, vec_col, id_col)
+    pairs = _posting_pairs(
+        cells.select("cell", id_col), ["cell"], id_col, max_cell
     )
-    # one row per id per side, norm folded in the PRE-join projection
-    side = cells.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_v"),
-        F.expr(_norm(vec_col)).alias("_n"),
-    )
-    return (
-        pairs.join(
-            side.select(
-                F.col(id_col).alias("doc_a"),
-                F.col("_v").alias("_va"),
-                F.col("_n").alias("_na"),
-            ),
-            "doc_a",
-        )
-        .join(
-            side.select(
-                F.col(id_col).alias("doc_b"),
-                F.col("_v").alias("_vb"),
-                F.col("_n").alias("_nb"),
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "cos", F.expr(_cos_guarded("_na", "_nb", "_va", "_vb"))
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("cell", "doc_a", "doc_b", "cos")
-    )
+    return _rerank_pairs(pairs, cells, id_col, vec_col, threshold)
 
 
 def semdedup_corpus(

@@ -1041,7 +1041,8 @@ def bucket_by_quantiles(
     thresholds and stays a pure projection (zero exchanges; at corpus
     scale pass ``relative_error > 0`` for the mergeable-sketch
     aggregate, same lever as :func:`quantile_report`).  An empty or
-    all-NULL corpus has no quantiles: every bucket is NULL."""
+    all-NULL corpus has no quantiles: every bucket is NULL.  An ``out``
+    name that is already a column raises rather than being renamed."""
     n_b = len(probs) + 1
     if labels is None:
         labels = tuple(f"q{i}" for i in range(n_b))
@@ -1059,8 +1060,10 @@ def bucket_by_quantiles(
         raise ValueError(
             f"relative_error must be >= 0, got {relative_error}"
         )
-    while out in df.columns:
-        out += "_"
+    if out in df.columns:
+        raise ValueError(
+            f"output column {out!r} already exists; pass a different out="
+        )
     p_arr = "array(" + ", ".join(f"{float(p)!r}D" for p in probs) + ")"
     if relative_error == 0:
         agg = F.expr(f"percentile(`{col}`, {p_arr})")

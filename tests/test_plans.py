@@ -375,9 +375,10 @@ class TestAnnPairPlans:
     """The id-only pair rule (CLAUDE.md): candidate-pair joins and their
     distinct must exchange (q_id, c_id) only — vectors rejoin after the
     distinct.  r4 measured 13× on cosine_pairs when the vectors moved out
-    of the bucket join; these pins keep lsh_topk / ivf_topk on the same
-    shape (a hot bucket/cell duplicates every candidate row, and at dim
-    768 each duplicate would drag ~6 KB through the exchange)."""
+    of the bucket join; these pins keep lsh_topk / ivf_topk and the
+    capped cosine_pairs / semdedup_pairs on the same shape (a hot
+    bucket/cell duplicates every candidate row, and at dim 768 each
+    duplicate would drag ~6 KB through the exchange)."""
 
     @staticmethod
     def _hash_exchange_keys(plan: str) -> list[str]:
@@ -413,6 +414,36 @@ class TestAnnPairPlans:
         qs = embs.orderBy("vec_id").limit(5)
         self._assert_no_vec_in_exchanges(
             ivf_topk(embs, qs, k=3, n_centroids=4, n_probe=2)
+        )
+
+    @staticmethod
+    def _seeded_embs(spark):
+        import random
+
+        rng = random.Random(7)
+        return spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)],
+            "vec_id long, embedding array<float>",
+        )
+
+    def test_capped_cosine_pairs_exchanges_ids_only(self, spark):
+        from ocr_spark.operators.similarity import cosine_pairs
+
+        embs = self._seeded_embs(spark)
+        self._assert_no_vec_in_exchanges(
+            cosine_pairs(embs, threshold=0.5, max_bucket=50)
+        )
+
+    def test_capped_semdedup_pairs_exchanges_ids_only(self, spark):
+        from ocr_spark.operators.similarity import (
+            semdedup_pairs,
+            train_centroids,
+        )
+
+        embs = self._seeded_embs(spark)
+        cents = train_centroids(embs, n_centroids=4, iters=1)
+        self._assert_no_vec_in_exchanges(
+            semdedup_pairs(embs, cents, threshold=0.5, max_cell=100)
         )
 
 

@@ -4954,7 +4954,7 @@ class TestBm25Topk:
         a = sorted(tuple(r) for r in bm25_topk(df, qf, k=3).collect())
         c = sorted(
             tuple(r)
-            for r in bm25_topk(df, qf, k=3, broadcast_counts=True).collect()
+            for r in bm25_topk(df, qf, k=3, broadcast_counts=False).collect()
         )
         assert a == c
         with pytest.raises(ValueError, match="k must be"):
@@ -5102,6 +5102,38 @@ class TestWinnowDifferential:
         with pytest.raises(ValueError, match="winnow_w"):
             winnow_cross_pairs(new, old, w=8, old_fps=ofps)
 
+    def test_cross_pairs_cap_counts_old_side_only(self, spark):
+        """``max_posting`` drops only fingerprints hot on the OLD side
+        (the lsh_cross_pairs rule), so winnow_hot_fps over the old side
+        names every dropped fingerprint.  Three new docs quoting one old
+        doc make the quoted fingerprints hot on the NEW side only — they
+        must survive the cap, not vanish unaudited."""
+        from ocr_spark.operators.dedup import (
+            winnow_cross_pairs,
+            winnow_hot_fps,
+        )
+
+        old = spark.createDataFrame(
+            [(100, "p1 p2 p3 p4 p5 p6 p7 p8 p9")], "doc_id long, text string"
+        )
+        new = spark.createDataFrame(
+            [(i, f"n{i} p2 p3 p4 p5 p6 p7 p8 m{i}") for i in (1, 2, 3)],
+            "doc_id long, text string",
+        )
+
+        def pairs(cap):
+            return {
+                (r.new_id, r.old_id): r.shared
+                for r in winnow_cross_pairs(
+                    new, old, min_shared=1, max_posting=cap
+                ).collect()
+            }
+
+        capped = pairs(2)
+        assert set(capped) == {(1, 100), (2, 100), (3, 100)}
+        assert capped == pairs(None)
+        assert winnow_hot_fps(old, max_posting=2).count() == 0
+
 
 class TestBucketByQuantiles:
     def test_quartiles_hand_computed(self, spark):
@@ -5152,6 +5184,11 @@ class TestBucketByQuantiles:
             bucket_by_quantiles(df, "score", labels=("a", "b"))
         with pytest.raises(ValueError, match="strictly increasing"):
             bucket_by_quantiles(df, "score", probs=(0.5, 0.25))
+        # a colliding output column is refused, never silently renamed
+        with pytest.raises(ValueError, match="'bucket' already exists"):
+            bucket_by_quantiles(
+                df.withColumn("bucket", df.score), "score"
+            )
         # approx path assigns every row some bucket
         big = spark.createDataFrame(
             [(i, float(i % 97)) for i in range(500)],
