@@ -62,12 +62,9 @@ def main() -> int:
                     help="pages parquet path or Iceberg table (cc.pages)")
     ap.add_argument("--output", required=True,
                     help="extracted table path (parquet dir or Iceberg)")
-    ap.add_argument("--mode", default="fused",
-                    choices=["fused", "paged", "staged", "manifest"],
-                    help="pipeline shape; 'manifest' reads parquet "
-                         "row-groups worker-side (parquet --input only; "
-                         "NOT resumable — blind overwrite of --output; "
-                         "--since/--until unsupported)")
+    ap.add_argument("--mode", default="fused", choices=["fused", "paged"],
+                    help="pipeline shape; 'paged' salts pages across "
+                         "partitions for giant-document corpora")
     ap.add_argument("--since", default=None,
                     help="warc_ts lower bound (partition prune)")
     ap.add_argument("--until", default=None,
@@ -100,130 +97,114 @@ def main() -> int:
     from pyspark.sql import SparkSession, functions as F
 
     from ocr_spark.io import read_extracted, run_resumable
-    from ocr_spark.pipeline import PipelineConfig, extract_from_path
+    from ocr_spark.pipeline import PipelineConfig
 
     # conf comes from spark-submit; only the app name is set here
     spark = SparkSession.builder.appName("ocr-spark-extract").getOrCreate()
-    cfg = PipelineConfig(
-        mode=args.mode if args.mode != "manifest" else "fused",
-        page_partitions=args.page_partitions,
-    )
+    cfg = PipelineConfig(mode=args.mode, page_partitions=args.page_partitions)
 
     t0 = time.time()
     result: dict = {"mode": args.mode}
-    if args.mode == "manifest":
-        if args.since or args.until or args.iceberg_table \
-                or args.input_format != "parquet":
-            ap.error(
-                "--mode manifest supports neither --since/--until, "
-                "--iceberg-table, nor --format warc (worker-side parquet "
-                "splits only); use the default mode for pruned/resumable "
-                "runs"
+    if args.input_format in ("warc", "warc-stream"):
+        if args.iceberg_table:
+            ap.error("--format warc and --iceberg-table are exclusive")
+        from ocr_spark.sources import (
+            read_pages_warc,
+            read_pages_warc_stream,
+        )
+
+        reader = (
+            read_pages_warc_stream
+            if args.input_format == "warc-stream"
+            else read_pages_warc
+        )
+        raw = reader(spark, args.input)
+        # Audit pass FIRST: per-file torn-record totals into the job
+        # JSON (never-silent policy).  This is a second decompress +
+        # record walk, but only zlib-speed — a small fraction of the
+        # extraction pass it precedes; at cluster scale it doubles as
+        # the listing sanity check before committing executors.
+        audit = (
+            raw.groupBy("warc_file")
+            .agg(F.max("warc_errors").alias("e"))
+            .agg(
+                F.count(F.lit(1)).alias("files"),
+                F.coalesce(F.sum("e"), F.lit(0)).alias("errs"),
             )
-        extracted = extract_from_path(spark, args.input, cfg)
-        extracted.write.mode("overwrite").parquet(args.output)
-        _summarize_output(spark.read.parquet(args.output), result)
+            .collect()[0]
+        )
+        result["warc_files"] = audit["files"]
+        result["warc_errors_total"] = int(audit["errs"])
+        # the groupBy above only sees files that produced ROWS; a
+        # warcinfo/metadata-only archive contributes nothing and
+        # would vanish from the audit — count the LISTING too so a
+        # silently-empty file is visible as listed > contributing
+        result["warc_files_listed"] = (
+            spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.warc.gz")
+            .load(args.input)
+            .select("path")
+            .count()
+        )
+        # sentinel rows (url='' carriers for all-error files) are
+        # audit-only; lineage columns are dropped so the checkpoint
+        # schema matches the parquet/Iceberg paths
+        pages = raw.filter(F.col("url") != "").drop(
+            "warc_file", "warc_errors"
+        )
     else:
-        if args.input_format in ("warc", "warc-stream"):
-            if args.iceberg_table:
-                ap.error("--format warc and --iceberg-table are exclusive")
-            from ocr_spark.sources import (
-                read_pages_warc,
-                read_pages_warc_stream,
-            )
-
-            reader = (
-                read_pages_warc_stream
-                if args.input_format == "warc-stream"
-                else read_pages_warc
-            )
-            raw = reader(spark, args.input)
-            # Audit pass FIRST: per-file torn-record totals into the job
-            # JSON (never-silent policy).  This is a second decompress +
-            # record walk, but only zlib-speed — a small fraction of the
-            # extraction pass it precedes; at cluster scale it doubles as
-            # the listing sanity check before committing executors.
-            audit = (
-                raw.groupBy("warc_file")
-                .agg(F.max("warc_errors").alias("e"))
-                .agg(
-                    F.count(F.lit(1)).alias("files"),
-                    F.coalesce(F.sum("e"), F.lit(0)).alias("errs"),
-                )
-                .collect()[0]
-            )
-            result["warc_files"] = audit["files"]
-            result["warc_errors_total"] = int(audit["errs"])
-            # the groupBy above only sees files that produced ROWS; a
-            # warcinfo/metadata-only archive contributes nothing and
-            # would vanish from the audit — count the LISTING too so a
-            # silently-empty file is visible as listed > contributing
-            result["warc_files_listed"] = (
-                spark.read.format("binaryFile")
-                .option("pathGlobFilter", "*.warc.gz")
-                .load(args.input)
-                .select("path")
-                .count()
-            )
-            # sentinel rows (url='' carriers for all-error files) are
-            # audit-only; lineage columns are dropped so the checkpoint
-            # schema matches the parquet/Iceberg paths
-            pages = raw.filter(F.col("url") != "").drop(
-                "warc_file", "warc_errors"
-            )
-        else:
-            pages = (
-                spark.read.table(args.input)
-                if args.iceberg_table
-                else spark.read.parquet(args.input)
-            )
-        # partition pruning on the crawl-time axis (Iceberg days(warc_ts))
-        if args.since:
-            pages = pages.filter(F.col("warc_ts") >= F.lit(args.since))
-        if args.until:
-            pages = pages.filter(F.col("warc_ts") < F.lit(args.until))
-        if (
-            args.input_format in ("warc", "warc-stream")
-            and not args.all_captures
-        ):
-            # raw crawl input routinely carries the same url more than
-            # once (revisits; response + conversion records across
-            # files); without this pick the assembly groupBy(url) would
-            # MERGE the captures into one corrupted document and the
-            # url-keyed checkpoint would make it permanent.  Newest
-            # capture wins, content-digest tie-break — the deterministic
-            # rule stream_extract and curate --latest-capture use.
-            from pyspark.sql import Observation
-
-            obs = Observation("warc_captures")
-            cols = pages.columns
-            pages = (
-                pages.observe(obs, F.count(F.lit(1)).alias("captures"))
-                .groupBy("url")
-                .agg(
-                    F.max_by(
-                        F.struct(*[F.col(c) for c in cols]),
-                        F.struct(
-                            F.col("warc_ts"),
-                            F.md5(F.coalesce("html", F.lit(b""))),
-                        ),
-                    ).alias("_row")
-                )
-                .select("_row.*")
-            )
-        else:
-            obs = None
-        result["docs_attempted_this_pass"] = run_resumable(
-            pages, args.output, cfg, max_attempts=args.max_attempts
+        pages = (
+            spark.read.table(args.input)
+            if args.iceberg_table
+            else spark.read.parquet(args.input)
         )
-        if obs is not None and result["docs_attempted_this_pass"]:
-            # captures seen vs urls attempted = the revisit volume this
-            # pass dropped (rides the real job via Observation — no
-            # extra pass)
-            result["warc_captures_seen"] = int(obs.get["captures"])
-        _summarize_output(
-            read_extracted(spark, args.output, latest_only=True), result
+    # partition pruning on the crawl-time axis (Iceberg days(warc_ts))
+    if args.since:
+        pages = pages.filter(F.col("warc_ts") >= F.lit(args.since))
+    if args.until:
+        pages = pages.filter(F.col("warc_ts") < F.lit(args.until))
+    if (
+        args.input_format in ("warc", "warc-stream")
+        and not args.all_captures
+    ):
+        # raw crawl input routinely carries the same url more than
+        # once (revisits; response + conversion records across
+        # files); without this pick the assembly groupBy(url) would
+        # MERGE the captures into one corrupted document and the
+        # url-keyed checkpoint would make it permanent.  Newest
+        # capture wins, content-digest tie-break — the deterministic
+        # rule stream_extract and curate --latest-capture use.
+        from pyspark.sql import Observation
+
+        obs = Observation("warc_captures")
+        cols = pages.columns
+        pages = (
+            pages.observe(obs, F.count(F.lit(1)).alias("captures"))
+            .groupBy("url")
+            .agg(
+                F.max_by(
+                    F.struct(*[F.col(c) for c in cols]),
+                    F.struct(
+                        F.col("warc_ts"),
+                        F.md5(F.coalesce("html", F.lit(b""))),
+                    ),
+                ).alias("_row")
+            )
+            .select("_row.*")
         )
+    else:
+        obs = None
+    result["docs_attempted_this_pass"] = run_resumable(
+        pages, args.output, cfg, max_attempts=args.max_attempts
+    )
+    if obs is not None and result["docs_attempted_this_pass"]:
+        # captures seen vs urls attempted = the revisit volume this
+        # pass dropped (rides the real job via Observation — no
+        # extra pass)
+        result["warc_captures_seen"] = int(obs.get["captures"])
+    _summarize_output(
+        read_extracted(spark, args.output, latest_only=True), result
+    )
     result["seconds"] = round(time.time() - t0, 1)
     print(json.dumps(result))
     spark.stop()

@@ -13,7 +13,6 @@ __version__ = "0.2.0"
 from .pipeline import (  # noqa: F401
     PipelineConfig,
     extract,
-    extract_from_path,
     flatten_lines,
     read_pages,
 )
@@ -21,7 +20,6 @@ from .pipeline import (  # noqa: F401
 __all__ = [
     "PipelineConfig",
     "extract",
-    "extract_from_path",
     "flatten_lines",
     "read_pages",
 ]

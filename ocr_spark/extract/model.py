@@ -125,7 +125,7 @@ class ModelExtractor:  # pragma: no cover - requires GPU deps
     def decode_page(self, raw: bytes):  # pragma: no cover
         raise NotImplementedError(
             "the model backend supports mode='fused' only: PDF payloads "
-            "are not page-sliceable, so the paged/staged stage handoff "
+            "are not page-sliceable, so the paged stage handoff "
             "(page_bytes) does not exist; run extract() with the default "
             "fused PipelineConfig"
         )

@@ -11,8 +11,8 @@ tolerant of malformed markup) produces content blocks; each block then gets
 deterministic reading-order geometry so the result is a page dict of the
 EXACT shape :func:`ocr_spark.payload.decode_page` emits for the synthetic
 PDF payloads.  Downstream, every kernel (coverage probe, consolidation,
-stable y-sort, postprocess, assembly) and every pipeline mode
-(fused/paged/staged/manifest) runs unchanged on the virtual page — HTML and
+stable y-sort, postprocess, assembly) and both pipeline modes
+(fused/paged) run unchanged on the virtual page — HTML and
 PDF documents mix freely in one job and one output schema, and the
 pure-Python oracle (:mod:`ocr_spark.oracle`) covers HTML for free.
 

@@ -6,21 +6,31 @@ documents/pages inside a batch (the same granularity the reference batches
 at, document.py:91-133).  No row-at-a-time Spark UDFs anywhere.
 
 Stage map (reference → here):
-- parse_pages:    fitz.open + page list (document.py:532-544) + cross-doc
-                  page flattening (document.py:783)
-- analyze_pages:  rasterize→layout→native-probe (document.py:105-117)
-- finish_native:  consolidation for covered pages (document.py:116)
-- finish_ocr:     dense OCR batches + consolidation (document.py:119-133)
+- extract_docs:        fused plan — fitz.open + page list
+                       (document.py:532-544), then every page through
+                       _extract_page
+- parse_pages:         paged plan, stage 1 — the same decode, one row per
+                       page with its bytes (cross-doc page flattening,
+                       document.py:783)
+- analyze_and_finish:  paged plan, stage 2 — decode the page bytes, then
+                       _extract_page
+- _extract_page:       the per-page body both plans share: analyze →
+                       native | OCR → consolidate (document.py:105-133) →
+                       blocks JSON
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 
 from ..extract import get_backend
+from ..schemas import PAGE_BLOCKS_JSON_SCHEMA, PAGE_ROW_SCHEMA
+
+_PAGE_ROW_COLS = PAGE_ROW_SCHEMA.fieldNames()
+_BLOCKS_COLS = PAGE_BLOCKS_JSON_SCHEMA.fieldNames()
 
 
 class _BackendProxy:
@@ -62,146 +72,56 @@ def _pack_blocks(blocks: list[dict]) -> list[dict]:
     ]
 
 
-def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Doc rows → page rows (url, warc_ts, lang, doc_dpi, page_i, n_pages,
-    page_bytes, error).  Payload parse failures become error rows with
-    page_i = -1 (failure-code lineage, SURVEY.md §2.9 R5)."""
-    for pdf in batches:
-        out: dict[str, list[Any]] = {
-            "url": [], "warc_ts": [], "lang": [], "doc_dpi": [],
-            "page_i": [], "n_pages": [], "page_bytes": [],
-            "truncated": [], "error": [],
-        }
-        for url, warc_ts, html, lang in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-        ):
-            try:
-                doc = hx.decode_doc(bytes(html))
-                npg = len(doc["pages"])
-                trunc = bool(doc.get("truncated"))
-                if npg == 0:
-                    # zero-page doc: placeholder row so the url survives
-                    # to assembly (page_i=-1 collects no page there)
-                    out["url"].append(url)
-                    out["warc_ts"].append(warc_ts)
-                    out["lang"].append(lang)
-                    out["doc_dpi"].append(doc["dpi"])
-                    out["page_i"].append(-1)
-                    out["n_pages"].append(0)
-                    out["page_bytes"].append(None)
-                    out["truncated"].append(trunc)
-                    out["error"].append(None)
-                for page, raw in zip(doc["pages"], doc["page_bytes"]):
-                    out["url"].append(url)
-                    out["warc_ts"].append(warc_ts)
-                    out["lang"].append(lang)
-                    out["doc_dpi"].append(doc["dpi"])
-                    out["page_i"].append(_page_i(page))
-                    out["n_pages"].append(npg)
-                    out["page_bytes"].append(raw)
-                    out["truncated"].append(trunc)
-                    out["error"].append(None)
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                out["url"].append(url)
-                out["warc_ts"].append(warc_ts)
-                out["lang"].append(lang)
-                out["doc_dpi"].append(0)
-                out["page_i"].append(-1)
-                out["n_pages"].append(0)
-                out["page_bytes"].append(None)
-                out["truncated"].append(False)
-                out["error"].append(f"PARSE_ERROR: {type(e).__name__}: {e}")
-        yield pd.DataFrame(out)
+def _error(code: str, e: Exception) -> str:
+    """Failure-code lineage string (SURVEY.md §2.9 R5)."""
+    return f"{code}: {type(e).__name__}: {e}"
 
 
-def analyze_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Page rows → + layout, native_lines, needs_ocr (the probe).
+def _extract_page(
+    page, dpi: int, lang: str | None
+) -> tuple[bool, str, str | None]:
+    """One decoded page → (ocr, blocks_json, error): the probe, the
+    needs-OCR route to the native text layer or OCR (document.py:105-133),
+    consolidation, and the JSON encode of the packed blocks.
 
-    Heavy stage: runs AFTER the salted page-level repartition so giant-doc
-    skew is already broken (SURVEY.md §3.3)."""
-    for pdf in batches:
-        layouts, natives, flags = [], [], []
-        errors = list(pdf["error"])
-        for pos, (page_bytes, doc_dpi, error) in enumerate(
-            zip(pdf["page_bytes"], pdf["doc_dpi"], pdf["error"])
-        ):
-            if error is not None or page_bytes is None:
-                layouts.append([])
-                natives.append([])
-                flags.append(False)
-                continue
-            try:
-                page = hx.decode_page(bytes(page_bytes))
-                info = hx.analyze_page(page, int(doc_dpi))
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                layouts.append([])
-                natives.append([])
-                flags.append(False)
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-                continue
-            layouts.append(
-                [
-                    {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                    for b in info["layout"]
-                ]
-            )
-            natives.append(
-                [
-                    {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
-                    for ln in info["native_lines"]
-                ]
-            )
-            flags.append(bool(info["needs_ocr"]))
-        out = pdf.copy()
-        out["error"] = errors
-        out["layout"] = layouts
-        out["native_lines"] = natives
-        out["needs_ocr"] = flags
-        yield out
-
-
-def _finish_common(pdf: pd.DataFrame, lines_per_row: list[list[dict]],
-                   ocr_flag: bool) -> pd.DataFrame:
-    blocks_col = []
-    errors = list(pdf["error"])
-    for pos, (lines, layout) in enumerate(zip(lines_per_row, pdf["layout"])):
-        try:
-            layout_dicts = [
-                {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                for b in layout
-            ]
-            blocks_col.append(_pack_blocks(hx.finish_page(lines, layout_dicts)))
-        except Exception as e:  # noqa: BLE001 - failure-code lineage
-            blocks_col.append([])
-            errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-    return pd.DataFrame(
-        {
-            "url": pdf["url"],
-            "warc_ts": pdf["warc_ts"],
-            "lang": pdf["lang"],
-            "page_i": pdf["page_i"],
-            "n_pages": pdf["n_pages"],
-            # error rows never count as OCR pages — keeps ocr_pages
-            # identical across fused/paged/staged for the same input
-            "ocr": [ocr_flag and e is None for e in errors],
-            "blocks": blocks_col,
-            "truncated": pdf["truncated"],
-            "error": errors,
-        }
-    )
-
-
-def finish_native(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Covered pages: consolidate the native text layer (document.py:116)."""
-    for pdf in batches:
-        lines_per_row = [
-            [
-                {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
-                for ln in natives
-            ]
-            for natives in pdf["native_lines"]
+    Guarded per PAGE in both plans: a throwing page becomes one
+    EXTRACT_ERROR lineage row (never counted as OCR) while its document's
+    good pages survive, and a single bad page can never abort a Spark task
+    (or drop its siblings)."""
+    try:
+        info = hx.analyze_page(page, dpi)
+        layout = [
+            {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
+            for b in info["layout"]
         ]
-        yield _finish_common(pdf, lines_per_row, ocr_flag=False)
+        if info["needs_ocr"]:
+            lines = hx.extract_ocr_text(page, dpi, lang or "en")
+        else:
+            lines = [
+                {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
+                for ln in info["native_lines"]
+            ]
+        blocks = json.dumps(_pack_blocks(hx.finish_page(lines, layout)))
+    except Exception as e:  # noqa: BLE001 - failure-code lineage
+        return False, "[]", _error("EXTRACT_ERROR", e)
+    return bool(info["needs_ocr"]), blocks, None
+
+
+def _decode_docs(pdf: pd.DataFrame) -> Iterator[tuple]:
+    """Doc rows of one batch → (url, warc_ts, lang, doc, page_is, error).
+
+    The decode and the page indices are read under one doc-level guard;
+    a failure yields doc None and the document's PARSE_ERROR."""
+    for url, warc_ts, html, lang in zip(
+        pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
+    ):
+        try:
+            doc = hx.decode_doc(bytes(html))
+            page_is = [_page_i(p) for p in doc["pages"]]
+        except Exception as e:  # noqa: BLE001 - failure-code lineage
+            yield url, warc_ts, lang, None, [], _error("PARSE_ERROR", e)
+        else:
+            yield url, warc_ts, lang, doc, page_is, None
 
 
 def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -221,242 +141,73 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
     Right default when page kernels are CPU-cheap and docs are smallish;
     for corpora with giant documents use mode='paged' (page-level salted
-    spread), for GPU OCR use mode='staged'.
+    spread, analyze_and_finish).
     """
-    import json
-
     for pdf in batches:
-        out: dict[str, list[Any]] = {
-            "url": [], "warc_ts": [], "lang": [], "page_i": [],
-            "n_pages": [], "ocr": [], "blocks_json": [],
-            "truncated": [], "error": [],
-        }
-
-        def emit(url, warc_ts, lang, page_i, n_pages, ocr, blocks, error,
-                 truncated=False):
-            out["url"].append(url)
-            out["warc_ts"].append(warc_ts)
-            out["lang"].append(lang)
-            out["page_i"].append(page_i)
-            out["n_pages"].append(n_pages)
-            out["ocr"].append(ocr)
-            out["blocks_json"].append(blocks)
-            out["truncated"].append(truncated)
-            out["error"].append(error)
-
-        for url, warc_ts, html, lang in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-        ):
-            try:
-                doc = hx.decode_doc(bytes(html))
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                emit(url, warc_ts, lang, -1, 0, False, "[]",
-                     f"PARSE_ERROR: {type(e).__name__}: {e}")
+        rows = []
+        for url, warc_ts, lang, doc, page_is, error in _decode_docs(pdf):
+            trunc = doc is not None and bool(doc.get("truncated"))
+            if not page_is:
+                # a PARSE_ERROR, or a zero-page document — which still
+                # exists in the output (the reference yields an empty
+                # tree, not an error); page_i=-1 marks "no page" and
+                # assembly skips it
+                rows.append(
+                    (url, warc_ts, lang, -1, 0, False, "[]", trunc, error)
+                )
                 continue
-            npg = len(doc["pages"])
-            trunc = bool(doc.get("truncated"))
-            if npg == 0:
-                # zero-page documents still exist in the output (the
-                # reference yields an empty tree, not an error); page_i=-1
-                # marks "no page" and assembly skips it
-                emit(url, warc_ts, lang, -1, 0, False, "[]", None, trunc)
-                continue
-            # Page indices are read under the doc-level guard (parity with
-            # parse_pages, where a page-index failure is a PARSE_ERROR for
-            # the whole document in the paged/staged plans).
-            try:
-                page_is = [_page_i(p) for p in doc["pages"]]
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                emit(url, warc_ts, lang, -1, 0, False, "[]",
-                     f"PARSE_ERROR: {type(e).__name__}: {e}")
-                continue
-            # The kernel loop is guarded per PAGE — the same granularity as
-            # analyze_and_finish in the paged/staged plans, so every mode
-            # produces IDENTICAL output on an error-injected corpus: a
-            # throwing page becomes one page_i-level EXTRACT_ERROR lineage
-            # row while the document's good pages survive, and a single bad
-            # page can never abort a Spark task (or drop its siblings).
             for pi, page in zip(page_is, doc["pages"]):
-                try:
-                    info = hx.analyze_page(page, doc["dpi"])
-                    layout = [
-                        {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                        for b in info["layout"]
-                    ]
-                    if info["needs_ocr"]:
-                        lines = hx.extract_ocr_text(
-                            page, doc["dpi"], lang or "en"
-                        )
-                    else:
-                        lines = [
-                            {
-                                "bbox": _bbox_list(ln["bbox"]),
-                                "content": ln["content"],
-                            }
-                            for ln in info["native_lines"]
-                        ]
-                    emit(url, warc_ts, lang, pi, npg,
-                         bool(info["needs_ocr"]),
-                         json.dumps(
-                             _pack_blocks(hx.finish_page(lines, layout))
-                         ),
-                         None, trunc)
-                except Exception as e:  # noqa: BLE001 - failure-code lineage
-                    emit(url, warc_ts, lang, pi, npg, False, "[]",
-                         f"EXTRACT_ERROR: {type(e).__name__}: {e}", trunc)
-        yield pd.DataFrame(out)
+                ocr, blocks, err = _extract_page(page, doc["dpi"], lang)
+                rows.append(
+                    (url, warc_ts, lang, pi, len(page_is), ocr, blocks,
+                     trunc, err)
+                )
+        yield pd.DataFrame(rows, columns=_BLOCKS_COLS)
 
 
-def enumerate_row_groups(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """File rows → (file, row_group) split rows; the parquet FOOTER read
-    happens on executors, not the driver (at millions of files a
-    driver-side per-file loop is the scheduling bottleneck; on a real
-    cluster the Iceberg ``.files`` metadata table supplies splits and this
-    stage disappears)."""
-    import pyarrow.parquet as pq
-
+def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Doc rows → page rows (url, warc_ts, lang, doc_dpi, page_i, n_pages,
+    page_bytes, truncated, error) for the paged plan's salted spread.
+    Payload parse failures become error rows with page_i = -1, the same
+    rows extract_docs emits."""
     for pdf in batches:
-        files: list[str] = []
-        rgs: list[int] = []
-        for f in pdf["file"]:
-            n = pq.ParquetFile(f).metadata.num_row_groups
-            files.extend([f] * n)
-            rgs.extend(range(n))
-        yield pd.DataFrame({"file": files, "row_group": rgs})
-
-
-def extract_manifest(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Manifest stage: rows are (file, row_group) splits; the worker reads
-    the parquet row-group itself with pyarrow and extracts every document
-    in it.
-
-    Why: the payload bytes never cross the JVM↔Python Arrow socket at all —
-    the JVM only schedules splits and receives small block rows.  On a real
-    cluster the same UDF reads s3a/abfs paths via pyarrow's filesystem
-    (Iceberg's file manifest supplies the split list).  This is the
-    standard shape for binary-heavy corpora (petastorm-style)."""
-    import pyarrow.parquet as pq
-
-    for mdf in batches:
-        for file, rg in zip(mdf["file"], mdf["row_group"]):
-            pf = pq.ParquetFile(file)
-            tbl = pf.read_row_group(
-                int(rg), columns=["url", "warc_ts", "html", "lang"]
-            )
-            yield from extract_docs(iter([tbl.to_pandas()]))
+        rows = []
+        for url, warc_ts, lang, doc, page_is, error in _decode_docs(pdf):
+            if doc is None:
+                rows.append((url, warc_ts, lang, 0, -1, 0, None, False, error))
+                continue
+            trunc = bool(doc.get("truncated"))
+            if not page_is:
+                rows.append(
+                    (url, warc_ts, lang, doc["dpi"], -1, 0, None, trunc, None)
+                )
+            for pi, raw in zip(page_is, doc["page_bytes"]):
+                rows.append(
+                    (url, warc_ts, lang, doc["dpi"], pi, len(page_is), raw,
+                     trunc, None)
+                )
+        yield pd.DataFrame(rows, columns=_PAGE_ROW_COLS)
 
 
 def analyze_and_finish(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """Fused phase 2: probe + native/OCR routing + consolidation in ONE
-    pass over each Arrow batch (the distributed mirror of the reference's
-    per-batch queue, document.py:91-133).
-
-    Avoids re-running the heavy analyze stage per branch (or persisting
-    binary page rows): the needs-OCR split happens *inside* the batch —
-    OCR-routed pages are sub-batched together so a model-backed extractor
-    still sees dense OCR batches at Arrow-batch granularity.  Use the
-    staged three-branch plan (pipeline.PipelineConfig(mode='staged')) when
-    the OCR path runs on separate GPU executors and needs its own stage."""
+    """Page rows (parse_pages, after the salted spread) → the same blocks
+    rows extract_docs emits: decode the page bytes, then _extract_page."""
     for pdf in batches:
-        n = len(pdf)
-        blocks_col: list[list[dict] | None] = [None] * n
-        ocr_col = [False] * n
-        ocr_idx: list[int] = []
-        ocr_pages: dict[int, dict] = {}  # decoded once, reused below
-        errors = list(pdf["error"])
-        for pos, (page_bytes, doc_dpi, error) in enumerate(
-            zip(pdf["page_bytes"], pdf["doc_dpi"], pdf["error"])
+        rows = []
+        for url, warc_ts, lang, dpi, pi, npg, raw, trunc, error in zip(
+            *(pdf[c] for c in _PAGE_ROW_COLS)
         ):
-            if error is not None or page_bytes is None:
-                blocks_col[pos] = []
-                continue
-            # per-PAGE guard (page granularity here): a throwing page
-            # becomes an EXTRACT_ERROR lineage row, not a task failure
-            try:
-                page = hx.decode_page(bytes(page_bytes))
-                info = hx.analyze_page(page, int(doc_dpi))
-                layout = [
-                    {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-                    for b in info["layout"]
-                ]
-                if info["needs_ocr"]:
-                    ocr_idx.append(pos)
-                    ocr_col[pos] = True
-                    ocr_pages[pos] = page
-                    blocks_col[pos] = layout  # stash layout; lines below
+            ocr, blocks = False, "[]"
+            if error is None and raw is not None:
+                try:
+                    page = hx.decode_page(bytes(raw))
+                except Exception as e:  # noqa: BLE001 - failure-code lineage
+                    error = _error("EXTRACT_ERROR", e)
                 else:
-                    lines = [
-                        {
-                            "bbox": _bbox_list(ln["bbox"]),
-                            "content": ln["content"],
-                        }
-                        for ln in info["native_lines"]
-                    ]
-                    blocks_col[pos] = _pack_blocks(
-                        hx.finish_page(lines, layout)
-                    )
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                blocks_col[pos] = []
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-        # dense OCR sub-batch (reference document.py:119-133)
-        for pos in ocr_idx:
-            try:
-                lines = hx.extract_ocr_text(
-                    ocr_pages[pos],
-                    int(pdf["doc_dpi"].iloc[pos]),
-                    pdf["lang"].iloc[pos] or "en",
-                )
-                blocks_col[pos] = _pack_blocks(
-                    hx.finish_page(lines, blocks_col[pos])
-                )
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                blocks_col[pos] = []
-                ocr_col[pos] = False
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"],
-                "warc_ts": pdf["warc_ts"],
-                "lang": pdf["lang"],
-                "page_i": pdf["page_i"],
-                "n_pages": pdf["n_pages"],
-                "ocr": ocr_col,
-                "blocks": blocks_col,
-                "truncated": pdf["truncated"],
-                "error": errors,
-            }
-        )
-
-
-def finish_ocr(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """OCR-routed pages: recognition + consolidation.
-
-    Because the branch is a FILTER on needs_ocr, Arrow batches here are
-    already dense with OCR work — the distributed analogue of the
-    reference's OCR re-batching queue (document.py:119-133)."""
-    for pdf in batches:
-        lines_per_row = []
-        errors = list(pdf["error"])
-        for pos, (page_bytes, doc_dpi, lang, error) in enumerate(
-            zip(pdf["page_bytes"], pdf["doc_dpi"], pdf["lang"], pdf["error"])
-        ):
-            if error is not None or page_bytes is None:
-                lines_per_row.append([])
-                continue
-            try:
-                page = hx.decode_page(bytes(page_bytes))
-                lines_per_row.append(
-                    hx.extract_ocr_text(page, int(doc_dpi), lang or "en")
-                )
-            except Exception as e:  # noqa: BLE001 - failure-code lineage
-                lines_per_row.append([])
-                errors[pos] = f"EXTRACT_ERROR: {type(e).__name__}: {e}"
-        pdf = pdf.copy()
-        pdf["error"] = errors
-        yield _finish_common(pdf, lines_per_row, ocr_flag=True)
-
-
+                    ocr, blocks, error = _extract_page(page, int(dpi), lang)
+            rows.append(
+                (url, warc_ts, lang, pi, npg, ocr, blocks, bool(trunc), error)
+            )
+        yield pd.DataFrame(rows, columns=_BLOCKS_COLS)

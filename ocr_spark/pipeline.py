@@ -1,17 +1,20 @@
 """The end-to-end extraction pipeline as a declarative Spark plan.
 
-Physical shape (SURVEY.md §4):
+Physical shape (SURVEY.md §4), default ``fused`` plan:
 
     Scan pages [project url,warc_ts,html,lang — text column pruned]
-    → MapInPandas parse            (doc → page rows; cheap)
-    → Exchange xxhash64(url, page_i)   -- salted page-level skew break (R3)
-    → MapInPandas analyze          (layout + native probe; heavy)
-    → persist / stage table
-    → Union( filter(!needs_ocr) → MapInPandas finish_native
-           , filter(needs_ocr)  → MapInPandas finish_ocr   -- dense batches
-           , filter(error)      → empty blocks (SQL only) )
+    → MapInPandas extract_docs     (decode + probe + native | OCR route +
+                                    consolidate per page; blocks as JSON)
+    → from_json blocks
     → SQL postprocess (P3-P5 as higher-order functions over blocks)
     → groupBy(url) assemble  (sort_array by page i; text joins '\\n'/'\\n\\n')
+
+The ``paged`` plan swaps the first UDF for two, around a salted exchange
+that breaks giant-document skew (R3):
+
+    → MapInPandas parse_pages         (doc → page rows with page bytes; cheap)
+    → Exchange xxhash64(url, page_i)
+    → MapInPandas analyze_and_finish  (the same per-page routine; blocks JSON)
 
 Everything after the UDFs is pure Catalyst-optimizable SQL: predicates,
 text assembly, ids, and metrics never touch Python.
@@ -24,13 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators import extract_udfs as udfs
-from .schemas import (
-    ANALYZED_SCHEMA,
-    BLOCK_TYPE,
-    PAGE_BLOCKS_JSON_SCHEMA,
-    PAGE_BLOCKS_SCHEMA,
-    PAGE_ROW_SCHEMA,
-)
+from .schemas import BLOCK_TYPE, PAGE_BLOCKS_JSON_SCHEMA, PAGE_ROW_SCHEMA
 
 # P3 — court-heading regex (document.py:630).  Java regex; `(?i)` prefix
 # replaces Python's re.IGNORECASE, `^` anchor replicates re.match.
@@ -93,23 +90,14 @@ class PipelineConfig:
       return (binary columns are the expensive thing to move through
       Arrow).  'paged' explodes to page rows first and salts them across
       partitions (R3) — choose it when single documents are big enough to
-      dominate a task (giant-PDF corpora).  'staged' is the three-branch
-      plan (probe stage → filter split → dense OCR stage → union) for
-      deployments where the OCR path runs on different (GPU) executors
-      and must be its own stage — pair it with stage_path there.
-    - page_partitions: width of the salted page-level exchange before the
-      heavy analyze stage (None → spark.sql.shuffle.partitions).
-    - persist_intermediate: cache the analyzed stage so the native/OCR/error
-      branches don't recompute layout detection (staged mode only); at real
-      scale point stage_path at a durable location instead (Iceberg staging
-      table).
+      dominate a task (giant-PDF corpora).
+    - page_partitions: width of the paged plan's salted page-level
+      exchange (None → spark.sql.shuffle.partitions).
     - postprocess: apply the P3-P5 ignore rewrite (document.py:625-642).
     """
 
     mode: str = "fused"
     page_partitions: int | None = None
-    persist_intermediate: bool = True
-    stage_path: str | None = None
     postprocess: bool = True
 
 
@@ -121,27 +109,17 @@ def parse_stage(pages: DataFrame) -> DataFrame:
     )
 
 
-def _spread(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Salted page-level exchange (R3): giant-doc skew broken before the
-    heavy stage — pages of one url scatter across partitions."""
+def fused_finish_stage(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Page-level extraction: a salted page-level exchange (R3: the pages
+    of one url scatter across partitions, so giant-doc skew is broken
+    before the heavy stage), then the per-page UDF → block rows."""
     n = cfg.page_partitions or int(
         page_rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    return page_rows.repartition(n, F.xxhash64("url", "page_i"))
-
-
-def analyze_stage(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Salted page-level exchange + the heavy probe stage."""
-    return _spread(page_rows, cfg).mapInPandas(
-        udfs.analyze_pages, ANALYZED_SCHEMA
+    raw = page_rows.repartition(n, F.xxhash64("url", "page_i")).mapInPandas(
+        udfs.analyze_and_finish, PAGE_BLOCKS_JSON_SCHEMA
     )
-
-
-def fused_finish_stage(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Single-pass phase 2: probe + route + consolidate inside one UDF."""
-    return _spread(page_rows, cfg).mapInPandas(
-        udfs.analyze_and_finish, PAGE_BLOCKS_SCHEMA
-    )
+    return _parse_blocks_json(raw)
 
 
 def _parse_blocks_json(raw: DataFrame) -> DataFrame:
@@ -161,39 +139,6 @@ def doc_fused_stage(pages: DataFrame) -> DataFrame:
         udfs.extract_docs, PAGE_BLOCKS_JSON_SCHEMA
     )
     return _parse_blocks_json(raw)
-
-
-def branch_and_finish(analyzed: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """needs-OCR routing (R2): three branches over the analyzed stage."""
-    spark = analyzed.sparkSession
-    if cfg.stage_path:
-        analyzed.write.mode("overwrite").parquet(cfg.stage_path)
-        analyzed = spark.read.parquet(cfg.stage_path)
-    elif cfg.persist_intermediate:
-        analyzed = analyzed.persist()
-
-    ok = analyzed.filter(F.col("error").isNull())
-    native = (
-        ok.filter(~F.col("needs_ocr"))
-        .drop("page_bytes")  # binary never rides past the stage that needs it
-        .mapInPandas(udfs.finish_native, PAGE_BLOCKS_SCHEMA)
-    )
-    ocr = ok.filter(F.col("needs_ocr")).mapInPandas(
-        udfs.finish_ocr, PAGE_BLOCKS_SCHEMA
-    )
-    blocks_type = "array<" + BLOCK_TYPE.simpleString() + ">"
-    errs = analyzed.filter(F.col("error").isNotNull()).select(
-        "url",
-        "warc_ts",
-        "lang",
-        "page_i",
-        "n_pages",
-        F.lit(False).alias("ocr"),
-        F.expr(f"CAST(array() AS {blocks_type})").alias("blocks"),
-        "truncated",
-        "error",
-    )
-    return native.unionByName(ocr).unionByName(errs)
 
 
 def postprocess_stage(page_blocks: DataFrame) -> DataFrame:
@@ -240,41 +185,6 @@ def assemble_stage(page_blocks: DataFrame) -> DataFrame:
     )
 
 
-def extract_from_path(
-    spark: SparkSession, path: str, cfg: PipelineConfig | None = None
-) -> DataFrame:
-    """Manifest-mode flagship: distribute (file, row_group) splits and let
-    Python workers read the payload column directly with pyarrow — the
-    binary never crosses the JVM↔Python boundary (see
-    extract_udfs.extract_manifest).  Downstream postprocess/assembly is
-    identical to :func:`extract`.
-
-    The driver only LISTS file names (cheap; Iceberg's ``.files`` metadata
-    table replaces even that on a real cluster) — the per-file parquet
-    FOOTER reads that produce row-group splits run distributed
-    (extract_udfs.enumerate_row_groups), so millions of files never
-    serialize through a driver loop."""
-    import glob as _glob
-
-    cfg = cfg or PipelineConfig()
-    files = sorted(_glob.glob(f"{path}/*.parquet")) or [path]
-    n = cfg.page_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    fdf = spark.createDataFrame(
-        [(f,) for f in files], "file string"
-    ).repartition(min(n, len(files)))
-    mdf = fdf.mapInPandas(
-        udfs.enumerate_row_groups, "file string, row_group int"
-    ).repartition(n)
-    finished = _parse_blocks_json(
-        mdf.mapInPandas(udfs.extract_manifest, PAGE_BLOCKS_JSON_SCHEMA)
-    )
-    if cfg.postprocess:
-        finished = postprocess_stage(finished)
-    return assemble_stage(finished)
-
-
 def extract(
     pages: DataFrame, cfg: PipelineConfig | None = None
 ) -> DataFrame:
@@ -282,6 +192,11 @@ def extract(
     import os
 
     cfg = cfg or PipelineConfig()
+    if cfg.mode not in ("fused", "paged"):
+        raise ValueError(
+            f"unknown PipelineConfig.mode {cfg.mode!r}; "
+            "expected 'fused' or 'paged'"
+        )
     try:
         executor_backend = pages.sparkSession.conf.get(
             "spark.executorEnv.OCR_SPARK_BACKEND", None
@@ -293,25 +208,17 @@ def extract(
         executor_backend,
     ):
         # fail fast on the driver: the model backend has no per-page byte
-        # handoff (fitz documents are not page-sliceable), so paged/staged
-        # would otherwise surface as misleading per-doc PARSE_ERROR rows
+        # handoff (fitz documents are not page-sliceable), so paged would
+        # otherwise surface as misleading per-doc PARSE_ERROR rows
         raise ValueError(
             "OCR_SPARK_BACKEND=model supports mode='fused' only "
-            "(PDF payloads are not page-sliceable for the paged/staged "
-            "stage handoff)"
+            "(PDF payloads are not page-sliceable for the paged stage "
+            "handoff)"
         )
     if cfg.mode == "fused":
         finished = doc_fused_stage(pages)
-    elif cfg.mode == "paged":
-        finished = fused_finish_stage(parse_stage(pages), cfg)
-    elif cfg.mode == "staged":
-        analyzed = analyze_stage(parse_stage(pages), cfg)
-        finished = branch_and_finish(analyzed, cfg)
     else:
-        raise ValueError(
-            f"unknown PipelineConfig.mode {cfg.mode!r}; "
-            "expected 'fused', 'paged', or 'staged'"
-        )
+        finished = fused_finish_stage(parse_stage(pages), cfg)
     if cfg.postprocess:
         finished = postprocess_stage(finished)
     return assemble_stage(finished)

@@ -45,8 +45,9 @@ PAGE_STRUCT = T.StructType(
     ]
 )
 
-# Stage 1 output: one row per page (cross-document page flattening, R3 —
-# reference document.py:764-786 flattens pages across docs for dense batches).
+# Paged plan, stage 1 output: one row per page (cross-document page
+# flattening, R3 — reference document.py:764-786 flattens pages across docs
+# for dense batches).
 PAGE_ROW_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -61,47 +62,10 @@ PAGE_ROW_SCHEMA = T.StructType(
     ]
 )
 
-# Stage 2 output: + layout, native text layer, routing flag (probe).
-_RAW_LINE = T.StructType(
-    [
-        T.StructField("bbox", T.ArrayType(T.DoubleType()), False),
-        T.StructField("content", T.StringType(), False),
-    ]
-)
-_RAW_BLOCK = T.StructType(
-    [
-        T.StructField("type", T.StringType(), False),
-        T.StructField("bbox", T.ArrayType(T.DoubleType()), False),
-    ]
-)
-
-ANALYZED_SCHEMA = T.StructType(
-    [
-        *PAGE_ROW_SCHEMA.fields,
-        T.StructField("layout", T.ArrayType(_RAW_BLOCK), False),
-        T.StructField("native_lines", T.ArrayType(_RAW_LINE), False),
-        T.StructField("needs_ocr", T.BooleanType(), False),
-    ]
-)
-
-# Stage 3 output: consolidated per-page blocks.
-PAGE_BLOCKS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("page_i", T.IntegerType(), False),
-        T.StructField("n_pages", T.IntegerType(), False),
-        T.StructField("ocr", T.BooleanType(), False),
-        T.StructField("blocks", T.ArrayType(BLOCK_TYPE), False),
-        T.StructField("truncated", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-# Doc-fused UDF wire format: blocks serialized as one JSON string per page
-# (cheap to hand through Arrow; parsed JVM-side by from_json — see
-# extract_udfs.extract_docs docstring for the measured rationale).
+# Wire format of both extraction UDFs (fused and paged): blocks serialized
+# as one JSON string per page (cheap to hand through Arrow; parsed JVM-side
+# by from_json — see extract_udfs.extract_docs docstring for the measured
+# rationale).
 PAGE_BLOCKS_JSON_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -41,7 +41,7 @@ def get_spark(
         # (measured 6× on the pages corpus); non-binary ops are insensitive.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "128")
         # local mode: every task is process-local; never stall a slot
-        # waiting for locality (measured wins on the manifest stage).
+        # waiting for locality.
         .config("spark.locality.wait", "0s")
         # Python workers are reused so per-worker model singletons load once
         # (reference lazy globals, ocr.py:10-34 / layout.py:103-118).

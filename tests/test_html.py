@@ -300,16 +300,6 @@ class TestMixedCorpusE2E:
         b = {r.url: r.text for r in extracted.select("url", "text").collect()}
         assert a == b
 
-    def test_staged_mode_identical(self, spark, mixed_parquet, extracted):
-        from ocr_spark.pipeline import PipelineConfig, extract, read_pages
-
-        alt = extract(
-            read_pages(spark, mixed_parquet), PipelineConfig(mode="staged")
-        )
-        a = {r.url: r.text for r in alt.select("url", "text").collect()}
-        b = {r.url: r.text for r in extracted.select("url", "text").collect()}
-        assert a == b
-
 
 class TestCharsets:
     """Common-Crawl pages are not all UTF-8: the HTML5-style encoding

@@ -281,6 +281,5 @@ class TestModelProtocolConformance:
             "url string, warc_ts timestamp, html binary, text string, "
             "lang string",
         )
-        for mode in ("paged", "staged"):
-            with pytest.raises(ValueError, match="fused"):
-                extract(df, PipelineConfig(mode=mode))
+        with pytest.raises(ValueError, match="fused"):
+            extract(df, PipelineConfig(mode="paged"))

@@ -76,61 +76,33 @@ class TestGoldenE2E:
 
 
 class TestPipelineVariants:
-    def test_no_persist_same_result(self, spark, pages_parquet, extracted):
-        alt = extract(
-            read_pages(spark, pages_parquet),
-            PipelineConfig(persist_intermediate=False, page_partitions=4),
-        )
-        a = {r.url: r.text for r in alt.select("url", "text").collect()}
-        b = {r.url: r.text for r in extracted.select("url", "text").collect()}
-        assert a == b
-
-    def test_manifest_mode_identical_tree(self, spark, pages_parquet, extracted):
-        """Manifest mode (workers read parquet row-groups directly; payload
-        never crosses the JVM boundary) must produce the same tree."""
-        import pathlib
-
-        from ocr_spark.pipeline import extract_from_path
-
-        mdir = str(pathlib.Path(pages_parquet).parent)
-        manifest = extract_from_path(spark, pages_parquet)
-        del mdir
-        key = ["url", "page_i", "block_i", "block_type", "line_i", "content"]
-        a = sorted(map(tuple, flatten_lines(manifest).select(key).collect()))
-        b = sorted(map(tuple, flatten_lines(extracted).select(key).collect()))
-        assert a == b
-
-    def test_paged_mode_identical_tree(self, spark, pages_parquet, extracted):
-        """Page-level salted mode (giant-doc corpora) must match."""
+    @pytest.mark.parametrize("page_partitions", [1, 16])
+    def test_paged_mode_identical_tree(
+        self, spark, pages_parquet, extracted, page_partitions
+    ):
+        """Page-level salted mode (giant-doc corpora) must match the fused
+        tree whatever the width of its salted exchange — determinism
+        across parallelism."""
         paged = extract(
             read_pages(spark, pages_parquet),
-            PipelineConfig(mode="paged", page_partitions=4),
+            PipelineConfig(mode="paged", page_partitions=page_partitions),
         )
         key = ["url", "page_i", "block_i", "block_type", "line_i", "content"]
         a = sorted(map(tuple, flatten_lines(paged).select(key).collect()))
         b = sorted(map(tuple, flatten_lines(extracted).select(key).collect()))
         assert a == b
 
-    def test_staged_mode_identical_tree(self, spark, pages_parquet, extracted):
-        """The staged three-branch plan (GPU deployment shape) must produce
-        the exact same nested tree as the default fused plan."""
-        staged = extract(
-            read_pages(spark, pages_parquet),
-            PipelineConfig(mode="staged", page_partitions=4),
+    @pytest.mark.parametrize("mode", ["staged", "manifest", "bogus"])
+    def test_unknown_mode_rejected_before_any_job(self, spark, mode):
+        """Only 'fused' and 'paged' exist; any other mode fails while the
+        (lazy) plan is built, naming both — before any Spark job runs."""
+        df = spark.createDataFrame(
+            [],
+            "url string, warc_ts timestamp, html binary, text string, "
+            "lang string",
         )
-        key = ["url", "page_i", "block_i", "block_type", "line_i", "content"]
-        a = sorted(map(tuple, flatten_lines(staged).select(key).collect()))
-        b = sorted(map(tuple, flatten_lines(extracted).select(key).collect()))
-        assert a == b
-
-    def test_stage_table_same_result(self, spark, pages_parquet, extracted, tmp_path):
-        alt = extract(
-            read_pages(spark, pages_parquet),
-            PipelineConfig(stage_path=str(tmp_path / "stage")),
-        )
-        a = {r.url: r.text for r in alt.select("url", "text").collect()}
-        b = {r.url: r.text for r in extracted.select("url", "text").collect()}
-        assert a == b
+        with pytest.raises(ValueError, match="'fused'.*'paged'"):
+            extract(df, PipelineConfig(mode=mode))
 
     def test_postprocess_off_keeps_raw_types(self, spark, pages_parquet):
         raw = extract(read_pages(spark, pages_parquet), PipelineConfig(postprocess=False))
@@ -202,7 +174,7 @@ class TestPipelineVariants:
             "lang string"
         )
         df = spark.createDataFrame([row], schema)
-        for mode in ("fused", "paged", "staged"):
+        for mode in ("fused", "paged"):
             out = extract(df, PipelineConfig(mode=mode, page_partitions=2)).collect()
             assert len(out) == 1, mode
             r = out[0]
@@ -257,7 +229,7 @@ class TestPipelineVariants:
             "lang string"
         )
         df = spark.createDataFrame(rows, schema)
-        for mode in ("fused", "paged", "staged"):
+        for mode in ("fused", "paged"):
             out = {
                 r.url: r
                 for r in extract(
@@ -274,10 +246,10 @@ class TestPipelineVariants:
     def test_error_granularity_identical_across_modes(self, spark):
         """Error lineage is per PAGE in every mode: a document mixing good
         and kernel-throwing pages keeps its good pages' text and records
-        ONE EXTRACT_ERROR for the bad page — and fused, paged, and staged
-        produce byte-identical rows for it (fused used to drop the whole
-        document to a single page_i=-1 error row, diverging from the
-        per-page guard of the paged/staged plans)."""
+        ONE EXTRACT_ERROR for the bad page — and fused and paged produce
+        byte-identical rows for it (fused used to drop the whole document
+        to a single page_i=-1 error row, diverging from the per-page guard
+        of the paged plan)."""
         import datetime as dt
 
         from ocr_spark.payload import MAGIC
@@ -302,7 +274,7 @@ class TestPipelineVariants:
             "lang string",
         )
         results = {}
-        for mode in ("fused", "paged", "staged"):
+        for mode in ("fused", "paged"):
             out = extract(
                 df, PipelineConfig(mode=mode, page_partitions=2)
             ).collect()
@@ -321,4 +293,4 @@ class TestPipelineVariants:
                           for ln in b.lines]) for b in p.blocks])
                  for p in r.pages],
             )
-        assert results["fused"] == results["paged"] == results["staged"]
+        assert results["fused"] == results["paged"]

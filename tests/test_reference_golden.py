@@ -178,7 +178,7 @@ class TestReferenceGolden:
             "lang string"
         )
         df = spark.createDataFrame(rows, schema)
-        for mode in ("fused", "paged", "staged"):
+        for mode in ("fused", "paged"):
             out = extract(df, PipelineConfig(mode=mode, page_partitions=2))
             r = out.collect()[0]
             assert r.status == "COMPLETED" and r.ocr_pages == 1, mode

@@ -11,6 +11,7 @@ SURVEY.md §2.9 / the reference's cross-doc page flattening
 (document.py:783).
 
 Usage: python tools/skew_demo.py [small_docs] [giant_pages]
+Runs on local[N] with N the host's cores (SPARK_GRAFT_CPUS overrides).
 Prints one JSON line with both wall-clocks (best-of-2) and the outputs'
 equality check.
 """
@@ -62,7 +63,7 @@ def main() -> int:
     from ocr_spark.pipeline import PipelineConfig, extract, flatten_lines
     from ocr_spark.session import get_spark
 
-    spark = get_spark("skew-demo", cores=32)
+    spark = get_spark("skew-demo")  # local[host cores] (session default)
     corpus = build_corpus(spark, n_small, giant_pages)
     corpus.count()  # materialize the cache (corpus build not timed)
 
