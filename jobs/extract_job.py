@@ -176,21 +176,11 @@ def main() -> int:
         # rule stream_extract and curate --latest-capture use.
         from pyspark.sql import Observation
 
+        from ocr_spark.operators.urls import _newest_capture_per_url
+
         obs = Observation("warc_captures")
-        cols = pages.columns
-        pages = (
+        pages = _newest_capture_per_url(
             pages.observe(obs, F.count(F.lit(1)).alias("captures"))
-            .groupBy("url")
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in cols]),
-                    F.struct(
-                        F.col("warc_ts"),
-                        F.md5(F.coalesce("html", F.lit(b""))),
-                    ),
-                ).alias("_row")
-            )
-            .select("_row.*")
         )
     else:
         obs = None

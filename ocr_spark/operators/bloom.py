@@ -61,6 +61,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._frames import fresh_names
 from .hashing import (
     MERSENNE,
     MINHASH_A,
@@ -448,9 +449,7 @@ def incremental_dedup(
             on="digest",
             how="left_semi",
         )
-        dcol = "_dig"
-        while dcol in new_df.columns:
-            dcol += "_"
+        [dcol] = fresh_names(new_df, "_dig")
         return new_df.join(
             seen.withColumnRenamed("digest", dcol),
             on=F.expr(digest_expr(text_col)) == F.col(dcol),
@@ -460,9 +459,7 @@ def incremental_dedup(
         bitmap = bloom_bitmap(
             old_df, text_col, m_bits, k, hash_mode, digest_col=old_digest_col
         ).persist()
-    fcol = "_maybe"
-    while fcol in new_df.columns:
-        fcol += "_"
+    [fcol] = fresh_names(new_df, "_maybe")
     flagged = bloom_flag(
         new_df,
         bitmap,

@@ -56,7 +56,9 @@ whitespace-token counts consistent with operators/packing.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
+
+from ._frames import top_n
 
 # End-of-word marker: a space can never appear inside a whitespace-split
 # word, so merged symbols are collision-free by construction.
@@ -92,25 +94,8 @@ def cap_word_table(df: DataFrame, max_words: int, salts: int = 16) -> DataFrame:
     almost all pair mass); this makes it explicit and deterministic."""
     if max_words < 1:
         raise ValueError(f"max_words must be >= 1, got {max_words}")
-    slt, r1, rk = "_bpe_salt", "_bpe_r1", "_bpe_rank"
-    while slt in df.columns or r1 in df.columns or rk in df.columns:
-        slt, r1, rk = slt + "_", r1 + "_", rk + "_"
     order = [F.col("cnt").desc(), F.col("word").asc()]
-    d = df
-    if salts > 1:
-        w1 = Window.partitionBy(slt).orderBy(*order)
-        d = (
-            d.withColumn(slt, F.pmod(F.xxhash64("word"), F.lit(salts)))
-            .withColumn(r1, F.row_number().over(w1))
-            .filter(F.col(r1) <= max_words)
-            .drop(r1, slt)
-        )
-    w = Window.partitionBy().orderBy(*order)
-    return (
-        d.withColumn(rk, F.row_number().over(w))
-        .filter(F.col(rk) <= max_words)
-        .drop(rk)
-    )
+    return top_n(df, [], order, max_words, salts, "word")
 
 
 def initial_state(wc: DataFrame) -> DataFrame:

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ._frames import fresh_names, resolve_strategy
 from .bloom import digest_expr
 from .hashing import (
     MERSENNE,
@@ -170,9 +171,7 @@ def with_shingles(
     than once and split is not cheap.  The temp column name is made
     collision-free against the caller's schema (a fixed '_ws' would
     silently overwrite-and-drop an existing column of that name)."""
-    tmp = "_ws"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_ws")
     ws = df.withColumn(tmp, F.split(F.col(text_col), " "))
     expr = (
         f"CASE WHEN size(`{tmp}`) >= {n} THEN "
@@ -593,9 +592,7 @@ def corpus_boilerplate_filter(
 def _bind_tokens(df: DataFrame, text_col: str) -> tuple[DataFrame, str]:
     """Bind the whitespace token array to a collision-free column (the
     CLAUDE.md rule: never inline an array build into a lambda body)."""
-    tmp = "_tk"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_tk")
     return (
         df.withColumn(
             tmp, F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
@@ -868,8 +865,7 @@ def simhash(
     output cardinality with ``bits``).  A NULL-text document therefore
     gets the empty-string signature in every strategy and every row
     survives."""
-    if strategy == "auto":
-        strategy = "explode" if bits > 16 else "hof"
+    strategy = resolve_strategy(strategy, bits <= 16, ("hof", "explode"))
     if hash_mode == "portable":
         th = "CAST(conv(substr(md5(t), 1, 12), 16, 10) AS BIGINT)"
     else:
@@ -1405,12 +1401,7 @@ def winnow_fingerprints(
         raise ValueError(f"k={k} and w={w} must be >= 1")
     from .hashing import portable_hash_sql_spark
 
-    ws = "_ws"
-    while ws in df.columns:
-        ws += "_"
-    hs = "_hs"
-    while hs in df.columns or hs == ws:
-        hs += "_"
+    ws, hs = fresh_names(df, "_ws", "_hs")
     gram = f"array_join(slice(`{ws}`, i + 1, {k}), ' ')"
     h_of = (
         portable_hash_sql_spark(gram)

@@ -43,8 +43,9 @@ task, nothing ships text through a join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from ._frames import fresh_names, top_n
 from .hashing import portable_hash_col, portable_hash_sql_spark
 
 #: hash-domain size of the portable 48-bit hash (md5-prefix, see
@@ -66,9 +67,7 @@ def _features(
     text = F.coalesce(F.col(text_col), F.lit(""))
     if lowercase:
         text = F.lower(text)
-    toks = "_dsir_toks"
-    while toks in df.columns:
-        toks += "_"
+    [toks] = fresh_names(df, "_dsir_toks")
     bound = df.select(F.col(id_col), F.split(text, " ").alias(toks))
     feats = (
         f"concat(`{toks}`, zip_with("
@@ -283,27 +282,7 @@ def dsir_sample(
         (F.col("logw") - F.log(-F.log(u))).alias("gumbel_key"),
     )
     order = [F.col("gumbel_key").desc(), F.col(id_col).asc()]
-    slt, r1, rk = "_dsir_salt", "_dsir_r1", "_dsir_rank"
-    while any(c in keyed.columns for c in (slt, r1, rk)):
-        slt, r1, rk = slt + "_", r1 + "_", rk + "_"
-    d = keyed
-    if salts > 1:
-        w1 = Window.partitionBy(slt).orderBy(*order)
-        d = (
-            d.withColumn(
-                slt,
-                F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(salts)),
-            )
-            .withColumn(r1, F.row_number().over(w1))
-            .filter(F.col(r1) <= k)
-            .drop(r1, slt)
-        )
-    w = Window.partitionBy().orderBy(*order)
-    return (
-        d.withColumn(rk, F.row_number().over(w))
-        .filter(F.col(rk) <= k)
-        .drop(rk)
-    )
+    return top_n(keyed, [], order, k, salts, F.col(id_col).cast("string"))
 
 
 def dsir_log_ratios(
@@ -387,9 +366,7 @@ def with_dsir_weight(
     text = F.coalesce(F.col(text_col), F.lit(""))
     if lowercase:
         text = F.lower(text)
-    toks, feats = "_dsir_toks", "_dsir_feats"
-    while toks in df.columns or feats in df.columns:
-        toks, feats = toks + "_", feats + "_"
+    toks, feats = fresh_names(df, "_dsir_toks", "_dsir_feats")
     feats_expr = (
         f"concat(`{toks}`, zip_with("
         f"slice(`{toks}`, 1, size(`{toks}`) - 1), "

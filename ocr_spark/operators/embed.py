@@ -54,6 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._frames import resolve_strategy
 from .hashing import portable_hash_sql_spark
 
 EMB_SALT = "emb:"  # hash-domain prefix: independent of splits/sample/minhash
@@ -86,10 +87,7 @@ def hashed_embedding(
     """
     if dim < 1:
         raise ValueError(f"dim must be >= 1, got {dim}")
-    if strategy == "auto":
-        strategy = "explode" if dim > 16 else "hof"
-    if strategy not in ("hof", "explode"):
-        raise ValueError(f"unknown strategy {strategy!r}")
+    strategy = resolve_strategy(strategy, dim <= 16, ("hof", "explode"))
 
     text = f"coalesce({text_col}, '')"
     if lowercase:
@@ -308,8 +306,9 @@ def random_project(
         )
     if out_col in df.columns:
         raise ValueError(f"output column {out_col!r} already exists")
-    if strategy == "auto":
-        strategy = "literal" if out_dim * in_dim <= 4096 else "pandas"
+    strategy = resolve_strategy(
+        strategy, out_dim * in_dim <= 4096, ("literal", "pandas")
+    )
     if strategy == "pandas":
         import math
 
@@ -366,11 +365,6 @@ def random_project(
                 yield pdf.assign(**{out_col: out})
 
         return df.mapInPandas(_proj, schema)
-    if strategy != "literal":
-        raise ValueError(
-            f"strategy must be 'auto', 'literal', or 'pandas', "
-            f"got {strategy!r}"
-        )
     m_lit = (
         "array("
         + ", ".join(

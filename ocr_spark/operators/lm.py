@@ -32,6 +32,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._frames import fresh_names
+
 
 def _tokens(df: DataFrame, text_col: str, id_col: str, lowercase: bool):
     text = F.coalesce(F.col(text_col), F.lit(""))
@@ -151,9 +153,7 @@ def bigram_counts(
     text = F.coalesce(F.col(text_col), F.lit(""))
     if lowercase:
         text = F.lower(text)
-    toks = "_lm_toks"
-    while toks in df.columns:
-        toks += "_"
+    [toks] = fresh_names(df, "_lm_toks")
     bound = df.select(F.split(text, " ").alias(toks))
     pairs = (
         f"zip_with(slice(`{toks}`, 1, size(`{toks}`) - 1), "
@@ -214,9 +214,7 @@ def lm_score_bigram(
     text = F.coalesce(F.col(text_col), F.lit(""))
     if lowercase:
         text = F.lower(text)
-    toks = "_lm_toks"
-    while toks in df.columns:
-        toks += "_"
+    [toks] = fresh_names(df, "_lm_toks")
     bound = df.select(F.col(id_col), F.split(text, " ").alias(toks))
     gen = bound.select(
         F.col(id_col),

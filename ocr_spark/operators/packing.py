@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import NumericType
 
+from ._frames import fresh_names
+
 
 def pack_sequences(
     df: DataFrame,
@@ -240,9 +242,7 @@ def chunk_text(
     n_chunk_tok``."""
     if size < 1 or stride < 1 or stride > size:
         raise ValueError(f"need 1 <= stride <= size, got {size=} {stride=}")
-    tk = "_tk"
-    while tk in df.columns:
-        tk += "_"
+    [tk] = fresh_names(df, "_tk")
     bound = df.withColumn(
         tk, F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
     ).withColumn(

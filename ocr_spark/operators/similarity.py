@@ -18,6 +18,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ._frames import fresh_names, resolve_strategy, top_n
 from .dedup import _check_frame, _hot_keys, _posting_pairs
 
 
@@ -107,32 +108,62 @@ def _rerank_pairs(
     )
 
 
-def _two_stage_topk(
+def _topk_neighbors(
     scored: DataFrame, k: int, id_col: str, salts: int
 ) -> DataFrame:
-    """Salted exact top-k rank over a scored (query_id, id, cos) frame:
-    stage 1 takes the local top-k per ``(query_id, salt)`` shard, stage 2
-    ranks the ≤ ``k × salts`` survivors per query.  Both stages order by
-    ``(cos DESC, id ASC)``, so the result — ranks included — is exactly
-    the single-window top-k, without ever funneling a whole scored corpus
-    into one task per query."""
+    """Exact top-k of a scored ``(query_id, id, cos)`` frame, ordered
+    ``(cos DESC, id ASC)`` — :func:`top_n`'s salted two-stage rank, so a
+    query never funnels its whole scored corpus into one task.  Output
+    ``(query_id, neighbor_id, rank, cos)``."""
     order = [F.desc("cos"), F.col(id_col).asc()]
-    if salts > 1:
-        w1 = Window.partitionBy("query_id", "_salt").orderBy(*order)
-        scored = (
-            scored.withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salts))
-            )
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= k)
-            .drop("_r1", "_salt")
-        )
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "rank", "cos")
+    return top_n(
+        scored, "query_id", order, k, salts, id_col, rank_col="rank"
+    ).select("query_id", F.col(id_col).alias("neighbor_id"), "rank", "cos")
+
+
+def _rerank_topk(
+    hits: DataFrame,
+    df: DataFrame,
+    queries: DataFrame,
+    k: int,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """Exact-cosine top-k over an ANN candidate join ``hits`` carrying
+    ``(q_id, c_id)``.  The distinct runs on ids ONLY — the id-only pair
+    rule (CLAUDE.md; measured 13× on cosine_pairs at r4): a hot bucket
+    or probed cell duplicates each candidate once per collision, and at
+    dim 768 every duplicate would drag ~6 KB of vector through the
+    distinct exchange.  Vectors and norms rejoin AFTER it, once per
+    side — corpus side one hash join on c_id, query side broadcast —
+    then the single-window rank."""
+    pairs = (
+        hits.filter(F.col("c_id") != F.col("q_id"))
+        .select("q_id", "c_id")
+        .distinct()
     )
+    c_vecs = df.select(
+        F.col(id_col).alias("c_id"),
+        F.col(vec_col).alias("c_vec"),
+        F.expr(_norm(vec_col)).alias("_cn"),
+    )
+    q_vecs = F.broadcast(
+        queries.select(
+            F.col(id_col).alias("q_id"),
+            F.col(vec_col).alias("q_vec"),
+            F.expr(_norm(vec_col)).alias("_qn"),
+        )
+    )
+    cand = (
+        pairs.join(c_vecs, "c_id")
+        .join(q_vecs, "q_id")
+        .select(
+            F.col("q_id").alias("query_id"),
+            "c_id",
+            F.expr(_cos_guarded("_cn", "_qn", "c_vec", "q_vec")).alias("cos"),
+        )
+    )
+    return _topk_neighbors(cand, k, "c_id", salts=1)
 
 
 def cosine_topk_bruteforce(
@@ -179,7 +210,7 @@ def cosine_topk_bruteforce(
             "cos", F.expr(_cos_guarded("_cn", "_qn", vec_col, "qvec"))
         )
     )
-    return _two_stage_topk(scored, k, id_col, salts)
+    return _topk_neighbors(scored, k, id_col, salts)
 
 
 def hyperplane_signature(
@@ -250,49 +281,10 @@ def lsh_topk(
             x, vec_col=vecc, id_col=idc, planes=planes, signs=signs
         ).withColumnRenamed(idc, f"{pref}_id")
 
-    # The bucket join and its distinct carry ONLY (q_id, c_id) — the
-    # id-only pair rule (CLAUDE.md; measured 13× on cosine_pairs at r4):
-    # a hot bucket duplicates each candidate once per colliding band, and
-    # at dim 768 every duplicate would drag ~6 KB of vector through the
-    # distinct exchange.  Vectors rejoin AFTER the distinct, once per
-    # side — corpus side one hash join on c_id, query side broadcast.
     corpus = banded(df, id_col, vec_col, "c")
     qs = F.broadcast(banded(queries, id_col, vec_col, "q"))
-    pairs = (
-        corpus.join(qs, on=["band", "key"])
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select("q_id", "c_id")
-        .distinct()
-    )
-    c_vecs = df.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.expr(_norm(vec_col)).alias("_cn"),
-    )
-    q_vecs = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.expr(_norm(vec_col)).alias("_qn"),
-        )
-    )
-    cand = (
-        pairs.join(c_vecs, "c_id")
-        .join(q_vecs, "q_id")
-        .withColumn(
-            "cos", F.expr(_cos_guarded("_cn", "_qn", "c_vec", "q_vec"))
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("c_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "rank",
-            "cos",
-        )
+    return _rerank_topk(
+        corpus.join(qs, on=["band", "key"]), df, queries, k, vec_col, id_col
     )
 
 
@@ -316,9 +308,7 @@ def quantize_embeddings(
     Returns (id_col, ``q`` array<int>, ``scale`` double); cosine between
     quantized vectors needs NO dequantization — the per-vector scales
     cancel in the ratio."""
-    tmp = "_qs"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_qs")
     bound = df.select(F.col(id_col), F.col(vec_col)).withColumn(
         tmp,
         F.expr(
@@ -388,7 +378,7 @@ def cosine_topk_quantized(
             ),
         )
     )
-    return _two_stage_topk(scored, k, id_col, salts)
+    return _topk_neighbors(scored, k, id_col, salts)
 
 
 def _vec_literal(values: list[float]) -> str:
@@ -449,6 +439,35 @@ def _best_cell_struct(
             f"named_struct('ccos', {ccos}, 'ncid', {-int(cid)}L)"
         )
     return f"array_max(array({', '.join(structs)}))"
+
+
+def _probe_cells_expr(
+    vec_col: str,
+    norm_col: str,
+    cents: list[tuple[int, list[float]]],
+    probe: int,
+) -> str:
+    """A query's ``probe`` nearest cells as one projection expression:
+    sort the ``(−cos, cid)`` struct array and slice — no crossJoin row
+    blowup, no Window, no exchange, and the same ordering as a
+    row_number over (cos DESC, cid ASC).  ``norm_col`` is the query's
+    bound norm column (same fold and zero guard as the corpus side, so
+    the probed cell set is bit-identical to the oracle's)."""
+    structs = []
+    for cid, cvec in cents:
+        lit = _vec_literal(cvec)
+        cn = _norm(lit)
+        ccos = (
+            f"CASE WHEN `{norm_col}` = 0D OR {cn} = 0D THEN 0D "
+            f"ELSE ({_dot(vec_col, lit)}) / (`{norm_col}` * {cn}) END"
+        )
+        structs.append(
+            f"named_struct('nccos', -({ccos}), 'cid', {int(cid)}L)"
+        )
+    return (
+        f"transform(slice(array_sort(array({', '.join(structs)})), "
+        f"1, {probe}), s -> s.cid)"
+    )
 
 
 def assign_cells(
@@ -584,87 +603,22 @@ def ivf_topk(
             .collect()
         ]
 
-    def assign_queries(x: DataFrame, probe: int) -> DataFrame:
-        # same shuffle-free projection shape as the corpus side, extended
-        # to top-``probe``: sort the (−cos, cid) struct array and slice —
-        # no crossJoin row blowup, no Window, no exchange.  Ordering is
-        # identical to the previous row_number() over (cos DESC, cid ASC)
-        # and the scores are the same bound-norm fold, so the probed cell
-        # set (and thus the oracle-checked result) is bit-identical.
-        tmp = "_qnorm"
-        while tmp in x.columns:
-            tmp += "_"
-        bound = x.withColumn(tmp, F.expr(_norm(vec_col)))
-        structs = []
-        for cid, cvec in cents_local:
-            lit = _vec_literal(cvec)
-            cn = _norm(lit)
-            ccos = (
-                f"CASE WHEN `{tmp}` = 0D OR {cn} = 0D THEN 0D "
-                f"ELSE ({_dot(vec_col, lit)}) / (`{tmp}` * {cn}) END"
-            )
-            structs.append(
-                f"named_struct('nccos', -({ccos}), 'cid', {int(cid)}L)"
-            )
-        cells = (
-            f"transform(slice(array_sort(array({', '.join(structs)})), "
-            f"1, {probe}), s -> s.cid)"
-        )
-        return bound.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.explode(F.expr(cells)).alias("cell"),
-        )
-
-    # Id-only pair rule (CLAUDE.md; measured 13× on cosine_pairs at r4):
-    # the cell join and its distinct carry (q_id, c_id) only — a query
-    # probing n_probe cells would otherwise duplicate every candidate
-    # vector once per probed cell through the distinct exchange.  Vectors
-    # rejoin AFTER the distinct: corpus side one hash join on c_id, query
-    # side broadcast.
+    [qn] = fresh_names(queries, "_qnorm")
     corpus_cells = assign_cells(
         df.select(id_col, vec_col), cents_local, vec_col, id_col
     ).select(F.col(id_col).alias("c_id"), "cell")
     query_cells = F.broadcast(
-        assign_queries(queries.select(id_col, vec_col), n_probe)
-        .select("q_id", "cell")
-    )
-    pairs = (
-        corpus_cells.join(query_cells, "cell")
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select("q_id", "c_id")
-        .distinct()
-    )
-    c_vecs = df.select(
-        F.col(id_col).alias("c_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.expr(_norm(vec_col)).alias("_cn"),
-    )
-    q_vecs = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.expr(_norm(vec_col)).alias("_qn"),
-        )
-    )
-    cand = (
-        pairs.join(c_vecs, "c_id")
-        .join(q_vecs, "q_id")
-        .withColumn(
-            "cos", F.expr(_cos_guarded("_cn", "_qn", "c_vec", "q_vec"))
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("c_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        queries.select(id_col, vec_col)
+        .withColumn(qn, F.expr(_norm(vec_col)))
         .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "rank",
-            "cos",
+            F.col(id_col).alias("q_id"),
+            F.explode(
+                F.expr(_probe_cells_expr(vec_col, qn, cents_local, n_probe))
+            ).alias("cell"),
         )
     )
+    hits = corpus_cells.join(query_cells, "cell")
+    return _rerank_topk(hits, df, queries, k, vec_col, id_col)
 
 
 def hyperplane_buckets(
@@ -949,19 +903,6 @@ def _seq_sq_norm(v: list[float]) -> float:
     return acc
 
 
-def _resolve_strategy(strategy: str, small: bool) -> str:
-    """'auto' → 'literal' when ``small`` (the bit-exact fold regime every
-    oracle row pins) else 'pandas'; explicit values validated."""
-    if strategy == "auto":
-        return "literal" if small else "pandas"
-    if strategy not in ("literal", "pandas"):
-        raise ValueError(
-            f"strategy must be 'auto', 'literal', or 'pandas', "
-            f"got {strategy!r}"
-        )
-    return strategy
-
-
 def _coerce_vec_batch(pdf, vec_col: str, id_col: str, dim: int):
     """Arrow batch → (n, dim) float64 matrix, REFUSING malformed rows
     (NULL vector, wrong dimension, NaN / NULL elements — Arrow coerces a
@@ -1059,17 +1000,10 @@ def _pq_bind_subvecs(df: DataFrame, m: int, dsub: int, vec_col: str):
     """Bind each subvector to a real column — every subspace expression
     references its slice ksub times, and an inlined slice would re-slice
     per centroid (the CLAUDE.md bind-before-lambda rule)."""
-    cols = []
-    out = df
-    for j in range(m):
-        c = f"_pqs{j}"
-        while c in out.columns:
-            c += "_"
-        out = out.withColumn(
-            c, F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        )
-        cols.append(c)
-    return out, cols
+    cols = fresh_names(df, *(f"_pqs{j}" for j in range(m)))
+    for j, c in enumerate(cols):
+        df = df.withColumn(c, F.slice(F.col(vec_col), j * dsub + 1, dsub))
+    return df, cols
 
 
 def _pq_codes_expr(
@@ -1149,7 +1083,9 @@ def pq_encode(
     m = len(codebooks)
     ksub = len(codebooks[0])
     dsub = len(codebooks[0][0][1])
-    strategy = _resolve_strategy(strategy, ksub <= _LITERAL_CENTS_MAX)
+    strategy = resolve_strategy(
+        strategy, ksub <= _LITERAL_CENTS_MAX, ("literal", "pandas")
+    )
     if strategy == "literal":
         bound, subcols = _pq_bind_subvecs(
             df.select(F.col(id_col), F.col(vec_col)), m, dsub, vec_col
@@ -1215,6 +1151,30 @@ def pq_encode(
     return df.select(id_col, vec_col).mapInPandas(_encode, schema)
 
 
+def _pq_luts_expr(
+    codebooks: list[list[tuple[int, list[float]]]], subcols: list[str]
+) -> str:
+    """Per-query ADC lookup tables: ``luts[j][c] = dot(q_j, centroid_{j,c})``
+    over the inlined codebooks, one array per subspace."""
+    luts = []
+    for j, book in enumerate(codebooks):
+        dots = ", ".join(
+            _dot(f"`{subcols[j]}`", _vec_literal(cvec)) for _, cvec in book
+        )
+        luts.append(f"array({dots})")
+    return f"array({', '.join(luts)})"
+
+
+# ADC cosine of a (codes, rnorm) candidate against the broadcast
+# (_luts, _qn) query: m lookups folded in subspace order, zero-guarded.
+_ADC_COS = (
+    "CASE WHEN rnorm = 0D OR _qn = 0D THEN 0D ELSE ("
+    "aggregate(transform(codes, (c, j) -> "
+    "element_at(element_at(_luts, j + 1), c + 1)), "
+    "0D, (acc, v) -> acc + v)) / (_qn * rnorm) END"
+)
+
+
 def pq_topk(
     corpus_codes: DataFrame,
     queries: DataFrame,
@@ -1246,34 +1206,17 @@ def pq_topk(
         dsub,
         vec_col,
     )
-    lut_exprs = []
-    for j, book in enumerate(codebooks):
-        dots = ", ".join(
-            _dot(f"`{subcols[j]}`", _vec_literal(cvec)) for _, cvec in book
-        )
-        lut_exprs.append(f"array({dots})")
     q = F.broadcast(
         qb.select(
             "query_id",
-            F.expr(f"array({', '.join(lut_exprs)})").alias("_luts"),
+            F.expr(_pq_luts_expr(codebooks, subcols)).alias("_luts"),
             F.expr(_norm(vec_col)).alias("_qn"),
         )
     )
-    ip = (
-        "aggregate(transform(codes, (c, j) -> "
-        "element_at(element_at(_luts, j + 1), c + 1)), "
-        "0D, (acc, v) -> acc + v)"
-    )
     scored = corpus_codes.join(
         q, F.col(id_col) != F.col("query_id")
-    ).withColumn(
-        "cos",
-        F.expr(
-            f"CASE WHEN rnorm = 0D OR _qn = 0D THEN 0D "
-            f"ELSE ({ip}) / (_qn * rnorm) END"
-        ),
-    )
-    return _two_stage_topk(scored, k, id_col, salts)
+    ).withColumn("cos", F.expr(_ADC_COS))
+    return _topk_neighbors(scored, k, id_col, salts)
 
 
 def ivf_pq_encode(
@@ -1302,13 +1245,13 @@ def ivf_pq_encode(
     m = len(codebooks)
     ksub = len(codebooks[0])
     dsub = len(codebooks[0][0][1])
-    strategy = _resolve_strategy(
-        strategy, max(len(cents), ksub) <= _LITERAL_CENTS_MAX
+    strategy = resolve_strategy(
+        strategy,
+        max(len(cents), ksub) <= _LITERAL_CENTS_MAX,
+        ("literal", "pandas"),
     )
     if strategy == "literal":
-        tmp = "_rnorm"
-        while tmp in df.columns:
-            tmp += "_"
+        [tmp] = fresh_names(df, "_rnorm")
         bound, subcols = _pq_bind_subvecs(
             df.select(F.col(id_col), F.col(vec_col)), m, dsub, vec_col
         )
@@ -1420,9 +1363,7 @@ def ivf_pq_topk(
     construction."""
     m = len(codebooks)
     dsub = len(codebooks[0][0][1])
-    tmp = "_qnorm"
-    while tmp in queries.columns:
-        tmp += "_"
+    [tmp] = fresh_names(queries, "_qnorm")
     qb, subcols = _pq_bind_subvecs(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col)),
         m,
@@ -1430,55 +1371,21 @@ def ivf_pq_topk(
         vec_col,
     )
     qb = qb.withColumn(tmp, F.expr(_norm(vec_col)))
-    # top-n_probe cells via the sorted-struct slice (the ivf_topk query
-    # shape: no Window, no crossJoin — identical ordering to a
-    # row_number over (ccos DESC, cid ASC))
-    structs = []
-    for cid, cvec in cents:
-        lit = _vec_literal(cvec)
-        cn = _norm(lit)
-        ccos = (
-            f"CASE WHEN `{tmp}` = 0D OR {cn} = 0D THEN 0D "
-            f"ELSE ({_dot(vec_col, lit)}) / (`{tmp}` * {cn}) END"
-        )
-        structs.append(
-            f"named_struct('nccos', -({ccos}), 'cid', {int(cid)}L)"
-        )
-    cells = (
-        f"transform(slice(array_sort(array({', '.join(structs)})), "
-        f"1, {n_probe}), s -> s.cid)"
-    )
-    lut_exprs = []
-    for j, book in enumerate(codebooks):
-        dots = ", ".join(
-            _dot(f"`{subcols[j]}`", _vec_literal(cvec)) for _, cvec in book
-        )
-        lut_exprs.append(f"array({dots})")
+    cells = _probe_cells_expr(vec_col, tmp, cents, n_probe)
     q = F.broadcast(
         qb.select(
             "query_id",
             F.explode(F.expr(cells)).alias("cell"),
-            F.expr(f"array({', '.join(lut_exprs)})").alias("_luts"),
+            F.expr(_pq_luts_expr(codebooks, subcols)).alias("_luts"),
             F.col(tmp).alias("_qn"),
         )
-    )
-    ip = (
-        "aggregate(transform(codes, (c, j) -> "
-        "element_at(element_at(_luts, j + 1), c + 1)), "
-        "0D, (acc, v) -> acc + v)"
     )
     scored = (
         encoded.join(q, "cell")
         .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn(
-            "cos",
-            F.expr(
-                f"CASE WHEN rnorm = 0D OR _qn = 0D THEN 0D "
-                f"ELSE ({ip}) / (_qn * rnorm) END"
-            ),
-        )
+        .withColumn("cos", F.expr(_ADC_COS))
     )
-    return _two_stage_topk(scored, k, id_col, salts)
+    return _topk_neighbors(scored, k, id_col, salts)
 
 
 # ---------------------------------------------------------------------------
@@ -1679,16 +1586,11 @@ def prototype_scores(
     both strategies, so the frame can be shared with every ``cells=``
     consumer (:func:`semdedup_hot_cells`, :func:`semdedup_pairs`) and a
     mismatched geometry is refused rather than silently mis-bucketed."""
-    strategy = _resolve_strategy(
-        strategy, len(cents) <= _LITERAL_CENTS_MAX
+    strategy = resolve_strategy(
+        strategy, len(cents) <= _LITERAL_CENTS_MAX, ("literal", "pandas")
     )
     if strategy == "literal":
-        rn = "_rnorm"
-        while rn in df.columns:
-            rn += "_"
-        best = "_best"
-        while best in df.columns:
-            best += "_"
+        rn, best = fresh_names(df, "_rnorm", "_best")
         bound = (
             df.select(F.col(id_col), F.col(vec_col))
             .withColumn(rn, F.expr(_norm(vec_col)))

@@ -290,7 +290,7 @@ def shard_corpus(
     :func:`assign_split` / :func:`deterministic_sample` at the same salt
     (same rationale as documented there).
 
-    Plan shape: the naive ``seq`` is ``row_number() OVER (PARTITION BY
+    Plan shape: the naive ``seq`` is ``row_number OVER (PARTITION BY
     shard ORDER BY h)`` — one task per shard sorting corpus/n_shards
     rows, a straggler wall when shards are sized for file convenience
     (10^12 docs / 4096 shards = 2.4×10^8 rows per task).  So ``seq``

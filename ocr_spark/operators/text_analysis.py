@@ -5,7 +5,9 @@ UDFs, no shuffles except the aggregations a caller asks for.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from ._frames import fresh_names, top_n
 
 # Tiny deterministic stopword profiles for the n-gram/stopword language vote.
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -94,9 +96,7 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     # sibling projection columns reference it, and higher-order-function
     # expressions are interpreted (no codegen subexpression elimination),
     # so inlining the split would re-tokenize the document per column
-    tmp = "_qw"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_qw")
     bound = df.withColumn(tmp, F.expr(f"split({text_col}, ' ')"))
     words = f"`{tmp}`"
     stop = ", ".join(f"'{w}'" for w in EN_STOPWORDS)
@@ -218,9 +218,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     defaults scaled to this corpus's synthetic text."""
     # bound once for the same reason as quality_features: four sibling
     # columns reference the array and HOF exprs don't CSE
-    tmp = "_gw"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_gw")
     bound = df.withColumn(tmp, F.expr(f"split({text_col}, ' ')"))
     words = f"`{tmp}`"
     return bound.select(
@@ -269,9 +267,7 @@ def c4_rules(df: DataFrame, text_col: str = "text") -> DataFrame:
     (multi-referenced, so CollapseProject keeps the bind — the CLAUDE.md
     inlined-array-build rule).  Integer counts and string predicates only,
     so the DuckDB oracle twin is bit-exact."""
-    tmp = "_lines"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_lines")
     bound = df.withColumn(tmp, F.split(F.col(text_col), "\n"))
     stop8 = ", ".join(f"'{w}'" for w in GOPHER_STOP_8)
     out = bound.select(
@@ -510,29 +506,10 @@ def cap_per_domain(
     window."""
     from .urls import host_of
 
-    # collision-free temp names (repo convention): a fixed '_domain'
-    # would silently overwrite-and-drop a same-named caller column
-    dom = "_domain"
-    while dom in df.columns:
-        dom += "_"
-    slt, r1, rk = dom + "_salt", dom + "_r1", dom + "_rank"
+    [dom] = fresh_names(df, "_domain")
     d = df.withColumn(dom, host_of(F.col(url_col)))
-    if salts > 1:
-        w1 = Window.partitionBy(dom, slt).orderBy(order_col)
-        d = (
-            d.withColumn(
-                slt, F.pmod(F.xxhash64(F.col(order_col)), F.lit(salts))
-            )
-            .withColumn(r1, F.row_number().over(w1))
-            .filter(F.col(r1) <= n)
-            .drop(r1, slt)
-        )
-    w = Window.partitionBy(dom).orderBy(order_col)
-    return (
-        d.withColumn(rk, F.row_number().over(w))
-        .filter(F.col(rk) <= n)
-        .drop(rk, dom)
-    )
+    order = [F.col(order_col)]
+    return top_n(d, dom, order, n, salts, order_col).drop(dom)
 
 
 def c4_line_filter(
@@ -557,12 +534,7 @@ def c4_line_filter(
     element-level split is one evaluation per line — the CLAUDE.md rule
     bans re-evaluating ROW-level arrays per element, which this never
     does)."""
-    tmp = "_lines"
-    while tmp in df.columns:
-        tmp += "_"
-    kept = "_kept"
-    while kept in df.columns:
-        kept += "_"
+    tmp, kept = fresh_names(df, "_lines", "_kept")
     needle = drop_containing.lower().replace("'", "''")
     bound = df.withColumn(
         tmp, F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
@@ -763,18 +735,8 @@ def tfidf_keywords(
             ).alias("score"),
         )
     )
-    rk = "_tfidf_rank"
-    while rk in scored.columns:
-        rk += "_"
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col("token").asc()
-    )
-    return (
-        scored.withColumn(rk, F.row_number().over(w))
-        .filter(F.col(rk) <= k)
-        .withColumn("rank", F.col(rk).cast("int"))
-        .drop(rk)
-    )
+    order = [F.col("score").desc(), F.col("token").asc()]
+    return top_n(scored, id_col, order, k, rank_col="rank")
 
 
 def bm25_topk(
@@ -846,9 +808,7 @@ def bm25_topk(
     qtext = F.coalesce(F.col(query_col), F.lit(""))
     if lowercase:
         text, qtext = F.lower(text), F.lower(qtext)
-    ws = "_bm25_ws"
-    while ws in df.columns:
-        ws += "_"
+    [ws] = fresh_names(df, "_bm25_ws")
     # words bound to a real column (CLAUDE.md: never inline split into a
     # lambda body); _dl = non-empty token count, a per-row projection
     base = df.select(id_col, F.split(text, " ").alias(ws)).select(
@@ -933,27 +893,11 @@ def bm25_topk(
             9,
         ).alias("score_r"),
     )
-    # salted two-stage exact top-k (cosine_topk_bruteforce's shape) on
-    # the rounded score: stage 1 per (query, salt) shard, stage 2 over
-    # the <= k*salts survivors; both order (score_r DESC, id ASC)
+    # salted two-stage exact top-k on the rounded score
     order = [F.desc("score_r"), F.col(id_col).asc()]
-    if salts > 1:
-        w1 = Window.partitionBy("query_id", "_salt").orderBy(*order)
-        scored = (
-            scored.withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salts))
-            )
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= k)
-            .drop("_r1", "_salt")
-        )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
-        .select("query_id", id_col, "n_hit", "score_r", "rank")
-    )
+    return top_n(
+        scored, "query_id", order, k, salts, id_col, rank_col="rank"
+    ).select("query_id", id_col, "n_hit", "score_r", "rank")
 
 
 def quantile_report(
@@ -1114,9 +1058,7 @@ def ngram_report(
         raise ValueError(f"n must be >= 1, got {n}")
     if top_k < 1:
         raise ValueError(f"top_k must be >= 1, got {top_k}")
-    tmp = "_ws"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_ws")
     ws = df.select(F.col(id_col), F.col(text_col)).withColumn(
         tmp, F.split(F.col(text_col), " ")
     )

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ._frames import fresh_names
+
 _TRACKING = r"([?&])(?:utm_[^&=#]*|fbclid|gclid)=[^&#]*"
 _HEAD = r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*"
 
@@ -128,9 +130,7 @@ def filter_blocked_domains(
                 f"'*.example.com' is just 'example.com')"
             )
         norm.append(e)
-    tmp = "_host"
-    while tmp in df.columns:
-        tmp += "_"
+    [tmp] = fresh_names(df, "_host")
     # ONE anchored alternation instead of an exists() lambda over the
     # list: PushDownPredicates substitutes a once-referenced host alias
     # INTO the lambda body, re-running the host regexp per entry per row
@@ -183,7 +183,10 @@ def latest_capture(
     type (timestamp or bigint).
 
     Output: ``canonical_url``, ``n_captures``, then every input column
-    of the winning row.
+    of the winning row.  Compare :func:`_newest_capture_per_url`, the
+    extraction-side pick: it keys on the RAW url, because the raw url is
+    the extraction checkpoint key (canonicalizing there would merge
+    http/https variants into one checkpoint key).
     """
     for c in ("canonical_url", "n_captures"):
         if c in df.columns:
@@ -206,4 +209,28 @@ def latest_capture(
             F.count(F.lit(1)).alias("n_captures"),
         )
         .select("canonical_url", "n_captures", "_w.*")
+    )
+
+
+def _newest_capture_per_url(pages: DataFrame) -> DataFrame:
+    """One row per RAW ``url`` of a pages frame, the schema unchanged:
+    the newest ``warc_ts`` wins, ties broken by the md5 of ``html``
+    (NULL as ``b''``), so the pick is deterministic under any
+    partitioning and a checkpoint replay commits the same capture.
+
+    The extraction pick (``jobs/extract_job.py`` on WARC input and
+    ``streaming.stream_extract`` per micro-batch): without it the
+    ``groupBy(url)`` page assembly would merge every capture of a url
+    into one corrupted document.  Unlike :func:`latest_capture` it does
+    not canonicalize — the raw url is the checkpoint key — and it adds
+    no columns.  One ``groupBy`` with ``max_by`` over the packed row: a
+    single map-side-combined shuffle, no window."""
+    packed = F.struct(*[F.col(c) for c in pages.columns])
+    newest = F.struct(
+        F.col("warc_ts"), F.md5(F.coalesce("html", F.lit(b"")))
+    )
+    return (
+        pages.groupBy("url")
+        .agg(F.max_by(packed, newest).alias("_row"))
+        .select("_row.*")
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .io import pending_pages, write_extracted
+from .operators.urls import _newest_capture_per_url
 from .pipeline import PipelineConfig, extract
 from .schemas import PAGES_SCHEMA
 
@@ -61,22 +62,8 @@ def stream_extract(
         # keeps an arbitrary partition-order row, so a checkpoint replay
         # could commit a DIFFERENT capture's text than the first run,
         # breaking idempotence (and the repo-wide latest-capture
-        # convention, urls.latest_capture)
-        cols = batch_df.columns
-        deduped = (
-            batch_df.groupBy("url")
-            .agg(
-                F.max_by(
-                    F.struct(*[F.col(c) for c in cols]),
-                    F.struct(
-                        F.col("warc_ts"),
-                        F.md5(F.coalesce("html", F.lit(b""))),
-                    ),
-                ).alias("_row")
-            )
-            .select("_row.*")
-        )
-        todo = pending_pages(deduped, out_path)
+        # convention)
+        todo = pending_pages(_newest_capture_per_url(batch_df), out_path)
         extracted = extract(todo, cfg)
         write_extracted(extracted, out_path, mode="append")
 

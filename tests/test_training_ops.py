@@ -141,6 +141,13 @@ class TestDedup:
                 }
                 assert hof == exp, (bits, mode)
 
+    def test_simhash_rejects_unknown_strategy(self, docs):
+        """A misspelt strategy must raise, not silently run the hof path."""
+        from ocr_spark.operators.dedup import simhash
+
+        with pytest.raises(ValueError, match="strategy"):
+            simhash(docs, strategy="bogus")
+
     def test_ngram_jaccard_exact_dup_is_one(self, docs):
         from ocr_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -2557,6 +2564,31 @@ class TestNormalizeAndDomainCap:
             r.doc_id for r in cap_per_domain(df, 3, salts=1).collect()
         )
         assert kept1 == kept
+
+    def test_domain_cap_keeps_caller_temp_named_columns(self, spark):
+        """Caller columns named like the salted rank's temporaries come
+        back unchanged, and the kept rows equal the single-window cap."""
+        from ocr_spark.operators.text_analysis import cap_per_domain
+
+        rows = [
+            (i, f"https://big.example.com/{i}", f"s{i}", -i)
+            for i in range(50)
+        ]
+        rows += [
+            (100 + i, f"https://small.example.com/{i}", f"s{100 + i}", i)
+            for i in range(2)
+        ]
+        df = spark.createDataFrame(
+            rows, "doc_id long, url string, _domain_salt string, "
+            "_domain_rank long",
+        )
+        out = cap_per_domain(df, 3, salts=8)
+        assert out.columns == df.columns
+        got = sorted(tuple(r) for r in out.collect())
+        by_id = {r[0]: r for r in rows}
+        assert got == [by_id[i] for i in (0, 1, 2, 100, 101)]
+        one = cap_per_domain(df, 3, salts=1).collect()
+        assert got == sorted(tuple(r) for r in one)
 
 
 class TestHashedEmbedding:
