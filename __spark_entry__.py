@@ -3,7 +3,7 @@
 Thin wrapper over :mod:`ocr_spark.contract`, which holds one
 (Spark plan, DuckDB oracle SQL) pair per implemented operator from
 SURVEY.md §2 plus the training-data operators (dedup / similarity /
-text-analysis / multimodal).  Non-SQL-expressible extraction entries
+text-analysis).  Non-SQL-expressible extraction entries
 (payload parse inside mapInPandas) are exposed without an oracle →
 rows-only checks; their byte-identity gate is the pytest golden suite
 (tests/test_pipeline_e2e.py) against the pure-Python oracle.

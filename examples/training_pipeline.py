@@ -13,7 +13,7 @@
       → decontaminate()                 benchmark n-gram collision filter
       → scrub_pii()                     email/IP/phone redaction
       → assign_split()                  deterministic train/val/test
-      → extract_features → ivf_topk     embedding + ANN neighbors
+      → hashed_embedding → ivf_topk     embedding + ANN neighbors
       → shard_corpus()                  hash-shuffled training shards
       → one JSON summary line
 
@@ -37,7 +37,7 @@ def main() -> int:
 
     from ocr_spark.genpages import pages_df
     from ocr_spark.operators.dedup import exact_dedup
-    from ocr_spark.operators.multimodal import extract_features
+    from ocr_spark.operators.embed import hashed_embedding
     from ocr_spark.operators.similarity import ivf_topk
     from ocr_spark.operators.text_analysis import gopher_rules, quality_score
     from ocr_spark.operators.urls import canonicalize
@@ -173,13 +173,9 @@ def main() -> int:
     ).cache()
 
     # 6. embeddings + ANN neighbors over the surviving corpus
-    payloads = final.select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
+    vectors = hashed_embedding(final).select(
+        F.col("doc_id").alias("vec_id"), "embedding"
     )
-    vectors = extract_features(payloads).withColumnRenamed(
-        "media_id", "vec_id"
-    ).withColumnRenamed("features", "embedding")
     queries = vectors.limit(3)
     neighbors = ivf_topk(vectors, queries, k=3, n_centroids=8, n_probe=2)
 

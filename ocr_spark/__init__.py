@@ -5,7 +5,7 @@ A from-scratch re-expression of the docketanalyzer/ocr extraction dataflow
 vectorized Arrow UDF stages: parse → probe → needs-OCR routing → OCR
 fallback → spatial consolidation → SQL postprocess → document reassembly,
 with checkpointed lineage + metrics for resume, a streaming surface, and
-training-data operators (dedup / similarity / text analysis / multimodal).
+training-data operators (dedup / similarity / text analysis).
 """
 
 __version__ = "0.2.0"

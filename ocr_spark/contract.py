@@ -11,7 +11,7 @@ Two families:
    pages table via ``ocr_spark.pipeline``; these SQL twins are the
    driver-checkable projection of those semantics (SURVEY.md §7.1 step 7).
 2. **Training-data operators** (``dedup_*``, ``sim_*``, ``text_*``,
-   ``mm_*``) — the library operators from ``ocr_spark.operators`` run in
+   ``corpus_*``) — the library operators from ``ocr_spark.operators`` run in
    their *portable-hash* mode so DuckDB reproduces them bit-identically.
 
 Column names and types are aligned pairwise: every computed column is
@@ -28,7 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .operators import bloom, dedup, multimodal, similarity, text_analysis, urls
+from .operators import bloom, dedup, similarity, text_analysis, urls
 from .operators.hashing import (
     MERSENNE,
     MINHASH_A,
@@ -1792,591 +1792,6 @@ SELECT *,
   AND (g_symbol_word_ratio < 0.3)
   AND (g_short_word_frac < 0.6) AS g_keep
 FROM f
-"""
-
-
-# ---------------------------------------------------------------------------
-# mm_* — multimodal plumbing: Python UDF vs pure-SQL twin of the
-# deterministic fake decode (multimodal.fake_decode_dims)
-
-
-def _q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
-    )
-    return multimodal.media_metadata(docs)
-
-
-# kind: magic-byte sniff mirrored for the prefixes a UTF-8 text payload can
-# actually start with — 'RIFF' (plain ASCII) and the webm magic
-# \\x1a\\x45\\xdf\\xa3 (U+001A, 'E', U+07E3); PNG/JPEG magics are invalid
-# leading UTF-8 bytes so they cannot occur.  RIFF is a container: the
-# fourcc at BYTES 8:12 (byte-addressed via the BLOB, matching the Spark
-# side's payload[8:12] — char offsets desync on multibyte text) decides
-# wav/webp/avi.
-_MEDIA_SQL = f"""
-WITH m AS (SELECT doc_id AS media_id, sha256(text) AS sha, text,
-                  encode(text) AS payload,
-                  CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes
-           FROM documents)
-SELECT media_id, n_bytes, sha,
-       CASE WHEN starts_with(text, 'GIF8') THEN 'image/gif'
-            WHEN starts_with(text, 'RIFF') THEN
-              CASE substr(hex(payload), 17, 8)
-                   WHEN hex(encode('WAVE')) THEN 'audio/wav'
-                   WHEN hex(encode('WEBP')) THEN 'image/webp'
-                   WHEN hex(encode('AVI ')) THEN 'video/avi'
-                   ELSE 'application/octet-stream' END
-            WHEN starts_with(text, chr(26) || chr(69) || chr(2019))
-              THEN 'video/webm'
-            ELSE 'application/octet-stream' END AS kind,
-  CAST({_hex_decode_duck('sha', 1, 8)} % 1920 + 1 AS INTEGER) AS width,
-  CAST({_hex_decode_duck('sha', 9, 8)} % 1080 + 1 AS INTEGER) AS height,
-  CAST({_hex_decode_duck('sha', 17, 4)} % 240 + 1 AS INTEGER) AS n_frames
-FROM m
-"""
-
-
-def _q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-extraction plumbing check: the float32 vector is projected
-    back to exact digest bytes (round(f*255)) so the compare is integer-
-    exact across the float32 (Arrow) / float64 (DuckDB) divide."""
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
-    )
-    feats = multimodal.extract_features(docs)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("i", "f")
-    ).select(
-        "media_id",
-        "i",
-        F.round(F.col("f") * 255).cast("int").alias("byte_val"),
-    )
-
-
-_FEATURES_SQL = f"""
-WITH m AS (SELECT doc_id AS media_id, sha256(text) AS sha FROM documents),
-i AS (SELECT unnest(generate_series(0, {multimodal.FEATURE_DIM - 1})) AS i)
-SELECT media_id, CAST(i.i AS INTEGER) AS i,
-       CAST((instr('0123456789abcdef', substr(sha, 2 * i.i + 1, 1)) - 1) * 16
-            + (instr('0123456789abcdef', substr(sha, 2 * i.i + 2, 1)) - 1)
-            AS INTEGER) AS byte_val
-FROM m CROSS JOIN i
-"""
-
-
-def _q_sample_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.col("text").cast("binary").alias("payload"),
-    )
-    return multimodal.sample_frames(docs, every=30).select(
-        "media_id", "frame_i"
-    )
-
-
-_FRAMES_SQL = f"""
-WITH m AS (SELECT doc_id AS media_id,
-                  {_hex_decode_duck('sha256(text)', 17, 4)} % 240 + 1
-                    AS n_frames
-           FROM documents)
-SELECT media_id,
-       CAST(unnest(generate_series(0, n_frames - 1, 30)) AS INTEGER)
-         AS frame_i
-FROM m
-"""
-
-
-# mm decode/resize/features — REAL decoded pixels vs an ANALYTIC oracle.
-# The fixture image for seed s has pixel (x, y) = (r, g, b) in closed form
-# (multimodal.synthetic_image_bytes); the Spark side round-trips it through
-# the stdlib PNG codec (encode with per-row filter cycling → zlib inflate →
-# unfilter all 5 PNG filter types → pixel sums), the DuckDB side recomputes
-# the sums directly from the formula.  Any wrong filter inverse, row order,
-# stride, or channel swap breaks the hash.  24×16 / grid 4 divide evenly,
-# so the oracle's pixel→cell map is a plain integer division (the general
-# floor-boundary map is pytest-pinned in test_multimodal.py).
-_MM_W, _MM_H = 24, 16
-_MM_RGB = (
-    "(3 * x + 7 * y + media_id) % 256",
-    "(5 * x + 11 * y + 2 * media_id) % 251",
-    "(13 * x + 17 * y + 3 * media_id) % 241",
-)
-
-
-def _mm_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 64)
-        .select(F.col("doc_id").alias("media_id"))
-    )
-
-
-_MM_IDS_CTE = (
-    "ids AS (SELECT doc_id AS media_id FROM documents WHERE doc_id < 64)"
-)
-
-
-def _q_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = multimodal.synthetic_images(_mm_ids(spark, sf_dir), _MM_W, _MM_H)
-    return multimodal.decode_image_stats(imgs)
-
-
-_DECODE_STATS_SQL = f"""
-WITH {_MM_IDS_CTE},
-px AS (SELECT media_id, xs.x, ys.y
-       FROM ids CROSS JOIN range({_MM_W}) xs(x) CROSS JOIN range({_MM_H}) ys(y))
-SELECT media_id,
-  CAST({_MM_W} AS INTEGER) AS width, CAST({_MM_H} AS INTEGER) AS height,
-  CAST(3 AS INTEGER) AS n_channels,
-  CAST(sum({_MM_RGB[0]}) AS BIGINT) AS sum_r,
-  CAST(sum({_MM_RGB[1]}) AS BIGINT) AS sum_g,
-  CAST(sum({_MM_RGB[2]}) AS BIGINT) AS sum_b
-FROM px GROUP BY media_id
-"""
-
-
-_MM_RW, _MM_RH = 10, 7
-
-
-def _q_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """generate → resize (decode, nearest-neighbor, PNG re-encode) →
-    decode again → sums: two full codec round trips plus the exact
-    integer index mapping out(x2,y2) = src(x2·W//out_w, y2·H//out_h)."""
-    imgs = multimodal.synthetic_images(_mm_ids(spark, sf_dir), _MM_W, _MM_H)
-    return multimodal.decode_image_stats(
-        multimodal.resize_images(imgs, _MM_RW, _MM_RH)
-    )
-
-
-_RESIZE_STATS_SQL = f"""
-WITH {_MM_IDS_CTE},
-px AS (SELECT media_id,
-              (x2 * {_MM_W}) // {_MM_RW} AS x, (y2 * {_MM_H}) // {_MM_RH} AS y
-       FROM ids CROSS JOIN range({_MM_RW}) xs(x2)
-                CROSS JOIN range({_MM_RH}) ys(y2))
-SELECT media_id,
-  CAST({_MM_RW} AS INTEGER) AS width, CAST({_MM_RH} AS INTEGER) AS height,
-  CAST(3 AS INTEGER) AS n_channels,
-  CAST(sum({_MM_RGB[0]}) AS BIGINT) AS sum_r,
-  CAST(sum({_MM_RGB[1]}) AS BIGINT) AS sum_g,
-  CAST(sum({_MM_RGB[2]}) AS BIGINT) AS sum_b
-FROM px GROUP BY media_id
-"""
-
-
-_MM_GRID = 4
-
-
-def _q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decoded-pixel grid features, hash-compared UNROUNDED: each value
-    is one IEEE division of exact integer sums (no transcendentals), so
-    both engines produce bit-identical doubles."""
-    imgs = multimodal.synthetic_images(_mm_ids(spark, sf_dir), _MM_W, _MM_H)
-    feats = multimodal.image_features(imgs, grid=_MM_GRID)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("i", "feature")
-    ).select("media_id", "i", "feature")
-
-
-_IMAGE_FEATURES_SQL = f"""
-WITH {_MM_IDS_CTE},
-px AS (SELECT media_id, xs.x, ys.y,
-              (ys.y // {_MM_H // _MM_GRID}) * {_MM_GRID}
-                + xs.x // {_MM_W // _MM_GRID} AS i,
-              {_MM_RGB[0]} + {_MM_RGB[1]} + {_MM_RGB[2]} AS v
-       FROM ids CROSS JOIN range({_MM_W}) xs(x) CROSS JOIN range({_MM_H}) ys(y))
-SELECT media_id, CAST(i AS INTEGER) AS i,
-       CAST(sum(v) AS DOUBLE)
-         / (3 * {(_MM_W // _MM_GRID) * (_MM_H // _MM_GRID)}) AS feature
-FROM px GROUP BY media_id, i
-"""
-
-
-# Perceptual average-hash + image near-dup pairs: the Spark side decodes
-# REAL bytes (PNG codec), nearest-resizes to 8×8, and packs the
-# above-mean bits; the oracle replays the exact integer pipeline — the
-# resize index map (x2·W//8), the closed-form fixture channels, and the
-# CROSS-MULTIPLIED mean comparison (v·64 > total, no float anywhere) —
-# packing via HUGEINT shifts (DuckDB raises on 1::BIGINT << 63) and
-# mapping bit 63 back into the signed bigint domain.  The pairs row
-# additionally proves the pigeonhole banding's EXACT recall: the oracle
-# counts disagreeing bits per pair directly (no bands), so any missed
-# band pair breaks the hash.
-
-_MM_AH_G = 8
-
-
-def _ahash_sql() -> str:
-    sx, sy = _MM_W // _MM_AH_G, _MM_H // _MM_AH_G
-    n = _MM_AH_G * _MM_AH_G
-    return f"""
-WITH {_MM_IDS_CTE},
-rs AS (SELECT media_id, ys.y2 * {_MM_AH_G} + xs.x2 AS i,
-              xs.x2 * {sx} AS x, ys.y2 * {sy} AS y
-       FROM ids CROSS JOIN range({_MM_AH_G}) xs(x2)
-                CROSS JOIN range({_MM_AH_G}) ys(y2)),
-v AS (SELECT media_id, i,
-             {_MM_RGB[0]} + {_MM_RGB[1]} + {_MM_RGB[2]} AS v
-      FROM rs),
-tot AS (SELECT media_id, sum(v) AS total FROM v GROUP BY media_id),
-h AS (SELECT v.media_id,
-        sum(CASE WHEN v.v * {n} > t.total
-            THEN (1::HUGEINT << CAST(v.i AS INTEGER)) ELSE 0::HUGEINT END)
-          AS hh,
-        CAST(min(t.total) AS BIGINT) AS intensity_sum
-      FROM v JOIN tot t ON v.media_id = t.media_id
-      GROUP BY v.media_id)
-SELECT media_id,
-  CAST(CASE WHEN hh >= 9223372036854775808::HUGEINT
-       THEN hh - 18446744073709551616::HUGEINT ELSE hh END AS BIGINT)
-    AS ahash,
-  intensity_sum
-FROM h
-"""
-
-
-_AHASH_SQL = _ahash_sql()
-_MM_AH_MAXH = 6
-
-
-def _ahash_pairs_sql() -> str:
-    sx, sy = _MM_W // _MM_AH_G, _MM_H // _MM_AH_G
-    n = _MM_AH_G * _MM_AH_G
-    return f"""
-WITH {_MM_IDS_CTE},
-rs AS (SELECT media_id, ys.y2 * {_MM_AH_G} + xs.x2 AS i,
-              xs.x2 * {sx} AS x, ys.y2 * {sy} AS y
-       FROM ids CROSS JOIN range({_MM_AH_G}) xs(x2)
-                CROSS JOIN range({_MM_AH_G}) ys(y2)),
-v AS (SELECT media_id, i,
-             {_MM_RGB[0]} + {_MM_RGB[1]} + {_MM_RGB[2]} AS v
-      FROM rs),
-tot AS (SELECT media_id, sum(v) AS total FROM v GROUP BY media_id),
-bits AS (SELECT v.media_id, v.i,
-                CASE WHEN v.v * {n} > t.total THEN 1 ELSE 0 END AS b
-         FROM v JOIN tot t ON v.media_id = t.media_id)
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-  CAST(sum(CASE WHEN a.b <> b.b THEN 1 ELSE 0 END) AS INTEGER) AS hamming
-FROM bits a JOIN bits b ON a.i = b.i AND a.media_id < b.media_id
-GROUP BY 1, 2 HAVING hamming <= {_MM_AH_MAXH}
-"""
-
-
-_AHASH_PAIRS_SQL = _ahash_pairs_sql()
-
-
-def _q_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = multimodal.synthetic_images(_mm_ids(spark, sf_dir), _MM_W, _MM_H)
-    return multimodal.image_ahash(imgs, grid=_MM_AH_G)
-
-
-def _q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = multimodal.synthetic_images(_mm_ids(spark, sf_dir), _MM_W, _MM_H)
-    return multimodal.image_near_dup_pairs(
-        imgs, max_hamming=_MM_AH_MAXH, grid=_MM_AH_G
-    )
-
-
-# End-to-end perceptual dedup survivors: min-id representative per
-# connected component (transitive closure) — the oracle reuses the
-# band-free pair set and the recursive-CTE closure convention of
-# dedup_clusters.  Payload column projected away (binary is not
-# driver-hashable); survivorship is the semantics under test.
-
-_AHASH_DEDUP_SQL = f"""
-WITH RECURSIVE {_MM_IDS_CTE},
-rs AS (SELECT media_id, ys.y2 * {_MM_AH_G} + xs.x2 AS i,
-              xs.x2 * {_MM_W // _MM_AH_G} AS x,
-              ys.y2 * {_MM_H // _MM_AH_G} AS y
-       FROM ids CROSS JOIN range({_MM_AH_G}) xs(x2)
-                CROSS JOIN range({_MM_AH_G}) ys(y2)),
-v AS (SELECT media_id, i,
-             {_MM_RGB[0]} + {_MM_RGB[1]} + {_MM_RGB[2]} AS v
-      FROM rs),
-tot AS (SELECT media_id, sum(v) AS total FROM v GROUP BY media_id),
-bits AS (SELECT v.media_id, v.i,
-                CASE WHEN v.v * {_MM_AH_G * _MM_AH_G} > t.total
-                     THEN 1 ELSE 0 END AS b
-         FROM v JOIN tot t ON v.media_id = t.media_id),
-prs AS (
-  SELECT a.media_id AS doc_a, b.media_id AS doc_b
-  FROM bits a JOIN bits b ON a.i = b.i AND a.media_id < b.media_id
-  GROUP BY 1, 2
-  HAVING sum(CASE WHEN a.b <> b.b THEN 1 ELSE 0 END) <= {_MM_AH_MAXH}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM prs
-  UNION SELECT doc_b, doc_a FROM prs),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-SELECT media_id FROM ids
-WHERE media_id NOT IN (
-  SELECT src FROM reach GROUP BY src HAVING least(src, min(dst)) <> src)
-"""
-
-
-def _q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    imgs = multimodal.synthetic_images(_mm_ids(spark, sf_dir), _MM_W, _MM_H)
-    return multimodal.image_dedup_corpus(
-        imgs, max_hamming=_MM_AH_MAXH, grid=_MM_AH_G
-    ).select("media_id")
-
-
-# mm audio decode/resample/features — REAL decoded samples vs an ANALYTIC
-# oracle, the audio twin of the image rows above.  The fixture WAV for
-# seed s holds sample ((7·i + 13·c + s) % 4001 − 2000) on channel c of
-# frame i (multimodal.synthetic_wav_bytes); the Spark side round-trips it
-# through the stdlib RIFF codec (chunk walk, PCM frame unpack, signed
-# conversion), the DuckDB side recomputes the stats from the formula.
-# Any wrong channel interleave, sign convention, byte order, or index map
-# breaks the hash.  480 frames / 8 bands and the 8000→3000 rate map keep
-# every boundary an exact integer division.
-
-_MM_AU_N, _MM_AU_RATE, _MM_AU_CH = 480, 8000, 2
-_MM_AU_V = "((7 * i + 13 * c + media_id) % 4001 - 2000)"
-_MM_AU_SAMPLES_CTE = f"""
-s AS (SELECT media_id, fi.i, ci.c, {_MM_AU_V} AS v
-      FROM ids CROSS JOIN range({_MM_AU_N}) fi(i)
-               CROSS JOIN range({_MM_AU_CH}) ci(c))
-"""
-
-
-def _q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    au = multimodal.synthetic_audio(
-        _mm_ids(spark, sf_dir), _MM_AU_N, _MM_AU_RATE, _MM_AU_CH
-    )
-    return multimodal.decode_audio_stats(au)
-
-
-_AUDIO_STATS_SQL = f"""
-WITH {_MM_IDS_CTE},
-{_MM_AU_SAMPLES_CTE}
-SELECT media_id,
-  CAST({_MM_AU_RATE} AS INTEGER) AS sample_rate,
-  CAST({_MM_AU_CH} AS INTEGER) AS n_channels,
-  CAST({_MM_AU_N} AS INTEGER) AS n_frames,
-  CAST({_MM_AU_N * 1000 // _MM_AU_RATE} AS INTEGER) AS duration_ms,
-  CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
-  CAST(max(abs(v)) AS INTEGER) AS peak
-FROM s GROUP BY media_id
-"""
-
-
-_MM_AU_RRATE = 3000
-_MM_AU_RN = _MM_AU_N * _MM_AU_RRATE // _MM_AU_RATE
-
-
-def _q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """generate → resample (decode, nearest-frame, WAV re-encode) →
-    decode again → stats: two full codec round trips plus the exact
-    integer index mapping src(j) = j·in_rate//out_rate."""
-    au = multimodal.synthetic_audio(
-        _mm_ids(spark, sf_dir), _MM_AU_N, _MM_AU_RATE, _MM_AU_CH
-    )
-    return multimodal.decode_audio_stats(
-        multimodal.resample_audio(au, _MM_AU_RRATE)
-    )
-
-
-_AUDIO_RESAMPLE_SQL = f"""
-WITH {_MM_IDS_CTE},
-s AS (SELECT media_id,
-             ((7 * ((fj.j * {_MM_AU_RATE}) // {_MM_AU_RRATE})
-               + 13 * ci.c + media_id) % 4001 - 2000) AS v
-      FROM ids CROSS JOIN range({_MM_AU_RN}) fj(j)
-               CROSS JOIN range({_MM_AU_CH}) ci(c))
-SELECT media_id,
-  CAST({_MM_AU_RRATE} AS INTEGER) AS sample_rate,
-  CAST({_MM_AU_CH} AS INTEGER) AS n_channels,
-  CAST({_MM_AU_RN} AS INTEGER) AS n_frames,
-  CAST({_MM_AU_RN * 1000 // _MM_AU_RRATE} AS INTEGER) AS duration_ms,
-  CAST(sum(abs(v)) AS BIGINT) AS sum_abs,
-  CAST(max(abs(v)) AS INTEGER) AS peak
-FROM s GROUP BY media_id
-"""
-
-
-_MM_AU_BANDS = 8
-
-
-def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decoded-sample band features, hash-compared UNROUNDED: each value
-    is one IEEE division of exact integer sums (no transcendentals), so
-    both engines produce bit-identical doubles."""
-    au = multimodal.synthetic_audio(
-        _mm_ids(spark, sf_dir), _MM_AU_N, _MM_AU_RATE, _MM_AU_CH
-    )
-    feats = multimodal.audio_features(au, n_bands=_MM_AU_BANDS)
-    return feats.select(
-        "media_id", F.posexplode("features").alias("i", "feature")
-    ).select("media_id", "i", "feature")
-
-
-_AUDIO_FEATURES_SQL = f"""
-WITH {_MM_IDS_CTE},
-{_MM_AU_SAMPLES_CTE}
-SELECT media_id,
-  CAST(i // {_MM_AU_N // _MM_AU_BANDS} AS INTEGER) AS i,
-  CAST(sum(abs(v)) AS DOUBLE)
-    / {_MM_AU_CH * (_MM_AU_N // _MM_AU_BANDS)} AS feature
-FROM s GROUP BY media_id, i // {_MM_AU_N // _MM_AU_BANDS}
-"""
-
-
-# Acoustic fingerprint + audio near-dup: the Spark side decodes REAL WAV
-# bytes and packs the energy-delta sign bits over 65 RAGGED time windows
-# (480 frames / 65 windows exercises the cross-multiplied comparison —
-# nothing divides evenly); the oracle recomputes the window sums from the
-# sample formula using the INVERSE boundary map w = (i·W + W−1)//F
-# (frame→window) against the Python side's forward map f0(b) = b·F//W —
-# a genuine differential on the boundary arithmetic.  Same HUGEINT
-# pack / signed-map as mm_image_ahash; the pairs oracle counts
-# disagreeing bits band-free, re-proving exact banding recall on a
-# second signature family.
-
-_MM_FP_BITS = 64
-_MM_FP_W = _MM_FP_BITS + 1
-_MM_FP_MAXH = 2
-
-
-def _fp_len(w: str) -> str:
-    return (
-        f"((({w}) + 1) * {_MM_AU_N}) // {_MM_FP_W} "
-        f"- (({w}) * {_MM_AU_N}) // {_MM_FP_W}"
-    )
-
-
-_MM_FP_SUMS_CTE = f"""
-ws AS (SELECT media_id, (i * {_MM_FP_W} + {_MM_FP_W - 1}) // {_MM_AU_N}
-                AS w, abs(v) AS a
-       FROM s),
-sums AS (SELECT media_id, w, sum(a) AS sw FROM ws GROUP BY media_id, w),
-fpbits AS (
-  SELECT a.media_id, a.w AS i,
-    CASE WHEN b.sw * ({_fp_len('a.w')}) > a.sw * ({_fp_len('b.w')})
-         THEN 1 ELSE 0 END AS bit
-  FROM sums a JOIN sums b
-    ON b.media_id = a.media_id AND b.w = a.w + 1)
-"""
-
-_AUDIO_FP_SQL = f"""
-WITH {_MM_IDS_CTE},
-{_MM_AU_SAMPLES_CTE},
-{_MM_FP_SUMS_CTE},
-h AS (SELECT media_id,
-        sum(CASE WHEN bit = 1
-            THEN (1::HUGEINT << CAST(i AS INTEGER)) ELSE 0::HUGEINT END)
-          AS hh
-      FROM fpbits GROUP BY media_id),
-e AS (SELECT media_id, CAST(sum(abs(v)) AS BIGINT) AS energy_sum
-      FROM s GROUP BY media_id)
-SELECT h.media_id,
-  CAST(CASE WHEN hh >= 9223372036854775808::HUGEINT
-       THEN hh - 18446744073709551616::HUGEINT ELSE hh END AS BIGINT)
-    AS fingerprint,
-  e.energy_sum
-FROM h JOIN e ON h.media_id = e.media_id
-"""
-
-_AUDIO_NEAR_DUP_SQL = f"""
-WITH {_MM_IDS_CTE},
-{_MM_AU_SAMPLES_CTE},
-{_MM_FP_SUMS_CTE}
-SELECT a.media_id AS media_a, b.media_id AS media_b,
-  CAST(sum(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) AS INTEGER)
-    AS hamming
-FROM fpbits a JOIN fpbits b
-  ON a.i = b.i AND a.media_id < b.media_id
-GROUP BY 1, 2 HAVING hamming <= {_MM_FP_MAXH}
-"""
-
-
-def _q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    au = multimodal.synthetic_audio(
-        _mm_ids(spark, sf_dir), _MM_AU_N, _MM_AU_RATE, _MM_AU_CH
-    )
-    return multimodal.audio_fingerprint(au, n_bits=_MM_FP_BITS)
-
-
-def _q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    au = multimodal.synthetic_audio(
-        _mm_ids(spark, sf_dir), _MM_AU_N, _MM_AU_RATE, _MM_AU_CH
-    )
-    return multimodal.audio_near_dup_pairs(
-        au, max_hamming=_MM_FP_MAXH, n_bits=_MM_FP_BITS
-    )
-
-
-_AUDIO_DEDUP_SQL = f"""
-WITH RECURSIVE {_MM_IDS_CTE},
-{_MM_AU_SAMPLES_CTE},
-{_MM_FP_SUMS_CTE},
-prs AS (
-  SELECT a.media_id AS doc_a, b.media_id AS doc_b
-  FROM fpbits a JOIN fpbits b
-    ON a.i = b.i AND a.media_id < b.media_id
-  GROUP BY 1, 2
-  HAVING sum(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END)
-    <= {_MM_FP_MAXH}),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM prs
-  UNION SELECT doc_b, doc_a FROM prs),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-SELECT media_id FROM ids
-WHERE media_id NOT IN (
-  SELECT src FROM reach GROUP BY src HAVING least(src, min(dst)) <> src)
-"""
-
-
-def _q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    au = multimodal.synthetic_audio(
-        _mm_ids(spark, sf_dir), _MM_AU_N, _MM_AU_RATE, _MM_AU_CH
-    )
-    return multimodal.audio_dedup_corpus(
-        au, max_hamming=_MM_FP_MAXH, n_bits=_MM_FP_BITS
-    ).select("media_id")
-
-
-# mm GIF frame decode — REAL LZW + compositing vs an ANALYTIC oracle.
-# The fixture animation for seed s (multimodal.synthetic_gif_bytes) has
-# palette entry i = ((7i)%256, (11i+3)%256, (13i+5)%256) and frame f
-# paints pixel (x, y) with index (x + 2y + 5f + s) % 256; the Spark side
-# decodes the real GIF89a bytes (variable-width LZW with mid-stream
-# CLEARs, sub-block reassembly, full-canvas compositing), the DuckDB
-# side recomputes the channel sums from the two formulas.  A wrong code
-# width, reset, palette lookup, or frame index breaks the hash.
-
-_MM_GIF_F, _MM_GIF_EVERY = 6, 2
-_MM_GIF_IDX = f"((x + 2 * y + 5 * f + media_id) % 256)"
-
-
-def _q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    gifs = multimodal.synthetic_gifs(
-        _mm_ids(spark, sf_dir), _MM_W, _MM_H, _MM_GIF_F
-    )
-    return multimodal.decode_gif_frames(gifs, every=_MM_GIF_EVERY)
-
-
-_GIF_FRAMES_SQL = f"""
-WITH {_MM_IDS_CTE},
-fr AS (SELECT media_id, unnest(range(0, {_MM_GIF_F}, {_MM_GIF_EVERY})) AS f
-       FROM ids),
-px AS (SELECT media_id, f, {_MM_GIF_IDX} AS i
-       FROM fr CROSS JOIN range({_MM_W}) xs(x) CROSS JOIN range({_MM_H}) ys(y))
-SELECT media_id, CAST(f AS INTEGER) AS frame_i,
-  CAST({_MM_W} AS INTEGER) AS width, CAST({_MM_H} AS INTEGER) AS height,
-  CAST({_MM_GIF_F} AS INTEGER) AS n_frames,
-  CAST(sum((7 * i) % 256) AS BIGINT) AS sum_r,
-  CAST(sum((11 * i + 3) % 256) AS BIGINT) AS sum_g,
-  CAST(sum((13 * i + 5) % 256) AS BIGINT) AS sum_b
-FROM px GROUP BY media_id, f
 """
 
 
@@ -4440,9 +3855,7 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     # dedup convention, pack coalesce, quality split binding, pii
     # coalesce).  The five rows below lead now: their rank tails run
     # through the shared top-n and ANN rerank helpers
-    # (operators/_frames.py top_n, similarity._rerank_topk).  Five
-    # pure-codec mm_* rows (green at the last correctness check, no shared
-    # operator code) sit just below the ~50 prefix to make room.
+    # (operators/_frames.py top_n, similarity._rerank_topk).
     "sim_lsh_topk": (_q_lsh_topk, _LSH_TOPK_SQL),
     "sim_ivf_topk": (_q_ivf_topk, _IVF_SQL),
     "corpus_domain_cap": (_q_cap_domain, _CAP_DOMAIN_SQL),
@@ -4453,12 +3866,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "sim_prototype_prune": (_q_prototype_prune, _PROTO_PRUNE_SQL),
     "dedup_cluster_best": (_q_cluster_best, _CLUSTER_BEST_SQL),
     "sim_random_project": (_q_random_project, _RP_SQL),
-    "mm_image_ahash": (_q_image_ahash, _AHASH_SQL),
-    "mm_image_near_dup": (_q_image_near_dup, _AHASH_PAIRS_SQL),
-    "mm_audio_fingerprint": (_q_audio_fingerprint, _AUDIO_FP_SQL),
-    "mm_audio_near_dup": (_q_audio_near_dup, _AUDIO_NEAR_DUP_SQL),
-    "mm_image_dedup": (_q_image_dedup, _AHASH_DEDUP_SQL),
-    "mm_audio_dedup": (_q_audio_dedup, _AUDIO_DEDUP_SQL),
     "corpus_boilerplate_filter": (_q_boilerplate_filter, _BP_FILTER_SQL),
     "corpus_boilerplate_lines": (_q_boilerplate_lines, _BP_LINES_SQL),
     "sim_semdedup_pairs": (_q_semdedup_pairs, _SEMDEDUP_PAIRS_SQL),
@@ -4473,7 +3880,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "dedup_exact": (_q_exact_dedup, _EXACT_DEDUP_SQL),
     "dedup_simhash_pairs": (_q_simhash_pairs, _SIMHASH_PAIRS_SQL),
     "url_domain_filter": (_q_domain_filter, _DOMAIN_FILTER_SQL),
-    "mm_media_meta": (_q_media_meta, _MEDIA_SQL),
     "corpus_pack_manifest": (_q_pack, _PACK_SQL),
     "corpus_pack_export": (_q_pack_export, _PACK_EXPORT_SQL),
     # the OTHER r4 driver-red row (array canonicalizer) — its fix must be
@@ -4483,12 +3889,10 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "select_dsir_weights": (_q_dsir_weights, _DSIR_WEIGHTS_SQL),
     "select_dsir_inline": (_q_dsir_inline, _DSIR_WEIGHTS_SQL),
     "select_dsir_sample": (_q_dsir_sample, _DSIR_SAMPLE_SQL),
-    "mm_gif_frames": (_q_gif_frames, _GIF_FRAMES_SQL),
     "sim_pq_topk": (_q_pq_topk, _PQ_SQL),
     "bpe_pair_counts": (_q_bpe_pair_counts, _BPE_PAIRS_SQL),
     "bpe_apply_chars": (_q_bpe_apply_chars, _BPE_CHARS_SQL),
     "bpe_apply_one_merge": (_q_bpe_apply_one_merge, _BPE_ONE_MERGE_SQL),
-    "mm_audio_features": (_q_audio_features, _AUDIO_FEATURES_SQL),
     "text_language_id": (_q_language_id, _lang_sql()),
     "text_language_id_cjk": (_q_language_id_cjk, _cjk_sql()),
     "text_language_id_scripts": (_q_language_id_scripts, _scripts_sql()),
@@ -4496,15 +3900,9 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "text_quality_filter": (_q_quality_filter, _quality_filter_sql()),
     "pii_scrub": (_q_pii_scrub, _pii_sql()),
     "sim_recall_report": (_q_recall_report, _RECALL_REPORT_SQL),
-    "mm_audio_stats": (_q_audio_stats, _AUDIO_STATS_SQL),
-    "mm_audio_resample": (_q_audio_resample, _AUDIO_RESAMPLE_SQL),
-    "mm_decode_stats": (_q_decode_stats, _DECODE_STATS_SQL),
-    "mm_resize_stats": (_q_resize_stats, _RESIZE_STATS_SQL),
-    "mm_image_features": (_q_image_features, _IMAGE_FEATURES_SQL),
     "sim_ivf_trained": (_q_ivf_trained, _IVF_TRAINED_SQL),
-    # deliberately BELOW the driver's ~50-entry budget (the prefix is
-    # exactly full of never-checked + changed rows): this late-close
-    # addition relies on the local type-sensitive sweep as its evidence
+    # the two late-close rows below (winnow cross-snapshot pairs,
+    # quantile buckets) sit inside the driver's ~50-entry budget
     "dedup_winnow_cross": (_q_winnow_cross, _WINNOW_CROSS_SQL),
     "corpus_quantile_buckets": (_q_bucket_quantiles, _BUCKET_SQL),
     "corpus_shard": (_q_shard_corpus, _SHARD_SQL),
@@ -4552,9 +3950,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "text_token_freq": (_q_token_freq, _TOKEN_FREQ_SQL),
     "text_repetition": (_q_repetition, _REPETITION_SQL),
     "text_gopher_rules": (_q_gopher, _GOPHER_SQL),
-    # multimodal plumbing (Python UDF vs SQL twin)
-    "mm_features": (_q_media_features, _FEATURES_SQL),
-    "mm_sample_frames": (_q_sample_frames, _FRAMES_SQL),
     # deterministic dataset split + PII + duplicate-line stats
     "corpus_split": (_q_assign_split, _SPLIT_SQL),
     "corpus_sample": (_q_sample, _SAMPLE_SQL),

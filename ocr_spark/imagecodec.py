@@ -1,11 +1,10 @@
 """Pure-stdlib image codecs: PNG (via ``zlib``), PPM (P6), BMP (24-bit).
 
-The container has no PIL/ffmpeg, but the multimodal operator family
-(decode → resize → features → ANN) needs a REAL, runnable decode to be
-testable end-to-end (r4 VERDICT "Next round" #4).  PNG's format is fully
+A real, runnable decode without PIL/ffmpeg.  PNG's format is fully
 implementable from the public spec with ``zlib`` + ``struct``: chunked
 container, per-row filter byte (None/Sub/Up/Average/Paeth), big-endian
-lengths, CRC32 over type+data.
+lengths, CRC32 over type+data.  No operator calls this module; it is a
+standalone codec with its own tests.
 
 Scope (honest, enforced with loud errors — never a wrong silent decode):
 
@@ -15,18 +14,13 @@ Scope (honest, enforced with loud errors — never a wrong silent decode):
 - PPM: binary P6, maxval 255.
 - BMP: uncompressed 24-bit BI_RGB, bottom-up or top-down rows.
 - JPEG stays environment-blocked (a stdlib-only DCT decoder is out of
-  scope); ``multimodal.decode_image`` falls back to PIL for it when
-  available.
+  scope).
 
 Everything here is deterministic byte-level arithmetic — no floats — so
-decoded pixel sums are exactly reproducible in SQL (the mm_decode_stats /
-mm_resize_stats contract oracles recompute them analytically).
+decoded pixel sums are exactly reproducible.
 
-Performance posture: this is the correctness kernel for the sandbox; a
-production cluster swaps a vectorized codec (PIL-SIMD / nvJPEG) into the
-same ``mapInPandas`` seam.  The Spark-side plumbing — schema, Arrow
-batching, partitioning — is identical either way, which is exactly what
-these functions let us test.
+Performance posture: this is a correctness kernel; a production cluster
+would use a vectorized codec (PIL-SIMD / nvJPEG) instead.
 """
 
 from __future__ import annotations

@@ -986,8 +986,10 @@ def simhash_hot_buckets(
     the audit reuses the per-token hashing instead of recomputing it
     (caller owns the persist lifecycle — bloom-bitmap contract)."""
     sig = _sig_frame(df, sig, text_col, id_col, bits, hash_mode)
-    return hamming_hot_buckets(
-        sig, bits, max_hamming, id_col=id_col, max_bucket=max_bucket
+    return _hot_keys(
+        _sig_buckets(sig, id_col, "simhash", bits, max_hamming),
+        ["band", "key"],
+        max_bucket,
     )
 
 
@@ -1006,7 +1008,9 @@ def simhash_near_dup_pairs(
     Bucketing uses ``max_hamming + 1`` signature bands: by pigeonhole, any
     pair within the distance budget agrees on at least one whole band, so
     recall is EXACT (a two-half scheme only guarantees hamming ≤ 1 — pairs
-    with one flip in each half would be missed).
+    with one flip in each half would be missed).  Each band-sharing pair
+    is then verified with an xor + ``bit_count``; the band equi-join
+    carries (id, signature) rows only.
 
     Same hot-bucket guard as :func:`lsh_candidate_pairs`, and the same
     OPT-IN default (``max_bucket=None``): an identical-content
@@ -1018,31 +1022,7 @@ def simhash_near_dup_pairs(
     fourth; Spark does not reuse-merge them — CLAUDE.md).  At corpus
     scale use ``bits=64`` so the band keyspace doesn't saturate."""
     sig = _sig_frame(df, sig, text_col, id_col, bits, hash_mode)
-    return hamming_near_dup_pairs(
-        sig, bits, max_hamming, id_col=id_col, max_bucket=max_bucket
-    )
-
-
-def hamming_near_dup_pairs(
-    sig: DataFrame,
-    bits: int,
-    max_hamming: int = 2,
-    id_col: str = "doc_id",
-    sig_col: str = "simhash",
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Near-dup pairs over ANY ``bits``-wide bigint signature column —
-    the generic Hamming engine behind :func:`simhash_near_dup_pairs`
-    (text) and :func:`ocr_spark.operators.multimodal.image_near_dup_pairs`
-    (perceptual image hashes).  Returns ``(doc_a, doc_b, hamming)`` with
-    ``hamming <= max_hamming``.
-
-    Exact-recall pigeonhole banding (``max_hamming + 1`` bands — any
-    within-budget pair agrees on a whole band), then an xor+bit_count
-    verify; the band equi-join carries (id, signature) rows only.  The
-    ``max_bucket`` cap is the :func:`_posting_pairs` one, audited by
-    :func:`hamming_hot_buckets` with the same parameters."""
-    buck = _sig_buckets(sig, id_col, sig_col, bits, max_hamming)
+    buck = _sig_buckets(sig, id_col, "simhash", bits, max_hamming)
     return (
         _posting_pairs(buck, ["band", "key"], id_col, max_bucket)
         .select(
@@ -1052,24 +1032,6 @@ def hamming_near_dup_pairs(
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
-    )
-
-
-def hamming_hot_buckets(
-    sig: DataFrame,
-    bits: int,
-    max_hamming: int = 2,
-    id_col: str = "doc_id",
-    sig_col: str = "simhash",
-    max_bucket: int = 10_000,
-) -> DataFrame:
-    """Audit view for a capped :func:`hamming_near_dup_pairs` run — the
-    band buckets the cap would exclude, same never-cap-silently contract
-    as every pair operator."""
-    return _hot_keys(
-        _sig_buckets(sig, id_col, sig_col, bits, max_hamming),
-        ["band", "key"],
-        max_bucket,
     )
 
 

@@ -1,9 +1,7 @@
 """Pure-stdlib image codec (ocr_spark.imagecodec) — no Spark needed.
 
-The codec is the runnable kernel behind the multimodal decode/resize/
-features operators; these tests pin round-trips, every PNG filter type,
-error paths, and the exact nearest-neighbor index mapping the
-mm_resize_stats oracle replays in SQL.
+These tests pin round-trips, every PNG filter type, error paths, and the
+exact nearest-neighbor index mapping of ``resize_nearest``.
 """
 
 import random

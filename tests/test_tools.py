@@ -1,0 +1,47 @@
+"""tools/ scripts that run without Spark."""
+
+import importlib.util
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+
+
+def _load_tool(name: str):
+    spec = importlib.util.spec_from_file_location(
+        name, REPO / "tools" / f"{name}.py"
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_unreached_defs_is_transitive(tmp_path, capsys):
+    """A def used only by an unreached def is unreached too: in the
+    a → b chain below nothing reaches ``a``, so ``b`` is listed with it,
+    while ``c`` (called from a job's module body) is not.  ``d`` is
+    reached by contract.py alone and is listed as such."""
+    (tmp_path / "ocr_spark").mkdir()
+    (tmp_path / "jobs").mkdir()
+    (tmp_path / "ocr_spark" / "mod.py").write_text(
+        "def a():\n    return b()\n\n\n"
+        "def b():\n    return 1\n\n\n"
+        "def c():\n    return 2\n\n\n"
+        "def d():\n    return 3\n"
+    )
+    (tmp_path / "ocr_spark" / "contract.py").write_text(
+        "from .mod import d\n\nROW = d\n"
+    )
+    (tmp_path / "jobs" / "run.py").write_text(
+        "from ocr_spark.mod import c\n\nprint(c())\n"
+    )
+    assert _load_tool("unreached_defs").main(["x", str(tmp_path)]) == 0
+    rows = [
+        line.split("\t")
+        for line in capsys.readouterr().out.splitlines()
+        if not line.startswith("total")
+    ]
+    assert [(r[1], r[3]) for r in rows] == [
+        ("a", "tests-only"),
+        ("b", "tests-only"),
+        ("d", "contract"),
+    ]

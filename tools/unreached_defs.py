@@ -1,13 +1,18 @@
-"""List the top-level defs in ocr_spark/ that nothing outside tests/ and
-ocr_spark/contract.py references, with the LoC of each — the
-one-consumer-per-operator inventory, re-runnable.
+"""List the top-level defs in ocr_spark/ that no program entry point
+reaches, with the LoC of each — the one-consumer-per-operator inventory,
+re-runnable.
 
-A def counts as reached when its name is used (a Name or an attribute
-access, not an import) anywhere in the repo's Python files outside
-tests/ and contract.py, other than inside the def itself.  Matching is
-by bare name, so a shared name can only hide a def, never invent one.
-Each row says whether contract.py uses the def (its contract row would
-go with it) or only tests do.  The script reports; it deletes nothing.
+Reachability is transitive.  The roots are the top-level statements
+that are not defs (module bodies: jobs, bench, perfbench, tools and
+examples scripts, and ocr_spark's own module-level code) in the repo's
+Python files outside tests/ and contract.py.  A def is reached when a
+reached statement uses its name (a Name or an attribute access, not an
+import); the body of a reached def then reaches further.  A def used
+only by unreached defs is therefore reported too.  Matching is by bare
+name, so a shared name can only hide a def, never invent one.  Each row
+says whether contract.py reaches the def by the same rule (its contract
+row would go with it) or not (tests at most).  The script reports; it
+deletes nothing.
 
 Usage: python tools/unreached_defs.py [repo_root]
 """
@@ -20,6 +25,7 @@ from collections import defaultdict
 from pathlib import Path
 
 SKIP_DIRS = {"tests", ".git", "__pycache__"}
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
 def _sources(root: Path) -> list[Path]:
@@ -39,31 +45,44 @@ def _used_names(node: ast.AST) -> set[str]:
     return names
 
 
+def _reach(todo: list[ast.AST], by_name: dict) -> set[ast.AST]:
+    """Every def transitively named by the statements in ``todo``."""
+    reached = set()
+    while todo:
+        for name in _used_names(todo.pop()):
+            for _, node in by_name.get(name, ()):
+                if node not in reached:
+                    reached.add(node)
+                    todo.append(node)
+    return reached
+
+
 def main(argv: list[str]) -> int:
     root = Path(argv[1] if len(argv) > 1 else ".").resolve()
     contract = root / "ocr_spark" / "contract.py"
-    defs = []  # (path, top-level stmt index, node)
-    users = defaultdict(set)  # name -> {(path, top-level stmt index)}
-    in_contract = set()
+    by_name = defaultdict(list)  # def name -> [(path, node)]
+    roots, contract_roots = [], []
     for path in _sources(root):
         tree = ast.parse(path.read_text(), str(path))
-        in_pkg = path.is_relative_to(root / "ocr_spark")
-        for i, stmt in enumerate(tree.body):
+        for stmt in tree.body:
             if path == contract:
-                in_contract |= _used_names(stmt)
+                contract_roots.append(stmt)
+            elif isinstance(stmt, _DEFS):
+                by_name[stmt.name].append((path, stmt))
             else:
-                for name in _used_names(stmt):
-                    users[name].add((path, i))
-            if in_pkg and path != contract and isinstance(
-                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                defs.append((path, i, stmt))
+                roots.append(stmt)
+    reached = _reach(roots, by_name)
+    in_contract = _reach(contract_roots, by_name)
+    pkg = root / "ocr_spark"
+    unreached = sorted(
+        ((path, node) for defs in by_name.values() for path, node in defs
+         if path.is_relative_to(pkg) and node not in reached),
+        key=lambda d: (d[0], d[1].lineno),
+    )
     totals = {"contract": 0, "tests-only": 0}
-    for path, i, node in defs:
-        if users[node.name] - {(path, i)}:
-            continue
+    for path, node in unreached:
         loc = node.end_lineno - node.lineno + 1
-        kind = "contract" if node.name in in_contract else "tests-only"
+        kind = "contract" if node in in_contract else "tests-only"
         totals[kind] += loc
         print(
             f"{path.relative_to(root)}:{node.lineno}\t{node.name}\t"
