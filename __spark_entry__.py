@@ -4,7 +4,7 @@ Thin wrapper over :mod:`ocr_spark.contract`, which holds one
 (Spark plan, DuckDB oracle SQL) pair per implemented operator from
 SURVEY.md §2 plus the training-data operators (dedup / similarity /
 text-analysis).  Non-SQL-expressible extraction entries
-(payload parse inside mapInPandas) are exposed without an oracle →
+(payload parse inside the extraction UDF) are exposed without an oracle →
 rows-only checks; their byte-identity gate is the pytest golden suite
 (tests/test_pipeline_e2e.py) against the pure-Python oracle.
 """

@@ -169,9 +169,10 @@ def main() -> int:
     ):
         # raw crawl input routinely carries the same url more than
         # once (revisits; response + conversion records across
-        # files); without this pick the assembly groupBy(url) would
-        # MERGE the captures into one corrupted document and the
-        # url-keyed checkpoint would make it permanent.  Newest
+        # files); extract() requires url-unique input — without this
+        # pick every capture would become its own row (the paged plan's
+        # groupBy(url) would MERGE them into one corrupted document)
+        # and the url-keyed checkpoint would keep them.  Newest
         # capture wins, content-digest tie-break — the deterministic
         # rule stream_extract and curate --latest-capture use.
         from pyspark.sql import Observation

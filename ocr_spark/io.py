@@ -239,7 +239,7 @@ def run_resumable(
 ) -> int:
     """One checkpointed pass: extract every not-yet-COMPLETED url, append.
 
-    Returns the number of urls attempted in THIS pass (0 ⇒ nothing left to
+    Returns the number of rows attempted in THIS pass (0 ⇒ nothing left to
     do — the loop-termination signal).  COMPLETED urls are never re-done;
     FAILED urls are retried on later passes (transient-failure semantics)
     until they accumulate ``max_attempts`` FAILED rows, after which they are

@@ -1,36 +1,58 @@
 """Arrow-batched UDF stages of the extraction pipeline.
 
-Each stage is a ``mapInPandas`` iterator function: Arrow batches in, Arrow
-batches out; the only Python-per-item loops are over variable-size nested
-documents/pages inside a batch (the same granularity the reference batches
-at, document.py:91-133).  No row-at-a-time Spark UDFs anywhere.
+Each stage is a ``mapInArrow`` / ``mapInPandas`` iterator function: Arrow
+batches in, Arrow batches out; the only Python-per-item loops are over
+variable-size nested documents/pages inside a batch (the same granularity
+the reference batches at, document.py:91-133).  No row-at-a-time Spark
+UDFs anywhere.
 
 Stage map (reference → here):
-- extract_docs:        fused plan — fitz.open + page list
-                       (document.py:532-544), then every page through
-                       _extract_page
+- extract_doc_rows:    fused plan (mapInArrow) — fitz.open + page list
+                       (document.py:532-544), every page through
+                       _extract_page, then the finished document row
+                       (EXTRACTED_SCHEMA) built column-wise in the worker
 - parse_pages:         paged plan, stage 1 — the same decode, one row per
                        page with its bytes (cross-doc page flattening,
                        document.py:783)
 - analyze_and_finish:  paged plan, stage 2 — decode the page bytes, then
-                       _extract_page
+                       _extract_page; blocks leave as one JSON string per
+                       page for the url assembly
 - _extract_page:       the per-page body both plans share: analyze →
                        native | OCR → consolidate (document.py:105-133) →
-                       blocks JSON
+                       P3-P5 postprocess (document.py:625-642)
+- extract_docs:        layer-attribution view only (per-page JSON rows of
+                       the fused per-document routine); not on extract()'s
+                       path
 """
 
 from __future__ import annotations
 
 import json
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import pandas as pd
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..extract import get_backend
-from ..schemas import PAGE_BLOCKS_JSON_SCHEMA, PAGE_ROW_SCHEMA
+from ..kernels.postprocess import doc_text, postprocess_blocks
+from ..schemas import (
+    EXTRACTED_SCHEMA,
+    PAGE_BLOCKS_JSON_SCHEMA,
+    PAGE_ROW_SCHEMA,
+)
 
 _PAGE_ROW_COLS = PAGE_ROW_SCHEMA.fieldNames()
 _BLOCKS_COLS = PAGE_BLOCKS_JSON_SCHEMA.fieldNames()
+
+
+# Arrow types of the nested ``pages`` column and its levels, as Spark
+# reads them back (int32 indexes, float64 bboxes, non-null fields).
+_PAGES_T = to_arrow_type(EXTRACTED_SCHEMA["pages"].dataType)
+_BLOCKS_T = _PAGES_T.value_type.field("blocks").type
+_LINES_T = _BLOCKS_T.value_type.field("lines").type
+_BBOX_T = _LINES_T.value_type.field("bbox").type
 
 
 class _BackendProxy:
@@ -78,16 +100,17 @@ def _error(code: str, e: Exception) -> str:
 
 
 def _extract_page(
-    page, dpi: int, lang: str | None
-) -> tuple[bool, str, str | None]:
-    """One decoded page → (ocr, blocks_json, error): the probe, the
-    needs-OCR route to the native text layer or OCR (document.py:105-133),
-    consolidation, and the JSON encode of the packed blocks.
+    page, dpi: int, lang: str | None, postprocess: bool
+) -> tuple[bool, list[dict], str | None]:
+    """One decoded page → (ocr, blocks, error): the probe, the needs-OCR
+    route to the native text layer or OCR (document.py:105-133),
+    consolidation, and — when ``postprocess`` — the oracle's P3-P5 ignore
+    rewrite (``kernels.postprocess.postprocess_blocks``).
 
     Guarded per PAGE in both plans: a throwing page becomes one
-    EXTRACT_ERROR lineage row (never counted as OCR) while its document's
-    good pages survive, and a single bad page can never abort a Spark task
-    (or drop its siblings)."""
+    EXTRACT_ERROR lineage row (never counted as OCR, no blocks) while its
+    document's good pages survive, and a single bad page can never abort a
+    Spark task (or drop its siblings)."""
     try:
         info = hx.analyze_page(page, dpi)
         layout = [
@@ -101,66 +124,199 @@ def _extract_page(
                 {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
                 for ln in info["native_lines"]
             ]
-        blocks = json.dumps(_pack_blocks(hx.finish_page(lines, layout)))
+        blocks = hx.finish_page(lines, layout)
+        if postprocess:
+            blocks = postprocess_blocks(blocks)
     except Exception as e:  # noqa: BLE001 - failure-code lineage
-        return False, "[]", _error("EXTRACT_ERROR", e)
+        return False, [], _error("EXTRACT_ERROR", e)
     return bool(info["needs_ocr"]), blocks, None
 
 
-def _decode_docs(pdf: pd.DataFrame) -> Iterator[tuple]:
-    """Doc rows of one batch → (url, warc_ts, lang, doc, page_is, error).
+def _decode(html) -> tuple[dict | None, list[int], str | None]:
+    """One payload → (doc, page_is, error).  The decode and the page
+    indices are read under one doc-level guard; a failure yields doc None
+    and the document's PARSE_ERROR."""
+    try:
+        doc = hx.decode_doc(bytes(html))
+        return doc, [_page_i(p) for p in doc["pages"]], None
+    except Exception as e:  # noqa: BLE001 - failure-code lineage
+        return None, [], _error("PARSE_ERROR", e)
 
-    The decode and the page indices are read under one doc-level guard;
-    a failure yields doc None and the document's PARSE_ERROR."""
-    for url, warc_ts, html, lang in zip(
-        pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
+
+class _Page(NamedTuple):
+    i: int
+    ocr: bool
+    blocks: list[dict]
+    error: str | None
+
+
+def _extract_doc(
+    html, lang: str | None, postprocess: bool
+) -> tuple[list[_Page], bool, str | None]:
+    """The fused per-document routine: one payload → (pages, truncated,
+    error), ``pages`` in decode order — empty for a PARSE_ERROR (``error``
+    set) or a zero-page document."""
+    doc, page_is, error = _decode(html)
+    if doc is None:
+        return [], False, error
+    pages = [
+        _Page(pi, *_extract_page(page, doc["dpi"], lang, postprocess))
+        for pi, page in zip(page_is, doc["pages"])
+    ]
+    return pages, bool(doc.get("truncated")), None
+
+
+def _list_array(offsets: list[int], values: pa.Array, typ) -> pa.Array:
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), values, type=typ
+    )
+
+
+def _struct_list(typ, offsets: list[int], *children: pa.Array) -> pa.Array:
+    """A list<struct> column of type ``typ`` from its struct's children."""
+    structs = pa.StructArray.from_arrays(
+        children, fields=list(typ.value_type)
+    )
+    return _list_array(offsets, structs, typ)
+
+
+def _bbox_array(offsets: list[int], coords: list[float]) -> pa.Array:
+    return _list_array(offsets, pa.array(coords, pa.float64()), _BBOX_T)
+
+
+def _pages_column(docs: list[list[_Page]]) -> pa.Array:
+    """Per document its kept pages → the nested ``pages`` column, built
+    from flat per-level lists and their offsets: no per-block dict is
+    rebuilt and Arrow coerces no nested Python object.  Indexes are
+    assigned in final order (document.py:444-454); bbox coordinates
+    become Python floats as in ``_bbox_list``."""
+    page_off, page_i = [0], []
+    block_off, block_i, block_type = [0], [], []
+    line_off, line_i, line_content = [0], [], []
+    block_bbox_off, block_bbox, line_bbox_off, line_bbox = [0], [], [0], []
+    for pages in docs:
+        for pi, _, blocks, _ in pages:
+            page_i.append(pi)
+            for bi, b in enumerate(blocks):
+                block_i.append(bi)
+                block_type.append(b["type"])
+                block_bbox.extend(map(float, b["bbox"]))
+                block_bbox_off.append(len(block_bbox))
+                lines = b["lines"]
+                line_i.extend(range(len(lines)))
+                for ln in lines:
+                    line_content.append(ln["content"])
+                    line_bbox.extend(map(float, ln["bbox"]))
+                    line_bbox_off.append(len(line_bbox))
+                line_off.append(len(line_i))
+            block_off.append(len(block_i))
+        page_off.append(len(page_i))
+    lines = _struct_list(
+        _LINES_T,
+        line_off,
+        pa.array(line_i, pa.int32()),
+        _bbox_array(line_bbox_off, line_bbox),
+        pa.array(line_content, pa.string()),
+    )
+    blocks = _struct_list(
+        _BLOCKS_T,
+        block_off,
+        pa.array(block_i, pa.int32()),
+        _bbox_array(block_bbox_off, block_bbox),
+        pa.array(block_type, pa.string()),
+        lines,
+    )
+    return _struct_list(
+        _PAGES_T, page_off, pa.array(page_i, pa.int32()), blocks
+    )
+
+
+def _doc_batch(batch: pa.RecordBatch, postprocess: bool) -> pa.RecordBatch:
+    """One input batch (url, warc_ts, html, lang) → one EXTRACTED_SCHEMA
+    batch, one row per input row.
+
+    Per document the row is what assembling its page rows by url gives
+    (pipeline.assemble_stage): the pages without error sorted by ``i``;
+    the max of the page errors and the PARSE_ERROR, FAILED when there is
+    one; truncated_pages = page rows × the decode's truncated flag, where
+    a zero-page or unparsable document is one row."""
+    kept, texts, n_blocks, ocr_pages, trunc_pages, errors = (
+        [] for _ in range(6)
+    )
+    for html, lang in zip(
+        batch.column("html").to_pylist(), batch.column("lang").to_pylist()
     ):
-        try:
-            doc = hx.decode_doc(bytes(html))
-            page_is = [_page_i(p) for p in doc["pages"]]
-        except Exception as e:  # noqa: BLE001 - failure-code lineage
-            yield url, warc_ts, lang, None, [], _error("PARSE_ERROR", e)
-        else:
-            yield url, warc_ts, lang, doc, page_is, None
+        pages, trunc, error = _extract_doc(html, lang, postprocess)
+        ok = sorted((p for p in pages if p.error is None), key=lambda p: p.i)
+        kept.append(ok)
+        texts.append(doc_text([p.blocks for p in ok]))
+        n_blocks.append(sum(len(p.blocks) for p in ok))
+        ocr_pages.append(sum(p.ocr for p in pages))
+        trunc_pages.append(max(len(pages), 1) * trunc)
+        # a PARSE_ERROR document has no pages
+        errors.append(
+            max((p.error for p in pages if p.error is not None), default=error)
+        )
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("url"),
+            batch.column("warc_ts"),
+            pa.array(texts, pa.string()),
+            _pages_column(kept),
+            pa.array([len(ok) for ok in kept], pa.int32()),
+            pa.array(n_blocks, pa.int32()),
+            pa.array(ocr_pages, pa.int32()),
+            pa.array(trunc_pages, pa.int32()),
+            pa.array(
+                ["COMPLETED" if e is None else "FAILED" for e in errors],
+                pa.string(),
+            ),
+            pa.array(errors, pa.string()),
+        ],
+        names=EXTRACTED_SCHEMA.fieldNames(),
+    )
+
+
+def extract_doc_rows(
+    batches: Iterator[pa.RecordBatch], postprocess: bool = True
+) -> Iterator[pa.RecordBatch]:
+    """Fused plan (``mapInArrow``): scanned doc rows → finished
+    EXTRACTED_SCHEMA rows, one per input row — decode + probe + route +
+    consolidate + postprocess for every page, text assembly and the
+    document's counts, all in ONE Python call.
+
+    The binary payload crosses the JVM↔Python boundary exactly once and
+    never rides a shuffle or a UDF return; ``url`` and ``warc_ts`` pass
+    through as the input Arrow arrays; the nested tree comes back as Arrow
+    columns (``_doc_batch``), so there is no JSON, no ``from_json``, no
+    SQL postprocess and no ``groupBy(url)`` behind this stage.
+    """
+    for batch in batches:
+        yield _doc_batch(batch, postprocess)
 
 
 def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Doc-level fully-fused stage: decode + probe + route + consolidate for
-    every page of a document in ONE pass, straight from the scanned doc row.
-
-    Why this shape (measured on the 240k-doc corpus):
-
-    - binary payloads are the expensive thing to move across the
-      JVM↔Python Arrow boundary — here they cross exactly once
-      (scan → UDF) and never ride a shuffle or a UDF return;
-    - the nested block tree is the expensive thing to hand BACK through
-      Arrow (object-dtype struct coercion) — so blocks leave the worker as
-      one JSON string per page (`json.dumps` is ~1000× cheaper than the
-      per-element coercion) and are parsed JVM-side by codegen'd
-      `from_json` (pipeline._parse_blocks_json).
-
-    Right default when page kernels are CPU-cheap and docs are smallish;
-    for corpora with giant documents use mode='paged' (page-level salted
-    spread, analyze_and_finish).
-    """
+    """Layer-attribution view, not on ``extract()``'s path: the fused
+    per-document routine (``_extract_doc``, postprocess on) flattened to
+    the paged plan's per-page JSON wire format (PAGE_BLOCKS_JSON_SCHEMA),
+    for ``mapInPandas``.  perfbench times it as the ``udf`` prefix of the
+    per-page layer chain (``pipeline.doc_fused_stage``)."""
     for pdf in batches:
         rows = []
-        for url, warc_ts, lang, doc, page_is, error in _decode_docs(pdf):
-            trunc = doc is not None and bool(doc.get("truncated"))
-            if not page_is:
-                # a PARSE_ERROR, or a zero-page document — which still
-                # exists in the output (the reference yields an empty
-                # tree, not an error); page_i=-1 marks "no page" and
-                # assembly skips it
+        for url, warc_ts, html, lang in zip(
+            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
+        ):
+            pages, trunc, error = _extract_doc(html, lang, True)
+            if not pages:
+                # a PARSE_ERROR, or a zero-page document; page_i=-1 marks
+                # "no page" and assembly skips it
                 rows.append(
                     (url, warc_ts, lang, -1, 0, False, "[]", trunc, error)
                 )
-                continue
-            for pi, page in zip(page_is, doc["pages"]):
-                ocr, blocks, err = _extract_page(page, doc["dpi"], lang)
+            for pi, ocr, blocks, err in pages:
                 rows.append(
-                    (url, warc_ts, lang, pi, len(page_is), ocr, blocks,
-                     trunc, err)
+                    (url, warc_ts, lang, pi, len(pages), ocr,
+                     json.dumps(_pack_blocks(blocks)), trunc, err)
                 )
         yield pd.DataFrame(rows, columns=_BLOCKS_COLS)
 
@@ -168,11 +324,14 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Doc rows → page rows (url, warc_ts, lang, doc_dpi, page_i, n_pages,
     page_bytes, truncated, error) for the paged plan's salted spread.
-    Payload parse failures become error rows with page_i = -1, the same
-    rows extract_docs emits."""
+    Payload parse failures become error rows with page_i = -1 (assembly
+    skips them as pages and keeps their error)."""
     for pdf in batches:
         rows = []
-        for url, warc_ts, lang, doc, page_is, error in _decode_docs(pdf):
+        for url, warc_ts, html, lang in zip(
+            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
+        ):
+            doc, page_is, error = _decode(html)
             if doc is None:
                 rows.append((url, warc_ts, lang, 0, -1, 0, None, False, error))
                 continue
@@ -190,10 +349,12 @@ def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def analyze_and_finish(
-    batches: Iterator[pd.DataFrame],
+    batches: Iterator[pd.DataFrame], postprocess: bool = True
 ) -> Iterator[pd.DataFrame]:
-    """Page rows (parse_pages, after the salted spread) → the same blocks
-    rows extract_docs emits: decode the page bytes, then _extract_page."""
+    """Page rows (parse_pages, after the salted spread) → blocks rows
+    (PAGE_BLOCKS_JSON_SCHEMA): decode the page bytes, then _extract_page;
+    each page's blocks leave as one JSON string, parsed JVM-side by
+    ``from_json`` before the url assembly."""
     for pdf in batches:
         rows = []
         for url, warc_ts, lang, dpi, pi, npg, raw, trunc, error in zip(
@@ -206,7 +367,10 @@ def analyze_and_finish(
                 except Exception as e:  # noqa: BLE001 - failure-code lineage
                     error = _error("EXTRACT_ERROR", e)
                 else:
-                    ocr, blocks, error = _extract_page(page, int(dpi), lang)
+                    ocr, kept, error = _extract_page(
+                        page, int(dpi), lang, postprocess
+                    )
+                    blocks = json.dumps(_pack_blocks(kept))
             rows.append(
                 (url, warc_ts, lang, pi, npg, ocr, blocks, bool(trunc), error)
             )

@@ -1,33 +1,41 @@
 """The end-to-end extraction pipeline as a declarative Spark plan.
 
-Physical shape (SURVEY.md §4), default ``fused`` plan:
+Physical shape (SURVEY.md §4), default ``fused`` plan — no exchange:
 
     Scan pages [project url,warc_ts,html,lang — text column pruned]
-    → MapInPandas extract_docs     (decode + probe + native | OCR route +
-                                    consolidate per page; blocks as JSON)
-    → from_json blocks
-    → SQL postprocess (P3-P5 as higher-order functions over blocks)
-    → groupBy(url) assemble  (sort_array by page i; text joins '\\n'/'\\n\\n')
+    → MapInArrow extract_doc_rows  (per document: decode + probe + native |
+                                    OCR route + consolidate + P3-P5
+                                    postprocess per page, then text joins
+                                    and counts; the finished row, nested
+                                    tree built as Arrow columns)
 
-The ``paged`` plan swaps the first UDF for two, around a salted exchange
-that breaks giant-document skew (R3):
+The ``paged`` plan swaps that UDF for two, around a salted exchange that
+breaks giant-document skew (R3), and reassembles the scattered pages:
 
     → MapInPandas parse_pages         (doc → page rows with page bytes; cheap)
     → Exchange xxhash64(url, page_i)
     → MapInPandas analyze_and_finish  (the same per-page routine; blocks JSON)
+    → from_json blocks
+    → groupBy(url) assemble  (sort_array by page i; text joins '\\n'/'\\n\\n')
 
-Everything after the UDFs is pure Catalyst-optimizable SQL: predicates,
-text assembly, ids, and metrics never touch Python.
+Both plans apply the same per-page routine (``extract_udfs._extract_page``,
+postprocess included), so their trees are byte-identical.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial, update_wrapper
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .operators import extract_udfs as udfs
-from .schemas import BLOCK_TYPE, PAGE_BLOCKS_JSON_SCHEMA, PAGE_ROW_SCHEMA
+from .schemas import (
+    BLOCK_TYPE,
+    EXTRACTED_SCHEMA,
+    PAGE_BLOCKS_JSON_SCHEMA,
+    PAGE_ROW_SCHEMA,
+)
 
 # P3 — court-heading regex (document.py:630).  Java regex; `(?i)` prefix
 # replaces Python's re.IGNORECASE, `^` anchor replicates re.match.
@@ -49,12 +57,14 @@ _DIGITS_SQL_PATTERN = r"^\s*\p{Nd}+\s*$"
 _DIGITS_SQL_LITERAL = _DIGITS_SQL_PATTERN.replace("\\", "\\\\")
 
 # P3-P5 postprocess predicates (document.py:630-639) as one SQL rewrite of
-# the nested blocks column; `should_ignore` in kernels/postprocess.py is the
-# oracle twin.  The block text is joined ONCE per block by the inner
-# transform (the struct field ``txt``) — inlining {_BLOCK_TEXT} directly
-# would rebuild the joined string for every RLIKE (the CLAUDE.md
-# inlined-array-build-in-lambda rule; cost bounded by lines-per-block,
-# but two joins per block is still one too many).
+# the nested blocks column, used only by the postprocess_stage attribution
+# view; extraction applies `should_ignore` in kernels/postprocess.py, the
+# oracle's own function, inside the per-page routine.  The block text is
+# joined ONCE per block by the inner transform (the struct field ``txt``)
+# — inlining {_BLOCK_TEXT} directly would rebuild the joined string for
+# every RLIKE (the CLAUDE.md inlined-array-build-in-lambda rule; cost
+# bounded by lines-per-block, but two joins per block is still one too
+# many).
 POSTPROCESS_BLOCKS_EXPR = f"""
 transform(
   transform(blocks, b -> named_struct('b', b, 'txt', {_BLOCK_TEXT})),
@@ -72,7 +82,8 @@ transform(
 """
 
 # A2 — hierarchical text assembly (document.py:196-207, :328, :389, :150):
-# line '\n' block, block '\n\n' page, page '' doc.
+# line '\n' block, block '\n\n' page, page '' doc — the paged assembly's
+# SQL twin of kernels/postprocess.doc_text, which the fused plan runs.
 PAGE_TEXT_EXPR = (
     "array_join(transform(p.blocks, b -> "
     "array_join(transform(b.lines, l -> l.content), '\\n')), '\\n\\n')"
@@ -84,13 +95,19 @@ DOC_TEXT_EXPR = f"array_join(transform(pages, p -> {PAGE_TEXT_EXPR}), '')"
 class PipelineConfig:
     """Knobs that matter at 100 TB.
 
-    - mode: 'fused' (default) extracts whole documents in ONE mapInPandas
-      pass straight off the scan — the binary payload crosses the
-      JVM↔Python boundary exactly once and never rides a shuffle or a UDF
-      return (binary columns are the expensive thing to move through
-      Arrow).  'paged' explodes to page rows first and salts them across
-      partitions (R3) — choose it when single documents are big enough to
-      dominate a task (giant-PDF corpora).
+    - mode: 'fused' (default) finishes whole documents in ONE mapInArrow
+      pass straight off the scan, with no exchange — the binary payload
+      crosses the JVM↔Python boundary exactly once and never rides a
+      shuffle, and the finished row comes back as Arrow columns.  'paged'
+      explodes to page rows first and salts them across partitions (R3),
+      then reassembles documents by url — choose it when single documents
+      are big enough to dominate a task and there are enough cores to
+      spread their pages over.  On a 4-core host, `tools/skew_demo.py 500
+      5000` (one 5,000-page document among 500 small ones; three fresh
+      JVMs) read fused 3.67–4.39 s vs paged 6.04–6.74 s, i.e. paged runs
+      at 0.61–0.66× fused (paged timed alone in a fresh JVM: 4.95–5.39
+      s): at 4 cores the giant document's straggler task costs less than
+      paged's extra UDF, exchange and assembly.
     - page_partitions: width of the paged plan's salted page-level
       exchange (None → spark.sql.shuffle.partitions).
     - postprocess: apply the P3-P5 ignore rewrite (document.py:625-642).
@@ -99,6 +116,12 @@ class PipelineConfig:
     mode: str = "fused"
     page_partitions: int | None = None
     postprocess: bool = True
+
+
+def _bind_postprocess(udf, cfg: PipelineConfig):
+    """``udf`` with ``cfg.postprocess`` bound, under its own name in the
+    plan."""
+    return update_wrapper(partial(udf, postprocess=cfg.postprocess), udf)
 
 
 def parse_stage(pages: DataFrame) -> DataFrame:
@@ -117,14 +140,16 @@ def fused_finish_stage(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
         page_rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     raw = page_rows.repartition(n, F.xxhash64("url", "page_i")).mapInPandas(
-        udfs.analyze_and_finish, PAGE_BLOCKS_JSON_SCHEMA
+        _bind_postprocess(udfs.analyze_and_finish, cfg),
+        PAGE_BLOCKS_JSON_SCHEMA,
     )
     return _parse_blocks_json(raw)
 
 
 def _parse_blocks_json(raw: DataFrame) -> DataFrame:
     """blocks_json string → nested blocks column via codegen'd from_json
-    (the cheap direction of the Arrow boundary — see extract_docs)."""
+    (the paged plan's wire format: its pages are scattered, so they come
+    back as rows to assemble, not as finished documents)."""
     blocks_type = "array<" + BLOCK_TYPE.simpleString() + ">"
     return raw.withColumn(
         "blocks", F.from_json("blocks_json", blocks_type)
@@ -132,9 +157,10 @@ def _parse_blocks_json(raw: DataFrame) -> DataFrame:
 
 
 def doc_fused_stage(pages: DataFrame) -> DataFrame:
-    """Doc-level fully-fused extraction: scan → one UDF → block rows.
-    No binary shuffle, no binary UDF output; parallelism comes from input
-    splits (spark.sql.files.maxPartitionBytes) + AQE."""
+    """Layer-attribution view, not on ``extract()``'s path: the fused
+    per-document routine as per-page JSON rows (``extract_udfs.
+    extract_docs``) parsed by ``from_json`` — the page-row layer chain
+    perfbench times against the production plan."""
     raw = pages.select("url", "warc_ts", "html", "lang").mapInPandas(
         udfs.extract_docs, PAGE_BLOCKS_JSON_SCHEMA
     )
@@ -142,7 +168,10 @@ def doc_fused_stage(pages: DataFrame) -> DataFrame:
 
 
 def postprocess_stage(page_blocks: DataFrame) -> DataFrame:
-    """P3-P5 ignore rewrite, pure SQL over the nested blocks column."""
+    """Layer-attribution view, not on ``extract()``'s path (both plans
+    apply P3-P5 in ``extract_udfs._extract_page``): the SQL ignore rewrite
+    over a page rows' nested blocks column.  Idempotent, so it may follow
+    ``doc_fused_stage``, whose blocks are already postprocessed."""
     return page_blocks.withColumn("blocks", F.expr(POSTPROCESS_BLOCKS_EXPR))
 
 
@@ -188,7 +217,13 @@ def assemble_stage(page_blocks: DataFrame) -> DataFrame:
 def extract(
     pages: DataFrame, cfg: PipelineConfig | None = None
 ) -> DataFrame:
-    """pages table → extracted table (the flagship job)."""
+    """pages table → extracted table (the flagship job).
+
+    Input urls must be unique.  The fused plan finishes each input row on
+    its own, so two captures of one url give two rows; the paged plan
+    reassembles pages by url and would merge them into one.  extract_job and
+    stream_extract pick the newest capture per url first
+    (``urls._newest_capture_per_url``)."""
     import os
 
     cfg = cfg or PipelineConfig()
@@ -216,12 +251,11 @@ def extract(
             "handoff)"
         )
     if cfg.mode == "fused":
-        finished = doc_fused_stage(pages)
-    else:
-        finished = fused_finish_stage(parse_stage(pages), cfg)
-    if cfg.postprocess:
-        finished = postprocess_stage(finished)
-    return assemble_stage(finished)
+        return pages.select("url", "warc_ts", "html", "lang").mapInArrow(
+            _bind_postprocess(udfs.extract_doc_rows, cfg),
+            EXTRACTED_SCHEMA,
+        )
+    return assemble_stage(fused_finish_stage(parse_stage(pages), cfg))
 
 
 def flatten_lines(extracted: DataFrame) -> DataFrame:

@@ -62,10 +62,10 @@ PAGE_ROW_SCHEMA = T.StructType(
     ]
 )
 
-# Wire format of both extraction UDFs (fused and paged): blocks serialized
-# as one JSON string per page (cheap to hand through Arrow; parsed JVM-side
-# by from_json — see extract_udfs.extract_docs docstring for the measured
-# rationale).
+# Wire format of the paged plan's per-page UDF (and of the extract_docs
+# attribution view): blocks serialized as one JSON string per page, parsed
+# JVM-side by from_json before the groupBy(url) assembly.  The fused plan
+# does not use it: its UDF returns EXTRACTED_SCHEMA rows directly.
 PAGE_BLOCKS_JSON_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -80,7 +80,9 @@ PAGE_BLOCKS_JSON_SCHEMA = T.StructType(
     ]
 )
 
-# Final extracted table (≅ PDFDocument.data, document.py:644-654, + metrics).
+# Final extracted table (≅ PDFDocument.data, document.py:644-654, + metrics);
+# also the fused plan's mapInArrow return type, built column-wise in the
+# worker (extract_udfs._doc_batch).
 EXTRACTED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -33,8 +33,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Arrow batches are the unit of model/kernel batching inside
-        # mapInPandas (reference batch_size analogue, document.py:102-109).
+        # Arrow batches are the unit of model/kernel batching inside the
+        # extraction UDFs (reference batch_size analogue,
+        # document.py:102-109).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Small Arrow batches: binary payload columns cross the JVM↔Python
         # boundary far faster in ~1 MB chunks than in multi-MB ones

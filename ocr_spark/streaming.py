@@ -56,8 +56,9 @@ def stream_extract(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # overlapping input files can land the same url twice in ONE batch;
-        # without this the assembly groupBy would double the doc's pages
-        # and commit the corruption as COMPLETED.  The pick is the NEWEST
+        # extract() requires url-unique input — without this the batch
+        # would commit two rows for the url (the paged plan's groupBy
+        # would double the doc's pages and commit that as COMPLETED).  The pick is the NEWEST
         # capture (ts, then content-digest tie-break) — dropDuplicates
         # keeps an arbitrary partition-order row, so a checkpoint replay
         # could commit a DIFFERENT capture's text than the first run,

@@ -236,13 +236,12 @@ class TestModelProtocolConformance:
     def test_fused_udf_runs_model_backend_end_to_end(
         self, fake_models, monkeypatch
     ):
-        """Drive the actual fused UDF generator (extract_docs) in-process
-        with the model backend selected — the full stage protocol as the
-        executor exercises it."""
+        """Drive the actual fused UDF generator (extract_doc_rows)
+        in-process on an Arrow batch with the model backend selected — the
+        full stage protocol as the executor exercises it."""
         import importlib
-        import json
 
-        import pandas as pd
+        import pyarrow as pa
 
         ext = importlib.import_module("ocr_spark.extract")
         from ocr_spark.operators import extract_udfs
@@ -250,10 +249,12 @@ class TestModelProtocolConformance:
         monkeypatch.setenv("OCR_SPARK_BACKEND", "model")
         monkeypatch.setattr(ext, "_BACKEND", None)  # re-resolve
         try:
-            pdf = pd.DataFrame(
+            batch = pa.RecordBatch.from_pydict(
                 {
                     "url": ["u://pdf", "u://html", "u://bad"],
-                    "warc_ts": [pd.Timestamp("2025-01-01", tz="UTC")] * 3,
+                    "warc_ts": pa.array(
+                        [0] * 3, pa.timestamp("us", tz="UTC")
+                    ),
                     "html": [
                         b"%PDF-native",
                         b"<html><body><p>from dom</p></body></html>",
@@ -262,15 +263,17 @@ class TestModelProtocolConformance:
                     "lang": ["en", "en", "en"],
                 }
             )
-            out = pd.concat(list(extract_udfs.extract_docs(iter([pdf]))))
+            out = pa.Table.from_batches(
+                list(extract_udfs.extract_doc_rows(iter([batch])))
+            )
         finally:
             monkeypatch.setattr(ext, "_BACKEND", None)  # don't leak backend
-        rows = {r.url: r for r in out.itertuples()}
-        blocks = json.loads(rows["u://pdf"].blocks_json)
+        rows = {r["url"]: r for r in out.to_pylist()}
+        blocks = rows["u://pdf"]["pages"][0]["blocks"]
         assert blocks[0]["lines"][0]["content"] == LINE_TEXT
-        html_blocks = json.loads(rows["u://html"].blocks_json)
+        html_blocks = rows["u://html"]["pages"][0]["blocks"]
         assert html_blocks[0]["lines"][0]["content"] == "from dom"
-        assert rows["u://bad"].error.startswith("PARSE_ERROR")
+        assert rows["u://bad"]["error"].startswith("PARSE_ERROR")
 
     def test_model_backend_rejects_non_fused_modes(self, monkeypatch, spark):
         from ocr_spark.pipeline import PipelineConfig, extract

@@ -182,6 +182,39 @@ class TestPipelineVariants:
                 "COMPLETED", 0, "", [],
             ), mode
 
+    def test_duplicate_url_captures_stay_separate_rows(self, spark):
+        """Two captures of one url are two input rows, and the default
+        plan finishes each on its own: two output rows, each equal to the
+        oracle's extraction of its own payload (assembling page rows by
+        url used to merge them into one document with both captures'
+        pages interleaved).  extract() requires url-unique input; the jobs
+        pick the newest capture per url first."""
+        import datetime as dt
+
+        from ocr_spark.fixtures import make_doc
+
+        docs = [make_doc(1), make_doc(2)]
+        rows = [
+            ("u://twice", dt.datetime(2025, 1, 1 + n), bytearray(d["html"]),
+             "", d["lang"])
+            for n, d in enumerate(docs)
+        ]
+        schema = (
+            "url string, warc_ts timestamp, html binary, text string, "
+            "lang string"
+        )
+        out = extract(spark.createDataFrame(rows, schema)).collect()
+        assert len(out) == 2
+        fields = ("text", "pages", "n_pages", "n_blocks", "ocr_pages",
+                  "truncated_pages")
+        by_day = {r.warc_ts.day: r.asDict(recursive=True) for r in out}
+        assert sorted(by_day) == [1, 2]
+        for n, d in enumerate(docs):
+            got = by_day[1 + n]
+            want = extract_document(d["html"], d["lang"])
+            assert got["status"] == "COMPLETED"
+            assert {k: got[k] for k in fields} == {k: want[k] for k in fields}
+
     def test_corrupt_payload_yields_failed_row(self, spark):
         pdf = pd.DataFrame(
             {

@@ -46,19 +46,22 @@ class TestPlans:
         assert len(pushed) == 2 and "url" in pushed[1][:200]
 
     def test_fused_plan_has_single_exchange_and_udf(self, spark, pages_parquet):
-        """Doc-fused default: ONE mapInPandas, ONE exchange, and the
-        exchange's rows carry no binary payload column."""
+        """Doc-fused default: ONE mapInArrow straight off the scan, NO
+        exchange (each document is finished inside the UDF), and no binary
+        payload column above the UDF."""
         from ocr_spark.pipeline import extract, read_pages
 
-        plan = extract(read_pages(spark, pages_parquet))._jdf.queryExecution().executedPlan().toString()
+        df = extract(read_pages(spark, pages_parquet))
+        df.collect()  # executed: the AQE final plan is the one that ran
+        plan = df._jdf.queryExecution().executedPlan().toString()
         # AQE may append an "== Initial Plan ==" copy once anything in the
         # session has executed — assert on the final-plan section only
         plan = plan.split("== Initial Plan ==", 1)[0]
-        assert plan.count("MapInPandas") == 1
-        n_exchanges = plan.count("Exchange hashpartitioning")
-        assert n_exchanges == 1, plan
-        exchange_section = plan.split("Exchange hashpartitioning", 1)[1]
-        assert "html" not in exchange_section[:400]
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan, plan
+        assert "Exchange" not in plan, plan
+        above_udf = plan.split("MapInArrow", 1)[0]
+        assert "html" not in above_udf, plan
 
     def test_paged_plan_has_two_udfs_and_two_exchanges(
         self, spark, pages_parquet
