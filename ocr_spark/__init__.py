@@ -1,11 +1,11 @@
 """ocr_spark — a PySpark-native document/main-content extraction engine.
 
 A from-scratch re-expression of the docketanalyzer/ocr extraction dataflow
-(reference at /root/reference, read-only) as DataFrame operators plus
-vectorized Arrow UDF stages: parse → probe → needs-OCR routing → OCR
-fallback → spatial consolidation → SQL postprocess → document reassembly,
-with checkpointed lineage + metrics for resume, a streaming surface, and
-training-data operators (dedup / similarity / text analysis).
+as DataFrame operators plus vectorized Arrow UDF stages: parse → probe →
+needs-OCR routing → OCR fallback → spatial consolidation → P3-P5
+postprocess → document text and counts, with checkpointed lineage +
+metrics for resume, and training-data operators (dedup / similarity /
+text analysis).
 """
 
 __version__ = "0.2.0"

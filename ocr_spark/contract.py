@@ -2813,9 +2813,8 @@ def _q_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Hour-bucketed event rollup — the batch twin of the watermarked
-# streaming window (streaming.stream_crawl_metrics): same tumbling
-# hour-on-event-time semantics over the `events` table.  Buckets are the
+# Hour-bucketed event rollup: tumbling hour-on-event-time windows over
+# the `events` table.  Buckets are the
 # epoch-hour INTEGER (floor(epoch/3600)) rather than a rendered
 # timestamp, so the boundary is session-timezone-proof in both engines
 # (the io.write_extracted warc_day discipline); min/max of doubles are

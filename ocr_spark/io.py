@@ -211,22 +211,26 @@ def partition_lineage(extracted_path: str, spark: SparkSession) -> DataFrame:
 
 
 def run_metrics(extracted_path: str, spark: SparkSession) -> DataFrame:
-    """Operational rollup over the checkpoint table (A4 — status counts,
-    service.py:262-276 — plus ocr-vs-native ratio and failure codes).
-    Retry attempts are collapsed so counts are per-url."""
+    """Operational rollup over the checkpoint table, one row (A4 — status
+    counts, service.py:262-276 — plus pages, ocr-vs-native ratio, the
+    decode-guard ``truncated_pages`` total and the distinct failure codes,
+    sorted).  Retry attempts are collapsed so counts are per-url; the sums
+    are NULL over an empty table."""
     df = read_extracted(spark, extracted_path, latest_only=True)
     return df.agg(
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_pages").alias("pages"),
         F.sum("ocr_pages").alias("ocr_pages"),
         (F.sum("ocr_pages") / F.sum("n_pages")).alias("ocr_ratio"),
+        F.sum("truncated_pages").alias("truncated_pages"),
         F.sum(F.when(F.col("status") == "COMPLETED", 1).otherwise(0)).alias(
             "completed"
         ),
         F.sum(F.when(F.col("status") == "FAILED", 1).otherwise(0)).alias("failed"),
-        F.count_distinct(
-            F.when(F.col("error").isNotNull(), F.split("error", ":")[0])
-        ).alias("failure_codes"),
+        # the same code set as partition_lineage: collect_set skips NULLs
+        F.array_sort(F.collect_set(F.split("error", ":")[0])).alias(
+            "failure_codes"
+        ),
     )
 
 

@@ -356,10 +356,9 @@ def with_dsir_weight(
     use the join-based :func:`dsir_weights`) and each document folds
     ``element_at`` lookups in feature order, so the result is
     bit-identical to the join path when ``ratios`` comes from
-    :func:`dsir_log_ratios` with the same ``hash_mode``.  Because the
-    plan has NO exchange and no state, this is the path Structured
-    Streaming can run as a stateless per-row gate
-    (:func:`ocr_spark.streaming.stream_dsir_filter`)."""
+    :func:`dsir_log_ratios` with the same ``hash_mode``.  The plan has
+    NO exchange and no state, so it can gate rows in any per-row
+    projection."""
     buckets = len(ratios)
     if buckets < 1:
         raise ValueError("ratios must be non-empty")

@@ -100,12 +100,12 @@ def _error(code: str, e: Exception) -> str:
 
 
 def _extract_page(
-    page, dpi: int, lang: str | None, postprocess: bool
+    page, dpi: int, lang: str | None
 ) -> tuple[bool, list[dict], str | None]:
     """One decoded page → (ocr, blocks, error): the probe, the needs-OCR
     route to the native text layer or OCR (document.py:105-133),
-    consolidation, and — when ``postprocess`` — the oracle's P3-P5 ignore
-    rewrite (``kernels.postprocess.postprocess_blocks``).
+    consolidation, and the oracle's P3-P5 ignore rewrite
+    (``kernels.postprocess.postprocess_blocks``).
 
     Guarded per PAGE in both plans: a throwing page becomes one
     EXTRACT_ERROR lineage row (never counted as OCR, no blocks) while its
@@ -124,9 +124,7 @@ def _extract_page(
                 {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
                 for ln in info["native_lines"]
             ]
-        blocks = hx.finish_page(lines, layout)
-        if postprocess:
-            blocks = postprocess_blocks(blocks)
+        blocks = postprocess_blocks(hx.finish_page(lines, layout))
     except Exception as e:  # noqa: BLE001 - failure-code lineage
         return False, [], _error("EXTRACT_ERROR", e)
     return bool(info["needs_ocr"]), blocks, None
@@ -151,7 +149,7 @@ class _Page(NamedTuple):
 
 
 def _extract_doc(
-    html, lang: str | None, postprocess: bool
+    html, lang: str | None
 ) -> tuple[list[_Page], bool, str | None]:
     """The fused per-document routine: one payload → (pages, truncated,
     error), ``pages`` in decode order — empty for a PARSE_ERROR (``error``
@@ -160,7 +158,7 @@ def _extract_doc(
     if doc is None:
         return [], False, error
     pages = [
-        _Page(pi, *_extract_page(page, doc["dpi"], lang, postprocess))
+        _Page(pi, *_extract_page(page, doc["dpi"], lang))
         for pi, page in zip(page_is, doc["pages"])
     ]
     return pages, bool(doc.get("truncated")), None
@@ -231,7 +229,7 @@ def _pages_column(docs: list[list[_Page]]) -> pa.Array:
     )
 
 
-def _doc_batch(batch: pa.RecordBatch, postprocess: bool) -> pa.RecordBatch:
+def _doc_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     """One input batch (url, warc_ts, html, lang) → one EXTRACTED_SCHEMA
     batch, one row per input row.
 
@@ -246,7 +244,7 @@ def _doc_batch(batch: pa.RecordBatch, postprocess: bool) -> pa.RecordBatch:
     for html, lang in zip(
         batch.column("html").to_pylist(), batch.column("lang").to_pylist()
     ):
-        pages, trunc, error = _extract_doc(html, lang, postprocess)
+        pages, trunc, error = _extract_doc(html, lang)
         ok = sorted((p for p in pages if p.error is None), key=lambda p: p.i)
         kept.append(ok)
         texts.append(doc_text([p.blocks for p in ok]))
@@ -278,7 +276,7 @@ def _doc_batch(batch: pa.RecordBatch, postprocess: bool) -> pa.RecordBatch:
 
 
 def extract_doc_rows(
-    batches: Iterator[pa.RecordBatch], postprocess: bool = True
+    batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
     """Fused plan (``mapInArrow``): scanned doc rows → finished
     EXTRACTED_SCHEMA rows, one per input row — decode + probe + route +
@@ -292,12 +290,12 @@ def extract_doc_rows(
     SQL postprocess and no ``groupBy(url)`` behind this stage.
     """
     for batch in batches:
-        yield _doc_batch(batch, postprocess)
+        yield _doc_batch(batch)
 
 
 def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Layer-attribution view, not on ``extract()``'s path: the fused
-    per-document routine (``_extract_doc``, postprocess on) flattened to
+    per-document routine (``_extract_doc``) flattened to
     the paged plan's per-page JSON wire format (PAGE_BLOCKS_JSON_SCHEMA),
     for ``mapInPandas``.  perfbench times it as the ``udf`` prefix of the
     per-page layer chain (``pipeline.doc_fused_stage``)."""
@@ -306,7 +304,7 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for url, warc_ts, html, lang in zip(
             pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
         ):
-            pages, trunc, error = _extract_doc(html, lang, True)
+            pages, trunc, error = _extract_doc(html, lang)
             if not pages:
                 # a PARSE_ERROR, or a zero-page document; page_i=-1 marks
                 # "no page" and assembly skips it
@@ -349,7 +347,7 @@ def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def analyze_and_finish(
-    batches: Iterator[pd.DataFrame], postprocess: bool = True
+    batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
     """Page rows (parse_pages, after the salted spread) → blocks rows
     (PAGE_BLOCKS_JSON_SCHEMA): decode the page bytes, then _extract_page;
@@ -367,9 +365,7 @@ def analyze_and_finish(
                 except Exception as e:  # noqa: BLE001 - failure-code lineage
                     error = _error("EXTRACT_ERROR", e)
                 else:
-                    ocr, kept, error = _extract_page(
-                        page, int(dpi), lang, postprocess
-                    )
+                    ocr, kept, error = _extract_page(page, int(dpi), lang)
                     blocks = json.dumps(_pack_blocks(kept))
             rows.append(
                 (url, warc_ts, lang, pi, npg, ocr, blocks, bool(trunc), error)

@@ -25,7 +25,6 @@ postprocess included), so their trees are byte-identical.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import partial, update_wrapper
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -103,25 +102,19 @@ class PipelineConfig:
       then reassembles documents by url — choose it when single documents
       are big enough to dominate a task and there are enough cores to
       spread their pages over.  On a 4-core host, `tools/skew_demo.py 500
-      5000` (one 5,000-page document among 500 small ones; three fresh
-      JVMs) read fused 3.67–4.39 s vs paged 6.04–6.74 s, i.e. paged runs
-      at 0.61–0.66× fused (paged timed alone in a fresh JVM: 4.95–5.39
-      s): at 4 cores the giant document's straggler task costs less than
-      paged's extra UDF, exchange and assembly.
+      5000` (one 5,000-page document among 500 small ones; each mode in
+      its own fresh JVM; three runs) read fused 3.61–5.44 s vs paged
+      5.74–6.46 s, i.e. paged runs at 0.62–0.84× fused: at 4 cores the
+      giant document's straggler task costs less than paged's extra UDF,
+      exchange and assembly.
     - page_partitions: width of the paged plan's salted page-level
       exchange (None → spark.sql.shuffle.partitions).
-    - postprocess: apply the P3-P5 ignore rewrite (document.py:625-642).
+
+    Both plans always apply the P3-P5 ignore rewrite (document.py:625-642).
     """
 
     mode: str = "fused"
     page_partitions: int | None = None
-    postprocess: bool = True
-
-
-def _bind_postprocess(udf, cfg: PipelineConfig):
-    """``udf`` with ``cfg.postprocess`` bound, under its own name in the
-    plan."""
-    return update_wrapper(partial(udf, postprocess=cfg.postprocess), udf)
 
 
 def parse_stage(pages: DataFrame) -> DataFrame:
@@ -140,8 +133,7 @@ def fused_finish_stage(page_rows: DataFrame, cfg: PipelineConfig) -> DataFrame:
         page_rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     raw = page_rows.repartition(n, F.xxhash64("url", "page_i")).mapInPandas(
-        _bind_postprocess(udfs.analyze_and_finish, cfg),
-        PAGE_BLOCKS_JSON_SCHEMA,
+        udfs.analyze_and_finish, PAGE_BLOCKS_JSON_SCHEMA
     )
     return _parse_blocks_json(raw)
 
@@ -221,8 +213,8 @@ def extract(
 
     Input urls must be unique.  The fused plan finishes each input row on
     its own, so two captures of one url give two rows; the paged plan
-    reassembles pages by url and would merge them into one.  extract_job and
-    stream_extract pick the newest capture per url first
+    reassembles pages by url and would merge them into one.  extract_job
+    picks the newest capture per url first on WARC input
     (``urls._newest_capture_per_url``)."""
     import os
 
@@ -252,8 +244,7 @@ def extract(
         )
     if cfg.mode == "fused":
         return pages.select("url", "warc_ts", "html", "lang").mapInArrow(
-            _bind_postprocess(udfs.extract_doc_rows, cfg),
-            EXTRACTED_SCHEMA,
+            udfs.extract_doc_rows, EXTRACTED_SCHEMA
         )
     return assemble_stage(fused_finish_stage(parse_stage(pages), cfg))
 

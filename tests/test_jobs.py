@@ -26,7 +26,8 @@ def _run(args):
 
 @pytest.fixture(scope="module")
 def extracted_dir(spark, tmp_path_factory):
-    from ocr_spark.fixtures import write_pages_parquet
+    from ocr_spark.fixtures import make_doc, write_pages_parquet
+    from ocr_spark.oracle import extract_document
 
     base = tmp_path_factory.mktemp("jobs")
     pages = base / "pages.parquet"
@@ -45,6 +46,13 @@ def extracted_dir(spark, tmp_path_factory):
     # the never-silent policy must survive operators who don't read docs
     assert summary["truncated_pages_total"] == 0
     assert summary["failed_docs"] == 0
+    # the north star's pages, ocr-vs-native ratio and failure codes
+    golden = [extract_document(d["html"], d["lang"])
+              for d in map(make_doc, range(30))]
+    assert summary["pages"] == sum(g["n_pages"] for g in golden)
+    assert summary["ocr_pages"] == sum(g["ocr_pages"] for g in golden)
+    assert 0 < summary["ocr_pages"] < summary["pages"]
+    assert summary["failure_codes"] == []
     return out
 
 

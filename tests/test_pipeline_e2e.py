@@ -4,7 +4,6 @@ oracle per url — the analogue of the reference's golden-fixture compare
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_spark.oracle import extract_document, flat_lines
 from ocr_spark.pipeline import (
@@ -103,17 +102,6 @@ class TestPipelineVariants:
         )
         with pytest.raises(ValueError, match="'fused'.*'paged'"):
             extract(df, PipelineConfig(mode=mode))
-
-    def test_postprocess_off_keeps_raw_types(self, spark, pages_parquet):
-        raw = extract(read_pages(spark, pages_parquet), PipelineConfig(postprocess=False))
-        types = {
-            r.t
-            for r in flatten_lines(raw)
-            .select(F.col("block_type").alias("t"))
-            .distinct()
-            .collect()
-        }
-        assert "ignore" not in types
 
     def test_digit_rule_matches_python_semantics(self, spark):
         """Regression (P4): tab-padded and Unicode-digit blocks must get

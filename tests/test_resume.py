@@ -72,6 +72,7 @@ class TestResume:
         assert m.docs == pages.count()
         assert m.completed == m.docs and m.failed == 0
         assert 0 < m.ocr_ratio < 1
+        assert m.truncated_pages == 0 and m.failure_codes == []
 
 
 class TestPartitionLineage:
@@ -106,6 +107,9 @@ class TestPartitionLineage:
         assert lin["2025-02-01"].partition_status == "COMPLETED"
         assert lin["2025-02-02"].partition_status == "IN_PROGRESS"
         assert list(lin["2025-02-02"].failure_codes) == ["PARSE_ERROR"]
+        m = run_metrics(out, spark).first()
+        assert (m.docs, m.failed) == (2, 1)
+        assert list(m.failure_codes) == ["PARSE_ERROR"]
 
 
 def _good_payload():

@@ -12,18 +12,24 @@ SURVEY.md §2.9 / the reference's cross-doc page flattening
 
 Usage: python tools/skew_demo.py [small_docs] [giant_pages]
 Runs on local[N] with N the host's cores (SPARK_GRAFT_CPUS overrides).
-Prints one JSON line with both wall-clocks (best-of-2) and the outputs'
-equality check.
+Each mode runs in its own Python process, so each gets a fresh JVM and
+neither inherits the other's JIT state.  Prints one JSON line with both
+wall-clocks (best-of-2) and whether the two outputs' whole-row digests
+are equal.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
+import subprocess
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+
+MODES = ("fused", "paged")
 
 
 def build_corpus(spark, n_small: int, giant_pages: int):
@@ -56,50 +62,80 @@ def build_corpus(spark, n_small: int, giant_pages: int):
     return spark.createDataFrame(pdf).repartition(32).cache()
 
 
-def main() -> int:
-    n_small = int(sys.argv[1]) if len(sys.argv) > 1 else 2000
-    giant_pages = int(sys.argv[2]) if len(sys.argv) > 2 else 20000
+def row_digest(df) -> str:
+    """sha256 over the sorted sha256 of every document row's scalar
+    columns (text, counts, status, error) and of every flattened line
+    (url, page, block, block type, line, content)."""
+    from pyspark.sql import functions as F
 
-    from ocr_spark.pipeline import PipelineConfig, extract, flatten_lines
+    from ocr_spark.pipeline import flatten_lines
+
+    scalars = [c for c in df.columns if c != "pages"]
+    hashes = [
+        r.h
+        for part in (df.select(*scalars), flatten_lines(df))
+        for r in part.select(
+            F.sha2(F.to_json(F.struct("*")), 256).alias("h")
+        ).collect()
+    ]
+    return hashlib.sha256("\n".join(sorted(hashes)).encode()).hexdigest()
+
+
+def run_mode(mode: str, n_small: int, giant_pages: int) -> dict:
+    """One mode in this process's JVM: best-of-2 wall-clock into noop,
+    then the output digest (not timed)."""
+    from ocr_spark.pipeline import PipelineConfig, extract
     from ocr_spark.session import get_spark
 
     spark = get_spark("skew-demo")  # local[host cores] (session default)
     corpus = build_corpus(spark, n_small, giant_pages)
     corpus.count()  # materialize the cache (corpus build not timed)
+    df = extract(corpus, PipelineConfig(mode=mode))
+    best = float("inf")
+    for _ in range(2):
+        t0 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        best = min(best, time.time() - t0)
+    out = {"sec": round(best, 2), "digest": row_digest(df)}
+    spark.stop()
+    return out
 
-    results = {}
-    outputs = {}
-    for mode in ("fused", "paged"):
-        df = extract(corpus, PipelineConfig(mode=mode))
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        results[mode] = round(best, 2)
-        outputs[mode] = (
-            flatten_lines(df)
-            .selectExpr(
-                "bit_xor(xxhash64(url, page_i, block_i, block_type, "
-                "line_i, content)) h"
-            )
-            .first()[0]
+
+def main() -> int:
+    args = sys.argv[1:]
+    if args and args[0] == "--mode":
+        mode, n_small, giant_pages = args[1], int(args[2]), int(args[3])
+        print(json.dumps(run_mode(mode, n_small, giant_pages)))
+        return 0
+    n_small = int(args[0]) if args else 2000
+    giant_pages = int(args[1]) if len(args) > 1 else 20000
+
+    runs = {}
+    for mode in MODES:
+        proc = subprocess.run(
+            [sys.executable, __file__, "--mode", mode, str(n_small),
+             str(giant_pages)],
+            stdout=subprocess.PIPE,
+            text=True,
+            check=True,
         )
+        runs[mode] = json.loads(proc.stdout.strip().splitlines()[-1])
     print(
         json.dumps(
             {
                 "small_docs": n_small,
                 "giant_pages": giant_pages,
-                "fused_sec": results["fused"],
-                "paged_sec": results["paged"],
+                "fused_sec": runs["fused"]["sec"],
+                "paged_sec": runs["paged"]["sec"],
                 "speedup_paged_over_fused": round(
-                    results["fused"] / results["paged"], 2
+                    runs["fused"]["sec"] / runs["paged"]["sec"], 2
                 ),
-                "outputs_identical": outputs["fused"] == outputs["paged"],
+                "outputs_identical": (
+                    runs["fused"]["digest"] == runs["paged"]["digest"]
+                ),
             }
         )
     )
-    spark.stop()
     return 0
 
 
