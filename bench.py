@@ -137,27 +137,11 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
         ),
     )
     timed(
-        "sim_lsh_topk",
-        similarity.lsh_topk(emb, emb.filter(F.col("vec_id") < 8), k=10),
-    )
-    timed(
         "sim_ivf_topk",
         similarity.ivf_topk(emb, emb.filter(F.col("vec_id") < 8), k=10),
     )
-    # PQ / IVF-PQ: codebook + coarse-centroid picks are driver-eager
-    # (seed collects) and are the write-once index-build cost — outside
-    # the timer; the timed frame covers encode + ADC scoring + exact
-    # rank, mirroring the ivf row above (which re-assigns per call).
-    pq_books = similarity.train_pq_codebooks(emb, m=8, ksub=16)
-    timed(
-        "sim_pq_topk",
-        similarity.pq_topk(
-            similarity.pq_encode(emb, pq_books),
-            emb.filter(F.col("vec_id") < 8),
-            pq_books,
-            k=10,
-        ),
-    )
+    # the coarse-centroid pick is driver-eager (seed collect) and the
+    # write-once index-build cost — outside the timer
     ivf_cents = similarity.train_centroids(
         emb, n_centroids=16, iters=0
     )
@@ -167,17 +151,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
     timed(
         "sim_prototype_prune",
         similarity.prototype_prune(emb, ivf_cents, prune_fraction=0.5),
-    )
-    timed(
-        "sim_ivf_pq_topk",
-        similarity.ivf_pq_topk(
-            similarity.ivf_pq_encode(emb, ivf_cents, pq_books),
-            emb.filter(F.col("vec_id") < 8),
-            ivf_cents,
-            pq_books,
-            k=10,
-            n_probe=2,
-        ),
     )
     timed("text_quality", text_analysis.quality_score(docs))
     timed("text_tokens", text_analysis.token_count(docs))
@@ -204,20 +177,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
                 "query_id long, query string",
             ),
             k=10,
-        ),
-    )
-    # JL dim-reduce lever: exact cosine top-k at the PROJECTED dim (16)
-    # vs the full-dim sim_cosine_topk row above — same rank plan, 4x
-    # less fused arithmetic and candidate bytes.
-    from ocr_spark.operators import embed as embed_ops
-
-    rp16 = embed_ops.random_project(emb, 64, 16).select(
-        "vec_id", F.col("rp").alias("embedding")
-    )
-    timed(
-        "sim_cosine_topk_rp16",
-        similarity.cosine_topk_bruteforce(
-            rp16, rp16.filter(F.col("vec_id") < 8), k=10
         ),
     )
     from ocr_spark.operators import bloom
@@ -248,49 +207,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
         docs.filter(F.col("doc_id") % 3 == 1),
     )
     timed("text_classifier", classifier.classifier_score(docs, cls_counts))
-    from ocr_spark.operators import embed
-
-    # hashed-embedding near-dup: the model-free SemDeDup pipeline (auto
-    # strategy → codegen explode at dim=64)
-    timed(
-        "sim_hashed_near_dup",
-        embed.semantic_near_dup(docs, dim=64, threshold=0.99),
-    )
-    # production posture: the opt-in hot-bucket cap with its audit count
-    # logged alongside per the never-silent policy (this synthetic corpus
-    # IS the degenerate-bucket case the cap exists for).  The pairing
-    # shares ONE persisted banded frame (r4 VERDICT: the audit view used
-    # to recompute the whole embedding+signature pipeline — 10 s here);
-    # the capped row times embedding + banding + pair join, the audit
-    # row then costs one cached groupBy.
-    from ocr_spark.operators import similarity as _sim
-
-    emb64 = embed.hashed_embedding(docs, dim=64).select("doc_id", "embedding")
-    banded64 = _sim.hyperplane_buckets(
-        emb64, vec_col="embedding", id_col="doc_id"
-    ).persist()
-    timed(
-        "sim_hashed_near_dup_capped",
-        _sim.cosine_pairs(
-            emb64,
-            vec_col="embedding",
-            id_col="doc_id",
-            threshold=0.99,
-            max_bucket=200,
-            banded=banded64,
-        ),
-    )
-    # r1-r4 reported the bucket COUNT under "sim_hashed_hot_buckets";
-    # keep that series coherent and put the (new) timing under an
-    # explicit _sec key rather than silently repurposing the old one
-    t0 = time.time()
-    out["sim_hashed_hot_buckets"] = float(
-        _sim.cosine_hot_buckets(
-            banded=banded64, id_col="doc_id", max_bucket=200
-        ).count()
-    )
-    out["sim_hashed_hot_buckets_sec"] = round(time.time() - t0, 3)
-    banded64.unpersist()
     # cluster assignment is EAGER (iterative label propagation with
     # per-round checkpoints), so wrap the whole call — pairs through
     # converged components — in the timer; best-of-1 (each run pays the

@@ -1006,67 +1006,6 @@ FROM (SELECT *, row_number() OVER (PARTITION BY query_id
 WHERE rank <= 10
 """
 
-_PLANES, _DIM = 16, 64
-_SIGNS = similarity.plane_signs(_PLANES, _DIM)
-_W_LIT = (
-    "["
-    + ", ".join(
-        "[" + ", ".join(f"{s}" for s in row) + "]" for row in _SIGNS
-    )
-    + "]"
-)
-
-# The sign matrix lives in a one-row CTE (``wm``) so DuckDB materializes the
-# 16×64 literal once instead of re-constructing it per lambda invocation.
-_SIG_EXPR = f"""
-CAST(list_aggregate(list_transform(generate_series(1, {_PLANES}), j ->
-  CASE WHEN list_aggregate(list_transform(generate_series(1, {_DIM}),
-    i -> embedding[i]::DOUBLE * W[j][i]), 'sum') > 0
-  THEN (CAST(1 AS BIGINT) << (j - 1)) ELSE CAST(0 AS BIGINT) END),
-  'sum') AS BIGINT)
-"""
-
-_W_CTE = f"wm AS (SELECT {_W_LIT} AS W)"
-
-_LSH_TOPK_SQL = f"""
-WITH {_W_CTE},
-sig AS (SELECT vec_id, embedding, {_SIG_EXPR} AS sig
-        FROM embeddings CROSS JOIN wm),
-banded AS (
-  SELECT vec_id, embedding, 0 AS band, sig & 255 AS key FROM sig
-  UNION ALL SELECT vec_id, embedding, 1, sig >> 8 FROM sig),
-qb AS (SELECT vec_id AS q_id, embedding AS qvec, band, key
-       FROM banded WHERE vec_id < 5),
-cand AS (
-  SELECT DISTINCT q.q_id, b.vec_id AS c_id, b.embedding AS cvec, q.qvec
-  FROM banded b JOIN qb q ON b.band = q.band AND b.key = q.key
-  WHERE b.vec_id <> q.q_id),
-scored AS (SELECT q_id, c_id, {_cos_duck('cvec', 'qvec')} AS cos FROM cand)
-SELECT q_id AS query_id, c_id AS neighbor_id, CAST(rank AS INTEGER) AS rank,
-       round(cos, 6) AS cos_r
-FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-        ORDER BY cos DESC, c_id ASC) AS rank FROM scored)
-WHERE rank <= 10
-"""
-
-_NEAR_DUP_SQL = f"""
-WITH {_W_CTE},
-sig AS (SELECT vec_id, embedding, {_SIG_EXPR} AS sig
-        FROM embeddings CROSS JOIN wm),
-banded AS (
-  SELECT vec_id, embedding, 0 AS band, sig & 255 AS key FROM sig
-  UNION ALL SELECT vec_id, embedding, 1, sig >> 8 FROM sig),
-pairs AS (
-  SELECT DISTINCT a.vec_id AS doc_a, b.vec_id AS doc_b,
-         a.embedding AS va, b.embedding AS vb
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.key = b.key AND a.vec_id < b.vec_id)
-SELECT doc_a, doc_b, round(cos, 6) AS cos_r
-FROM (SELECT doc_a, doc_b, {_cos_duck('va', 'vb')} AS cos FROM pairs)
-WHERE cos >= 0.2
-"""
-
-
 _IVF_SQL = f"""
 WITH cents AS (SELECT vec_id AS cid, embedding AS cvec
                FROM embeddings ORDER BY vec_id LIMIT 8),
@@ -1105,259 +1044,6 @@ def _q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select(
         "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
     )
-
-
-# int8-quantized exact top-k: quantization uses floor(x+0.5) (round()'s
-# tie rule differs between the engines: HALF_UP vs HALF_EVEN), so every
-# int matches bit-for-bit; dots are then exact integer arithmetic and
-# the one double division at the end is deterministic.
-_QUANT_CTE = """
-qv AS (SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-           AS s
-       FROM embeddings),
-qz AS (SELECT vec_id,
-         CASE WHEN s > 0 THEN list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) / s * 127.0 + 0.5)
-                     AS INTEGER))
-         ELSE list_transform(embedding, x -> 0) END AS q
-       FROM qv)
-"""
-
-
-def _dot_int_duck(a: str, b: str) -> str:
-    return (
-        f"CAST(list_sum(list_transform(list_zip({a}, {b}), "
-        f"z -> CAST(z[1] AS BIGINT) * z[2])) AS DOUBLE)"
-    )
-
-
-_QUANT_TOPK_SQL = f"""
-WITH {_QUANT_CTE},
-qs AS (SELECT vec_id AS query_id, q AS qq FROM qz WHERE vec_id < 5),
-scored AS (
-  SELECT qs.query_id, c.vec_id AS neighbor_id,
-    {_dot_int_duck('c.q', 'qs.qq')} /
-    (sqrt({_dot_int_duck('c.q', 'c.q')}) *
-     sqrt({_dot_int_duck('qs.qq', 'qs.qq')})) AS cos
-  FROM qz c CROSS JOIN qs WHERE c.vec_id <> qs.query_id)
-SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank,
-       round(cos, 6) AS cos_r
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cos DESC, neighbor_id ASC) AS rank FROM scored)
-WHERE rank <= 10
-"""
-
-
-def _q_quant_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    res = similarity.cosine_topk_quantized(
-        emb, emb.filter(F.col("vec_id") < 5), k=10
-    )
-    return res.select(
-        "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
-    )
-
-
-def _q_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN recall ledger: lsh/ivf/quantized/pq recall@10 against
-    brute-force ground truth in one report.  recall/min_recall are
-    divisions of exact integer counts (order-independent sums), so they
-    are bit-identical cross-engine with no rounding (the round(·,9)
-    policy is only for transcendentals); the pq branch's top-k membership
-    carries the same last-ulp ADC-cos ordering evidence class as the
-    green sim_pq_topk rank column (same codebooks: ksub=8 seed)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.ann_recall_report(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, signs=_SIGNS,
-        methods=("lsh", "ivf", "quantized", "pq"),
-        pq_m=_PQ_M, pq_ksub=_PQ_KSUB, pq_iters=0,
-    )
-
-
-# Product-quantization ADC top-k (similarity.train_pq_codebooks /
-# pq_encode / pq_topk), SEED codebooks (iters=0) so the oracle derives
-# the same centroids in SQL: subspace j's codebook = the 8 lowest-id
-# vectors' j-th subvectors.  Encode = argmax(dot − 0.5·|c|²) per
-# (vector, subspace) with lowest-cid ties (window mirror of the argmax
-# struct); ip/rnorm fold the per-subspace values in j order
-# (list_reduce over a j-ordered list == Spark's 0-seeded fold);
-# cos rounded to 6 (the ANN-family convention — absorbs the
-# list_aggregate-vs-fold last-ulp association slack the other rows
-# already carry).
-
-_PQ_M, _PQ_KSUB, _PQ_DSUB = 8, 8, 8  # dim 64 → 8 subspaces of 8
-
-
-def _q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    books = similarity.train_pq_codebooks(
-        emb, m=_PQ_M, ksub=_PQ_KSUB, iters=0
-    )
-    codes = similarity.pq_encode(emb, books)
-    res = similarity.pq_topk(
-        codes, emb.filter(F.col("vec_id") < 5), books, k=10
-    )
-    return res.select(
-        "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
-    )
-
-
-def _pq_dot(a: str, b: str) -> str:
-    return _DOT.format(a=a, b=b)
-
-
-# Shared CTE chain ending at pq_scored — _PQ_SQL takes its top-10, the
-# recall ledger (_RECALL_REPORT_SQL) takes its top-10 ids as the 'pq'
-# method branch.
-_PQ_CTE = f"""
-seeds AS (SELECT vec_id, embedding FROM embeddings
-               ORDER BY vec_id LIMIT {_PQ_KSUB}),
-cents AS (SELECT sj.j,
-            row_number() OVER (PARTITION BY sj.j ORDER BY s.vec_id) - 1
-              AS cid,
-            s.embedding[sj.j * {_PQ_DSUB} + 1 : sj.j * {_PQ_DSUB} + {_PQ_DSUB}]
-              AS cvec
-          FROM seeds s CROSS JOIN range({_PQ_M}) sj(j)),
-sub AS (SELECT e.vec_id, sj.j,
-          e.embedding[sj.j * {_PQ_DSUB} + 1 : sj.j * {_PQ_DSUB} + {_PQ_DSUB}]
-            AS sv
-        FROM embeddings e CROSS JOIN range({_PQ_M}) sj(j)),
-enc AS (SELECT vec_id, j, cid, nsq FROM (
-          SELECT sub.vec_id, sub.j, c.cid,
-            {_pq_dot('sub.sv', 'c.cvec')} - 0.5 * {_pq_dot('c.cvec', 'c.cvec')}
-              AS score,
-            {_pq_dot('c.cvec', 'c.cvec')} AS nsq,
-            row_number() OVER (PARTITION BY sub.vec_id, sub.j
-                               ORDER BY {_pq_dot('sub.sv', 'c.cvec')}
-                                 - 0.5 * {_pq_dot('c.cvec', 'c.cvec')} DESC,
-                               c.cid ASC) AS rk
-          FROM sub JOIN cents c ON c.j = sub.j)
-        WHERE rk = 1),
-rn AS (SELECT vec_id AS c_id,
-              sqrt(list_reduce(list(nsq ORDER BY j), (a, b) -> a + b))
-                AS rnorm
-       FROM enc GROUP BY vec_id),
-qn AS (SELECT vec_id AS q_id,
-              sqrt({_pq_dot('embedding', 'embedding')}) AS qnorm
-       FROM embeddings WHERE vec_id < 5),
-ipx AS (SELECT qs.vec_id AS q_id, enc.vec_id AS c_id,
-          list_reduce(list({_pq_dot('qs.sv', 'c.cvec')} ORDER BY enc.j),
-                      (a, b) -> a + b) AS ip
-        FROM enc
-        JOIN cents c ON c.j = enc.j AND c.cid = enc.cid
-        JOIN sub qs ON qs.j = enc.j
-        WHERE qs.vec_id < 5 AND qs.vec_id <> enc.vec_id
-        GROUP BY qs.vec_id, enc.vec_id),
-pq_scored AS (SELECT ipx.q_id, ipx.c_id,
-             CASE WHEN rn.rnorm = 0 OR qn.qnorm = 0 THEN 0
-                  ELSE ipx.ip / (qn.qnorm * rn.rnorm) END AS cos
-           FROM ipx JOIN rn ON rn.c_id = ipx.c_id
-                    JOIN qn ON qn.q_id = ipx.q_id)
-"""
-
-_PQ_SQL = f"""
-WITH {_PQ_CTE}
-SELECT q_id AS query_id, c_id AS neighbor_id, CAST(rank AS INTEGER) AS rank,
-       round(cos, 6) AS cos_r
-FROM (SELECT *, row_number() OVER (PARTITION BY q_id
-        ORDER BY cos DESC, c_id ASC) AS rank FROM pq_scored)
-WHERE rank <= 10
-"""
-
-
-def _topk_ids(scored_cte: str, qc: str = "q_id", cc: str = "c_id") -> str:
-    """rank<=10 (query_id, neighbor_id) projection over a scored CTE."""
-    return f"""
-  SELECT {qc} AS query_id, {cc} AS neighbor_id FROM (
-    SELECT {qc}, {cc}, row_number() OVER (PARTITION BY {qc}
-      ORDER BY cos DESC, {cc} ASC) AS rank FROM {scored_cte})
-  WHERE rank <= 10"""
-
-
-_RECALL_REPORT_SQL = f"""
-WITH {_W_CTE},
-rr_q AS (SELECT vec_id AS q_id, embedding AS qvec
-         FROM embeddings WHERE vec_id < 5),
-rr_truth_scored AS (
-  SELECT q.q_id, e.vec_id AS c_id, {_cos_duck('e.embedding', 'q.qvec')} AS cos
-  FROM embeddings e CROSS JOIN rr_q q WHERE e.vec_id <> q.q_id),
-rr_truth AS ({_topk_ids('rr_truth_scored')}),
-rr_sig AS (SELECT vec_id, embedding, {_SIG_EXPR} AS sig
-           FROM embeddings CROSS JOIN wm),
-rr_banded AS (
-  SELECT vec_id, embedding, 0 AS band, sig & 255 AS key FROM rr_sig
-  UNION ALL SELECT vec_id, embedding, 1, sig >> 8 FROM rr_sig),
-rr_lsh_scored AS (
-  SELECT q_id, c_id, {_cos_duck('cvec', 'qvec')} AS cos FROM (
-    SELECT DISTINCT q.vec_id AS q_id, b.vec_id AS c_id,
-           b.embedding AS cvec, q.embedding AS qvec
-    FROM rr_banded b JOIN rr_banded q
-      ON b.band = q.band AND b.key = q.key
-    WHERE q.vec_id < 5 AND b.vec_id <> q.vec_id)),
-rr_lsh AS ({_topk_ids('rr_lsh_scored')}),
-rr_cents AS (SELECT vec_id AS cid, embedding AS cvec
-             FROM embeddings ORDER BY vec_id LIMIT 8),
-rr_corpus_cells AS (
-  SELECT vec_id AS c_id, embedding AS c_vec, cell FROM (
-    SELECT e.vec_id, e.embedding, c.cid AS cell,
-      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        {_cos_duck('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS crank
-    FROM embeddings e CROSS JOIN rr_cents c)
-  WHERE crank <= 1),
-rr_query_cells AS (
-  SELECT vec_id AS q_id, embedding AS q_vec, cell FROM (
-    SELECT e.vec_id, e.embedding, c.cid AS cell,
-      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        {_cos_duck('e.embedding', 'c.cvec')} DESC, c.cid ASC) AS crank
-    FROM embeddings e CROSS JOIN rr_cents c WHERE e.vec_id < 5)
-  WHERE crank <= 2),
-rr_ivf_scored AS (
-  SELECT q_id, c_id, {_cos_duck('c_vec', 'q_vec')} AS cos FROM (
-    SELECT DISTINCT q.q_id, cc.c_id, cc.c_vec, q.q_vec
-    FROM rr_corpus_cells cc JOIN rr_query_cells q ON cc.cell = q.cell
-    WHERE cc.c_id <> q.q_id)),
-rr_ivf AS ({_topk_ids('rr_ivf_scored')}),
-{_QUANT_CTE},
-rr_quant_scored AS (
-  SELECT qs.q_id, c.vec_id AS c_id,
-    {_dot_int_duck('c.q', 'qs.qq')} /
-    (sqrt({_dot_int_duck('c.q', 'c.q')}) *
-     sqrt({_dot_int_duck('qs.qq', 'qs.qq')})) AS cos
-  FROM qz c CROSS JOIN
-       (SELECT vec_id AS q_id, q AS qq FROM qz WHERE vec_id < 5) qs
-  WHERE c.vec_id <> qs.q_id),
-rr_quant AS ({_topk_ids('rr_quant_scored')}),
-{_PQ_CTE},
-rr_pq AS ({_topk_ids('pq_scored')}),
-rr_perq AS (
-  SELECT 'lsh' AS method, t.query_id,
-         count(a.query_id) AS n_hit, count(*) AS n_truth
-  FROM rr_truth t LEFT JOIN rr_lsh a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-  GROUP BY t.query_id
-  UNION ALL
-  SELECT 'ivf', t.query_id, count(a.query_id), count(*)
-  FROM rr_truth t LEFT JOIN rr_ivf a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-  GROUP BY t.query_id
-  UNION ALL
-  SELECT 'quantized', t.query_id, count(a.query_id), count(*)
-  FROM rr_truth t LEFT JOIN rr_quant a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-  GROUP BY t.query_id
-  UNION ALL
-  SELECT 'pq', t.query_id, count(a.query_id), count(*)
-  FROM rr_truth t LEFT JOIN rr_pq a
-    ON t.query_id = a.query_id AND t.neighbor_id = a.neighbor_id
-  GROUP BY t.query_id)
-SELECT method, CAST(10 AS INTEGER) AS k, count(*) AS n_queries,
-       CAST(sum(n_truth) AS BIGINT) AS n_truth,
-       CAST(sum(n_hit) AS BIGINT) AS n_hit,
-       CAST(sum(n_hit) AS DOUBLE) / CAST(sum(n_truth) AS DOUBLE) AS recall,
-       min(CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE)) AS min_recall
-FROM rr_perq GROUP BY method
-"""
 
 
 # Trained-IVF oracle: ONE deterministic Lloyd round unrolled in SQL.  The
@@ -1556,26 +1242,6 @@ def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select(
         "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
     )
-
-
-def _q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    res = similarity.lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 5), k=10, planes=_PLANES,
-        signs=_SIGNS,
-    )
-    return res.select(
-        "query_id", "neighbor_id", "rank", F.round("cos", 6).alias("cos_r")
-    )
-
-
-def _q_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    # threshold calibrated to the testdata's cosine distribution (max ≈ .51)
-    res = similarity.cosine_pairs(
-        emb, threshold=0.2, planes=_PLANES, signs=_SIGNS
-    )
-    return res.select("doc_a", "doc_b", F.round("cos", 6).alias("cos_r"))
 
 
 # ---------------------------------------------------------------------------
@@ -2999,119 +2665,6 @@ def _q_hashed_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Composed SemDeDup-shaped pipeline: hashed embeddings → hyperplane-bucket
-# cosine pairs (the sim_near_dup plan over text instead of a shipped
-# embeddings table).  Threshold 0.99 sits in a measured gap of the sf0.01
-# cosine distribution (nearest pair 0.9903), so the ≥-filter can't flip on
-# engine float noise; cos_r is rounded to 6 like every sim_* pair row.
-_EMB_PLANES = 16
-_EMB_SIGNS = similarity.plane_signs(_EMB_PLANES, _EMB_DIM)
-_EMB_W_LIT = (
-    "["
-    + ", ".join(
-        "[" + ", ".join(f"{s}" for s in row) + "]" for row in _EMB_SIGNS
-    )
-    + "]"
-)
-
-_EMB_SIG_EXPR = f"""
-CAST(list_aggregate(list_transform(generate_series(1, {_EMB_PLANES}), j ->
-  CASE WHEN list_aggregate(list_transform(generate_series(1, {_EMB_DIM}),
-    i -> embedding[i]::DOUBLE * W[j][i]), 'sum') > 0
-  THEN (CAST(1 AS BIGINT) << (j - 1)) ELSE CAST(0 AS BIGINT) END),
-  'sum') AS BIGINT)
-"""
-
-_SEM_PAIRS_SQL = f"""
-WITH {_EMBED_CTE},
-wm AS (SELECT {_EMB_W_LIT} AS W),
-sig AS (SELECT doc_id, embedding, {_EMB_SIG_EXPR} AS sig
-        FROM emb CROSS JOIN wm),
-banded AS (
-  SELECT doc_id, embedding, 0 AS band, sig & 255 AS key FROM sig
-  UNION ALL SELECT doc_id, embedding, 1, sig >> 8 FROM sig),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.embedding AS va, b.embedding AS vb
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
-SELECT doc_a, doc_b, round(cos, 6) AS cos_r
-FROM (SELECT doc_a, doc_b, {_cos_duck('va', 'vb')} AS cos FROM pairs)
-WHERE cos >= 0.99
-"""
-
-
-def _q_semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import embed
-
-    res = embed.semantic_near_dup(
-        _t(spark, sf_dir, "documents"),
-        dim=_EMB_DIM,
-        threshold=0.99,
-        planes=_EMB_PLANES,
-        signs=_EMB_SIGNS,
-        hash_mode="portable",
-        strategy="hof",
-    )
-    return res.select("doc_a", "doc_b", F.round("cos", 6).alias("cos_r"))
-
-
-# ---------------------------------------------------------------------------
-# Random projection (JL dim-reduce, operators/embed.py).  The ±1 sign
-# matrix is generated ONCE at import (driver-side hashlib — deterministic,
-# no Spark/DuckDB hashing needed) and inlined as a literal in BOTH
-# engines; products are ±x (exact), folds are sequential index-order with
-# a 0.0 init on both sides (DuckDB prepends 0.0 to its list_reduce), and
-# the 1/sqrt(out_dim) scale is one correctly-rounded multiply — so the
-# exploded (vec_id, j, value) rows hash-compare UNROUNDED.
-
-_RP_IN, _RP_OUT = 64, 8
-
-
-def _rp_sql() -> str:
-    from .operators.embed import random_projection_matrix
-
-    m = random_projection_matrix(_RP_IN, _RP_OUT)
-    m_lit = (
-        "["
-        + ", ".join(
-            "[" + ", ".join(f"{v!r}" for v in row) + "]" for row in m
-        )
-        + "]"
-    )
-    # the matrix literal must be HOISTED out of the lambda body (the
-    # repo's inline-array rule applies to DuckDB too: inlined, the
-    # 512-literal list rebuilds per element — measured 58 s vs < 1 s)
-    return f"""
-WITH mr AS (
-  SELECT j, ({m_lit})[j] AS mrow
-  FROM generate_series(1, {_RP_OUT}) AS g(j))
-SELECT vec_id, CAST(mr.j AS INTEGER) AS j,
-  list_reduce(
-    [CAST(0 AS DOUBLE)] || list_transform(generate_series(1, {_RP_IN}),
-      i -> mr.mrow[i] * CAST(embedding[i] AS DOUBLE)),
-    (a, b) -> a + b)
-  * (CAST(1 AS DOUBLE) / sqrt(CAST({_RP_OUT} AS DOUBLE))) AS value
-FROM embeddings, mr
-"""
-
-
-_RP_SQL = _rp_sql()
-
-
-def _q_random_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import embed
-
-    rp = embed.random_project(
-        _t(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
-        in_dim=_RP_IN,
-        out_dim=_RP_OUT,
-    )
-    return rp.select(
-        "vec_id", F.posexplode("rp").alias("j", "value")
-    ).select("vec_id", (F.col("j") + 1).alias("j"), "value")
-
-
 # ---------------------------------------------------------------------------
 # outlink extraction + host web graph (operators/links.py)
 #
@@ -3849,22 +3402,19 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     # (1) newest + previously-unchecked oracle rows — r5: entries whose
     # VALUES changed this round lead (the language_id zero-vote fix
     # changed lang_pred for stopword-free docs — a stale r3 green would
-    # be misleading), then the new recall ledger and every entry whose
-    # implementation changed (id-only lsh/ivf rerank joins, NULL-digest
-    # dedup convention, pack coalesce, quality split binding, pii
-    # coalesce).  The five rows below lead now: their rank tails run
-    # through the shared top-n and ANN rerank helpers
-    # (operators/_frames.py top_n, similarity._rerank_topk).
-    "sim_lsh_topk": (_q_lsh_topk, _LSH_TOPK_SQL),
+    # be misleading), then every entry whose implementation changed
+    # (id-only ivf rerank join, NULL-digest dedup convention, pack
+    # coalesce, quality split binding, pii coalesce).  The three rows
+    # below lead now: their rank tails run through the shared top-n and
+    # ANN rerank helpers (operators/_frames.py top_n,
+    # similarity._rerank_topk).
     "sim_ivf_topk": (_q_ivf_topk, _IVF_SQL),
     "corpus_domain_cap": (_q_cap_domain, _CAP_DOMAIN_SQL),
     "sim_cosine_topk": (_q_cosine_topk, _COS_TOPK_SQL),
-    "sim_quantized_topk": (_q_quant_topk, _QUANT_TOPK_SQL),
     "dedup_winnow": (_q_winnow, _WINNOW_SQL),
     "text_bm25_topk": (_q_bm25, _BM25_SQL),
     "sim_prototype_prune": (_q_prototype_prune, _PROTO_PRUNE_SQL),
     "dedup_cluster_best": (_q_cluster_best, _CLUSTER_BEST_SQL),
-    "sim_random_project": (_q_random_project, _RP_SQL),
     "corpus_boilerplate_filter": (_q_boilerplate_filter, _BP_FILTER_SQL),
     "corpus_boilerplate_lines": (_q_boilerplate_lines, _BP_LINES_SQL),
     "sim_semdedup_pairs": (_q_semdedup_pairs, _SEMDEDUP_PAIRS_SQL),
@@ -3888,7 +3438,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "select_dsir_weights": (_q_dsir_weights, _DSIR_WEIGHTS_SQL),
     "select_dsir_inline": (_q_dsir_inline, _DSIR_WEIGHTS_SQL),
     "select_dsir_sample": (_q_dsir_sample, _DSIR_SAMPLE_SQL),
-    "sim_pq_topk": (_q_pq_topk, _PQ_SQL),
     "bpe_pair_counts": (_q_bpe_pair_counts, _BPE_PAIRS_SQL),
     "bpe_apply_chars": (_q_bpe_apply_chars, _BPE_CHARS_SQL),
     "bpe_apply_one_merge": (_q_bpe_apply_one_merge, _BPE_ONE_MERGE_SQL),
@@ -3898,7 +3447,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "text_quality": (_q_quality, _quality_sql()),
     "text_quality_filter": (_q_quality_filter, _quality_filter_sql()),
     "pii_scrub": (_q_pii_scrub, _pii_sql()),
-    "sim_recall_report": (_q_recall_report, _RECALL_REPORT_SQL),
     "sim_ivf_trained": (_q_ivf_trained, _IVF_TRAINED_SQL),
     # the two late-close rows below (winnow cross-snapshot pairs,
     # quantile buckets) sit inside the driver's ~50-entry budget
@@ -3917,7 +3465,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "ext_html_meta": (_q_html_meta, _HTML_META_SQL),
     "graph_host_degrees": (_q_host_degrees, _HOST_DEGREES_SQL),
     "graph_pagerank": (_q_pagerank, _PAGERANK_SQL),
-    "sim_semantic_pairs": (_q_semantic_pairs, _SEM_PAIRS_SQL),
     "text_classifier_score": (_q_classifier_score, _CLS_SCORE_SQL),
     "corpus_token_budget": (_q_token_budget, _TOK_BUDGET_SQL),
     "dedup_paragraph_corpus": (_q_para_dedup, _PARA_DEDUP_SQL),
@@ -3941,8 +3488,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "dedup_line_corpus": (_q_line_dedup, _LINE_DEDUP_SQL),
     "text_c4_rules": (_q_c4_rules, _C4_SQL),
     "events_hour_rollup": (_q_events_hour, _EVENTS_HOUR_SQL),
-    # similarity search
-    "sim_near_dup": (_q_near_dup, _NEAR_DUP_SQL),
     # text analysis
     "text_token_count": (_q_token_count, _TOKEN_SQL),
     "text_fingerprint": (_q_fingerprint, _FINGERPRINT_SQL),

@@ -12,7 +12,6 @@ All operators are pure DataFrame plans (no Python in the hot path):
 - ngram_jaccard_pairs: exact verification (or small-corpus direct pairing).
 - simhash:            64/16-bit SimHash entirely via aggregate() higher-order
                       functions — zero shuffles until the final self-join.
-- embedding_near_dup: cosine near-duplicate pairs over an embedding column.
 
 ``hash_mode='portable'`` switches xxhash64 → the md5-prefix hash that DuckDB
 can reproduce bit-identically (driver oracle parity); the default is the
@@ -67,7 +66,8 @@ def _posting_pairs(
 
     Pair joins carry ids: hand it postings only — payloads (vectors,
     text) rejoin after the pair set exists, or a hot key multiplies them
-    by its candidate count (measured 13× on cosine_pairs).
+    by its candidate count (measured r4: 210 s → 16 s on an embedding
+    bucket self-join at sf0.1 once the vectors left the join).
 
     ``cap`` is OPT-IN (it bounds recall, so the caller must pass it AND
     log the matching audit view): keys with more than ``cap`` postings
@@ -1033,21 +1033,6 @@ def simhash_near_dup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-
-
-def embedding_near_dup(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via the similarity module's
-    bucketed join; see similarity.cosine_pairs for the plan shape and the
-    opt-in ``max_bucket`` guard contract."""
-    from .similarity import cosine_pairs
-
-    return cosine_pairs(df, vec_col, id_col, threshold, max_bucket=max_bucket)
 
 
 def connected_components(

@@ -101,12 +101,14 @@ class PipelineConfig:
       explodes to page rows first and salts them across partitions (R3),
       then reassembles documents by url — choose it when single documents
       are big enough to dominate a task and there are enough cores to
-      spread their pages over.  On a 4-core host, `tools/skew_demo.py 500
-      5000` (one 5,000-page document among 500 small ones; each mode in
-      its own fresh JVM; three runs) read fused 3.61–5.44 s vs paged
-      5.74–6.46 s, i.e. paged runs at 0.62–0.84× fused: at 4 cores the
-      giant document's straggler task costs less than paged's extra UDF,
-      exchange and assembly.
+      spread their pages over.  On a 4-core, 16 GB host,
+      `tools/skew_demo.py <small> <giant>` (each mode in its own fresh
+      JVM, best of 2 passes, two runs per point, identical outputs) put
+      the crossover between 10,000 and 20,000 giant pages: paged ran at
+      0.73–0.74× fused's speed at 2,000/5,000 and 0.82–0.94× at
+      2,000/10,000, then 1.11–1.25× at 2,000/20,000 and 0.95–1.23× at
+      500/20,000.  Below the crossover the giant document's straggler
+      task costs less than paged's extra UDF, exchange and assembly.
     - page_partitions: width of the paged plan's salted page-level
       exchange (None → spark.sql.shuffle.partitions).
 

@@ -1,11 +1,30 @@
+import os
+
 import pytest
+
+
+def _host_heap() -> dict[str, str] | None:
+    """Half the host's RAM as the session JVM's heap, unless
+    SPARK_GRAFT_DRIVER_MEM sets it.  The library default (64g) lets G1
+    grow the heap past a 16 GB host's RAM, where the kernel OOM killer
+    ends the JVM and every later test fails with a refused connection."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return None
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return {"spark.driver.memory": f"{int(line.split()[1]) // 2048}m"}
+    return None
 
 
 @pytest.fixture(scope="session")
 def spark():
     from ocr_spark.session import get_spark
 
-    s = get_spark("ocr-spark-tests", cores=4, shuffle_partitions=8)
+    s = get_spark(
+        "ocr-spark-tests", cores=4, shuffle_partitions=8,
+        extra_conf=_host_heap(),
+    )
     yield s
     s.stop()
 

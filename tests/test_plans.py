@@ -341,22 +341,6 @@ class TestNewOperatorPlans:
         )
         assert salted == unsalted
 
-    def test_quantized_corpus_side_never_shuffles(self, spark):
-        """Quantization is a pure projection; the quantized top-k corpus
-        side must stay shuffle-free up to the final rank window (same
-        guarantee as the float brute-force path)."""
-        from ocr_spark.operators.similarity import quantize_embeddings
-
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        )
-        plan = (
-            quantize_embeddings(emb)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        for op in ("Exchange", "Join", "Window"):
-            assert op not in plan, op
-
 
 class TestHashedEmbeddingPlans:
     def test_hof_embedding_is_shuffle_free(self, spark):
@@ -401,11 +385,11 @@ class TestHashedEmbeddingPlans:
 class TestAnnPairPlans:
     """The id-only pair rule (CLAUDE.md): candidate-pair joins and their
     distinct must exchange (q_id, c_id) only — vectors rejoin after the
-    distinct.  r4 measured 13× on cosine_pairs when the vectors moved out
-    of the bucket join; these pins keep lsh_topk / ivf_topk and the
-    capped cosine_pairs / semdedup_pairs on the same shape (a hot
-    bucket/cell duplicates every candidate row, and at dim 768 each
-    duplicate would drag ~6 KB through the exchange)."""
+    distinct.  r4 measured 13× on an embedding bucket self-join when the
+    vectors moved out of the join; these pins keep ivf_topk and the
+    capped semdedup_pairs on the same shape (a hot cell duplicates every
+    candidate row, and at dim 768 each duplicate would drag ~6 KB
+    through the exchange)."""
 
     @staticmethod
     def _hash_exchange_keys(plan: str) -> list[str]:
@@ -422,15 +406,6 @@ class TestAnnPairPlans:
                 keys,
                 plan,
             )
-
-    def test_lsh_topk_distinct_exchanges_ids_only(self, spark):
-        from ocr_spark.operators.similarity import lsh_topk
-
-        embs = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        )
-        qs = embs.orderBy("vec_id").limit(5)
-        self._assert_no_vec_in_exchanges(lsh_topk(embs, qs, k=3))
 
     def test_ivf_topk_distinct_exchanges_ids_only(self, spark):
         from ocr_spark.operators.similarity import ivf_topk
@@ -451,14 +426,6 @@ class TestAnnPairPlans:
         return spark.createDataFrame(
             [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)],
             "vec_id long, embedding array<float>",
-        )
-
-    def test_capped_cosine_pairs_exchanges_ids_only(self, spark):
-        from ocr_spark.operators.similarity import cosine_pairs
-
-        embs = self._seeded_embs(spark)
-        self._assert_no_vec_in_exchanges(
-            cosine_pairs(embs, threshold=0.5, max_bucket=50)
         )
 
     def test_capped_semdedup_pairs_exchanges_ids_only(self, spark):

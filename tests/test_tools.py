@@ -19,20 +19,30 @@ def test_unreached_defs_is_transitive(tmp_path, capsys):
     """A def used only by an unreached def is unreached too: in the
     a → b chain below nothing reaches ``a``, so ``b`` is listed with it,
     while ``c`` (called from a job's module body) is not.  ``d`` is
-    reached by contract.py alone and is listed as such."""
+    reached by contract.py alone and is listed as such.  ``e`` is called
+    only from bench.py's module body and ``f`` only from a bench.py def,
+    so both are listed as ``bench``: benchmark scripts are not
+    production roots."""
     (tmp_path / "ocr_spark").mkdir()
     (tmp_path / "jobs").mkdir()
     (tmp_path / "ocr_spark" / "mod.py").write_text(
         "def a():\n    return b()\n\n\n"
         "def b():\n    return 1\n\n\n"
         "def c():\n    return 2\n\n\n"
-        "def d():\n    return 3\n"
+        "def d():\n    return 3\n\n\n"
+        "def e():\n    return 4\n\n\n"
+        "def f():\n    return 5\n"
     )
     (tmp_path / "ocr_spark" / "contract.py").write_text(
         "from .mod import d\n\nROW = d\n"
     )
     (tmp_path / "jobs" / "run.py").write_text(
         "from ocr_spark.mod import c\n\nprint(c())\n"
+    )
+    (tmp_path / "bench.py").write_text(
+        "from ocr_spark.mod import e, f\n\n\n"
+        "def run():\n    return f()\n\n\n"
+        "print(e(), run())\n"
     )
     assert _load_tool("unreached_defs").main(["x", str(tmp_path)]) == 0
     rows = [
@@ -44,4 +54,6 @@ def test_unreached_defs_is_transitive(tmp_path, capsys):
         ("a", "tests-only"),
         ("b", "tests-only"),
         ("d", "contract"),
+        ("e", "bench"),
+        ("f", "bench"),
     ]

@@ -278,28 +278,6 @@ class TestSimilarity:
                     if r.query_id == q]
             assert mine == order
 
-    def test_lsh_topk_recall_vs_bruteforce(self, embs):
-        from ocr_spark.operators.similarity import (
-            cosine_topk_bruteforce,
-            lsh_topk,
-        )
-
-        queries = embs.filter("vec_id < 5")
-        exact = cosine_topk_bruteforce(embs, queries, k=3).collect()
-        approx = lsh_topk(embs, queries, k=3, planes=6).collect()
-        exact_sets = {}
-        for r in exact:
-            exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-        approx_sets = {}
-        for r in approx:
-            approx_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-        # random 64-d embeddings are near-orthogonal → LSH recall is genuinely
-        # modest; the op is deterministic (hash-derived planes), measured 3/15
-        hits = sum(
-            len(exact_sets[q] & approx_sets.get(q, set())) for q in exact_sets
-        )
-        assert hits >= 2
-
     def test_ivf_topk_probes_recall_and_planted_dup(self, embs):
         from pyspark.sql import functions as F
 
@@ -331,45 +309,6 @@ class TestSimilarity:
         ).collect()
         found = {r.query_id: r.neighbor_id for r in got}
         assert found == {0: 10_000, 1: 10_001}
-
-    def test_lsh_topk_always_finds_planted_duplicate(self, embs):
-        from ocr_spark.operators.similarity import lsh_topk
-
-        # an exact duplicate vector agrees on every hyperplane → always found
-        dup = embs.filter("vec_id < 4").withColumn(
-            "vec_id", F.col("vec_id") + 1000000
-        )
-        corpus = embs.unionByName(dup)
-        out = lsh_topk(corpus, embs.filter("vec_id < 4"), k=1, planes=16).collect()
-        got = {r.query_id: (r.neighbor_id, r.cos) for r in out if r.rank == 1}
-        for q in range(4):
-            assert got[q][0] == q + 1000000
-            assert got[q][1] == pytest.approx(1.0)
-
-    def test_cosine_pairs_planted_duplicate(self, embs):
-        from ocr_spark.operators.dedup import embedding_near_dup
-
-        dup = embs.limit(2).withColumn("vec_id", F.col("vec_id") + 1000000)
-        pairs = embedding_near_dup(
-            embs.limit(20).unionByName(dup), threshold=0.999
-        ).collect()
-        found = {(p.doc_a, p.doc_b): p.cos for p in pairs}
-        assert found[(0, 1000000)] == pytest.approx(1.0)
-        assert found[(1, 1000001)] == pytest.approx(1.0)
-
-    def test_hyperplane_planes_capped_at_62(self, spark):
-        """planes=63 hits the sign bit (DuckDB raises on 1<<63) and >=64
-        wraps mod 64 in the JVM, silently colliding plane 64 with plane 0
-        — both must be loud errors."""
-        from ocr_spark.operators.similarity import hyperplane_signature
-
-        df = spark.createDataFrame(
-            [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
-        )
-        for planes in (0, 63, 64):
-            with pytest.raises(ValueError, match=r"\[1, 62\]"):
-                hyperplane_signature(df, planes=planes)
-        assert hyperplane_signature(df, planes=62).collect()
 
 
 class TestTextAnalysis:
@@ -562,64 +501,6 @@ class TestHotBucketGuards:
         assert len(hot) == 4  # all 4 bands of the mega-cluster
         assert all(r.n_docs == 10_000 for r in hot)
 
-    def test_shared_banded_frame_one_signature_compute(self, spark):
-        """The capped+audited cosine pairing shares ONE persisted banded
-        frame (r4 VERDICT #6): results identical to the unshared path,
-        and the injected plans contain NO signature arithmetic (the
-        hyperplane hash constant 100003 never appears — every reference
-        reads the cached frame)."""
-        from ocr_spark.operators.embed import hashed_embedding
-        from ocr_spark.operators.similarity import (
-            cosine_hot_buckets,
-            cosine_pairs,
-            hyperplane_buckets,
-        )
-
-        docs = spark.createDataFrame(
-            [(i, f"shared vocab words doc {i % 7} tail {i % 3}")
-             for i in range(300)],
-            "doc_id long, text string",
-        )
-        emb = hashed_embedding(docs, dim=16).select("doc_id", "embedding")
-        banded = hyperplane_buckets(
-            emb, vec_col="embedding", id_col="doc_id"
-        ).persist()
-        try:
-            shared = cosine_pairs(
-                emb, "embedding", "doc_id", threshold=0.9,
-                max_bucket=50, banded=banded,
-            )
-            plain = cosine_pairs(
-                emb, "embedding", "doc_id", threshold=0.9, max_bucket=50
-            )
-            key = lambda r: (r.doc_a, r.doc_b, round(r.cos, 12))
-            assert sorted(map(key, shared.collect())) == sorted(
-                map(key, plain.collect())
-            )
-            hot_shared = cosine_hot_buckets(
-                banded=banded, id_col="doc_id", max_bucket=50
-            )
-            hot_plain = cosine_hot_buckets(
-                emb, "embedding", "doc_id", max_bucket=50
-            )
-            hkey = lambda r: (r.band, r.key, r.n_docs)
-            assert sorted(map(hkey, hot_shared.collect())) == sorted(
-                map(hkey, hot_plain.collect())
-            )
-            # every banded reference reads the cache: the capped pair
-            # plan has three (hot counts + both self-join sides), the
-            # audit one — none recomputes the signature pipeline (the
-            # 100003 hyperplane constant appears only inside the
-            # InMemoryRelation's cached-plan description, never in a
-            # live operator above a scan)
-            for injected, n_refs in ((shared, 3), (hot_shared, 1)):
-                plan = (
-                    injected._jdf.queryExecution().executedPlan().toString()
-                )
-                assert plan.count("InMemoryTableScan") >= n_refs, plan
-        finally:
-            banded.unpersist()
-
     def test_shared_sig_and_shingled_frames(self, spark):
         """simhash pairs/audit share a sig frame; jaccard pairs/audit
         share a shingle_postings frame — identical results either way."""
@@ -769,25 +650,6 @@ class TestHotBucketGuards:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         pairs = lsh_candidate_pairs(minhash_signatures(df, num_perm=8))
         assert pairs.count() == 60 * 59 // 2  # uncapped: all pairs
-
-    def test_cosine_pairs_mega_bucket_capped(self, spark):
-        import time
-
-        from ocr_spark.operators.similarity import cosine_pairs
-
-        # 5k identical vectors (one signature bucket) + one near-dup pair
-        base = [1.0, 0.0, 0.0, 0.0]
-        rows = [(i, base) for i in range(5_000)]
-        rows += [
-            (10_001, [0.0, 1.0, 0.0, 0.02]),
-            (10_002, [0.0, 1.0, 0.0, 0.021]),
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-        t0 = time.time()
-        got = cosine_pairs(df, threshold=0.99, max_bucket=500).collect()
-        elapsed = time.time() - t0
-        assert {(p.doc_a, p.doc_b) for p in got} == {(10_001, 10_002)}
-        assert elapsed < 60, f"quadratic task suspected: {elapsed:.1f}s"
 
 
 class TestDecontamination:
@@ -1350,144 +1212,6 @@ class TestDeterministicSampling:
             deterministic_sample(docs, 1.2)
         with pytest.raises(ValueError, match=r"\[0, 1\]"):
             stratified_sample(docs, {"src1": -0.1})
-
-
-class TestQuantizedSimilarity:
-    def test_int8_topk_recall_vs_float(self, embs):
-        """Quantized cosine must track the float cosine closely on
-        unit-norm embeddings: high top-k overlap, small score error."""
-        from ocr_spark.operators.similarity import (
-            cosine_topk_bruteforce,
-            cosine_topk_quantized,
-        )
-
-        queries = embs.filter("vec_id < 5")
-        exact = cosine_topk_bruteforce(embs, queries, k=10).collect()
-        quant = cosine_topk_quantized(embs, queries, k=10).collect()
-        es, qs = {}, {}
-        for r in exact:
-            es.setdefault(r.query_id, set()).add(r.neighbor_id)
-        for r in quant:
-            qs.setdefault(r.query_id, set()).add(r.neighbor_id)
-        hit = sum(len(es[q] & qs.get(q, set())) for q in es)
-        assert hit / sum(len(v) for v in es.values()) >= 0.8
-        # score agreement at matching (query, neighbor) pairs
-        ex = {(r.query_id, r.neighbor_id): r.cos for r in exact}
-        for r in quant:
-            key = (r.query_id, r.neighbor_id)
-            if key in ex:
-                assert abs(r.cos - ex[key]) < 0.05, key
-
-    def test_ann_recall_report_matches_direct_intersection(self, embs):
-        """The recall ledger's numbers must equal a hand-computed
-        intersection of each approximate top-k against the brute-force
-        ground truth — differential, not just shape-checked."""
-        from ocr_spark.operators.similarity import (
-            ann_recall_report,
-            cosine_topk_bruteforce,
-            cosine_topk_quantized,
-            ivf_topk,
-            lsh_topk,
-        )
-
-        queries = embs.filter("vec_id < 5")
-        k = 10
-        report = {
-            r.method: r
-            for r in ann_recall_report(embs, queries, k=k).collect()
-        }
-        assert set(report) == {"lsh", "ivf", "quantized"}
-
-        def pairsets(rows):
-            d = {}
-            for r in rows:
-                d.setdefault(r.query_id, set()).add(r.neighbor_id)
-            return d
-
-        truth = pairsets(cosine_topk_bruteforce(embs, queries, k=k).collect())
-        for method, rows in (
-            ("lsh", lsh_topk(embs, queries, k=k).collect()),
-            ("ivf", ivf_topk(embs, queries, k=k).collect()),
-            ("quantized", cosine_topk_quantized(embs, queries, k=k).collect()),
-        ):
-            approx = pairsets(rows)
-            n_truth = sum(len(v) for v in truth.values())
-            n_hit = sum(
-                len(truth[q] & approx.get(q, set())) for q in truth
-            )
-            got = report[method]
-            assert got.k == k and got.n_queries == len(truth)
-            assert got.n_truth == n_truth and got.n_hit == n_hit, method
-            assert got.recall == n_hit / n_truth, method
-            assert got.min_recall == min(
-                len(truth[q] & approx.get(q, set())) / len(truth[q])
-                for q in truth
-            ), method
-        # the ledger's raison d'être: on this near-uniform synthetic
-        # corpus the bucketed paths have LOW recall (lsh ~0.04 — random
-        # vectors have weak signature locality), and a user must SEE
-        # that before trusting them at scale.  Only the quantized path
-        # is near-exact by construction.
-        assert report["quantized"].recall >= 0.8
-        assert report["lsh"].recall < report["quantized"].recall
-
-    def test_ann_recall_report_pq_branch(self, embs):
-        """The opt-in 'pq' method's numbers equal a direct intersection
-        of pq_topk (same deterministic seed codebooks) with the truth."""
-        from ocr_spark.operators.similarity import (
-            ann_recall_report,
-            cosine_topk_bruteforce,
-            pq_encode,
-            pq_topk,
-            train_pq_codebooks,
-        )
-
-        queries = embs.filter("vec_id < 5")
-        k = 10
-        row = ann_recall_report(
-            embs, queries, k=k, methods=("pq",), pq_m=8, pq_ksub=8,
-            pq_iters=0,
-        ).collect()[0]
-        assert row.method == "pq"
-
-        def pairsets(rows):
-            d = {}
-            for r in rows:
-                d.setdefault(r.query_id, set()).add(r.neighbor_id)
-            return d
-
-        truth = pairsets(cosine_topk_bruteforce(embs, queries, k=k).collect())
-        books = train_pq_codebooks(embs, m=8, ksub=8, iters=0)
-        approx = pairsets(
-            pq_topk(pq_encode(embs, books), queries, books, k=k).collect()
-        )
-        n_truth = sum(len(v) for v in truth.values())
-        n_hit = sum(len(truth[q] & approx.get(q, set())) for q in truth)
-        assert row.n_truth == n_truth and row.n_hit == n_hit
-        assert row.recall == n_hit / n_truth
-
-    def test_ann_recall_report_rejects_unknown_method(self, embs):
-        from ocr_spark.operators.similarity import ann_recall_report
-
-        with pytest.raises(ValueError, match="unknown methods"):
-            ann_recall_report(
-                embs, embs.filter("vec_id < 2"), methods=("lsh", "hnsw")
-            )
-
-    def test_quantization_shape_and_range(self, spark):
-        from ocr_spark.operators.similarity import quantize_embeddings
-
-        df = spark.createDataFrame(
-            [
-                (1, [0.5, -1.0, 0.25, 0.0]),
-                (2, [0.0, 0.0, 0.0, 0.0]),  # zero vector: scale-0 guard
-            ],
-            "vec_id long, embedding array<double>",
-        )
-        got = {r.vec_id: r for r in quantize_embeddings(df).collect()}
-        assert list(got[1].q) == [64, -127, 32, 0]  # floor(x/1*127+0.5)
-        assert got[1].scale == 1.0
-        assert list(got[2].q) == [0, 0, 0, 0] and got[2].scale == 0.0
 
 
 class TestSequencePacking:
@@ -2422,26 +2146,6 @@ class TestHashedEmbedding:
                 math.sqrt(sum(v * v for v in r.embedding)) - 1.0
             ) < 1e-12
 
-    def test_semantic_near_dup_finds_planted_duplicate(self, spark, docs):
-        """Text in, pairs out: a planted copy must surface as a cos=1
-        pair through the bucketed cosine join; the composed pipeline
-        (hashed_embedding → cosine_pairs) never sees a model."""
-        from ocr_spark.operators.embed import semantic_near_dup
-
-        planted = docs.limit(2).withColumn(
-            "doc_id", F.col("doc_id") + 1_000_000
-        )
-        pairs = semantic_near_dup(
-            docs.unionByName(planted), dim=16, threshold=0.999
-        ).collect()
-        found = {
-            (min(r.doc_a, r.doc_b), max(r.doc_a, r.doc_b)) for r in pairs
-        }
-        for r in docs.limit(2).collect():
-            assert (r.doc_id, r.doc_id + 1_000_000) in found
-        for r in pairs:
-            assert r.cos >= 0.999
-
 
 class TestClassifierScore:
     """Supervised token log-odds classifier (operators/classifier.py) —
@@ -2998,20 +2702,6 @@ class TestSharedFrameParamGuards:
             jaccard_hot_shingles(docs, n=5, shingled=sh)
         ngram_jaccard_pairs(docs, n=3, shingled=sh).schema
 
-    def test_banded_planes_mismatch_raises(self, embs):
-        from ocr_spark.operators.similarity import (
-            cosine_hot_buckets,
-            cosine_pairs,
-            hyperplane_buckets,
-        )
-
-        banded = hyperplane_buckets(embs, planes=16)
-        with pytest.raises(ValueError, match="planes=16"):
-            cosine_pairs(embs, planes=32, banded=banded)
-        with pytest.raises(ValueError, match="planes=16"):
-            cosine_hot_buckets(planes=32, banded=banded)
-        cosine_pairs(embs, planes=16, banded=banded).schema
-
     def test_metadata_survives_persist_and_select(self, docs):
         """The guard rides column metadata, which must survive the
         documented persist-and-share lifecycle."""
@@ -3023,22 +2713,6 @@ class TestSharedFrameParamGuards:
             assert meta.get("shingle_n") == 4
         finally:
             sh.unpersist()
-
-
-class TestRecallReportEdgeCases:
-    def test_empty_query_set_reports_zeros(self, embs):
-        """Zero queries → zero-filled report rows, not a TypeError from
-        int(None) over the NULL empty-aggregate sums (r5 review
-        finding)."""
-        from ocr_spark.operators.similarity import ann_recall_report
-
-        rows = ann_recall_report(
-            embs, embs.filter("vec_id < 0"), k=5, methods=("lsh",)
-        ).collect()
-        assert len(rows) == 1
-        r = rows[0]
-        assert (r.n_queries, r.n_truth, r.n_hit) == (0, 0, 0)
-        assert r.recall == 0.0 and r.min_recall == 0.0
 
 
 class TestBlockedWordsPlanShape:
@@ -3237,282 +2911,6 @@ class TestThirdPassGuards:
         assert incremental_dedup(new, old).count() == 0       # exact drops
 
 
-class TestProductQuantization:
-    """PQ encode + ADC top-k (operators/similarity.py): exactness when
-    the codebook can represent the corpus, python differential for the
-    argmin encode, plan shape, and the recall-ledger wiring."""
-
-    def test_encode_pandas_strategy_parity(self, embs):
-        """The Arrow/NumPy encode (the ksub=256 published-regime path —
-        the literal expression is HOF-interpreted, measured 31× slower
-        there) emits IDENTICAL codes and a BIT-equal rnorm (same
-        sequential fold order for the codeword norms and the subspace
-        accumulation), so the downstream ADC top-k is identical."""
-        from ocr_spark.operators.similarity import (
-            pq_encode,
-            pq_topk,
-            train_pq_codebooks,
-        )
-
-        books = train_pq_codebooks(embs, m=8, ksub=8)
-        lit = {
-            r.vec_id: (list(r.codes), r.rnorm)
-            for r in pq_encode(embs, books, strategy="literal").collect()
-        }
-        pdx = {
-            r.vec_id: (list(r.codes), r.rnorm)
-            for r in pq_encode(embs, books, strategy="pandas").collect()
-        }
-        assert lit == pdx  # codes equal AND rnorm bit-equal
-        q = embs.filter("vec_id < 3")
-        a = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in pq_topk(
-                pq_encode(embs, books, strategy="pandas"), q, books
-            ).collect()
-        )
-        b = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in pq_topk(
-                pq_encode(embs, books, strategy="literal"), q, books
-            ).collect()
-        )
-        assert a == b
-        with pytest.raises(ValueError, match="strategy"):
-            pq_encode(embs, books, strategy="numpy")
-
-    def test_ivf_pq_encode_pandas_strategy_parity(self, embs):
-        """The one-pass index build's pandas path emits the same
-        (cell, codes, rnorm) artifact as the literal projection, so the
-        probed ADC top-k is identical."""
-        from ocr_spark.operators.similarity import (
-            ivf_pq_encode,
-            ivf_pq_topk,
-            train_centroids,
-            train_pq_codebooks,
-        )
-
-        cents = train_centroids(embs, n_centroids=4, iters=0)
-        books = train_pq_codebooks(embs, m=8, ksub=8)
-        lit = {
-            r.vec_id: (r.cell, list(r.codes), r.rnorm)
-            for r in ivf_pq_encode(
-                embs, cents, books, strategy="literal"
-            ).collect()
-        }
-        pdx = {
-            r.vec_id: (r.cell, list(r.codes), r.rnorm)
-            for r in ivf_pq_encode(
-                embs, cents, books, strategy="pandas"
-            ).collect()
-        }
-        assert lit == pdx  # cell equal, codes equal, rnorm bit-equal
-        q = embs.filter("vec_id < 3")
-        a = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in ivf_pq_topk(
-                ivf_pq_encode(embs, cents, books, strategy="pandas"),
-                q, cents, books, n_probe=2,
-            ).collect()
-        )
-        b = sorted(
-            (r.query_id, r.neighbor_id, r.rank)
-            for r in ivf_pq_topk(
-                ivf_pq_encode(embs, cents, books, strategy="literal"),
-                q, cents, books, n_probe=2,
-            ).collect()
-        )
-        assert a == b
-
-    def test_pandas_paths_refuse_nan_elements(self, spark):
-        """Arrow coerces a NULL element to NaN; the pandas workers must
-        refuse it loudly (the literal expression silently lands such
-        rows in the lowest cid — review finding, pinned), and
-        random_project (whose own contract is never-raise) must emit
-        NULL components, not NaN."""
-        from ocr_spark.operators.embed import random_project
-        from ocr_spark.operators.similarity import (
-            prototype_scores,
-            train_centroids,
-        )
-
-        df = spark.createDataFrame(
-            [(0, [1.0, 2.0]), (1, [1.0, None])],
-            "vec_id long, embedding array<double>",
-        )
-        cents = train_centroids(df.filter("vec_id = 0"), n_centroids=1,
-                                iters=0)
-        with pytest.raises(Exception, match="NaN|PythonException"):
-            prototype_scores(df, cents, strategy="pandas").collect()
-        rp = {
-            r.vec_id: r.rp
-            for r in random_project(df, 2, 4,
-                                    strategy="pandas").collect()
-        }
-        assert all(x is None for x in rp[1])
-        assert all(x is not None for x in rp[0])
-
-    def test_encode_matches_python_argmin(self, embs):
-        import numpy as np
-
-        from ocr_spark.operators.similarity import (
-            pq_encode,
-            train_pq_codebooks,
-        )
-
-        books = train_pq_codebooks(embs, m=8, ksub=8)
-        got = {
-            r.vec_id: (list(r.codes), r.rnorm)
-            for r in pq_encode(embs.filter("vec_id < 40"), books).collect()
-        }
-        src = {
-            r.vec_id: np.array(r.embedding, dtype=np.float64)
-            for r in embs.filter("vec_id < 40").collect()
-        }
-        for vid, v in src.items():
-            codes, rnorm = got[vid]
-            rsq = 0.0
-            for j in range(8):
-                sub = v[8 * j : 8 * (j + 1)]
-                cents = [np.array(c, dtype=np.float64) for _, c in books[j]]
-                want = min(
-                    range(8),
-                    key=lambda c: (float(np.sum((sub - cents[c]) ** 2)), c),
-                )
-                assert codes[j] == want, (vid, j)
-                rsq += float(cents[codes[j]] @ cents[codes[j]])
-            assert abs(rnorm - rsq**0.5) < 1e-9, vid
-
-    def test_adc_topk_exact_when_codebook_represents_corpus(self, spark):
-        """Corpus vectors drawn FROM the codebook entries reconstruct
-        exactly, so ADC cosine == true cosine and PQ top-k must equal
-        brute force rank-for-rank."""
-        import hashlib
-
-        from ocr_spark.operators.similarity import (
-            cosine_topk_bruteforce,
-            pq_encode,
-            pq_topk,
-            train_pq_codebooks,
-        )
-
-        m, dsub, ksub = 4, 4, 8
-
-        def subpattern(c, j):
-            return [
-                (hashlib.md5(f"{c}:{j}:{d}".encode()).digest()[0] - 127.5)
-                / 127.5
-                for d in range(dsub)
-            ]
-
-        # the 8 lowest ids enumerate the 8 patterns in every subspace —
-        # the seed codebook IS the vocabulary of subvectors
-        rows = []
-        for i in range(120):
-            c = i % ksub
-            rows.append(
-                (i, [x for j in range(m) for x in subpattern(c, j)])
-            )
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        ).cache()
-        books = train_pq_codebooks(df, m=m, ksub=ksub)
-        codes = pq_encode(df, books)
-        queries = df.filter("vec_id IN (3, 17)")
-        got = sorted(
-            (r.query_id, r.rank, r.neighbor_id, round(r.cos, 9))
-            for r in pq_topk(codes, queries, books, k=5).collect()
-        )
-        want = sorted(
-            (r.query_id, r.rank, r.neighbor_id, round(r.cos, 9))
-            for r in cosine_topk_bruteforce(df, queries, k=5).collect()
-        )
-        assert got == want
-
-    def test_dim_must_tile_subspaces(self, embs):
-        from ocr_spark.operators.similarity import train_pq_codebooks
-
-        with pytest.raises(ValueError, match="tile"):
-            train_pq_codebooks(embs, m=7)
-
-    def test_encode_is_pure_projection(self, embs):
-        from ocr_spark.operators.similarity import (
-            pq_encode,
-            train_pq_codebooks,
-        )
-
-        books = train_pq_codebooks(embs, m=8, ksub=8)
-        plan = (
-            pq_encode(embs, books)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        for op in ("Join", "Window", "CartesianProduct"):
-            assert op not in plan, op
-        # the cached fixture scan aside, encoding adds no exchange
-        assert "Exchange hashpartitioning" not in plan
-
-    def test_recall_ledger_reports_pq(self, embs):
-        from ocr_spark.operators.similarity import ann_recall_report
-
-        rows = {
-            r.method: r
-            for r in ann_recall_report(
-                embs,
-                embs.filter("vec_id < 3"),
-                k=5,
-                methods=("pq", "quantized"),
-                pq_m=8,
-                pq_ksub=8,
-            ).collect()
-        }
-        assert set(rows) == {"pq", "quantized"}
-        pq = rows["pq"]
-        assert pq.n_truth == 15 and 0.0 <= pq.recall <= 1.0
-        # int8 quantization is near-lossless; seed-codebook PQ is the
-        # coarsest path — the ledger exists to surface exactly that gap
-        assert rows["quantized"].recall >= pq.recall
-
-    def test_ivf_pq_full_probe_equals_pq_topk(self, embs):
-        """The composition check: with every cell probed, IVF-PQ must
-        equal plain PQ ADC rank-for-rank (same codes, same folds) — and
-        sim_pq_topk is oracle-checked, so the chain pins ivf_pq too."""
-        from pyspark.sql import functions as F
-
-        from ocr_spark.operators.similarity import (
-            ivf_pq_encode,
-            ivf_pq_topk,
-            pq_encode,
-            pq_topk,
-            train_pq_codebooks,
-        )
-
-        books = train_pq_codebooks(embs, m=8, ksub=8)
-        cents = [
-            (int(r.vec_id), [float(v) for v in r.embedding])
-            for r in embs.orderBy("vec_id").limit(4).collect()
-        ]
-        enc = ivf_pq_encode(embs, cents, books)
-        queries = embs.filter("vec_id < 3")
-        full = sorted(
-            (r.query_id, r.rank, r.neighbor_id, round(r.cos, 9))
-            for r in ivf_pq_topk(
-                enc, queries, cents, books, k=5, n_probe=len(cents)
-            ).collect()
-        )
-        plain = sorted(
-            (r.query_id, r.rank, r.neighbor_id, round(r.cos, 9))
-            for r in pq_topk(pq_encode(embs, books), queries, books, k=5).collect()
-        )
-        assert full == plain
-        # a partial probe returns a (possibly) different, smaller-recall
-        # set but the same schema and k rows per query
-        part = ivf_pq_topk(enc, queries, cents, books, k=5, n_probe=1)
-        per_q = part.groupBy("query_id").count().collect()
-        assert all(r["count"] <= 5 for r in per_q)
-        # the encode artifact carries no vectors
-        assert set(enc.columns) == {"vec_id", "cell", "codes", "rnorm"}
-
-
 class TestSemDeDup:
     """similarity.semdedup_pairs / semdedup_corpus — the cluster-scoped
     semantic dedup pipeline (SemDeDup, arXiv 2303.09540)."""
@@ -3666,6 +3064,24 @@ class TestPrototypePrune:
         from ocr_spark.operators.similarity import train_centroids
 
         return train_centroids(embs, n_centroids=4, iters=1)
+
+    def test_pandas_paths_refuse_nan_elements(self, spark):
+        """Arrow coerces a NULL element to NaN; the pandas worker must
+        refuse it loudly (the literal expression silently lands such
+        rows in the lowest cid — review finding, pinned)."""
+        from ocr_spark.operators.similarity import (
+            prototype_scores,
+            train_centroids,
+        )
+
+        df = spark.createDataFrame(
+            [(0, [1.0, 2.0]), (1, [1.0, None])],
+            "vec_id long, embedding array<double>",
+        )
+        cents = train_centroids(df.filter("vec_id = 0"), n_centroids=1,
+                                iters=0)
+        with pytest.raises(Exception, match="NaN|PythonException"):
+            prototype_scores(df, cents, strategy="pandas").collect()
 
     def test_scores_match_assignment_and_bruteforce_cos(self, embs, cents):
         """Differential: cell == assign_cells' cell for every row, and
@@ -4142,118 +3558,6 @@ class TestBoilerplateFilter:
             corpus_boilerplate_filter(corpus, min_docs=0)
         with pytest.raises(ValueError, match="delimiter"):
             boilerplate_lines(corpus, delimiter=".")
-
-
-class TestRandomProjection:
-    """random_project: deterministic ±1 JL dim-reduce as one shuffle-free
-    codegen projection (matrix constant-folded into the plan)."""
-
-    def test_deterministic_and_seeded(self):
-        from ocr_spark.operators.embed import random_projection_matrix
-
-        a = random_projection_matrix(8, 4)
-        assert a == random_projection_matrix(8, 4)
-        assert a != random_projection_matrix(8, 4, seed="v2")
-        assert all(v in (1.0, -1.0) for row in a for v in row)
-        assert len(a) == 4 and all(len(r) == 8 for r in a)
-
-    def test_pandas_strategy_parity(self, spark, embs):
-        """The Arrow/NumPy matmul strategy (768→64 production shape —
-        the literal HOF transform is interpreted, measured 3.2k rows/s
-        on 32 cores there vs 34.7k on 8 for the matmul): same ±x exact
-        products, components within summation-order ulp of the fold,
-        identical NULL-propagation for short/NULL vectors."""
-        from ocr_spark.operators.embed import random_project
-
-        lit = {
-            r.vec_id: list(r.rp)
-            for r in random_project(embs, 64, 16,
-                                    strategy="literal").collect()
-        }
-        pdx = {
-            r.vec_id: list(r.rp)
-            for r in random_project(embs, 64, 16,
-                                    strategy="pandas").collect()
-        }
-        assert set(lit) == set(pdx)
-        for k in lit:
-            for a, b in zip(lit[k], pdx[k]):
-                assert b == pytest.approx(a, abs=1e-12)
-        bad = spark.createDataFrame(
-            [(0, [1.0] * 64), (1, [1.0] * 10), (2, None)],
-            "vec_id long, embedding array<double>",
-        )
-        pb = {
-            r.vec_id: r.rp
-            for r in random_project(bad, 64, 16,
-                                    strategy="pandas").collect()
-        }
-        assert all(x is None for x in pb[1]) and all(
-            x is None for x in pb[2]
-        )
-        assert all(x is not None for x in pb[0])
-        with pytest.raises(ValueError, match="strategy"):
-            random_project(embs, 64, 16, strategy="numpy")
-
-    def test_exact_values_and_null_propagation(self, spark):
-        from ocr_spark.operators.embed import random_project
-
-        m = [[1.0, -1.0, 1.0], [1.0, 1.0, 1.0]]
-        df = spark.createDataFrame(
-            [(1, [1.0, 2.0, 4.0]), (2, [1.0, 2.0]), (3, None)],
-            "vec_id long, embedding array<float>",
-        )
-        got = {
-            r.vec_id: r.rp
-            for r in random_project(df, 3, 2, matrix=m).collect()
-        }
-        inv = 1.0 / (2.0 ** 0.5)
-        assert got[1] == [3.0 * inv, 7.0 * inv]
-        # short vector: element_at past the end is NULL → NULL output,
-        # never a silently-truncated projection
-        assert got[2] == [None, None]
-        assert got[3] == [None, None]
-
-    def test_plan_is_one_shuffle_free_projection(self, spark, embs):
-        from ocr_spark.operators.embed import random_project
-
-        rp = random_project(embs.select("vec_id", "embedding"), 64, 8)
-        plan = rp._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan
-        # the sign matrix must be constant-folded to ONE literal, not a
-        # CreateArray rebuilt per row (the inline-array rule)
-        assert "[[" in plan and "create_array" not in plan.lower()
-
-    def test_jl_distance_preservation(self, spark, embs):
-        """64 → 32 on the fixture embeddings: mean pairwise-distance
-        distortion ~9.6% (measured; the JL bound for k=32).  Pinned with
-        margin — the matrix and data are deterministic."""
-        import numpy as np
-        from itertools import combinations
-        from ocr_spark.operators.embed import random_project
-
-        rows = random_project(
-            embs.select("vec_id", "embedding").limit(100), 64, 32
-        ).collect()
-        X = np.array([r.embedding for r in rows], dtype=np.float64)
-        Y = np.array([r.rp for r in rows], dtype=np.float64)
-        dx, dy = [], []
-        for a, b in combinations(range(len(rows)), 2):
-            dx.append(np.linalg.norm(X[a] - X[b]))
-            dy.append(np.linalg.norm(Y[a] - Y[b]))
-        dx, dy = np.array(dx), np.array(dy)
-        rel = np.abs(dy - dx) / dx
-        assert rel.mean() < 0.15
-        # the 1/sqrt(out_dim) scale preserves expected norms (isometry)
-        assert 0.9 < dy.mean() / dx.mean() < 1.1
-
-    def test_validation(self, spark, embs):
-        from ocr_spark.operators.embed import random_project
-
-        with pytest.raises(ValueError, match="matrix shape"):
-            random_project(embs, 64, 8, matrix=[[1.0, -1.0]])
-        with pytest.raises(ValueError, match="already exists"):
-            random_project(embs, 64, 8, out_col="embedding")
 
 
 class TestWinnowFingerprints:

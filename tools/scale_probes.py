@@ -4,9 +4,6 @@
 Not part of bench.py's per-round JSON (each probe deliberately runs a
 known-bad plan shape for comparison); run manually::
 
-    python tools/scale_probes.py ann      # id-only pair join vs the old
-                                          # vector-through-distinct shape
-                                          # at dim 256
     python tools/scale_probes.py bloom    # single-join bitmap probe vs
                                           # the k-broadcast probe at
                                           # m = 2^28
@@ -42,13 +39,6 @@ Methodology (the bench-hygiene rules from BENCH.md, applied to A/Bs):
   host a shuffle is a memory copy, on 1000 executors it is the network,
   so bytes are the cluster-relevant number local wall-clock can't show.
 
-``ann`` replays the exact pre-r5 ``lsh_topk`` shape (the distinct and
-rerank carried ``c_vec``/``q_vec`` through the bucket join —
-similarity.py's r4 state, VERDICT r4 "What's wrong" #2) against the
-shipped id-only shape, at a dimension where the payload matters
-(256 doubles ≈ 2 KB/vector; the r4 bench corpus was dim 8, which is why
-the defect was invisible there).
-
 ``bloom`` compares ``incremental_dedup(probe_mode='broadcast-k')``
 (bloom_flag: k broadcast joins, each shipping the full mask table —
 Spark does not reuse-merge the identical broadcasts, measured r4)
@@ -68,7 +58,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-ANN_DEFAULTS = (200_000, 256, 2048)  # n, dim, n_queries
 BLOOM_DEFAULTS = (2_000_000, 2_000_000, 2**28)  # n_old, n_new, m_bits
 
 
@@ -109,165 +98,6 @@ def _sub(argv: list[str]) -> dict:
         print(out.stderr[-3000:], file=sys.stderr)
         raise RuntimeError(f"probe subprocess {argv} exited {out.returncode}")
     return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-# --------------------------------------------------------------- ANN probe
-
-
-def _ann_corpus(spark, n: int, dim: int, n_queries: int):
-    from pyspark.sql import functions as F
-
-    corpus = (
-        spark.range(n)
-        .select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                f"transform(sequence(0, {dim - 1}), j -> "
-                f"CAST(pmod(xxhash64(id, j), 2001) - 1000 AS DOUBLE) "
-                f"/ 1000.0D)"
-            ).alias("embedding"),
-        )
-        .localCheckpoint()  # time the join machinery, not the generator
-    )
-    queries = corpus.filter(F.col("vec_id") < n_queries).localCheckpoint()
-    return corpus, queries
-
-
-def _lsh_topk_vec_through(df, qs_df, k=10, planes=16):
-    """The r4 shape, verbatim semantics: vectors ride the bucket join and
-    the distinct (similarity.py pre-r5; kept ONLY here, as the A/B
-    baseline)."""
-    from pyspark.sql import Window, functions as F
-
-    from ocr_spark.operators.similarity import (
-        _dot,
-        _norm,
-        hyperplane_signature,
-    )
-
-    half = planes // 2
-    mask = (1 << half) - 1
-
-    def banded(x, pref):
-        s = hyperplane_signature(
-            x.select("vec_id", "embedding"), "embedding", planes
-        )
-        withv = s.join(
-            x.select(
-                F.col("vec_id"),
-                F.col("embedding").alias(f"{pref}_vec"),
-            ),
-            "vec_id",
-        )
-        return withv.select(
-            F.col("vec_id").alias(f"{pref}_id"),
-            f"{pref}_vec",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(0).alias("band"),
-                        F.expr(f"sig & {mask}").alias("key"),
-                    ),
-                    F.struct(
-                        F.lit(1).alias("band"),
-                        F.expr(f"shiftright(sig, {half})").alias("key"),
-                    ),
-                )
-            ).alias("bk"),
-        ).select(f"{pref}_id", f"{pref}_vec", "bk.band", "bk.key")
-
-    cand = (
-        banded(df, "c")
-        .join(F.broadcast(banded(qs_df, "q")), on=["band", "key"])
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select("q_id", "c_id", "c_vec", "q_vec")
-        .distinct()
-        .withColumn(
-            "cos",
-            F.expr(
-                f"{_dot('c_vec', 'q_vec')} / "
-                f"({_norm('c_vec')} * {_norm('q_vec')})"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.col("c_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "rank",
-            "cos",
-        )
-    )
-
-
-def _ann_variant(spark, variant: str, n: int, dim: int, nq: int):
-    from ocr_spark.operators import similarity
-
-    corpus, queries = _ann_corpus(spark, n, dim, nq)
-    if variant == "id_only":
-        return similarity.lsh_topk(corpus, queries, k=10)
-    if variant == "vec_through":
-        return _lsh_topk_vec_through(corpus, queries, k=10)
-    raise SystemExit(f"unknown ann variant {variant!r}")
-
-
-def ann_time(variant: str, n: int, dim: int, nq: int) -> dict:
-    spark = _spark(f"ann-{variant}")
-    df = _ann_variant(spark, variant, n, dim, nq)
-    before = _shuffle_write_bytes(spark)
-    t0 = time.time()
-    _noop(df)
-    best = time.time() - t0
-    shuffle = _shuffle_write_bytes(spark) - before
-    t0 = time.time()
-    _noop(df)
-    best = min(best, time.time() - t0)
-    spark.stop()
-    return {
-        "variant": variant,
-        "sec": round(best, 2),
-        "shuffle_mb": round(shuffle / 2**20, 1),
-    }
-
-
-def ann_verify(n: int, dim: int, nq: int) -> dict:
-    spark = _spark("ann-verify")
-    new_df = _ann_variant(spark, "id_only", n, dim, nq)
-    old_df = _ann_variant(spark, "vec_through", n, dim, nq)
-    mismatch = (
-        new_df.exceptAll(old_df).count() + old_df.exceptAll(new_df).count()
-    )
-    spark.stop()
-    return {"result_mismatch_rows": mismatch}
-
-
-def probe_ann(n: int | None = None, dim: int | None = None,
-              nq: int | None = None) -> dict:
-    n, dim, nq = (
-        n or ANN_DEFAULTS[0],
-        dim or ANN_DEFAULTS[1],
-        nq or ANN_DEFAULTS[2],
-    )
-    args = [str(n), str(dim), str(nq)]
-    new = _sub(["ann-time", "id_only", *args])
-    old = _sub(["ann-time", "vec_through", *args])
-    parity = _sub(["ann-verify", *args])
-    out = {
-        "probe": "ann_idonly_vs_vecthrough",
-        "n": n,
-        "dim": dim,
-        "n_queries": nq,
-        "result_mismatch_rows": parity["result_mismatch_rows"],
-        "id_only_sec": new["sec"],
-        "vec_through_sec": old["sec"],
-        "id_only_shuffle_mb": new["shuffle_mb"],
-        "vec_through_shuffle_mb": old["shuffle_mb"],
-    }
-    out["speedup"] = round(out["vec_through_sec"] / out["id_only_sec"], 2)
-    return out
 
 
 # ------------------------------------------------------------- bloom probe
@@ -814,20 +644,16 @@ def probe_bm25(n_docs: int | None = None, wpd: int | None = None,
 
 
 if __name__ == "__main__":
-    which = sys.argv[1] if len(sys.argv) > 1 else "ann"
-    rest = sys.argv[2:]
-    if which == "ann":
-        print(json.dumps(probe_ann(*[int(float(x)) for x in rest])))
-    elif which == "bloom":
+    if len(sys.argv) < 2:
+        raise SystemExit(
+            "usage: python tools/scale_probes.py {bloom|bpe|dsir|bm25} "
+            "[sizes...]"
+        )
+    which, rest = sys.argv[1], sys.argv[2:]
+    if which == "bloom":
         print(json.dumps(probe_bloom(*[int(float(x)) for x in rest])))
     elif which == "bpe":
         print(json.dumps(probe_bpe(*[int(float(x)) for x in rest])))
-    elif which == "ann-time":
-        v, n, d, q = rest[0], *[int(float(x)) for x in rest[1:4]]
-        print(json.dumps(ann_time(v, n, d, q)))
-    elif which == "ann-verify":
-        n, d, q = [int(float(x)) for x in rest[:3]]
-        print(json.dumps(ann_verify(n, d, q)))
     elif which == "bloom-time":
         m, n_old, n_new, mb = rest[0], *[int(float(x)) for x in rest[1:4]]
         print(json.dumps(bloom_time(m, n_old, n_new, mb)))

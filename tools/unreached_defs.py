@@ -2,17 +2,19 @@
 reaches, with the LoC of each — the one-consumer-per-operator inventory,
 re-runnable.
 
-Reachability is transitive.  The roots are the top-level statements
-that are not defs (module bodies: jobs, bench, perfbench, tools and
+Reachability is transitive.  The production roots are the top-level
+statements that are not defs (module bodies: jobs, perfbench, tools and
 examples scripts, and ocr_spark's own module-level code) in the repo's
-Python files outside tests/ and contract.py.  A def is reached when a
-reached statement uses its name (a Name or an attribute access, not an
-import); the body of a reached def then reaches further.  A def used
-only by unreached defs is therefore reported too.  Matching is by bare
-name, so a shared name can only hide a def, never invent one.  Each row
-says whether contract.py reaches the def by the same rule (its contract
-row would go with it) or not (tests at most).  The script reports; it
-deletes nothing.
+Python files outside tests/, contract.py and the benchmark scripts
+(bench.py, tools/scale_probes.py).  A def is reached when a reached
+statement uses its name (a Name or an attribute access, not an import);
+the body of a reached def then reaches further.  A def used only by
+unreached defs is therefore reported too.  Matching is by bare name, so
+a shared name can only hide a def, never invent one.  Each row carries
+the first label that applies: ``bench`` when the benchmark scripts reach
+the def by the same rule (its bench row would go with it), ``contract``
+when contract.py does (its contract row would), else ``tests-only``.
+The script reports; it deletes nothing.
 
 Usage: python tools/unreached_defs.py [repo_root]
 """
@@ -25,6 +27,7 @@ from collections import defaultdict
 from pathlib import Path
 
 SKIP_DIRS = {"tests", ".git", "__pycache__"}
+BENCH_SCRIPTS = {Path("bench.py"), Path("tools/scale_probes.py")}
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -61,17 +64,26 @@ def main(argv: list[str]) -> int:
     root = Path(argv[1] if len(argv) > 1 else ".").resolve()
     contract = root / "ocr_spark" / "contract.py"
     by_name = defaultdict(list)  # def name -> [(path, node)]
-    roots, contract_roots = [], []
+    bench_defs = defaultdict(list)  # the benchmark scripts' own defs
+    roots, bench_roots, contract_roots = [], [], []
     for path in _sources(root):
         tree = ast.parse(path.read_text(), str(path))
+        bench = path.relative_to(root) in BENCH_SCRIPTS
         for stmt in tree.body:
             if path == contract:
                 contract_roots.append(stmt)
             elif isinstance(stmt, _DEFS):
-                by_name[stmt.name].append((path, stmt))
+                (bench_defs if bench else by_name)[stmt.name].append(
+                    (path, stmt)
+                )
             else:
-                roots.append(stmt)
+                (bench_roots if bench else roots).append(stmt)
     reached = _reach(roots, by_name)
+    in_bench = _reach(
+        bench_roots,
+        {n: by_name.get(n, []) + bench_defs.get(n, [])
+         for n in by_name.keys() | bench_defs.keys()},
+    )
     in_contract = _reach(contract_roots, by_name)
     pkg = root / "ocr_spark"
     unreached = sorted(
@@ -79,10 +91,14 @@ def main(argv: list[str]) -> int:
          if path.is_relative_to(pkg) and node not in reached),
         key=lambda d: (d[0], d[1].lineno),
     )
-    totals = {"contract": 0, "tests-only": 0}
+    totals = {"bench": 0, "contract": 0, "tests-only": 0}
     for path, node in unreached:
         loc = node.end_lineno - node.lineno + 1
-        kind = "contract" if node in in_contract else "tests-only"
+        kind = (
+            "bench" if node in in_bench
+            else "contract" if node in in_contract
+            else "tests-only"
+        )
         totals[kind] += loc
         print(
             f"{path.relative_to(root)}:{node.lineno}\t{node.name}\t"
