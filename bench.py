@@ -88,13 +88,13 @@ def run_extraction(
     (methodology noted in BENCH.md)."""
     from pyspark.sql import Observation, functions as F
 
-    from ocr_spark.pipeline import PipelineConfig, extract
+    from ocr_spark.pipeline import extract
 
     pages = spark.read.parquet(pages_path)
     # corpus stats ride on the first (timed) pass via Observation — no
     # extra execution of the pipeline just to count pages
     obs = Observation("bench_stats")
-    extracted = extract(pages, PipelineConfig()).observe(
+    extracted = extract(pages).observe(
         obs,
         F.count(F.lit(1)).alias("docs"),
         F.sum("n_pages").alias("pages"),

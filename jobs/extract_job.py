@@ -41,9 +41,6 @@ def main() -> int:
                     help="pages parquet path or Iceberg table (cc.pages)")
     ap.add_argument("--output", required=True,
                     help="extracted table path (parquet dir or Iceberg)")
-    ap.add_argument("--mode", default="fused", choices=["fused", "paged"],
-                    help="pipeline shape; 'paged' salts pages across "
-                         "partitions for giant-document corpora")
     ap.add_argument("--since", default=None,
                     help="warc_ts lower bound (partition prune)")
     ap.add_argument("--until", default=None,
@@ -62,12 +59,8 @@ def main() -> int:
                          "filesystem executors mount)")
     ap.add_argument("--all-captures", action="store_true",
                     help="WARC input only: keep EVERY capture of a url "
-                         "instead of the default newest-capture pick. "
-                         "The default fused plan then writes one row per "
-                         "capture; --mode paged merges the captures of a "
-                         "url into a single corrupted document at its "
-                         "groupBy(url) assembly")
-    ap.add_argument("--page-partitions", type=int, default=None)
+                         "instead of the default newest-capture pick; "
+                         "each capture then becomes its own output row")
     ap.add_argument("--max-attempts", type=int, default=3,
                     help="per-url FAILED retry budget before a url is "
                          "skipped (keeps resume loops convergent on "
@@ -77,14 +70,12 @@ def main() -> int:
     from pyspark.sql import SparkSession, functions as F
 
     from ocr_spark.io import run_metrics, run_resumable
-    from ocr_spark.pipeline import PipelineConfig
 
     # conf comes from spark-submit; only the app name is set here
     spark = SparkSession.builder.appName("ocr-spark-extract").getOrCreate()
-    cfg = PipelineConfig(mode=args.mode, page_partitions=args.page_partitions)
 
     t0 = time.time()
-    result: dict = {"mode": args.mode}
+    result: dict = {}
     if args.input_format in ("warc", "warc-stream"):
         if args.iceberg_table:
             ap.error("--format warc and --iceberg-table are exclusive")
@@ -149,12 +140,10 @@ def main() -> int:
     ):
         # raw crawl input routinely carries the same url more than
         # once (revisits; response + conversion records across
-        # files); extract() requires url-unique input — without this
-        # pick every capture would become its own row (the paged plan's
-        # groupBy(url) would MERGE them into one corrupted document)
-        # and the url-keyed checkpoint would keep them.  Newest
-        # capture wins, content-digest tie-break, so the pick is
-        # deterministic.
+        # files); extract() writes one row per input row — without
+        # this pick every capture would become its own row and the
+        # url-keyed checkpoint would keep them.  Newest capture wins,
+        # content-digest tie-break, so the pick is deterministic.
         from pyspark.sql import Observation
 
         from ocr_spark.operators.urls import _newest_capture_per_url
@@ -166,7 +155,7 @@ def main() -> int:
     else:
         obs = None
     result["docs_attempted_this_pass"] = run_resumable(
-        pages, args.output, cfg, max_attempts=args.max_attempts
+        pages, args.output, max_attempts=args.max_attempts
     )
     if obs is not None and result["docs_attempted_this_pass"]:
         # captures seen vs urls attempted = the revisit volume this

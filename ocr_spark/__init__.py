@@ -10,15 +10,9 @@ text analysis).
 
 __version__ = "0.2.0"
 
-from .pipeline import (  # noqa: F401
-    PipelineConfig,
-    extract,
-    flatten_lines,
-    read_pages,
-)
+from .pipeline import extract, flatten_lines, read_pages  # noqa: F401
 
 __all__ = [
-    "PipelineConfig",
     "extract",
     "flatten_lines",
     "read_pages",

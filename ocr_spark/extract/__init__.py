@@ -1,13 +1,11 @@
 """Extraction backends.
 
 Both backends expose the same stage protocol the UDFs call
-(``decode_doc / decode_page / analyze_page / extract_ocr_text /
-finish_page``):
+(``decode_doc / analyze_page / extract_ocr_text / finish_page``):
 
 - ``heuristic`` (default) — deterministic, dependency-free; the module
   itself satisfies the protocol.
-- ``model`` — pymupdf + doclayout_yolo + surya behind an import guard
-  (fused mode only; fitz documents are not page-sliceable).
+- ``model`` — pymupdf + doclayout_yolo + surya behind an import guard.
 
 Selection is per-Python-worker via the ``OCR_SPARK_BACKEND`` env var so
 the choice travels to executors with

@@ -31,7 +31,7 @@ from ..kernels.consolidate import (
     sort_blocks,
 )
 from ..kernels.layout import merge_overlapping_blocks, px_to_pt
-from ..payload import decode_doc, decode_page
+from ..payload import decode_doc
 
 RASTER_CAP_PX = 4500  # document.py:412
 FALLBACK_DPI = 72  # document.py:413 (get_pixmap default matrix = 72 dpi)
@@ -119,7 +119,6 @@ class HeuristicExtractor:
     name = "heuristic"
 
     decode_doc = staticmethod(decode_doc)
-    decode_page = staticmethod(decode_page)
     analyze_page = staticmethod(analyze_page)
     extract_ocr_text = staticmethod(extract_ocr_text)
     finish_page = staticmethod(finish_page)

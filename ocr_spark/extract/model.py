@@ -97,7 +97,7 @@ class ModelExtractor:  # pragma: no cover - requires GPU deps
 
     def decode_doc(self, data: bytes) -> dict[str, Any]:
         """Protocol shape: ``pages`` holds fitz page refs (each has ``.i``
-        via ``number``), matching how the fused UDF iterates
+        via ``number``), matching how the extraction UDF iterates
         ``doc["pages"]`` and hands each page to ``analyze_page``.
 
         HTML payloads short-circuit to the model-free DOM walk
@@ -113,22 +113,7 @@ class ModelExtractor:  # pragma: no cover - requires GPU deps
         for p in doc:
             p.i = p.number  # align with the heuristic page dict's "i"
             pages.append(p)
-        return {
-            "dpi": self.dpi,
-            "kind": "PDF",
-            "pages": pages,
-            # fitz documents are not page-sliceable: no per-page byte
-            # handoff → the model backend supports fused mode only
-            "page_bytes": None,
-        }
-
-    def decode_page(self, raw: bytes):  # pragma: no cover
-        raise NotImplementedError(
-            "the model backend supports mode='fused' only: PDF payloads "
-            "are not page-sliceable, so the paged stage handoff "
-            "(page_bytes) does not exist; run extract() with the default "
-            "fused PipelineConfig"
-        )
+        return {"dpi": self.dpi, "kind": "PDF", "pages": pages}
 
     def _raster(self, fitz_page):
         import numpy as np

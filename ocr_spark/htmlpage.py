@@ -9,12 +9,12 @@ DOM heuristics" requirement).
 Design: a stack-based DOM walk (stdlib ``html.parser`` — dependency-free,
 tolerant of malformed markup) produces content blocks; each block then gets
 deterministic reading-order geometry so the result is a page dict of the
-EXACT shape :func:`ocr_spark.payload.decode_page` emits for the synthetic
+EXACT shape :func:`ocr_spark.payload.decode_doc` emits for the synthetic
 PDF payloads.  Downstream, every kernel (coverage probe, consolidation,
-stable y-sort, postprocess, assembly) and both pipeline modes
-(fused/paged) run unchanged on the virtual page — HTML and
-PDF documents mix freely in one job and one output schema, and the
-pure-Python oracle (:mod:`ocr_spark.oracle`) covers HTML for free.
+stable y-sort, postprocess, assembly) runs unchanged on the virtual
+page — HTML and PDF documents mix freely in one job and one output
+schema, and the pure-Python oracle (:mod:`ocr_spark.oracle`) covers HTML
+for free.
 
 Heuristics (public knowledge — the boilerpipe / jusText / trafilatura line
 of work: block segmentation at DOM block elements, link-density scoring):
@@ -571,9 +571,8 @@ def _fast_feed(text: str, c: "_BlockCollector") -> None:
 
 
 # Giant-page decode guard.  The HTML parse is per-document Python and an
-# HTML document is ONE virtual page — unlike a PDF it cannot be
-# page-split by the paged plan, so a pathological 100 MB page would be a
-# single straggler task dominating its stage.  Documents over this many
+# HTML document is ONE virtual page, so a pathological 100 MB page would
+# be a single straggler task dominating its stage.  Documents over this many
 # bytes are truncated at a tag boundary before parsing and flagged
 # TRUNCATED in lineage (never silently): 4 MiB is ~100× the Common-Crawl
 # median page and parses in ~0.1 s/core, so the worst single-page task
@@ -599,8 +598,8 @@ MAX_HTML_BLOCKS = 2000
 def _truncate_at_tag(data: bytes, max_bytes: int) -> bytes:
     """Cut before the last ``<`` under the limit so no half-parsed tag is
     ever fed to the tokenizer; the parse of the truncated bytes is then
-    exactly the parse an untruncated document with that content would get
-    (re-parsing page_bytes in the paged plan reproduces it bit-for-bit)."""
+    exactly the parse an untruncated document with that content would
+    get."""
     cut = data.rfind(b"<", 1, max_bytes)
     return data[:cut] if cut > 0 else data[:max_bytes]
 
@@ -639,24 +638,17 @@ def parse_html_blocks(
     return _parse_blocks(data, engine, max_bytes)[0]
 
 
-def html_page(
-    data: bytes, max_bytes: int | None = MAX_HTML_BYTES
-) -> dict | None:
-    """HTML bytes → one virtual page dict (decode_page shape), or ``None``
-    when no content blocks survive the boilerplate strip.  Giant inputs
-    are truncated (see ``MAX_HTML_BYTES``); the page dict then carries
-    ``"truncated": True`` for lineage."""
-    return _page_and_truncated(data, max_bytes)[0]
-
-
 def _page_and_truncated(
     data: bytes, max_bytes: int | None
 ) -> tuple[dict | None, bool]:
-    """(page-or-None, truncated) — the truncated flag reflects BOTH decode
-    guards (byte cap, block cap) even when zero blocks survive the
-    boilerplate strip, so ``html_doc`` can report guard hits on zero-page
-    documents (the r3 ADVICE fix: a giant page whose surviving blocks
-    were all boilerplate used to report ``truncated=False``)."""
+    """HTML bytes → (one virtual page dict, or ``None`` when no content
+    blocks survive the boilerplate strip; truncated).  Giant inputs are
+    truncated (see ``MAX_HTML_BYTES``), and the page dict then carries
+    ``"truncated": True`` for lineage.  The truncated flag reflects BOTH
+    decode guards (byte cap, block cap) even when zero blocks survive the
+    boilerplate strip, so ``html_doc`` reports guard hits on zero-page
+    documents too (a giant page whose surviving blocks were all
+    boilerplate once reported ``truncated=False``)."""
     blocks, truncated = _parse_blocks(data, max_bytes=max_bytes)
     if len(blocks) > MAX_HTML_BLOCKS:
         blocks = blocks[:MAX_HTML_BLOCKS]
@@ -1011,20 +1003,11 @@ def html_doc(data: bytes, max_bytes: int | None = MAX_HTML_BYTES) -> dict:
     """HTML bytes → doc dict (decode_doc shape): one virtual page, or zero
     pages when the document is pure boilerplate.  ``"truncated"`` is True
     when a decode guard cut the input — INCLUDING when zero pages survive
-    the boilerplate strip (lineage — never silent); the stored
-    ``page_bytes`` are the TRUNCATED bytes, so the paged plan's re-parse
-    reproduces the same blocks bit-for-bit and never ships the unbounded
-    payload through its shuffle."""
+    the boilerplate strip (lineage — never silent)."""
     page, truncated = _page_and_truncated(data, max_bytes)
-    if max_bytes is not None and len(data) > max_bytes:
-        # ship only the decoded prefix downstream (paged-plan page_bytes);
-        # a page flagged for the BLOCK cap alone keeps its full (bounded)
-        # bytes — the cap re-applies identically on re-parse
-        data = _truncate_at_tag(data, max_bytes)
     return {
         "dpi": VIRTUAL_DPI,
         "kind": "H",
         "pages": [page] if page is not None else [],
-        "page_bytes": [data] if page is not None else [],
         "truncated": truncated,
     }

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .pipeline import PipelineConfig, extract
+from .pipeline import extract
 
 # Status vocabulary preserved from the reference job store (service.py:205,248).
 STATUSES = ("PENDING", "IN_PROGRESS", "COMPLETED", "FAILED", "CANCELLED")
@@ -237,7 +237,6 @@ def run_metrics(extracted_path: str, spark: SparkSession) -> DataFrame:
 def run_resumable(
     pages: DataFrame,
     out_path: str,
-    cfg: PipelineConfig | None = None,
     observe: dict | None = None,
     max_attempts: int = 3,
 ) -> int:
@@ -275,7 +274,7 @@ def run_resumable(
                 {"docs": 0, "pages": 0, "ocr_pages": 0, "failed": 0}
             )
         return 0
-    extracted = extract(todo, cfg)
+    extracted = extract(todo)
     metrics = [F.count(F.lit(1)).alias("docs")]
     if observe is not None:
         metrics += [

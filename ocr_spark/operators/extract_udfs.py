@@ -7,21 +7,15 @@ the reference batches at, document.py:91-133).  No row-at-a-time Spark
 UDFs anywhere.
 
 Stage map (reference → here):
-- extract_doc_rows:    fused plan (mapInArrow) — fitz.open + page list
-                       (document.py:532-544), every page through
+- extract_doc_rows:    the extraction plan (mapInArrow) — fitz.open + page
+                       list (document.py:532-544), every page through
                        _extract_page, then the finished document row
                        (EXTRACTED_SCHEMA) built column-wise in the worker
-- parse_pages:         paged plan, stage 1 — the same decode, one row per
-                       page with its bytes (cross-doc page flattening,
-                       document.py:783)
-- analyze_and_finish:  paged plan, stage 2 — decode the page bytes, then
-                       _extract_page; blocks leave as one JSON string per
-                       page for the url assembly
-- _extract_page:       the per-page body both plans share: analyze →
-                       native | OCR → consolidate (document.py:105-133) →
-                       P3-P5 postprocess (document.py:625-642)
+- _extract_page:       the per-page body: analyze → native | OCR →
+                       consolidate (document.py:105-133) → P3-P5
+                       postprocess (document.py:625-642)
 - extract_docs:        layer-attribution view only (per-page JSON rows of
-                       the fused per-document routine); not on extract()'s
+                       the same per-document routine); not on extract()'s
                        path
 """
 
@@ -37,13 +31,8 @@ from pyspark.sql.pandas.types import to_arrow_type
 
 from ..extract import get_backend
 from ..kernels.postprocess import doc_text, postprocess_blocks
-from ..schemas import (
-    EXTRACTED_SCHEMA,
-    PAGE_BLOCKS_JSON_SCHEMA,
-    PAGE_ROW_SCHEMA,
-)
+from ..schemas import EXTRACTED_SCHEMA, PAGE_BLOCKS_JSON_SCHEMA
 
-_PAGE_ROW_COLS = PAGE_ROW_SCHEMA.fieldNames()
 _BLOCKS_COLS = PAGE_BLOCKS_JSON_SCHEMA.fieldNames()
 
 
@@ -107,10 +96,10 @@ def _extract_page(
     consolidation, and the oracle's P3-P5 ignore rewrite
     (``kernels.postprocess.postprocess_blocks``).
 
-    Guarded per PAGE in both plans: a throwing page becomes one
-    EXTRACT_ERROR lineage row (never counted as OCR, no blocks) while its
-    document's good pages survive, and a single bad page can never abort a
-    Spark task (or drop its siblings)."""
+    Guarded per PAGE: a throwing page becomes one EXTRACT_ERROR lineage
+    row (never counted as OCR, no blocks) while its document's good pages
+    survive, and a single bad page can never abort a Spark task (or drop
+    its siblings)."""
     try:
         info = hx.analyze_page(page, dpi)
         layout = [
@@ -130,17 +119,6 @@ def _extract_page(
     return bool(info["needs_ocr"]), blocks, None
 
 
-def _decode(html) -> tuple[dict | None, list[int], str | None]:
-    """One payload → (doc, page_is, error).  The decode and the page
-    indices are read under one doc-level guard; a failure yields doc None
-    and the document's PARSE_ERROR."""
-    try:
-        doc = hx.decode_doc(bytes(html))
-        return doc, [_page_i(p) for p in doc["pages"]], None
-    except Exception as e:  # noqa: BLE001 - failure-code lineage
-        return None, [], _error("PARSE_ERROR", e)
-
-
 class _Page(NamedTuple):
     i: int
     ocr: bool
@@ -151,12 +129,15 @@ class _Page(NamedTuple):
 def _extract_doc(
     html, lang: str | None
 ) -> tuple[list[_Page], bool, str | None]:
-    """The fused per-document routine: one payload → (pages, truncated,
-    error), ``pages`` in decode order — empty for a PARSE_ERROR (``error``
-    set) or a zero-page document."""
-    doc, page_is, error = _decode(html)
-    if doc is None:
-        return [], False, error
+    """The per-document routine: one payload → (pages, truncated, error),
+    ``pages`` in decode order — empty for a PARSE_ERROR (``error`` set) or
+    a zero-page document.  The decode and the page indices are read under
+    one doc-level guard."""
+    try:
+        doc = hx.decode_doc(bytes(html))
+        page_is = [_page_i(p) for p in doc["pages"]]
+    except Exception as e:  # noqa: BLE001 - failure-code lineage
+        return [], False, _error("PARSE_ERROR", e)
     pages = [
         _Page(pi, *_extract_page(page, doc["dpi"], lang))
         for pi, page in zip(page_is, doc["pages"])
@@ -233,11 +214,10 @@ def _doc_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     """One input batch (url, warc_ts, html, lang) → one EXTRACTED_SCHEMA
     batch, one row per input row.
 
-    Per document the row is what assembling its page rows by url gives
-    (pipeline.assemble_stage): the pages without error sorted by ``i``;
-    the max of the page errors and the PARSE_ERROR, FAILED when there is
-    one; truncated_pages = page rows × the decode's truncated flag, where
-    a zero-page or unparsable document is one row."""
+    Per document: the pages without error sorted by ``i``; the max of the
+    page errors and the PARSE_ERROR, FAILED when there is one;
+    truncated_pages = the page count (at least 1, so a zero-page or
+    unparsable document counts once) × the decode's truncated flag."""
     kept, texts, n_blocks, ocr_pages, trunc_pages, errors = (
         [] for _ in range(6)
     )
@@ -278,7 +258,7 @@ def _doc_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
 def extract_doc_rows(
     batches: Iterator[pa.RecordBatch],
 ) -> Iterator[pa.RecordBatch]:
-    """Fused plan (``mapInArrow``): scanned doc rows → finished
+    """The extraction plan (``mapInArrow``): scanned doc rows → finished
     EXTRACTED_SCHEMA rows, one per input row — decode + probe + route +
     consolidate + postprocess for every page, text assembly and the
     document's counts, all in ONE Python call.
@@ -294,11 +274,11 @@ def extract_doc_rows(
 
 
 def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Layer-attribution view, not on ``extract()``'s path: the fused
-    per-document routine (``_extract_doc``) flattened to
-    the paged plan's per-page JSON wire format (PAGE_BLOCKS_JSON_SCHEMA),
-    for ``mapInPandas``.  perfbench times it as the ``udf`` prefix of the
-    per-page layer chain (``pipeline.doc_fused_stage``)."""
+    """Layer-attribution view, not on ``extract()``'s path: the
+    per-document routine (``_extract_doc``) flattened to one JSON row per
+    page (PAGE_BLOCKS_JSON_SCHEMA), for ``mapInPandas``.  perfbench times
+    it as the ``udf`` prefix of the per-page layer chain
+    (``pipeline.doc_fused_stage``)."""
     for pdf in batches:
         rows = []
         for url, warc_ts, html, lang in zip(
@@ -307,7 +287,7 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             pages, trunc, error = _extract_doc(html, lang)
             if not pages:
                 # a PARSE_ERROR, or a zero-page document; page_i=-1 marks
-                # "no page" and assembly skips it
+                # "no page"
                 rows.append(
                     (url, warc_ts, lang, -1, 0, False, "[]", trunc, error)
                 )
@@ -316,58 +296,4 @@ def extract_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     (url, warc_ts, lang, pi, len(pages), ocr,
                      json.dumps(_pack_blocks(blocks)), trunc, err)
                 )
-        yield pd.DataFrame(rows, columns=_BLOCKS_COLS)
-
-
-def parse_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Doc rows → page rows (url, warc_ts, lang, doc_dpi, page_i, n_pages,
-    page_bytes, truncated, error) for the paged plan's salted spread.
-    Payload parse failures become error rows with page_i = -1 (assembly
-    skips them as pages and keeps their error)."""
-    for pdf in batches:
-        rows = []
-        for url, warc_ts, html, lang in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-        ):
-            doc, page_is, error = _decode(html)
-            if doc is None:
-                rows.append((url, warc_ts, lang, 0, -1, 0, None, False, error))
-                continue
-            trunc = bool(doc.get("truncated"))
-            if not page_is:
-                rows.append(
-                    (url, warc_ts, lang, doc["dpi"], -1, 0, None, trunc, None)
-                )
-            for pi, raw in zip(page_is, doc["page_bytes"]):
-                rows.append(
-                    (url, warc_ts, lang, doc["dpi"], pi, len(page_is), raw,
-                     trunc, None)
-                )
-        yield pd.DataFrame(rows, columns=_PAGE_ROW_COLS)
-
-
-def analyze_and_finish(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Page rows (parse_pages, after the salted spread) → blocks rows
-    (PAGE_BLOCKS_JSON_SCHEMA): decode the page bytes, then _extract_page;
-    each page's blocks leave as one JSON string, parsed JVM-side by
-    ``from_json`` before the url assembly."""
-    for pdf in batches:
-        rows = []
-        for url, warc_ts, lang, dpi, pi, npg, raw, trunc, error in zip(
-            *(pdf[c] for c in _PAGE_ROW_COLS)
-        ):
-            ocr, blocks = False, "[]"
-            if error is None and raw is not None:
-                try:
-                    page = hx.decode_page(bytes(raw))
-                except Exception as e:  # noqa: BLE001 - failure-code lineage
-                    error = _error("EXTRACT_ERROR", e)
-                else:
-                    ocr, kept, error = _extract_page(page, int(dpi), lang)
-                    blocks = json.dumps(_pack_blocks(kept))
-            rows.append(
-                (url, warc_ts, lang, pi, npg, ocr, blocks, bool(trunc), error)
-            )
         yield pd.DataFrame(rows, columns=_BLOCKS_COLS)

@@ -219,10 +219,9 @@ def _newest_capture_per_url(pages: DataFrame) -> DataFrame:
     partitioning and a checkpoint replay commits the same capture.
 
     The extraction pick (``jobs/extract_job.py`` on WARC input):
-    ``pipeline.extract`` requires url-unique input — the fused plan would
-    write one row per capture and the paged plan's ``groupBy(url)``
-    assembly would merge them into one corrupted document.  Unlike :func:`latest_capture` it does
-    not canonicalize — the raw url is the checkpoint key — and it adds
+    ``pipeline.extract`` writes one row per input row, so without the pick
+    every capture of a url would become its own row.  Unlike
+    :func:`latest_capture` it does not canonicalize — the raw url is the checkpoint key — and it adds
     no columns.  One ``groupBy`` with ``max_by`` over the packed row: a
     single map-side-combined shuffle, no window."""
     packed = F.struct(*[F.col(c) for c in pages.columns])

@@ -67,7 +67,7 @@ def _decode_spans(raw: bytes) -> list[str]:
 
 
 def encode_page(page: dict[str, Any]) -> bytes:
-    """Serialize one page dict (see ``decode_page`` for the shape)."""
+    """Serialize one page dict (see ``_page_from_groups`` for the shape)."""
     parts = [
         f'<page i="{page["i"]}" w="{page["width"]!r}" h="{page["height"]!r}">'.encode()
     ]
@@ -95,26 +95,13 @@ def encode_doc(pages: list[dict[str, Any]], dpi: int = 200, kind: str = "A") -> 
     return MAGIC + f'<doc dpi="{dpi}" kind="{kind}">'.encode() + body + b"</doc>"
 
 
-def decode_page(raw: bytes) -> dict[str, Any]:
-    """Parse one ``<page>...</page>`` slice into a page dict:
+def _page_from_groups(i: bytes, w: bytes, h: bytes, body: bytes) -> dict[str, Any]:
+    """One ``<page>...</page>`` match → a page dict:
 
     ``{"i": int, "width": float, "height": float,
        "layout": [{"type", "bbox"}], "native_lines": [{"bbox", "spans"}],
        "ocr_lines": [{"bbox", "content"}]}``
     """
-    m = _PAGE_RE.search(raw)
-    if m is not None:
-        return _page_from_groups(*m.groups())
-    from . import htmlpage
-
-    if htmlpage.looks_like_html(raw):
-        page = htmlpage.html_page(raw)
-        if page is not None:
-            return page
-    raise ValueError("not a page payload")
-
-
-def _page_from_groups(i: bytes, w: bytes, h: bytes, body: bytes) -> dict[str, Any]:
     return {
         "i": int(i),
         "width": float(w),
@@ -136,8 +123,7 @@ def _page_from_groups(i: bytes, w: bytes, h: bytes, body: bytes) -> dict[str, An
 
 def decode_doc(data: bytes) -> dict[str, Any]:
     """Parse a full document payload into
-    ``{"dpi": int, "kind": str, "pages": [page, ...]}`` (pages in i order) and
-    per-page raw byte slices under ``"page_bytes"`` for stage handoff.
+    ``{"dpi": int, "kind": str, "pages": [page, ...]}`` (pages in i order).
 
     Format dispatch (the analogue of the reference's parse seam,
     document.py:532-541): sgdoc magic → synthetic PDF payload; HTML sniff
@@ -153,7 +139,7 @@ def decode_doc(data: bytes) -> dict[str, Any]:
     if m is None:
         raise ValueError("bad doc header")
     dpi, kind = int(m.group(1)), m.group(2).decode("ascii")
-    pages, page_bytes = [], []
+    pages = []
     # linear index scan, not _PAGE_RE.finditer over the whole payload:
     # the non-greedy regex re-scans to EOF at every unclosed tag
     # (measured quadratic — 10.5 s at 218 KiB of crafted input; a 4 MiB
@@ -172,12 +158,10 @@ def decode_doc(data: bytes) -> dict[str, Any]:
         end = data.find(b"</page>", start)
         if end < 0:
             raise ValueError("corrupt sgdoc: unclosed <page>")
-        seg = data[start:end + 7]
-        pm = _PAGE_RE.match(seg)
+        pm = _PAGE_RE.match(data[start:end + 7])
         if pm is None:
             raise ValueError("corrupt sgdoc: malformed <page> header")
         pages.append(_page_from_groups(*pm.groups()))
-        page_bytes.append(seg)
         pos = end + 7
     if data.count(b"</page>") != len(pages):
         # an orphan close tag means some page's OPEN tag was corrupted —
@@ -189,10 +173,5 @@ def decode_doc(data: bytes) -> dict[str, Any]:
         # content (header and all) into this one — the exact
         # shorter-COMPLETED outcome the scan exists to make loud
         raise ValueError("corrupt sgdoc: page open/close tag mismatch")
-    order = sorted(range(len(pages)), key=lambda k: pages[k]["i"])
-    return {
-        "dpi": dpi,
-        "kind": kind,
-        "pages": [pages[k] for k in order],
-        "page_bytes": [page_bytes[k] for k in order],
-    }
+    pages.sort(key=lambda page: page["i"])
+    return {"dpi": dpi, "kind": kind, "pages": pages}

@@ -45,27 +45,10 @@ PAGE_STRUCT = T.StructType(
     ]
 )
 
-# Paged plan, stage 1 output: one row per page (cross-document page
-# flattening, R3 — reference document.py:764-786 flattens pages across docs
-# for dense batches).
-PAGE_ROW_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("warc_ts", T.TimestampType(), True),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("doc_dpi", T.IntegerType(), False),
-        T.StructField("page_i", T.IntegerType(), False),
-        T.StructField("n_pages", T.IntegerType(), False),
-        T.StructField("page_bytes", T.BinaryType(), True),
-        T.StructField("truncated", T.BooleanType(), False),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
-
-# Wire format of the paged plan's per-page UDF (and of the extract_docs
-# attribution view): blocks serialized as one JSON string per page, parsed
-# JVM-side by from_json before the groupBy(url) assembly.  The fused plan
-# does not use it: its UDF returns EXTRACTED_SCHEMA rows directly.
+# The perfbench attribution view's wire format (extract_udfs.extract_docs,
+# pipeline.doc_fused_stage): blocks serialized as one JSON string per page,
+# parsed JVM-side by from_json.  extract() does not use it: its UDF returns
+# EXTRACTED_SCHEMA rows directly.
 PAGE_BLOCKS_JSON_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -81,7 +64,7 @@ PAGE_BLOCKS_JSON_SCHEMA = T.StructType(
 )
 
 # Final extracted table (≅ PDFDocument.data, document.py:644-654, + metrics);
-# also the fused plan's mapInArrow return type, built column-wise in the
+# also extract()'s mapInArrow return type, built column-wise in the
 # worker (extract_udfs._doc_batch).
 EXTRACTED_SCHEMA = T.StructType(
     [

@@ -16,6 +16,27 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else a
+    quarter of the host's MemTotal, clamped to 1-8 GiB.  In local mode the
+    driver JVM holds every executor thread; the Python workers and the
+    page cache need the rest of the host, and a heap sized past the
+    host's RAM gets the JVM killed by the kernel instead of a clean OOM."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    mb = 0
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mb = int(line.split()[1]) // 1024
+                    break
+    except OSError:  # no procfs (not Linux): take the floor
+        pass
+    return f"{min(8192, max(1024, mb // 4))}m"
+
+
 def get_spark(
     app: str = "ocr_spark",
     cores: int | None = None,
@@ -51,14 +72,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # local mode: every executor thread lives in the driver JVM — size the
-        # heap for all of them or large runs thrash GC (cluster analogue:
-        # spark.executor.memory per executor).  64g, not 48g: the 17-stage
-        # curate chain pins its localCheckpoint blocks for the whole job and
-        # the LM tokenize's per-task split arrays spiked a 48g heap over the
-        # edge intermittently (measured ~1-in-2 OOM at 60k docs × 32 threads;
-        # the host has 128 GiB and bench JVMs only reserve, not commit).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        # local mode: every executor thread lives in the driver JVM, so the
+        # heap is sized to the host (cluster analogue: spark.executor.memory
+        # per executor).
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -5,9 +5,9 @@ import pytest
 
 def _host_heap() -> dict[str, str] | None:
     """Half the host's RAM as the session JVM's heap, unless
-    SPARK_GRAFT_DRIVER_MEM sets it.  The library default (64g) lets G1
-    grow the heap past a 16 GB host's RAM, where the kernel OOM killer
-    ends the JVM and every later test fails with a refused connection."""
+    SPARK_GRAFT_DRIVER_MEM sets it: one JVM serves the whole suite, so it
+    gets more than the library default (``session.driver_memory``, a
+    quarter of MemTotal), still well under the host's RAM."""
     if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
         return None
     with open("/proc/meminfo") as f:

@@ -7,7 +7,7 @@ import pytest
 from ocr_spark import htmlpage
 from ocr_spark.oracle import extract_document, flat_lines
 from ocr_spark.fixtures import generate_html_rows, generate_pages_rows
-from ocr_spark.payload import decode_doc, decode_page
+from ocr_spark.payload import decode_doc
 
 
 class TestSniff:
@@ -215,9 +215,9 @@ class TestHandGoldens:
 
 
 class TestVirtualPageGeometry:
-    def test_page_dict_shape_matches_decode_page(self):
+    def test_page_dict_shape_matches_decode_doc(self):
         html = b"<html><body><h1>T</h1><p>body text</p></body></html>"
-        page = decode_page(html)  # dispatches on the html sniff
+        (page,) = decode_doc(html)["pages"]  # dispatches on the html sniff
         assert page["i"] == 0 and page["width"] == htmlpage.PAGE_W
         assert [b["type"] for b in page["layout"]] == ["title", "text"]
         assert len(page["native_lines"]) == 2 and page["ocr_lines"] == []
@@ -248,7 +248,7 @@ def mixed_parquet(tmp_path_factory):
 
 class TestMixedCorpusE2E:
     """One Spark job over PDF-payload + HTML docs: same schema, per-url
-    byte identity with the oracle, all pipeline modes."""
+    byte identity with the oracle."""
 
     @pytest.fixture(scope="class")
     def goldens(self, spark, mixed_parquet):
@@ -289,16 +289,6 @@ class TestMixedCorpusE2E:
     def test_statuses_all_completed(self, extracted):
         rows = extracted.select("status").distinct().collect()
         assert {r.status for r in rows} == {"COMPLETED"}
-
-    def test_paged_mode_identical(self, spark, mixed_parquet, extracted):
-        from ocr_spark.pipeline import PipelineConfig, extract, read_pages
-
-        alt = extract(
-            read_pages(spark, mixed_parquet), PipelineConfig(mode="paged")
-        )
-        a = {r.url: r.text for r in alt.select("url", "text").collect()}
-        b = {r.url: r.text for r in extracted.select("url", "text").collect()}
-        assert a == b
 
 
 class TestCharsets:
@@ -499,9 +489,9 @@ class TestReviewRegressions:
 
 
 class TestGiantHtmlGuard:
-    """A pathological giant single HTML page is ONE virtual page — the
-    paged plan cannot split it — so the decode guard must bound the task
-    (truncate at a tag boundary) and report it in lineage, never silently."""
+    """A pathological giant single HTML page is ONE virtual page, so the
+    decode guard must bound the task (truncate at a tag boundary) and
+    report it in lineage, never silently."""
 
     def test_truncation_deterministic_and_idempotent(self):
         block = "<p>" + "word " * 200 + "</p>"  # ~1 KB per block
@@ -511,9 +501,7 @@ class TestGiantHtmlGuard:
         assert truncated
         # far fewer blocks than the full 12k (the guard actually cut)
         assert 0 < len(blocks) < 6000
-        # parsing the truncated bytes reproduces the same blocks exactly —
-        # the paged plan re-parses page_bytes, so this is the bit-identity
-        # guarantee across plan modes
+        # parsing the truncated bytes reproduces the same blocks exactly
         cut = htmlpage._truncate_at_tag(html, htmlpage.MAX_HTML_BYTES)
         assert htmlpage.parse_html_blocks(cut) == blocks
 
@@ -532,7 +520,7 @@ class TestGiantHtmlGuard:
         import datetime as dt
         import time
 
-        from ocr_spark.pipeline import PipelineConfig, extract
+        from ocr_spark.pipeline import extract
 
         block = "<p>" + "word " * 200 + "</p>"
         giant = ("<html><body>" + block * 12000 + "</body></html>").encode()
@@ -546,23 +534,17 @@ class TestGiantHtmlGuard:
             "url string, warc_ts timestamp, html binary, text string, "
             "lang string",
         )
-        for mode in ("fused", "paged"):
-            t0 = time.time()
-            out = {
-                r.url: r
-                for r in extract(
-                    df, PipelineConfig(mode=mode, page_partitions=2)
-                ).collect()
-            }
-            elapsed = time.time() - t0
-            g = out["u://giant"]
-            assert g.status == "COMPLETED", mode
-            assert g.truncated_pages == 1, mode
-            assert out["u://small"].truncated_pages == 0, mode
-            assert elapsed < 120, f"unbounded giant-page task: {elapsed:.0f}s"
-            oracle = extract_document(bytes(giant), "en")
-            assert g.text == oracle["text"], mode
-            assert oracle["truncated_pages"] == 1
+        t0 = time.time()
+        out = {r.url: r for r in extract(df).collect()}
+        elapsed = time.time() - t0
+        g = out["u://giant"]
+        assert g.status == "COMPLETED"
+        assert g.truncated_pages == 1
+        assert out["u://small"].truncated_pages == 0
+        assert elapsed < 120, f"unbounded giant-page task: {elapsed:.0f}s"
+        oracle = extract_document(bytes(giant), "en")
+        assert g.text == oracle["text"]
+        assert oracle["truncated_pages"] == 1
 
     def test_zero_page_giant_doc_still_reports_truncated(self):
         """A giant document cut by the byte cap whose SURVIVING blocks are
@@ -573,9 +555,8 @@ class TestGiantHtmlGuard:
         filler = "<nav>" + "menu item " * 200 + "</nav>"  # boilerplate-only
         html = ("<html><body>" + filler * 12000 + "</body></html>").encode()
         assert len(html) > htmlpage.MAX_HTML_BYTES
-        assert htmlpage.html_page(html) is None  # nothing survives
         doc = htmlpage.html_doc(html)
-        assert doc["pages"] == []
+        assert doc["pages"] == []  # nothing survives
         assert doc["truncated"] is True
         oracle = extract_document(html, "en")
         assert oracle["truncated_pages"] == 1
@@ -586,15 +567,13 @@ class TestGiantHtmlGuard:
         lines)) — the block cap bounds them and flags the same lineage."""
         html = ("<html><body>" + "<p>w</p>" * 5000 + "</body></html>").encode()
         assert len(html) < htmlpage.MAX_HTML_BYTES
-        page = htmlpage.html_page(html)
-        assert page["truncated"] is True
-        assert len(page["layout"]) == htmlpage.MAX_HTML_BLOCKS
         doc = decode_doc(html)
         assert doc["truncated"] is True
-        # block cap alone keeps the (already bounded) full bytes, and the
-        # re-parse of page_bytes re-applies the cap identically
-        assert bytes(doc["page_bytes"][0]) == html
-        assert decode_page(doc["page_bytes"][0])["layout"] == page["layout"]
+        (page,) = doc["pages"]
+        assert page["truncated"] is True
+        assert len(page["layout"]) == htmlpage.MAX_HTML_BLOCKS
+        # the cap is deterministic: a second decode gives the same page
+        assert decode_doc(html)["pages"] == [page]
 
 
 class TestR5ReviewRegressions:

@@ -201,10 +201,9 @@ class TestModelProtocolConformance:
     def test_decode_doc_shape(self, fake_models):
         ex = fake_models.ModelExtractor(dpi=DPI)
         doc = ex.decode_doc(b"%PDF-native")
-        assert set(doc) == {"dpi", "kind", "pages", "page_bytes"}
+        assert set(doc) == {"dpi", "kind", "pages"}
         assert doc["dpi"] == DPI and len(doc["pages"]) == 1
         assert doc["pages"][0].i == 0  # page index protocol (_page_i)
-        assert doc["page_bytes"] is None  # fused-only marker
 
     def test_analyze_page_matches_heuristic_backend(self, fake_models):
         from ocr_spark.extract import heuristic
@@ -274,15 +273,3 @@ class TestModelProtocolConformance:
         html_blocks = rows["u://html"]["pages"][0]["blocks"]
         assert html_blocks[0]["lines"][0]["content"] == "from dom"
         assert rows["u://bad"]["error"].startswith("PARSE_ERROR")
-
-    def test_model_backend_rejects_non_fused_modes(self, monkeypatch, spark):
-        from ocr_spark.pipeline import PipelineConfig, extract
-
-        monkeypatch.setenv("OCR_SPARK_BACKEND", "model")
-        df = spark.createDataFrame(
-            [],
-            "url string, warc_ts timestamp, html binary, text string, "
-            "lang string",
-        )
-        with pytest.raises(ValueError, match="fused"):
-            extract(df, PipelineConfig(mode="paged"))

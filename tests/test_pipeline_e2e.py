@@ -6,12 +6,7 @@ import pandas as pd
 import pytest
 
 from ocr_spark.oracle import extract_document, flat_lines
-from ocr_spark.pipeline import (
-    PipelineConfig,
-    extract,
-    flatten_lines,
-    read_pages,
-)
+from ocr_spark.pipeline import extract, flatten_lines, read_pages
 
 
 @pytest.fixture(scope="module")
@@ -75,33 +70,20 @@ class TestGoldenE2E:
 
 
 class TestPipelineVariants:
-    @pytest.mark.parametrize("page_partitions", [1, 16])
-    def test_paged_mode_identical_tree(
-        self, spark, pages_parquet, extracted, page_partitions
+    @pytest.mark.parametrize("partitions", [1, 16])
+    def test_fused_tree_independent_of_input_partitions(
+        self, spark, pages_parquet, extracted, partitions
     ):
-        """Page-level salted mode (giant-doc corpora) must match the fused
-        tree whatever the width of its salted exchange — determinism
-        across parallelism."""
-        paged = extract(
-            read_pages(spark, pages_parquet),
-            PipelineConfig(mode="paged", page_partitions=page_partitions),
+        """The tree does not depend on how the input rows are spread over
+        partitions (and so over UDF batches and Python workers) —
+        determinism across parallelism."""
+        spread = extract(
+            read_pages(spark, pages_parquet).repartition(partitions)
         )
         key = ["url", "page_i", "block_i", "block_type", "line_i", "content"]
-        a = sorted(map(tuple, flatten_lines(paged).select(key).collect()))
+        a = sorted(map(tuple, flatten_lines(spread).select(key).collect()))
         b = sorted(map(tuple, flatten_lines(extracted).select(key).collect()))
         assert a == b
-
-    @pytest.mark.parametrize("mode", ["staged", "manifest", "bogus"])
-    def test_unknown_mode_rejected_before_any_job(self, spark, mode):
-        """Only 'fused' and 'paged' exist; any other mode fails while the
-        (lazy) plan is built, naming both — before any Spark job runs."""
-        df = spark.createDataFrame(
-            [],
-            "url string, warc_ts timestamp, html binary, text string, "
-            "lang string",
-        )
-        with pytest.raises(ValueError, match="'fused'.*'paged'"):
-            extract(df, PipelineConfig(mode=mode))
 
     def test_digit_rule_matches_python_semantics(self, spark):
         """Regression (P4): tab-padded and Unicode-digit blocks must get
@@ -145,7 +127,7 @@ class TestPipelineVariants:
 
     def test_zero_page_doc_survives_as_empty_tree(self, spark):
         """A zero-page document must appear in the output as an empty
-        COMPLETED tree (the reference yields pages=[]), in every mode."""
+        COMPLETED tree (the reference yields pages=[])."""
         import datetime as dt
 
         from ocr_spark.payload import encode_doc
@@ -161,22 +143,18 @@ class TestPipelineVariants:
             "url string, warc_ts timestamp, html binary, text string, "
             "lang string"
         )
-        df = spark.createDataFrame([row], schema)
-        for mode in ("fused", "paged"):
-            out = extract(df, PipelineConfig(mode=mode, page_partitions=2)).collect()
-            assert len(out) == 1, mode
-            r = out[0]
-            assert (r.status, r.n_pages, r.text, list(r.pages)) == (
-                "COMPLETED", 0, "", [],
-            ), mode
+        out = extract(spark.createDataFrame([row], schema)).collect()
+        assert len(out) == 1
+        r = out[0]
+        assert (r.status, r.n_pages, r.text, list(r.pages)) == (
+            "COMPLETED", 0, "", [],
+        )
 
     def test_duplicate_url_captures_stay_separate_rows(self, spark):
         """Two captures of one url are two input rows, and the default
         plan finishes each on its own: two output rows, each equal to the
-        oracle's extraction of its own payload (assembling page rows by
-        url used to merge them into one document with both captures'
-        pages interleaved).  extract() requires url-unique input; the jobs
-        pick the newest capture per url first."""
+        oracle's extraction of its own payload.  The jobs pick the newest
+        capture per url first."""
         import datetime as dt
 
         from ocr_spark.fixtures import make_doc
@@ -226,8 +204,8 @@ class TestPipelineVariants:
     ):
         """A payload that decodes cleanly but blows up inside the page
         kernels (here: a 3-coordinate bbox) must become an EXTRACT_ERROR
-        lineage row in EVERY mode — never a Spark task failure, and never
-        poison the healthy documents sharing its batch."""
+        lineage row — never a Spark task failure, and never poison the
+        healthy documents sharing its batch."""
         import datetime as dt
 
         from ocr_spark.fixtures import make_doc
@@ -250,68 +228,53 @@ class TestPipelineVariants:
             "lang string"
         )
         df = spark.createDataFrame(rows, schema)
-        for mode in ("fused", "paged"):
-            out = {
-                r.url: r
-                for r in extract(
-                    df, PipelineConfig(mode=mode, page_partitions=2)
-                ).collect()
-            }
-            assert len(out) == 2, mode
-            r = out["u://kernel-bad"]
-            assert r.status == "FAILED", mode
-            assert r.error.startswith("EXTRACT_ERROR"), (mode, r.error)
-            g = out[good["url"]]
-            assert g.status == "COMPLETED" and g.n_pages > 0, mode
+        out = {r.url: r for r in extract(df).collect()}
+        assert len(out) == 2
+        r = out["u://kernel-bad"]
+        assert r.status == "FAILED"
+        assert r.error.startswith("EXTRACT_ERROR"), r.error
+        g = out[good["url"]]
+        assert g.status == "COMPLETED" and g.n_pages > 0
 
     def test_error_granularity_identical_across_modes(self, spark):
-        """Error lineage is per PAGE in every mode: a document mixing good
-        and kernel-throwing pages keeps its good pages' text and records
-        ONE EXTRACT_ERROR for the bad page — and fused and paged produce
-        byte-identical rows for it (fused used to drop the whole document
-        to a single page_i=-1 error row, diverging from the per-page guard
-        of the paged plan)."""
+        """Error lineage is per PAGE: a document mixing good and
+        kernel-throwing pages keeps its good pages' text and records ONE
+        EXTRACT_ERROR for the bad page, and the good pages' tree is the
+        oracle's extraction of a document holding only those pages."""
         import datetime as dt
 
         from ocr_spark.payload import MAGIC
 
-        mixed = (
-            MAGIC
-            + b'<doc dpi="200" kind="A">'
+        head = MAGIC + b'<doc dpi="200" kind="A">'
+        good0 = (
             b'<page i="0" w="612.0" h="792.0">'
             b'<layout type="text" bbox="72.0,72.0,540.0,100.0"/>'
             b'<nline bbox="74.0,75.0,538.0,99.0" s="Z29vZCBwYWdl"/></page>'
+        )
+        bad1 = (
             b'<page i="1" w="612.0" h="792.0">'
             b'<layout type="text" bbox="1.0,2.0,3.0"/>'
             b'<nline bbox="74.0,75.0,538.0,99.0" s="YmFk"/></page>'
+        )
+        good2 = (
             b'<page i="2" w="612.0" h="792.0">'
             b'<layout type="text" bbox="72.0,72.0,540.0,100.0"/>'
             b'<nline bbox="74.0,75.0,538.0,99.0" s="dGFpbCBwYWdl"/></page>'
-            b"</doc>"
         )
+        mixed = head + good0 + bad1 + good2 + b"</doc>"
         df = spark.createDataFrame(
             [("u://mixed", dt.datetime(2025, 1, 1), bytearray(mixed), "", "en")],
             "url string, warc_ts timestamp, html binary, text string, "
             "lang string",
         )
-        results = {}
-        for mode in ("fused", "paged"):
-            out = extract(
-                df, PipelineConfig(mode=mode, page_partitions=2)
-            ).collect()
-            assert len(out) == 1, mode
-            r = out[0]
-            assert r.status == "FAILED", mode  # the bad page taints status
-            assert r.error.startswith("EXTRACT_ERROR"), (mode, r.error)
-            # good pages SURVIVE at page granularity
-            assert [p.i for p in r.pages] == [0, 2], mode
-            assert r.text == "good pagetail page", mode
-            results[mode] = (
-                r.url, r.text, r.n_pages, r.n_blocks, r.ocr_pages,
-                r.status, r.error,
-                [(p.i, [(b.i, b.type, tuple(b.bbox),
-                         [(ln.i, ln.content, tuple(ln.bbox))
-                          for ln in b.lines]) for b in p.blocks])
-                 for p in r.pages],
-            )
-        assert results["fused"] == results["paged"]
+        out = extract(df).collect()
+        assert len(out) == 1
+        r = out[0].asDict(recursive=True)
+        assert r["status"] == "FAILED"  # the bad page taints status
+        assert r["error"].startswith("EXTRACT_ERROR"), r["error"]
+        # good pages SURVIVE at page granularity
+        assert [p["i"] for p in r["pages"]] == [0, 2]
+        assert r["text"] == "good pagetail page"
+        want = extract_document(head + good0 + good2 + b"</doc>", "en")
+        fields = ("text", "pages", "n_pages", "n_blocks", "ocr_pages")
+        assert {k: r[k] for k in fields} == {k: want[k] for k in fields}

@@ -1,7 +1,7 @@
 """Physical-plan assertions: the scale behaviors SURVEY.md §4 promises —
 column pruning at the scan, partition pruning on the crawl-day axis,
-filter pushdown, the single payload-free exchange of the fused plan, and
-the paged plan's salted spread ahead of its payload-free assembly."""
+filter pushdown, and the exchange-free single UDF of the extraction
+plan."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,29 +62,6 @@ class TestPlans:
         assert "Exchange" not in plan, plan
         above_udf = plan.split("MapInArrow", 1)[0]
         assert "html" not in above_udf, plan
-
-    def test_paged_plan_has_two_udfs_and_two_exchanges(
-        self, spark, pages_parquet
-    ):
-        """Paged mode: TWO mapInPandas (parse_pages, then the per-page UDF)
-        around the salted xxhash64(url, page_i) spread, plus the url
-        assembly exchange — whose rows carry neither the payload nor the
-        page bytes."""
-        from ocr_spark.pipeline import PipelineConfig, extract, read_pages
-
-        df = extract(
-            read_pages(spark, pages_parquet), PipelineConfig(mode="paged")
-        )
-        df.collect()  # executed: the AQE final plan is the one that ran
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==", 1)[0]
-        assert plan.count("MapInPandas") == 2, plan
-        assert plan.count("Exchange hashpartitioning") == 2, plan
-        assert "Exchange hashpartitioning(xxhash64(url" in plan, plan
-        # the assembly exchange's rows: everything down to the page UDF
-        assembly = plan.split("Exchange hashpartitioning(url", 1)[1]
-        assembly = assembly.split("MapInPandas", 1)[0]
-        assert "page_bytes" not in assembly and "html" not in assembly
 
     def test_nested_schema_pruning_on_extracted(self, spark, extracted_path):
         """A query touching only pages[].i must scan a pruned nested

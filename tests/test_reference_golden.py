@@ -162,7 +162,7 @@ class TestReferenceGolden:
     ):
         import datetime as dt
 
-        from ocr_spark.pipeline import PipelineConfig, extract
+        from ocr_spark.pipeline import extract
 
         rows = [
             (
@@ -177,12 +177,9 @@ class TestReferenceGolden:
             "url string, warc_ts timestamp, html binary, text string, "
             "lang string"
         )
-        df = spark.createDataFrame(rows, schema)
-        for mode in ("fused", "paged"):
-            out = extract(df, PipelineConfig(mode=mode, page_partitions=2))
-            r = out.collect()[0]
-            assert r.status == "COMPLETED" and r.ocr_pages == 1, mode
-            assert _tree(r.pages) == _tree(golden["pages"]), mode
+        r = extract(spark.createDataFrame(rows, schema)).collect()[0]
+        assert r.status == "COMPLETED" and r.ocr_pages == 1
+        assert _tree(r.pages) == _tree(golden["pages"])
 
     def test_golden_text_assembly(self, golden, payload):
         """Doc text equals the fixture lines joined with the reference's

@@ -21,17 +21,20 @@ def test_unreached_defs_is_transitive(tmp_path, capsys):
     while ``c`` (called from a job's module body) is not.  ``d`` is
     reached by contract.py alone and is listed as such.  ``e`` is called
     only from bench.py's module body and ``f`` only from a bench.py def,
-    so both are listed as ``bench``: benchmark scripts are not
-    production roots."""
+    so both are listed as ``bench``, and so is ``g``, which only a
+    perfbench/ script calls: benchmark scripts are not production
+    roots."""
     (tmp_path / "ocr_spark").mkdir()
     (tmp_path / "jobs").mkdir()
+    (tmp_path / "perfbench").mkdir()
     (tmp_path / "ocr_spark" / "mod.py").write_text(
         "def a():\n    return b()\n\n\n"
         "def b():\n    return 1\n\n\n"
         "def c():\n    return 2\n\n\n"
         "def d():\n    return 3\n\n\n"
         "def e():\n    return 4\n\n\n"
-        "def f():\n    return 5\n"
+        "def f():\n    return 5\n\n\n"
+        "def g():\n    return 6\n"
     )
     (tmp_path / "ocr_spark" / "contract.py").write_text(
         "from .mod import d\n\nROW = d\n"
@@ -43,6 +46,11 @@ def test_unreached_defs_is_transitive(tmp_path, capsys):
         "from ocr_spark.mod import e, f\n\n\n"
         "def run():\n    return f()\n\n\n"
         "print(e(), run())\n"
+    )
+    (tmp_path / "perfbench" / "layers.py").write_text(
+        "from ocr_spark.mod import g\n\n\n"
+        "def chain():\n    return g()\n\n\n"
+        "print(chain())\n"
     )
     assert _load_tool("unreached_defs").main(["x", str(tmp_path)]) == 0
     rows = [
@@ -56,4 +64,5 @@ def test_unreached_defs_is_transitive(tmp_path, capsys):
         ("d", "contract"),
         ("e", "bench"),
         ("f", "bench"),
+        ("g", "bench"),
     ]

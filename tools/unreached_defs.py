@@ -3,18 +3,18 @@ reaches, with the LoC of each — the one-consumer-per-operator inventory,
 re-runnable.
 
 Reachability is transitive.  The production roots are the top-level
-statements that are not defs (module bodies: jobs, perfbench, tools and
-examples scripts, and ocr_spark's own module-level code) in the repo's
-Python files outside tests/, contract.py and the benchmark scripts
-(bench.py, tools/scale_probes.py).  A def is reached when a reached
-statement uses its name (a Name or an attribute access, not an import);
-the body of a reached def then reaches further.  A def used only by
-unreached defs is therefore reported too.  Matching is by bare name, so
-a shared name can only hide a def, never invent one.  Each row carries
-the first label that applies: ``bench`` when the benchmark scripts reach
-the def by the same rule (its bench row would go with it), ``contract``
-when contract.py does (its contract row would), else ``tests-only``.
-The script reports; it deletes nothing.
+statements that are not defs (module bodies: jobs, tools and examples
+scripts, and ocr_spark's own module-level code) in the repo's Python
+files outside tests/, contract.py and the benchmark scripts (bench.py,
+tools/scale_probes.py and everything under perfbench/).  A def is
+reached when a reached statement uses its name (a Name or an attribute
+access, not an import); the body of a reached def then reaches further.
+A def used only by unreached defs is therefore reported too.  Matching
+is by bare name, so a shared name can only hide a def, never invent one.
+Each row carries the first label that applies: ``bench`` when the
+benchmark scripts reach the def by the same rule (its bench row would go
+with it), ``contract`` when contract.py does (its contract row would),
+else ``tests-only``.  The script reports; it deletes nothing.
 
 Usage: python tools/unreached_defs.py [repo_root]
 """
@@ -68,7 +68,8 @@ def main(argv: list[str]) -> int:
     roots, bench_roots, contract_roots = [], [], []
     for path in _sources(root):
         tree = ast.parse(path.read_text(), str(path))
-        bench = path.relative_to(root) in BENCH_SCRIPTS
+        rel = path.relative_to(root)
+        bench = rel in BENCH_SCRIPTS or rel.parts[0] == "perfbench"
         for stmt in tree.body:
             if path == contract:
                 contract_roots.append(stmt)
