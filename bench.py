@@ -10,9 +10,11 @@ Default mode (driver contract): run every headline query once at
      "docs_per_sec": ..., "pages_per_sec": ...}
 
 ``--scaling`` mode: run the identical extraction job at two parallelism
-levels (local[N] and local[4N], same input) and report both throughputs +
-efficiency = (R_4N / R_N) / 4 — the sandbox evidence for the BASELINE.json
-two-cluster-size criterion (no real cluster here; see BENCH.md).
+levels (local[CPUS // 4] and local[CPUS] by default, same input, one
+child process and JVM per level) and report both throughputs +
+efficiency = (R_hi / R_lo) / (N_hi / N_lo) — the sandbox evidence for the
+BASELINE.json two-cluster-size criterion (no real cluster here; see
+BENCH.md).
 
 The synthetic pages corpus (BASELINE.json input_hint shape) is generated
 once into ``.bench_cache/`` by a Spark-parallel job and reused; generation
@@ -279,45 +281,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
-def link_benches(spark, html_path: str) -> dict[str, float]:
-    """Web-graph surface: the outlink scan over the HTML corpus (the
-    per-page cost that dominates at crawl scale) and PageRank on a
-    synthetic Zipf host graph (fold='sum' — the 100 TB path; the graph is
-    JVM-generated so the row measures the iterative join machinery, not
-    the scan)."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.operators import links as links_ops
-
-    out: dict[str, float] = {}
-    html_pages = spark.read.parquet(html_path)
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        _noop_write(links_ops.extract_outlinks(html_pages))
-        best = min(best, time.time() - t0)
-    out["web_outlinks"] = round(best, 3)
-    # 200k edges over ~10k hosts with 2/5 of edges funneled into 100 hub
-    # hosts — the Zipf in-degree shape real host graphs have; weights 1-5
-    edges = spark.range(200_000).select(
-        F.concat(
-            F.lit("h"), F.pmod(F.xxhash64("id"), F.lit(10_000))
-        ).alias("src_host"),
-        F.concat(
-            F.lit("h"),
-            F.when(
-                F.col("id") % 5 < 2, F.pmod(F.xxhash64("id", F.lit(1)), F.lit(100))
-            ).otherwise(F.pmod(F.xxhash64("id", F.lit(2)), F.lit(10_000))),
-        ).alias("dst_host"),
-        (F.lit(1) + F.col("id") % 5).cast("long").alias("w"),
-    ).groupBy("src_host", "dst_host").agg(F.sum("w").alias("w"))
-    edges = edges.localCheckpoint()  # time the iteration, not the generator
-    t0 = time.time()  # pagerank is eager (node count) — time the whole call
-    _noop_write(links_ops.pagerank(edges, iters=5, fold="sum"))
-    out["web_pagerank_10k_hosts_5it"] = round(time.time() - t0, 3)
-    return out
-
-
 def ensure_warc(html_path: str, n_files: int = 64) -> tuple[str, int]:
     """Pack (once) the cached HTML corpus into ``n_files`` .warc.gz crawl
     archives — the Common Crawl wire layout ``read_pages_warc`` ingests.
@@ -486,7 +449,7 @@ def curate_bench(extracted: str, sf_dir: str) -> dict[str, float]:
 
 
 def main_bench() -> None:
-    from ocr_spark.session import get_spark
+    from ocr_spark.session import driver_memory, get_spark
 
     pages_path = ensure_pages(BENCH_DOCS)
     html_path = ensure_pages(HTML_DOCS, kind="html")
@@ -521,7 +484,6 @@ def main_bench() -> None:
     queries.update(curate_bench(ensure_extracted(html_path), SF_DIR))
     spark = get_spark("bench-ops", cores=CPUS)
     queries.update(operator_benches(spark, SF_DIR))
-    queries.update(link_benches(spark, html_path))
     queries.update(warc_benches(spark, warc_path, warc_bytes))
     print(
         json.dumps(
@@ -538,6 +500,7 @@ def main_bench() -> None:
                 "html_docs": n_html,
                 "html_docs_per_sec": round(n_html / html_sec, 1),
                 "cores": CPUS,
+                "driver_memory": driver_memory(),
             }
         )
     )
@@ -571,34 +534,65 @@ def main_extract_only() -> None:
     spark.stop()
 
 
-def main_scaling() -> None:
-    """Same job, two parallelism levels N vs 4N (default 4 vs 16).
-
-    4/16 rather than 8/32 because the sandbox is a shared 32-core VM: a
-    level that needs every core free measures the neighbors, not the
-    engine.  Override with SPARK_GRAFT_SCALING_CORES="8,32"."""
+def _scaling_level(cores: int, reps: int) -> None:
+    """Child-process half of main_scaling: one parallelism level in its
+    own JVM, emitted as one JSON line (see the fresh-JVM rationale in
+    main_bench)."""
     from ocr_spark.session import get_spark
 
-    levels = os.environ.get("SPARK_GRAFT_SCALING_CORES", "4,16")
-    n_lo, n_hi = (int(x) for x in levels.split(","))
-    pages_path = ensure_pages(SCALING_DOCS)
-    results = {}
-    warm_path = ensure_pages(2000)
-    for cores in (n_lo, n_hi):
-        spark = get_spark(f"scaling-{cores}", cores=cores)
-        # warm-up: JIT + python worker pool (not counted)
-        run_extraction(spark, warm_path, reps=1)
-        # fewer reps at the slow level keeps total wall-clock bounded; the
-        # fast level gets more best-of samples since noise hits it harder
-        sec, n_docs, n_pages = run_extraction(
-            spark, pages_path, reps=2 if cores == n_lo else 4
+    spark = get_spark(f"scaling-{cores}", cores=cores)
+    # warm-up: JIT + python worker pool (not counted)
+    run_extraction(spark, ensure_pages(2000), reps=1)
+    sec, n_docs, n_pages = run_extraction(
+        spark, ensure_pages(SCALING_DOCS), reps=reps
+    )
+    print(
+        json.dumps(
+            {
+                "sec": round(sec, 2),
+                "docs_per_sec": round(n_docs / sec, 1),
+                "pages_per_sec": round(n_pages / sec, 1),
+            }
         )
-        results[cores] = {
-            "sec": round(sec, 2),
-            "docs_per_sec": round(n_docs / sec, 1),
-            "pages_per_sec": round(n_pages / sec, 1),
-        }
-        spark.stop()
+    )
+    spark.stop()
+
+
+def main_scaling() -> None:
+    """Same job, two parallelism levels: a quarter of the host's cores vs
+    all of them (``CPUS // 4`` and ``CPUS``, so the high level never
+    oversubscribes the host).  Override with
+    SPARK_GRAFT_SCALING_CORES="8,32".  Each level runs in its own child
+    process, because a second ``get_spark`` in one Python process reuses
+    the first level's JVM."""
+    import subprocess
+
+    from ocr_spark.session import driver_memory
+
+    levels = os.environ.get(
+        "SPARK_GRAFT_SCALING_CORES", f"{max(1, CPUS // 4)},{CPUS}"
+    )
+    n_lo, n_hi = (int(x) for x in levels.split(","))
+    # generate the corpora in this process, so each child's JVM runs only
+    # its own level
+    ensure_pages(SCALING_DOCS)
+    ensure_pages(2000)
+    results = {}
+    # fewer reps at the slow level keeps total wall-clock bounded; the
+    # fast level gets more best-of samples since noise hits it harder
+    for cores, reps in ((n_lo, 2), (n_hi, 4)):
+        sub = subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                f"import bench; bench._scaling_level({cores}, {reps})",
+            ],
+            cwd=REPO,
+            capture_output=True,
+            text=True,
+            check=True,
+        )
+        results[cores] = json.loads(sub.stdout.strip().splitlines()[-1])
     r_lo = results[n_lo]["docs_per_sec"]
     r_hi = results[n_hi]["docs_per_sec"]
     eff = (r_hi / r_lo) / (n_hi / n_lo)
@@ -610,6 +604,8 @@ def main_scaling() -> None:
                 "unit": "ratio",
                 "docs": SCALING_DOCS,
                 "levels": {str(k): v for k, v in results.items()},
+                "cores": CPUS,
+                "driver_memory": driver_memory(),
             }
         )
     )

@@ -2666,250 +2666,6 @@ def _q_hashed_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# outlink extraction + host web graph (operators/links.py)
-#
-# Same analytic-template strategy as extract_html: Spark builds HTML
-# around documents.doc_id, runs the REAL link/metadata scan
-# (htmlpage.scan_links via links.extract_outlinks), and DuckDB states
-# the expected edges/metadata analytically — base-href resolution,
-# implied anchor close, skipped schemes, chrome and nofollow flags are
-# all exercised by construction.
-
-_LINKS_URL_EXPR = (
-    "concat('http://h', CAST(doc_id % 7 AS STRING), '.example.com/d/', "
-    "CAST(doc_id AS STRING), '/index.html')"
-)
-
-_LINKS_TPL_EXPR = """
-concat(
-  '<!doctype html><html lang="en-US"><head><title>T',
-  CAST(doc_id AS STRING), ' &amp; co</title>',
-  '<meta name="description" content="Crawl page ',
-  CAST(doc_id AS STRING), '">',
-  '<meta name="robots" content="',
-  CASE WHEN doc_id % 5 = 0 THEN 'noindex, nofollow'
-       ELSE 'index, follow' END, '">',
-  '<link rel="canonical" href="https://h', CAST(doc_id % 7 AS STRING),
-  '.example.com/d/', CAST(doc_id AS STRING), '/">',
-  CASE WHEN doc_id % 3 = 0 THEN concat('<base href="https://cdn',
-    CAST(doc_id % 2 AS STRING), '.base.net/r/">') ELSE '' END,
-  '<script>var trap = \\'<a href="http://fake.example/">x</a>\\';</script>',
-  '</head><body><nav><a href="/menu">Menu</a></nav>',
-  '<p><a href="https://ext', CAST(doc_id % 5 AS STRING), '.org/p/',
-  CAST(doc_id AS STRING), '?x=1#s">ref &amp; ', CAST(doc_id AS STRING),
-  '</a> <a href="/about">About us</a> <a href="more.html">More</a>',
-  ' <a href="http://spam.example.net/x?id=', CAST(doc_id AS STRING),
-  '" rel="nofollow sponsored">Ad</a>',
-  '<a href="javascript:void(0)">js</a><a href="#top">top</a>',
-  '<a href="mailto:a@b.example">m</a></p></body></html>')
-"""
-
-# The analytic edge CTE shared by all four oracles: d computes the
-# per-doc parameters, l the five kept links per doc in document order
-# (link_i 0=nav menu, 1=external ref, 2=/about, 3=more.html,
-# 4=nofollow ad; javascript:/#fragment/mailto: never appear).
-_LINKS_CTE = """
-d AS (
-  SELECT doc_id,
-         CAST(doc_id % 7 AS VARCHAR) AS h,
-         doc_id % 3 = 0 AS hb,
-         CAST(doc_id % 2 AS VARCHAR) AS cb,
-         CAST(doc_id % 5 AS VARCHAR) AS ek
-  FROM documents
-),
-l AS (
-  SELECT doc_id,
-    CAST(li.link_i AS INT) AS link_i,
-    'h' || h || '.example.com' AS src_host,
-    CASE li.link_i
-      WHEN 0 THEN CASE WHEN hb THEN 'https://cdn' || cb || '.base.net/menu'
-                       ELSE 'http://h' || h || '.example.com/menu' END
-      WHEN 1 THEN 'https://ext' || ek || '.org/p/' || doc_id || '?x=1'
-      WHEN 2 THEN CASE WHEN hb THEN 'https://cdn' || cb || '.base.net/about'
-                       ELSE 'http://h' || h || '.example.com/about' END
-      WHEN 3 THEN CASE WHEN hb
-                       THEN 'https://cdn' || cb || '.base.net/r/more.html'
-                       ELSE 'http://h' || h || '.example.com/d/' || doc_id
-                            || '/more.html' END
-      ELSE 'http://spam.example.net/x?id=' || doc_id
-    END AS dst,
-    CASE li.link_i
-      WHEN 0 THEN CASE WHEN hb THEN 'cdn' || cb || '.base.net'
-                       ELSE 'h' || h || '.example.com' END
-      WHEN 1 THEN 'ext' || ek || '.org'
-      WHEN 2 THEN CASE WHEN hb THEN 'cdn' || cb || '.base.net'
-                       ELSE 'h' || h || '.example.com' END
-      WHEN 3 THEN CASE WHEN hb THEN 'cdn' || cb || '.base.net'
-                       ELSE 'h' || h || '.example.com' END
-      ELSE 'spam.example.net'
-    END AS dst_host,
-    CASE li.link_i WHEN 0 THEN 'Menu' WHEN 1 THEN 'ref & ' || doc_id
-      WHEN 2 THEN 'About us' WHEN 3 THEN 'More' ELSE 'Ad' END AS anchor,
-    li.link_i = 4 AS nofollow,
-    li.link_i = 0 AS chrome,
-    li.link_i IN (0, 2, 3) AND NOT hb AS internal
-  FROM d CROSS JOIN (VALUES (0), (1), (2), (3), (4)) li(link_i)
-)
-"""
-
-_OUTLINKS_SQL = f"""
-WITH {_LINKS_CTE}
-SELECT doc_id, link_i, dst, anchor, nofollow, chrome, internal,
-       FALSE AS links_capped
-FROM l
-"""
-
-
-def _links_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        F.expr(_LINKS_URL_EXPR).alias("url"),
-        F.encode(F.expr(_LINKS_TPL_EXPR), "UTF-8").alias("html"),
-    )
-
-
-_LINKS_DOC_ID = r"CAST(regexp_extract(url, '/d/(\\d+)/', 1) AS BIGINT)"
-
-
-def _q_outlinks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Template link-rich HTML around documents.doc_id → run the real
-    outlink scan (base-href resolution, implied close, scheme skips,
-    chrome/nofollow flags) → one row per kept link."""
-    from .operators import links as links_ops
-
-    ol = links_ops.extract_outlinks(_links_pages(spark, sf_dir))
-    return ol.select(
-        F.expr(_LINKS_DOC_ID).alias("doc_id"),
-        "link_i", "dst", "anchor", "nofollow", "chrome", "internal",
-        "links_capped",
-    )
-
-
-_HTML_META_SQL = """
-SELECT doc_id,
-  'T' || doc_id || ' & co' AS title,
-  'Crawl page ' || doc_id AS description,
-  'https://h' || CAST(doc_id % 7 AS VARCHAR) || '.example.com/d/'
-    || doc_id || '/' AS canonical,
-  'en-us' AS lang_attr,
-  doc_id % 5 = 0 AS noindex,
-  doc_id % 5 = 0 AS nofollow_page
-FROM documents
-"""
-
-
-def _q_html_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same templated pages → page_metadata (title/description/canonical/
-    lang/robots), stated analytically by the oracle."""
-    from .operators import links as links_ops
-
-    pm = links_ops.page_metadata(_links_pages(spark, sf_dir))
-    return pm.select(
-        F.expr(_LINKS_DOC_ID).alias("doc_id"),
-        "title", "description", "canonical", "lang_attr",
-        "noindex", "nofollow_page",
-    )
-
-
-_HOST_DEGREES_SQL = f"""
-WITH {_LINKS_CTE},
-k AS (SELECT * FROM l WHERE NOT nofollow),
-o AS (
-  SELECT src_host AS host,
-         CAST(count(DISTINCT dst_host) AS BIGINT) AS out_hosts,
-         CAST(count(*) AS BIGINT) AS out_w
-  FROM k GROUP BY src_host
-),
-i AS (
-  SELECT dst_host AS host,
-         CAST(count(DISTINCT src_host) AS BIGINT) AS in_hosts,
-         CAST(count(*) AS BIGINT) AS in_w
-  FROM k GROUP BY dst_host
-)
-SELECT coalesce(o.host, i.host) AS host,
-       coalesce(out_hosts, 0) AS out_hosts,
-       coalesce(out_w, 0) AS out_w,
-       coalesce(in_hosts, 0) AS in_hosts,
-       coalesce(in_w, 0) AS in_w
-FROM o FULL OUTER JOIN i ON o.host = i.host
-"""
-
-
-def _q_host_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Templated pages → extract_outlinks → host_edges (nofollow
-    excluded) → host_degrees.  Pure integer aggregation — engine-exact."""
-    from .operators import links as links_ops
-
-    ol = links_ops.extract_outlinks(_links_pages(spark, sf_dir))
-    return links_ops.host_degrees(links_ops.host_edges(ol))
-
-
-def _pagerank_sql(iters: int) -> str:
-    """Unrolled deterministic PageRank oracle: the SAME arithmetic event
-    order as operators/links.pagerank(fold='sorted') — contribution =
-    rank * (w/out_w) with each factor CAST to DOUBLE before the divide,
-    per-node sums accumulated in src_host order (aggregate ORDER BY),
-    base = (1e0 - 85e-2)/N in DOUBLE literals (a DECIMAL 0.15 would be a
-    DIFFERENT double than the binary 1.0-0.85 Spark computes — the
-    CLAUDE.md DECIMAL-literal trap)."""
-    parts = [
-        f"""WITH {_LINKS_CTE},
-k AS (SELECT * FROM l WHERE NOT nofollow),
-e AS (
-  SELECT src_host, dst_host, CAST(count(*) AS BIGINT) AS w
-  FROM k GROUP BY src_host, dst_host
-),
-nodes AS (
-  SELECT DISTINCT host FROM (
-    SELECT src_host AS host FROM e
-    UNION SELECT dst_host AS host FROM e) u
-),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-ow AS (SELECT src_host, sum(w) AS ow FROM e GROUP BY src_host),
-cf AS (
-  SELECT e.src_host, e.dst_host,
-         CAST(e.w AS DOUBLE) / CAST(ow.ow AS DOUBLE) AS cf
-  FROM e JOIN ow ON e.src_host = ow.src_host
-),
-r0 AS (SELECT host, 1e0 / (SELECT n FROM nn) AS rank FROM nodes)"""
-    ]
-    for t in range(1, iters + 1):
-        parts.append(f""",
-c{t} AS (
-  SELECT cf.dst_host AS host,
-         sum(r.rank * cf.cf ORDER BY cf.src_host) AS s
-  FROM cf JOIN r{t - 1} r ON cf.src_host = r.host
-  GROUP BY cf.dst_host
-),
-r{t} AS (
-  SELECT nodes.host,
-         (1e0 - 85e-2) / (SELECT n FROM nn)
-           + 85e-2 * coalesce(c{t}.s, 0e0) AS rank
-  FROM nodes LEFT JOIN c{t} ON nodes.host = c{t}.host
-)""")
-    parts.append(f"\nSELECT host, rank FROM r{iters}")
-    return "".join(parts)
-
-
-_PAGERANK_ITERS = 3
-_PAGERANK_SQL = _pagerank_sql(_PAGERANK_ITERS)
-
-
-def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Templated pages → host graph → pagerank(fold='sorted').  The
-    doubles are hash-compared UNROUNDED: every op in the chain (+,*,/)
-    is IEEE correctly rounded and both engines fold each node's
-    in-contributions in the same src order, so the ranks are
-    bit-identical (no transcendentals involved — the round(·,9) policy
-    applies only to ln/exp-derived columns)."""
-    from .operators import links as links_ops
-
-    ol = links_ops.extract_outlinks(_links_pages(spark, sf_dir))
-    edges = links_ops.host_edges(ol)
-    return links_ops.pagerank(edges, iters=_PAGERANK_ITERS, fold="sorted")
-
-
-# ---------------------------------------------------------------------------
 # BPE tokenizer (operators/bpe.py).  Three seams, each oracle-checked:
 #
 # - bpe_pair_counts: round-1 pair statistics over the char-split word
@@ -3461,10 +3217,6 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "corpus_gate_report": (_q_gate_report, _gate_report_sql()),
     "dedup_bloom_bitmap": (_q_bloom_bitmap, _BLOOM_BITMAP_SQL),
     "dedup_latest_capture": (_q_latest_capture, _LATEST_CAPTURE_SQL),
-    "ext_outlinks": (_q_outlinks, _OUTLINKS_SQL),
-    "ext_html_meta": (_q_html_meta, _HTML_META_SQL),
-    "graph_host_degrees": (_q_host_degrees, _HOST_DEGREES_SQL),
-    "graph_pagerank": (_q_pagerank, _PAGERANK_SQL),
     "text_classifier_score": (_q_classifier_score, _CLS_SCORE_SQL),
     "corpus_token_budget": (_q_token_budget, _TOK_BUDGET_SQL),
     "dedup_paragraph_corpus": (_q_para_dedup, _PARA_DEDUP_SQL),

@@ -579,11 +579,6 @@ def _fast_feed(text: str, c: "_BlockCollector") -> None:
 # stays bounded no matter what the crawl contains.
 MAX_HTML_BYTES = 4 * 1024 * 1024
 
-# Title capture cap (scan_meta): an unclosed <title> is RCDATA-to-EOF in
-# a spec parser, which would make the metadata title the ENTIRE page
-# text; real titles are well under this.
-MAX_TITLE_CHARS = 2048
-
 # Block-count companion to the byte guard: the downstream page kernels
 # (coverage probe, consolidation — reference-exact loops) are O(blocks ×
 # lines) per page, so a 4 MiB page of thousands of TINY blocks is still a
@@ -680,323 +675,6 @@ def _page_and_truncated(
         "ocr_lines": [],
         "truncated": truncated,
     }, truncated
-
-
-# ---------------------------------------------------------------------------
-# outlink / page-metadata scan — the web-graph surface of a Common-Crawl
-# pipeline (the published CC webgraph is exactly this: anchors resolved
-# against the page url, aggregated to host level).  A dedicated walk over
-# the SAME tokenizer the block parser uses (identical rawtext/comment
-# skipping, identical decode + byte guard) tracking only <a>/<base>/<meta>/
-# <title>/<link>/<html> — so a page that parses for extraction parses for
-# links, bit-for-bit deterministically.
-
-# Per-document link cap: a pathological page (a crawler trap calendar, a
-# 4 MiB link farm) can carry 10^5 anchors; downstream the edge list is
-# exploded per link, so an uncapped page would dominate its task AND its
-# host's in-degree stats.  2048 is ~50× the Common-Crawl median (~40
-# outlinks/page); the cut is reported through the per-row `links_capped`
-# flag — never silent (same policy as the decode guards).
-MAX_HTML_LINKS = 2048
-
-_SKIP_SCHEME_RE = re.compile(
-    r"(?i)^(javascript|mailto|tel|data|about|blob|file|ftp|ws|wss):"
-)
-_HTTPS_RE = re.compile(r"(?i)^https?://")
-# Tags whose subtree is site chrome for LINK purposes (menus, footers);
-# tag-based only — the class/id heuristic stays on the extraction path.
-_LINK_CHROME_TAGS = BOILERPLATE_TAGS
-
-
-def _clean_href(raw: str) -> str:
-    """Whitespace handling per the URL spec's pre-parse: strip leading and
-    trailing C0/space, remove interior tab/newline."""
-    return raw.strip(" \t\r\n\f\v").replace("\t", "").replace("\n", "").replace(
-        "\r", ""
-    )
-
-
-def _host_of_url(url: str) -> str:
-    """Lowercased host, port and userinfo dropped; '' when unparsable."""
-    from urllib.parse import urlsplit
-
-    try:
-        host = urlsplit(url).hostname
-    except ValueError:
-        return ""
-    return host.lower() if host else ""
-
-
-def scan_links(
-    data: bytes,
-    base_url: str,
-    max_bytes: int | None = MAX_HTML_BYTES,
-    max_links: int | None = MAX_HTML_LINKS,
-) -> tuple[list[dict], bool]:
-    """HTML bytes → (outlinks, links_capped).
-
-    Each outlink is ``{"link_i", "dst", "anchor", "nofollow", "chrome",
-    "internal"}``:
-
-    - ``dst``: href resolved against the effective base (first ``<base
-      href>`` wins, itself resolved against ``base_url`` — the HTML5
-      rule), fragment dropped; only http(s) results are kept.
-      ``javascript:``/``mailto:``/data:/fragment-only hrefs are skipped.
-    - ``anchor``: the anchor's text content (entity-decoded, tags
-      stripped by the walk itself, whitespace collapsed) — the CC-style
-      anchor-text signal.
-    - ``nofollow``: any of rel's space-separated tokens is ``nofollow``
-      (case-insensitive).
-    - ``chrome``: the anchor sits inside a nav/header/footer/aside
-      subtree (tag-based; menus and footers — the edges a content link
-      graph usually drops).
-    - ``internal``: dst host equals the page host.
-
-    An ``<a>`` while one is open implies the previous one's end tag (the
-    block collector's rule — malformed menus must not link the rest of
-    the page); an anchor still open at EOF is emitted.  Inputs over
-    ``max_bytes`` are truncated at a tag boundary exactly as the block
-    parse truncates, so link extraction never resurrects bytes the
-    extraction guard dropped.  Deterministic; never raises on mojibake.
-    """
-    if max_bytes is not None and len(data) > max_bytes:
-        data = _truncate_at_tag(data, max_bytes)
-    text = decode_html_bytes(data)
-    page_host = _host_of_url(base_url)
-    eff_base = base_url
-    base_seen = False
-    links: list[dict] = []
-    capped = False
-    chrome_depth = 0
-    cur: dict | None = None  # {"href","rel","parts"}
-    from urllib.parse import urldefrag, urljoin
-
-    def emit() -> None:
-        nonlocal cur, capped
-        rec, cur = cur, None
-        if rec is None:
-            return
-        href = _clean_href(rec["href"])
-        if not href or href.startswith("#") or _SKIP_SCHEME_RE.match(href):
-            return
-        try:
-            dst = urldefrag(urljoin(eff_base, href))[0]
-        except ValueError:
-            return
-        if not _HTTPS_RE.match(dst):
-            return
-        # the cap counts only KEEPABLE links: a dropped-anyway anchor
-        # (fragment/mailto/js) past the cap must not set the capped flag
-        # the recall audit reads
-        if max_links is not None and len(links) >= max_links:
-            capped = True
-            return
-        rel_tokens = rec["rel"].lower().split()
-        anchor = _WS_RE.sub(" ", " ".join(rec["parts"])).strip()
-        links.append(
-            {
-                "link_i": len(links),
-                "dst": dst,
-                "anchor": anchor,
-                "nofollow": "nofollow" in rel_tokens,
-                "chrome": rec["chrome"],
-                "internal": bool(page_host)
-                and _host_of_url(dst) == page_host,
-            }
-        )
-
-    pos, n = 0, len(text)
-    while pos < n:
-        lt = text.find("<", pos)
-        if lt < 0:
-            if cur is not None:
-                cur["parts"].append(_unesc(text[pos:]))
-            break
-        if lt > pos and cur is not None:
-            cur["parts"].append(_unesc(text[pos:lt]))
-        m = _TAG_CLOSE_RE.match(text, lt)
-        if m:
-            tag = m.group(1).lower()
-            if tag == "a":
-                emit()
-            elif tag in _LINK_CHROME_TAGS and chrome_depth > 0:
-                chrome_depth -= 1
-            pos = m.end()
-            continue
-        m = _TAG_OPEN_RE.match(text, lt)
-        if m:
-            tag, chunk, self_closing = _open_tag_parts(m)
-            pos = m.end()
-            if tag == "a":
-                emit()  # implied end tag of any open anchor
-                href = rel = ""
-                for name, value in _scan_attrs(chunk):
-                    if name == "href" and not href:
-                        href = _unesc(value)
-                    elif name == "rel" and not rel:
-                        rel = _unesc(value)
-                cur = {
-                    "href": href,
-                    "rel": rel,
-                    "parts": [],
-                    "chrome": chrome_depth > 0,
-                }
-                if self_closing:
-                    emit()
-            elif tag == "base" and not base_seen:
-                for name, value in _scan_attrs(chunk):
-                    if name == "href":
-                        base_seen = True
-                        try:
-                            eff_base = urljoin(
-                                base_url, _clean_href(_unesc(value))
-                            )
-                        except ValueError:
-                            pass
-                        break
-            elif tag in _LINK_CHROME_TAGS and not self_closing:
-                chrome_depth += 1
-            elif tag in _RAWTEXT_TAGS and not self_closing:
-                cm = _RAWTEXT_CLOSE_RE[tag].search(text, pos)
-                if cm is None:
-                    break  # unterminated rawtext swallows the rest
-                gt = text.find(">", cm.start())
-                pos = n if gt < 0 else gt + 1
-            continue
-        m = _MARKUP_SKIP_RE.match(text, lt)
-        if m:
-            pos = m.end()
-            continue
-        if cur is not None:
-            cur["parts"].append("<")
-        pos = lt + 1
-    emit()  # anchor still open at EOF
-    return links, capped
-
-
-def scan_meta(
-    data: bytes, max_bytes: int | None = MAX_HTML_BYTES
-) -> dict:
-    """HTML bytes → page metadata dict: ``{"title", "description",
-    "canonical", "lang", "noindex", "nofollow_page"}``.
-
-    First ``<title>`` text (entity-decoded, whitespace-collapsed), first
-    ``<meta name=description content>``, first ``<link rel=canonical
-    href>`` (raw, not resolved — resolution is the caller's choice),
-    ``<html lang>`` attribute lowercased, and the robots meta directives
-    (``noindex`` / ``nofollow`` tokens in ``<meta name=robots>``).
-    Missing fields are ``None`` (booleans default False).  Same tokenizer,
-    decode, and byte guard as the block/link walks; deterministic.
-    """
-    if max_bytes is not None and len(data) > max_bytes:
-        data = _truncate_at_tag(data, max_bytes)
-    text = decode_html_bytes(data)
-    out: dict = {
-        "title": None,
-        "description": None,
-        "canonical": None,
-        "lang": None,
-        "noindex": False,
-        "nofollow_page": False,
-    }
-    in_title = False
-    svg_depth = 0  # an <svg><title> is the GRAPHIC's label, not the page's
-    title_len = 0
-    title_parts: list[str] = []
-
-    def _take(piece: str) -> None:
-        # an unclosed <title> (RCDATA runs to EOF in a real parser) must
-        # not swallow the rest of the page as the title — cap the capture
-        nonlocal title_len
-        if title_len < MAX_TITLE_CHARS:
-            title_parts.append(piece[: MAX_TITLE_CHARS - title_len])
-            title_len += len(piece)
-
-    pos, n = 0, len(text)
-    while pos < n:
-        lt = text.find("<", pos)
-        if lt < 0:
-            if in_title:
-                _take(_unesc(text[pos:]))
-            break
-        if lt > pos and in_title:
-            _take(_unesc(text[pos:lt]))
-        m = _TAG_CLOSE_RE.match(text, lt)
-        if m:
-            if m.group(1).lower() == "svg" and svg_depth > 0:
-                svg_depth -= 1
-            if m.group(1).lower() == "title" and in_title:
-                in_title = False
-                if out["title"] is None:
-                    out["title"] = _WS_RE.sub(
-                        " ", " ".join(title_parts)
-                    ).strip()
-            pos = m.end()
-            continue
-        m = _TAG_OPEN_RE.match(text, lt)
-        if m:
-            tag, chunk, self_closing = _open_tag_parts(m)
-            pos = m.end()
-            if tag == "svg" and not self_closing:
-                svg_depth += 1
-            elif (
-                tag == "title"
-                and out["title"] is None
-                and not self_closing
-                and svg_depth == 0
-            ):
-                in_title = True
-                title_parts = []
-                title_len = 0
-            elif tag == "html" and out["lang"] is None:
-                for name, value in _scan_attrs(chunk):
-                    if name == "lang" and value:
-                        out["lang"] = _unesc(value).strip().lower()
-                        break
-            elif tag == "meta":
-                name_v = content = ""
-                for name, value in _scan_attrs(chunk):
-                    if name == "name" and not name_v:
-                        name_v = _unesc(value).strip().lower()
-                    elif name == "content" and not content:
-                        content = _unesc(value)
-                if name_v == "description" and out["description"] is None:
-                    out["description"] = _WS_RE.sub(" ", content).strip()
-                elif name_v == "robots":
-                    tokens = {
-                        t.strip().lower()
-                        for t in content.replace(";", ",").split(",")
-                    }
-                    if "noindex" in tokens or "none" in tokens:
-                        out["noindex"] = True
-                    if "nofollow" in tokens or "none" in tokens:
-                        out["nofollow_page"] = True
-            elif tag == "link" and out["canonical"] is None:
-                rel_v = href_v = ""
-                for name, value in _scan_attrs(chunk):
-                    if name == "rel" and not rel_v:
-                        rel_v = _unesc(value).strip().lower()
-                    elif name == "href" and not href_v:
-                        href_v = _unesc(value)
-                if "canonical" in rel_v.split() and href_v:
-                    out["canonical"] = _clean_href(href_v)
-            elif tag in _RAWTEXT_TAGS and not self_closing:
-                cm = _RAWTEXT_CLOSE_RE[tag].search(text, pos)
-                if cm is None:
-                    break
-                gt = text.find(">", cm.start())
-                pos = n if gt < 0 else gt + 1
-            continue
-        m = _MARKUP_SKIP_RE.match(text, lt)
-        if m:
-            pos = m.end()
-            continue
-        if in_title:
-            _take("<")
-        pos = lt + 1
-    if in_title and out["title"] is None:
-        out["title"] = _WS_RE.sub(" ", " ".join(title_parts)).strip()
-    return out
 
 
 def html_doc(data: bytes, max_bytes: int | None = MAX_HTML_BYTES) -> dict:

@@ -616,12 +616,16 @@ class TestR5ReviewRegressions:
             b"<a href=http://example.com/foo/>my site</a> now</p>"
             b"</body></html>"
         )
-        links, _capped = htmlpage.scan_links(html, "http://host.com/")
-        (link,) = [l for l in links if "example.com" in l["dst"]]
-        assert link["dst"] == "http://example.com/foo/"
-        assert link["anchor"] == "my site"
-        # engines agree on link-density accounting for such anchors
+        m = htmlpage._TAG_OPEN_RE.match("<a href=http://example.com/foo/>")
+        tag, chunk, self_closing = htmlpage._open_tag_parts(m)
+        assert tag == "a"
+        assert self_closing is False
+        assert dict(htmlpage._scan_attrs(chunk))["href"] == (
+            "http://example.com/foo/"
+        )
         fast = htmlpage.parse_html_blocks(html)
+        assert "my site" in fast[0]["lines"][0]
+        # engines agree on link-density accounting for such anchors
         std = htmlpage.parse_html_blocks(html, engine="stdlib")
         assert fast == std
 
@@ -658,3 +662,14 @@ class TestR5ReviewRegressions:
             assert got == [
                 {"type": "text", "lines": ["Hello plain ascii page content."]}
             ], cs
+
+    def test_duplicate_charset_attr_first_wins(self):
+        from ocr_spark.htmlpage import decode_html_bytes
+
+        # HTML5: repeated attributes are ignored; last-wins would decode
+        # this page as koi8-r and mojibake the text
+        html = (
+            '<html><head><meta charset="utf-8" charset="koi8-r"></head>'
+            "<body><p>résumé</p></body></html>"
+        ).encode("utf-8")
+        assert "résumé" in decode_html_bytes(html)

@@ -2770,17 +2770,6 @@ class TestNullRowSemantics:
         # exists() silently dropped it regardless of the list)
         assert sorted(kept, key=str) == [None, "http://fine.com/y"]
 
-    def test_outlinks_null_url_not_stringified(self, spark):
-        from ocr_spark.operators.links import extract_outlinks
-
-        html = b'<html><body><a href="http://t.example/x">t</a></body></html>'
-        df = spark.createDataFrame(
-            [(None, bytearray(html))], "url string, html binary"
-        )
-        rows = extract_outlinks(df).collect()
-        assert rows, "outlink scan should still run on a null-url page"
-        assert all(r.url == "" for r in rows)  # never the string 'None'
-
 
 class TestSplitsReservedColumns:
     def test_shard_corpus_refuses_colliding_columns(self, docs):
