@@ -33,6 +33,13 @@ RASTER_CAP_PX = 4500
 DEFAULT_DPI = 200
 
 
+def _floats(bbox) -> list[float]:
+    """A library bbox (tuple, list, numpy scalars) → a fresh list of
+    Python floats, the value shape the kernels and the UDF's Arrow row
+    build take (the heuristic backend produces it natively)."""
+    return [float(c) for c in bbox]
+
+
 def available() -> bool:
     try:  # pragma: no cover - real deps absent in sandbox
         import fitz  # noqa: F401
@@ -149,7 +156,7 @@ class ModelExtractor:  # pragma: no cover - requires GPU deps
             for line in block.get("lines", []):
                 content = "".join(s["text"] for s in line["spans"])
                 if content.strip():
-                    native.append({"bbox": list(line["bbox"]), "content": content})
+                    native.append({"bbox": _floats(line["bbox"]), "content": content})
         return {
             "layout": layout,
             "native_lines": native,
@@ -164,7 +171,10 @@ class ModelExtractor:  # pragma: no cover - requires GPU deps
         rec, det = _load_ocr_models()
         img = self._raster(page_ref)
         pred = rec([img], [[lang]], det)[0]
-        return [{"bbox": ln.bbox, "content": ln.text} for ln in pred.text_lines]
+        return [
+            {"bbox": _floats(ln.bbox), "content": ln.text}
+            for ln in pred.text_lines
+        ]
 
     finish_page = staticmethod(lambda lines, layout: sort_blocks(
         consolidate_blocks(lines, layout)

@@ -1,10 +1,5 @@
 from .consolidate import consolidate_blocks, page_needs_ocr, sort_blocks
-from .geometry import (
-    box_overlap_pct,
-    merge_boxes,
-    overlap_pct_matrix,
-    overlap_pct_one_to_many,
-)
+from .geometry import box_overlap_pct, merge_boxes
 from .layout import (
     BLOCK_TYPES,
     LAYOUT_CHOICES,
@@ -32,8 +27,6 @@ __all__ = [
     "doc_text",
     "merge_boxes",
     "merge_overlapping_blocks",
-    "overlap_pct_matrix",
-    "overlap_pct_one_to_many",
     "page_needs_ocr",
     "page_text",
     "postprocess_blocks",

@@ -7,17 +7,18 @@
 - ``sort_blocks``: stable y-sort that assigns final block indexes
   (reference document.py:438-454).
 
-The sequential line-pool mutation in consolidation and the ``+=`` coverage
-accumulation are order-dependent, so both run as exact loops; the O(B×L)
-pair geometry is numpy-vectorized per block with elementwise ops whose
-float64 results are bit-identical to the scalar kernel.
+Both loops are O(blocks × lines) per page and run once per page inside the
+extraction UDF, where a realistic page is ~6 blocks × ~11 lines: per-call
+overhead, not arithmetic, is the cost.  So they are plain scalar loops over
+Python floats with ``geometry.box_overlap_pct`` / ``merge_boxes`` inlined:
+the same expressions in the same order, the builtin ``max(a, b)`` /
+``min(a, b)`` written as ``b if b > a else a`` / ``b if b < a else a``
+(identical NaN handling), the kernel's own empty-intersection test, and
+the reference's strictly sequential ``+=`` folds.  tests/test_properties.py
+pins both to literal transcriptions of the reference loops.
 """
 
 from __future__ import annotations
-
-import numpy as np
-
-from .geometry import box_overlap_pct, merge_boxes, overlap_pct_matrix
 
 MIN_COVERAGE = 0.5  # reference document.py:24 ``min_overlap=0.5``
 LINE_ABSORB_THRESHOLD = 0.5  # reference document.py:72 ``> 0.5``
@@ -36,26 +37,27 @@ def page_needs_ocr(
     """
     if not layout:
         return True
+    line_boxes = [ln["bbox"] for ln in lines]
     total_area = 0.0
     covered_area = 0.0
-    block_boxes = np.array([b["bbox"] for b in layout], dtype=np.float64)
-    line_boxes = (
-        np.array([ln["bbox"] for ln in lines], dtype=np.float64)
-        if lines
-        else np.zeros((0, 4), dtype=np.float64)
-    )
-    # ONE numpy dispatch for the whole page (B×L matrix, block area as
-    # denominator) — each lane bit-identical to the scalar kernel
-    pct_rows = overlap_pct_matrix(block_boxes, line_boxes).tolist()
-    for block, pcts in zip(layout, pct_rows):
+    for block in layout:
         x1_min, y1_min, x1_max, y1_max = block["bbox"]
         block_area = (x1_max - x1_min) * (y1_max - y1_min)
         block_coverage = 0.0
-        # the += fold stays strictly sequential over Python floats (same
-        # rounding as document.py:46-51 — numpy's pairwise sum would
-        # round differently, so no np.sum here)
-        for p in pcts:
-            block_coverage += p
+        for x2_min, y2_min, x2_max, y2_max in line_boxes:
+            # box_overlap_pct(block, line, use_first_as_denominator=True),
+            # y first: lines are wide, short strips, so most pairs are
+            # disjoint in y.  An empty intersection adds 0.0, which leaves
+            # the sum as is (it is never -0.0), so it is skipped.
+            yo_min = y2_min if y2_min > y1_min else y1_min
+            yo_max = y2_max if y2_max < y1_max else y1_max
+            if yo_max <= yo_min:
+                continue
+            xo_min = x2_min if x2_min > x1_min else x1_min
+            xo_max = x2_max if x2_max < x1_max else x1_max
+            if xo_max <= xo_min:
+                continue
+            block_coverage += (xo_max - xo_min) * (yo_max - yo_min) / block_area
         block_coverage = min(block_coverage, 1.0)
         total_area += block_area
         covered_area += block_area * block_coverage
@@ -70,9 +72,6 @@ def consolidate_blocks(lines: list[dict], layout: list[dict]) -> list[dict]:
 
     - blocks scan the SHARED line pool in layout order; absorbed lines are
       removed, so an earlier block shadows later ones (order-dependent);
-    - the overlap test uses the block's ORIGINAL bbox for the whole scan
-      (``block["bbox"]`` is rebound only after the loop body computes
-      new_bbox, but the test at :72 reads the rebound value — see below);
     - the block bbox grows by union with each absorbed line (:75) and the
       rebinding at :76 happens INSIDE the line loop, so later lines in the
       same scan test against the grown bbox;
@@ -82,33 +81,45 @@ def consolidate_blocks(lines: list[dict], layout: list[dict]) -> list[dict]:
     blocks: list[dict] = []
     for block in layout:
         absorbed: list[dict] = []
-        drop: list[int] = []
-        new_bbox = block["bbox"]
-        bbox = block["bbox"]
-        for li, line in enumerate(pool):
-            # :72 tests block["bbox"], rebound each iteration at :76
-            lb = line["bbox"]
-            # inline disjointness pre-test: exactly the kernel's own
-            # empty-intersection condition (touching edges count as
-            # empty), so skipped pairs are precisely the pct == 0.0
-            # pairs — bit-identical results, ~2x fewer kernel calls on
-            # realistic pages (most line/block pairs don't overlap)
-            if (
-                lb[0] >= bbox[2]
-                or lb[2] <= bbox[0]
-                or lb[1] >= bbox[3]
-                or lb[3] <= bbox[1]
-            ):
+        kept: list[dict] = []
+        x1_min, y1_min, x1_max, y1_max = block["bbox"]
+        area1 = (x1_max - x1_min) * (y1_max - y1_min)
+        for line in pool:
+            x2_min, y2_min, x2_max, y2_max = line["bbox"]
+            # box_overlap_pct(bbox, line["bbox"]), min-area denominator,
+            # y first as in page_needs_ocr; an empty pair's 0.0 never
+            # passes the > 0.5 gate
+            yo_min = y2_min if y2_min > y1_min else y1_min
+            yo_max = y2_max if y2_max < y1_max else y1_max
+            if yo_max <= yo_min:
+                kept.append(line)
                 continue
-            if box_overlap_pct(bbox, lb) > LINE_ABSORB_THRESHOLD:
+            xo_min = x2_min if x2_min > x1_min else x1_min
+            xo_max = x2_max if x2_max < x1_max else x1_max
+            if xo_max <= xo_min:
+                kept.append(line)
+                continue
+            area2 = (x2_max - x2_min) * (y2_max - y2_min)
+            inter = (xo_max - xo_min) * (yo_max - yo_min)
+            if inter / (area2 if area2 < area1 else area1) > LINE_ABSORB_THRESHOLD:
                 absorbed.append(line)
-                drop.append(li)
-                new_bbox = merge_boxes(new_bbox, lb)
-            bbox = new_bbox
-        dropped = set(drop)
-        pool = [line for li, line in enumerate(pool) if li not in dropped]
+                # merge_boxes(bbox, line["bbox"])
+                x1_min = x2_min if x2_min < x1_min else x1_min
+                y1_min = y2_min if y2_min < y1_min else y1_min
+                x1_max = x2_max if x2_max > x1_max else x1_max
+                y1_max = y2_max if y2_max > y1_max else y1_max
+                area1 = (x1_max - x1_min) * (y1_max - y1_min)
+            else:
+                kept.append(line)
+        pool = kept
         if absorbed:
-            blocks.append({"bbox": new_bbox, "type": block["type"], "lines": absorbed})
+            blocks.append(
+                {
+                    "bbox": (x1_min, y1_min, x1_max, y1_max),
+                    "type": block["type"],
+                    "lines": absorbed,
+                }
+            )
     for line in pool:
         blocks.append({"bbox": line["bbox"], "type": "text", "lines": [line]})
     return blocks

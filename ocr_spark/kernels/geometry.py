@@ -1,15 +1,15 @@
 """Geometry kernels: bbox overlap and union.
 
 These are the engine's only join predicates (reference: utils.py:48-91,
-utils.py:94-117).  They are written scalar-first so the pure-Python oracle
-and the Spark pandas-UDF path share byte-identical float semantics, with
-numpy batch variants whose elementwise IEEE-754 float64 arithmetic is
-bit-identical to the scalar loop (no reassociation, no fused reductions).
+utils.py:94-117), scalar Python floats with the reference's builtin
+``max``/``min`` semantics, so the pure-Python oracle and the Spark UDF
+share byte-identical results.  The per-page hot loops
+(``consolidate.page_needs_ocr``, ``consolidate.consolidate_blocks``) inline
+these two expressions in the same operation order; tests/test_properties.py
+pins the inlined loops to literal transcriptions that call them.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 Box = tuple[float, float, float, float]
 
@@ -49,73 +49,3 @@ def merge_boxes(box1: Box, box2: Box) -> Box:
         max(box1[2], box2[2]),
         max(box1[3], box2[3]),
     )
-
-
-def overlap_pct_matrix(
-    blocks: np.ndarray, boxes: np.ndarray
-) -> np.ndarray:
-    """Vectorized ``box_overlap_pct(blocks[i], boxes[j],
-    use_first_as_denominator=True)`` for (B,4) × (L,4) arrays → (B,L).
-
-    One numpy dispatch for the whole page instead of one per block (the
-    per-call overhead dominated on realistic 5-block pages — measured in
-    the page_needs_ocr profile).  Broadcasting applies the same scalar
-    IEEE-754 float64 op per lane, so every cell is bit-identical to the
-    scalar kernel and to :func:`overlap_pct_one_to_many` row by row.
-    """
-    blocks = np.asarray(blocks, dtype=np.float64)
-    boxes = np.asarray(boxes, dtype=np.float64)
-    nb = blocks.shape[0] if blocks.ndim == 2 else 0
-    if nb == 0 or boxes.size == 0:
-        return np.zeros((nb, 0), dtype=np.float64)
-    b = blocks[:, :, None]  # (B, 4, 1)
-    area1 = (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])  # (B, 1)
-    xo_min = np.maximum(b[:, 0], boxes[None, :, 0])  # (B, L)
-    xo_max = np.minimum(b[:, 2], boxes[None, :, 2])
-    yo_min = np.maximum(b[:, 1], boxes[None, :, 1])
-    yo_max = np.minimum(b[:, 3], boxes[None, :, 3])
-    inter = (xo_max - xo_min) * (yo_max - yo_min)
-    empty = (xo_max <= xo_min) | (yo_max <= yo_min)
-    # a zero-area block (sub-pixel collapse after the int cast) divides
-    # 0/0 here; every such cell is ALSO empty (zero width/height cannot
-    # overlap positively) and overwritten below, but the raw divide
-    # would spam RuntimeWarnings — or fail outright under
-    # np.seterr(invalid='raise') — for output that never changes
-    with np.errstate(invalid="ignore", divide="ignore"):
-        pct = inter / area1
-    pct[empty] = 0.0
-    return pct
-
-
-def overlap_pct_one_to_many(
-    box: Box, boxes: np.ndarray, use_first_as_denominator: bool = False
-) -> np.ndarray:
-    """Vectorized ``box_overlap_pct(box, boxes[i])`` for an (N,4) array.
-
-    Elementwise float64 ops only — each lane is IEEE-identical to the scalar
-    kernel, so downstream sequential accumulation stays byte-identical to the
-    reference loops (document.py:42-54, document.py:67-77).
-    """
-    boxes = np.asarray(boxes, dtype=np.float64)
-    if boxes.size == 0:
-        return np.zeros(0, dtype=np.float64)
-    x1_min, y1_min, x1_max, y1_max = (
-        np.float64(box[0]),
-        np.float64(box[1]),
-        np.float64(box[2]),
-        np.float64(box[3]),
-    )
-    area1 = (x1_max - x1_min) * (y1_max - y1_min)
-    area2 = (boxes[:, 2] - boxes[:, 0]) * (boxes[:, 3] - boxes[:, 1])
-
-    xo_min = np.maximum(x1_min, boxes[:, 0])
-    xo_max = np.minimum(x1_max, boxes[:, 2])
-    yo_min = np.maximum(y1_min, boxes[:, 1])
-    yo_max = np.minimum(y1_max, boxes[:, 3])
-
-    inter = (xo_max - xo_min) * (yo_max - yo_min)
-    denom = area1 if use_first_as_denominator else np.minimum(area1, area2)
-    pct = inter / denom
-    empty = (xo_max <= xo_min) | (yo_max <= yo_min)
-    pct[empty] = 0.0
-    return pct

@@ -62,20 +62,16 @@ def _page_i(page) -> int:
     return page["i"] if isinstance(page, dict) else int(page.i)
 
 
-def _bbox_list(b) -> list[float]:
-    return [float(c) for c in b]
-
-
 def _pack_blocks(blocks: list[dict]) -> list[dict]:
     """Kernel block dicts → nested rows matching BLOCK_TYPE with indexes
     assigned in final order (document.py:444-454 Block/Line construction)."""
     return [
         {
             "i": bi,
-            "bbox": _bbox_list(b["bbox"]),
+            "bbox": b["bbox"],
             "type": b["type"],
             "lines": [
-                {"i": li, "bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
+                {"i": li, "bbox": ln["bbox"], "content": ln["content"]}
                 for li, ln in enumerate(b["lines"])
             ],
         }
@@ -99,21 +95,18 @@ def _extract_page(
     Guarded per PAGE: a throwing page becomes one EXTRACT_ERROR lineage
     row (never counted as OCR, no blocks) while its document's good pages
     survive, and a single bad page can never abort a Spark task (or drop
-    its siblings)."""
+    its siblings).
+
+    Both backends return fresh layout and line dicts whose bboxes hold
+    Python floats, and no kernel mutates its input, so they go to the
+    kernels and into the output as they are."""
     try:
         info = hx.analyze_page(page, dpi)
-        layout = [
-            {"type": b["type"], "bbox": _bbox_list(b["bbox"])}
-            for b in info["layout"]
-        ]
         if info["needs_ocr"]:
             lines = hx.extract_ocr_text(page, dpi, lang or "en")
         else:
-            lines = [
-                {"bbox": _bbox_list(ln["bbox"]), "content": ln["content"]}
-                for ln in info["native_lines"]
-            ]
-        blocks = postprocess_blocks(hx.finish_page(lines, layout))
+            lines = info["native_lines"]
+        blocks = postprocess_blocks(hx.finish_page(lines, info["layout"]))
     except Exception as e:  # noqa: BLE001 - failure-code lineage
         return False, [], _error("EXTRACT_ERROR", e)
     return bool(info["needs_ocr"]), blocks, None
@@ -167,8 +160,8 @@ def _pages_column(docs: list[list[_Page]]) -> pa.Array:
     """Per document its kept pages → the nested ``pages`` column, built
     from flat per-level lists and their offsets: no per-block dict is
     rebuilt and Arrow coerces no nested Python object.  Indexes are
-    assigned in final order (document.py:444-454); bbox coordinates
-    become Python floats as in ``_bbox_list``."""
+    assigned in final order (document.py:444-454); bbox coordinates are
+    already Python floats (see ``_extract_page``)."""
     page_off, page_i = [0], []
     block_off, block_i, block_type = [0], [], []
     line_off, line_i, line_content = [0], [], []
@@ -179,13 +172,13 @@ def _pages_column(docs: list[list[_Page]]) -> pa.Array:
             for bi, b in enumerate(blocks):
                 block_i.append(bi)
                 block_type.append(b["type"])
-                block_bbox.extend(map(float, b["bbox"]))
+                block_bbox.extend(b["bbox"])
                 block_bbox_off.append(len(block_bbox))
                 lines = b["lines"]
                 line_i.extend(range(len(lines)))
                 for ln in lines:
                     line_content.append(ln["content"])
-                    line_bbox.extend(map(float, ln["bbox"]))
+                    line_bbox.extend(ln["bbox"])
                     line_bbox_off.append(len(line_bbox))
                 line_off.append(len(line_i))
             block_off.append(len(block_i))

@@ -29,7 +29,7 @@ from typing import Any
 MAGIC = b"<!DOCTYPE sgdoc>"
 
 _DOC_RE = re.compile(rb'<doc dpi="(\d+)" kind="([A-Z])">')
-_PAGE_RE = re.compile(rb'<page i="(\d+)" w="([^"]+)" h="([^"]+)">(.*?)</page>', re.S)
+_PAGE_HDR_RE = re.compile(rb'<page i="(\d+)" w="([^"]+)" h="([^"]+)">')
 _LAYOUT_RE = re.compile(rb'<layout type="([a-z_]+)" bbox="([^"]+)"/>')
 _NLINE_RE = re.compile(rb'<nline bbox="([^"]+)" s="([^"]*)"/>')
 _OLINE_RE = re.compile(rb'<oline bbox="([^"]+)" s="([^"]*)"/>')
@@ -96,7 +96,8 @@ def encode_doc(pages: list[dict[str, Any]], dpi: int = 200, kind: str = "A") -> 
 
 
 def _page_from_groups(i: bytes, w: bytes, h: bytes, body: bytes) -> dict[str, Any]:
-    """One ``<page>...</page>`` match → a page dict:
+    """One page's header groups and body (between the header and
+    ``</page>``) → a page dict:
 
     ``{"i": int, "width": float, "height": float,
        "layout": [{"type", "bbox"}], "native_lines": [{"bbox", "spans"}],
@@ -140,16 +141,17 @@ def decode_doc(data: bytes) -> dict[str, Any]:
         raise ValueError("bad doc header")
     dpi, kind = int(m.group(1)), m.group(2).decode("ascii")
     pages = []
-    # linear index scan, not _PAGE_RE.finditer over the whole payload:
-    # the non-greedy regex re-scans to EOF at every unclosed tag
-    # (measured quadratic — 10.5 s at 218 KiB of crafted input; a 4 MiB
-    # bomb extrapolates to ~an hour in ONE task), and it silently
-    # DROPPED pages with a corrupted open tag / absorbed the next page
-    # into one missing its close tag.  The scan is byte-identical on
-    # well-formed payloads (non-greedy = up-to-first-close, exactly what
-    # find() does; '<' cannot occur inside base64 span bodies) and
-    # RAISES on structural corruption — a corrupt document must be a
-    # visible PARSE_ERROR row, never a shorter COMPLETED one.
+    # linear index scan, not a non-greedy ``<page ...>(.*?)</page>``
+    # finditer over the whole payload: that regex re-scans to EOF at
+    # every unclosed tag (measured quadratic — 10.5 s at 218 KiB of
+    # crafted input; a 4 MiB bomb extrapolates to ~an hour in ONE task),
+    # and it silently DROPPED pages with a corrupted open tag / absorbed
+    # the next page into one missing its close tag.  A page is its
+    # header, matched in place up to the first ``</page>`` (a header
+    # that runs into it is malformed), and the body up to that close
+    # tag ('<' cannot occur inside base64 span bodies); structural
+    # corruption RAISES — a corrupt document must be a visible
+    # PARSE_ERROR row, never a shorter COMPLETED one.
     pos = 0
     while True:
         start = data.find(b"<page ", pos)
@@ -158,10 +160,10 @@ def decode_doc(data: bytes) -> dict[str, Any]:
         end = data.find(b"</page>", start)
         if end < 0:
             raise ValueError("corrupt sgdoc: unclosed <page>")
-        pm = _PAGE_RE.match(data[start:end + 7])
+        pm = _PAGE_HDR_RE.match(data, start, end)
         if pm is None:
             raise ValueError("corrupt sgdoc: malformed <page> header")
-        pages.append(_page_from_groups(*pm.groups()))
+        pages.append(_page_from_groups(*pm.groups(), data[pm.end():end]))
         pos = end + 7
     if data.count(b"</page>") != len(pages):
         # an orphan close tag means some page's OPEN tag was corrupted —

@@ -1,7 +1,6 @@
 """Kernel unit tests against hand-computed cases (reference semantics:
 utils.py:48-117, layout.py:32-89, document.py:21-88, :438-454, :625-642)."""
 
-import numpy as np
 import pytest
 
 from ocr_spark.kernels import (
@@ -9,7 +8,6 @@ from ocr_spark.kernels import (
     consolidate_blocks,
     merge_boxes,
     merge_overlapping_blocks,
-    overlap_pct_one_to_many,
     page_needs_ocr,
     postprocess_blocks,
     px_to_pt,
@@ -39,47 +37,6 @@ class TestBoxOverlap:
     def test_partial(self):
         # boxes (0,0,2,2) and (1,1,3,3): inter 1, min area 4 → 0.25
         assert box_overlap_pct((0, 0, 2, 2), (1, 1, 3, 3)) == 0.25
-
-    def test_vectorized_matches_scalar_bitwise(self):
-        rng = np.random.RandomState(7)
-        base = (10.0, 10.0, 50.0, 30.0)
-        pts = rng.uniform(0, 60, size=(200, 2))
-        boxes = np.hstack([pts, pts + rng.uniform(1, 40, size=(200, 2))])
-        for flag in (False, True):
-            vec = overlap_pct_one_to_many(base, boxes, flag)
-            for i in range(len(boxes)):
-                scalar = box_overlap_pct(base, tuple(boxes[i]), flag)
-                assert vec[i] == scalar  # bit-identical, not approx
-
-    def test_matrix_matches_one_to_many_and_scalar_bitwise(self):
-        """The page-level (B×L) matrix kernel (one numpy dispatch per
-        page, the r4 page_needs_ocr speedup) must be bit-identical to
-        both the per-block vectorized kernel and the scalar kernel —
-        300 random trials including empty B and empty L."""
-        from ocr_spark.kernels.geometry import overlap_pct_matrix
-
-        rng = np.random.RandomState(42)
-        for _ in range(300):
-            nb, nl = rng.randint(0, 7), rng.randint(0, 25)
-            def rboxes(n):
-                pts = rng.uniform(0, 500, size=(n, 2))
-                return np.hstack(
-                    [pts, pts + rng.uniform(0.01, 300, size=(n, 2))]
-                ) if n else np.zeros((0, 4))
-            blocks, lines = rboxes(nb), rboxes(nl)
-            m = overlap_pct_matrix(blocks, lines)
-            assert m.shape == (nb, nl if nb else 0) or m.shape == (nb, 0)
-            for bi in range(nb):
-                row = overlap_pct_one_to_many(
-                    tuple(blocks[bi]), lines, use_first_as_denominator=True
-                )
-                assert m[bi].tobytes() == row.tobytes()
-                for li in range(nl):
-                    sc = box_overlap_pct(
-                        tuple(blocks[bi]), tuple(lines[li]),
-                        use_first_as_denominator=True,
-                    )
-                    assert m[bi, li] == sc
 
 
 class TestMergeBoxes:

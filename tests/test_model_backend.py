@@ -10,6 +10,7 @@ The fakes mimic the real APIs at the exact call sites model.py uses
 import sys
 import types
 
+import numpy as np
 import pytest
 
 DPI = 200
@@ -73,7 +74,9 @@ class _FakePage:
                 {
                     "lines": [
                         {
-                            "bbox": tuple(LINE_PT),
+                            # PyMuPDF returns tuples; numpy scalars stand
+                            # in for any non-float library value
+                            "bbox": tuple(np.float64(c) for c in LINE_PT),
                             "spans": [
                                 {"text": "conformance "},
                                 {"text": "line"},
@@ -96,8 +99,6 @@ class _FakeDoc:
 
 @pytest.fixture
 def fake_models(monkeypatch):
-    import numpy as np
-
     # fitz (pymupdf)
     fitz = types.ModuleType("fitz")
     fitz.Matrix = lambda a, b: (a, b)
@@ -124,7 +125,7 @@ def fake_models(monkeypatch):
             return self
 
         def __call__(self, imgs, verbose=False):
-            px = [c * DPI / 72 for c in BLOCK_PT]
+            px = [np.float32(c * DPI / 72) for c in BLOCK_PT]
             return [_Pred([px], [float(text_cls)])] * len(imgs)
 
     dy.YOLOv10 = YOLOv10
@@ -143,7 +144,9 @@ def fake_models(monkeypatch):
         disable_tqdm = False
 
         def __call__(self, imgs, langs, det):
-            line = types.SimpleNamespace(bbox=list(OCR_LINE_PX), text=OCR_TEXT)
+            line = types.SimpleNamespace(
+                bbox=tuple(np.float32(c) for c in OCR_LINE_PX), text=OCR_TEXT
+            )
             return [types.SimpleNamespace(text_lines=[line])] * len(imgs)
 
     sdet.DetectionPredictor = DetectionPredictor
@@ -238,38 +241,78 @@ class TestModelProtocolConformance:
         """Drive the actual fused UDF generator (extract_doc_rows)
         in-process on an Arrow batch with the model backend selected — the
         full stage protocol as the executor exercises it."""
-        import importlib
+        out = _fused_rows(
+            monkeypatch,
+            "model",
+            [
+                b"%PDF-native",
+                b"<html><body><p>from dom</p></body></html>",
+                b"\x00garbage",
+            ],
+        )
+        rows = {r["url"]: r for r in out.to_pylist()}
+        blocks = rows["u://0"]["pages"][0]["blocks"]
+        assert blocks[0]["lines"][0]["content"] == LINE_TEXT
+        html_blocks = rows["u://1"]["pages"][0]["blocks"]
+        assert html_blocks[0]["lines"][0]["content"] == "from dom"
+        assert rows["u://2"]["error"].startswith("PARSE_ERROR")
 
+    def test_fused_pages_column_matches_heuristic_run(
+        self, fake_models, monkeypatch
+    ):
+        """The fake models hand back tuples of numpy scalars; the fused
+        UDF's nested ``pages`` column must still carry float64 bboxes
+        equal to the heuristic backend's on the same logical pages, on
+        both routes."""
         import pyarrow as pa
 
-        ext = importlib.import_module("ocr_spark.extract")
-        from ocr_spark.operators import extract_udfs
+        from ocr_spark.payload import encode_doc
 
-        monkeypatch.setenv("OCR_SPARK_BACKEND", "model")
-        monkeypatch.setattr(ext, "_BACKEND", None)  # re-resolve
-        try:
-            batch = pa.RecordBatch.from_pydict(
-                {
-                    "url": ["u://pdf", "u://html", "u://bad"],
-                    "warc_ts": pa.array(
-                        [0] * 3, pa.timestamp("us", tz="UTC")
-                    ),
-                    "html": [
-                        b"%PDF-native",
-                        b"<html><body><p>from dom</p></body></html>",
-                        b"\x00garbage",
-                    ],
-                    "lang": ["en", "en", "en"],
-                }
-            )
-            out = pa.Table.from_batches(
-                list(extract_udfs.extract_doc_rows(iter([batch])))
-            )
-        finally:
-            monkeypatch.setattr(ext, "_BACKEND", None)  # don't leak backend
-        rows = {r["url"]: r for r in out.to_pylist()}
-        blocks = rows["u://pdf"]["pages"][0]["blocks"]
-        assert blocks[0]["lines"][0]["content"] == LINE_TEXT
-        html_blocks = rows["u://html"]["pages"][0]["blocks"]
-        assert html_blocks[0]["lines"][0]["content"] == "from dom"
-        assert rows["u://bad"]["error"].startswith("PARSE_ERROR")
+        got = _fused_rows(
+            monkeypatch, "model", [b"%PDF-native", b"%PDF-scanned"]
+        )
+        want = _fused_rows(
+            monkeypatch,
+            "heuristic",
+            [
+                encode_doc([_heuristic_page(True)], dpi=DPI),
+                encode_doc([_heuristic_page(False)], dpi=DPI),
+            ],
+        )
+        pages_t = got.schema.field("pages").type
+        blocks_t = pages_t.value_type.field("blocks").type.value_type
+        lines_t = blocks_t.field("lines").type.value_type
+        for bbox_t in (blocks_t.field("bbox").type, lines_t.field("bbox").type):
+            assert bbox_t.value_type == pa.float64()
+        assert got.column("ocr_pages").to_pylist() == [0, 1]
+        assert got.column("pages").equals(want.column("pages"))
+        assert got.column("text").equals(want.column("text"))
+
+
+def _fused_rows(monkeypatch, backend: str, payloads: list[bytes]):
+    """``extract_doc_rows`` over one Arrow batch of ``payloads`` (urls
+    ``u://0``, ``u://1``, …) with ``backend`` selected, as a Table."""
+    import importlib
+
+    import pyarrow as pa
+
+    ext = importlib.import_module("ocr_spark.extract")
+    from ocr_spark.operators import extract_udfs
+
+    monkeypatch.setenv("OCR_SPARK_BACKEND", backend)
+    monkeypatch.setattr(ext, "_BACKEND", None)  # re-resolve
+    n = len(payloads)
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "url": [f"u://{i}" for i in range(n)],
+            "warc_ts": pa.array([0] * n, pa.timestamp("us", tz="UTC")),
+            "html": payloads,
+            "lang": ["en"] * n,
+        }
+    )
+    try:
+        return pa.Table.from_batches(
+            list(extract_udfs.extract_doc_rows(iter([batch])))
+        )
+    finally:
+        monkeypatch.setattr(ext, "_BACKEND", None)  # don't leak backend

@@ -1,5 +1,7 @@
 """Payload round-trip + oracle behavior + property tests on consolidation."""
 
+import re
+
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -238,3 +240,49 @@ class TestPayloadCorruption:
         broken = data[: i + 4] + b"!" + data[i + 5:]
         with pytest.raises((ValueError, binascii.Error)):
             decode_doc(broken)
+
+
+class TestPayloadPageScan:
+    """The page scan matches each page's header in place and slices its
+    body; it must yield the pages the whole-page regex
+    ``<page ...>(.*?)</page>`` yields, and still reject a header that
+    runs into the close tag or is malformed."""
+
+    _WHOLE_PAGE_RE = re.compile(
+        rb'<page i="(\d+)" w="([^"]+)" h="([^"]+)">(.*?)</page>', re.S
+    )
+
+    def test_pages_equal_whole_page_regex_groups(self):
+        from ocr_spark.payload import _page_from_groups
+
+        for k in range(400):
+            data = make_doc(k)["html"]
+            want = sorted(
+                (
+                    _page_from_groups(*m.groups())
+                    for m in self._WHOLE_PAGE_RE.finditer(data)
+                ),
+                key=lambda page: page["i"],
+            )
+            assert decode_doc(data)["pages"] == want, k
+
+    @pytest.mark.parametrize(
+        "old, new",
+        [
+            (b'w="612.0"', b'w="6</page>12.0"'),
+            (b'h="792.0"', b'h="79</page>2.0"'),
+            (b'<page i="0"', b'<page i="x"'),
+            (b'<page i="0" w="612.0"', b'<page i="0"  w="612.0"'),
+            (b'w="612.0"', b'w=""'),
+        ],
+    )
+    def test_bad_header_is_parse_error(self, old, new):
+        from ocr_spark.operators.extract_udfs import _extract_doc
+
+        data = make_doc(3)["html"]
+        assert data.count(old) >= 1
+        broken = data.replace(old, new, 1)
+        with pytest.raises(ValueError):
+            decode_doc(broken)
+        pages, _, error = _extract_doc(broken, "en")
+        assert pages == [] and error.startswith("PARSE_ERROR")

@@ -109,6 +109,168 @@ class TestLayoutMergeProperties:
         assert a == b
 
 
+# ---------------------------------------------------------------------------
+# Reference transcriptions: the per-page loops as the reference writes them
+# (document.py:21-88, layout.py:32-89), calling the scalar geometry kernels
+# pair by pair.  The production loops inline those kernels, and the oracle
+# runs the production loops too, so no Spark-vs-oracle test can see a drift
+# between them; these differentials can.
+
+
+def _ref_page_needs_ocr(layout, lines, min_overlap=0.5):
+    """document.py:40-55 (the engine's no-layout and zero-area returns
+    kept)."""
+    if not layout:
+        return True
+    total_area = 0.0
+    covered_area = 0.0
+    for block in layout:
+        x1_min, y1_min, x1_max, y1_max = block["bbox"]
+        block_area = (x1_max - x1_min) * (y1_max - y1_min)
+        block_coverage = 0.0
+        for line in lines:
+            overlap = box_overlap_pct(
+                block["bbox"], line["bbox"], use_first_as_denominator=True
+            )
+            block_coverage += overlap
+        block_coverage = min(block_coverage, 1.0)
+        total_area += block_area
+        covered_area += block_area * block_coverage
+    if total_area == 0:
+        return True
+    return covered_area / total_area < min_overlap
+
+
+def _ref_consolidate_blocks(lines, layout):
+    """document.py:58-88: the shared line pool, the block bbox rebound
+    inside the line loop, empty blocks dropped, leftovers as singletons."""
+    text_lines = list(lines)
+    blocks = []
+    for block in layout:
+        block = dict(block)
+        block_lines = []
+        remaining = []
+        new_bbox = block["bbox"]
+        for line in text_lines:
+            if box_overlap_pct(block["bbox"], line["bbox"]) > 0.5:
+                block_lines.append(line)
+                new_bbox = merge_boxes(new_bbox, line["bbox"])
+            else:
+                remaining.append(line)
+            block["bbox"] = new_bbox
+        text_lines = remaining
+        if block_lines:
+            blocks.append(
+                {"bbox": new_bbox, "type": block["type"], "lines": block_lines}
+            )
+    for line in text_lines:
+        blocks.append({"bbox": line["bbox"], "type": "text", "lines": [line]})
+    return blocks
+
+
+def _ref_merge_overlapping_blocks(blocks):
+    """layout.py:32-89: FIFO seed, rescan from 0 after every absorption,
+    overlap against the running union, priority-typed winner."""
+    from ocr_spark.kernels.layout import TYPE_PRIORITY
+
+    if not blocks:
+        return []
+    unprocessed = [dict(block) for block in blocks]
+    result = []
+    while unprocessed:
+        current = unprocessed.pop(0)
+        merged = True
+        while merged:
+            merged = False
+            i = 0
+            while i < len(unprocessed):
+                other = unprocessed[i]
+                if box_overlap_pct(current["bbox"], other["bbox"]) > 0.5:
+                    if TYPE_PRIORITY[other["type"]] < TYPE_PRIORITY[current["type"]]:
+                        current["type"] = other["type"]
+                    current["bbox"] = merge_boxes(current["bbox"], other["bbox"])
+                    unprocessed.pop(i)
+                    merged = True
+                else:
+                    i += 1
+        result.append(current)
+    result.sort(key=lambda x: (x["bbox"][1], x["bbox"][0]))
+    return result
+
+
+def _outcome(f, *args):
+    """repr of the result, or of the exception type: NaN-safe (repr(nan)
+    == 'nan') and exact for every float."""
+    try:
+        return repr(f(*args))
+    except Exception as e:  # noqa: BLE001 - the raise is the outcome
+        return f"raises {type(e).__name__}"
+
+
+# edges from a small grid make touching, shared and zero-width edges
+# common; the specials cover NaN, ±inf, -0.0 and products that underflow
+_edge = st.one_of(
+    st.integers(-2, 12).map(float),
+    st.sampled_from(
+        [float("nan"), float("inf"), float("-inf"), -0.0, 1e-200, 2e-200]
+    ),
+    st.floats(allow_nan=True, allow_infinity=True, width=64),
+)
+
+
+@st.composite
+def wild_boxes(draw):
+    """Any four coordinates: inverted, zero-area, touching, non-finite."""
+    if draw(st.booleans()):
+        return [draw(_edge) for _ in range(4)]
+    x1, y1 = draw(_edge), draw(_edge)
+    w, h = draw(st.sampled_from([0.0, 1.0, 2.0, 3.0])), draw(_edge)
+    return [x1, y1, x1 + w, y1 + h]
+
+
+_wild_lines = st.lists(
+    st.builds(
+        lambda b, c: {"bbox": b, "content": c},
+        wild_boxes(),
+        st.sampled_from(["a", "b", "c"]),
+    ),
+    max_size=10,
+)
+_wild_layout = st.lists(
+    st.builds(
+        lambda b, t: {"type": t, "bbox": b},
+        wild_boxes(),
+        st.sampled_from(["text", "title", "table", "figure", "abandon"]),
+    ),
+    max_size=6,
+)
+
+
+class TestReferenceTranscription:
+    @given(lay=_wild_layout, ls=_wild_lines)
+    @settings(max_examples=600, deadline=None)
+    def test_page_needs_ocr_matches_reference(self, lay, ls):
+        from ocr_spark.kernels.consolidate import page_needs_ocr
+
+        assert _outcome(page_needs_ocr, lay, ls) == _outcome(
+            _ref_page_needs_ocr, lay, ls
+        )
+
+    @given(lay=_wild_layout, ls=_wild_lines)
+    @settings(max_examples=600, deadline=None)
+    def test_consolidate_blocks_matches_reference(self, lay, ls):
+        assert _outcome(consolidate_blocks, ls, lay) == _outcome(
+            _ref_consolidate_blocks, ls, lay
+        )
+
+    @given(lay=_wild_layout)
+    @settings(max_examples=600, deadline=None)
+    def test_merge_overlapping_blocks_matches_reference(self, lay):
+        assert _outcome(merge_overlapping_blocks, lay) == _outcome(
+            _ref_merge_overlapping_blocks, lay
+        )
+
+
 class TestPayloadFuzz:
     @given(data=st.binary(max_size=400))
     @settings(max_examples=300, deadline=None)
