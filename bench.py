@@ -155,7 +155,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
         similarity.prototype_prune(emb, ivf_cents, prune_fraction=0.5),
     )
     timed("text_quality", text_analysis.quality_score(docs))
-    timed("text_tokens", text_analysis.token_count(docs))
     timed("text_langid", text_analysis.language_id(docs))
     timed("text_c4_rules", text_analysis.c4_rules(docs))
     timed("dedup_line_corpus", dedup.corpus_line_dedup(docs))
@@ -167,18 +166,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
         dedup.winnow_cross_pairs(
             docs.filter(F.col("doc_id") % 3 != 0),
             docs.filter(F.col("doc_id") % 3 == 0),
-        ),
-    )
-    timed(
-        "text_bm25",
-        text_analysis.bm25_topk(
-            docs,
-            spark.createDataFrame(
-                [(0, "key agg row"), (1, "scan slow table"),
-                 (2, "spark window join vector")],
-                "query_id long, query string",
-            ),
-            k=10,
         ),
     )
     from ocr_spark.operators import bloom
@@ -220,17 +207,13 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
     _noop_write(cc)
     out["dedup_clusters"] = round(time.time() - t0, 3)
     # straggler probe: 256 docs x 50k words with heavy repetition, built
-    # JVM-side — proves repetition_ratio has no quadratic per-row blowup
+    # JVM-side, for the per-row cost of the longest documents
     long_docs = spark.range(256).select(
         F.col("id").alias("doc_id"),
         F.expr(
             "concat(repeat('lorem ipsum dolor sit amet consectetur ', 8000), "
             "repeat('spam spam ', 1000))"
         ).alias("text"),
-    )
-    timed(
-        "text_repetition_50kword_docs",
-        text_analysis.repetition_ratio(long_docs),
     )
     # 64-bit signature over the same 50k-word docs — proves simhash hashes
     # each token once (the old per-bit re-split shape paid a bits× factor

@@ -261,7 +261,7 @@ _EMPTY_SQL = "SELECT doc_id FROM documents WHERE trim(text) <> ''"
 
 
 # ---------------------------------------------------------------------------
-# dedup_* / text_* — DuckDB twins of the portable-hash library operators
+# dedup_* — DuckDB twins of the portable-hash library operators
 
 _WORDS_CTE = "SELECT doc_id, string_split(text, ' ') AS w FROM documents"
 
@@ -450,15 +450,6 @@ pairs AS (
 SELECT DISTINCT doc_a, doc_b, CAST(bit_count(x) AS INTEGER) AS hamming
 FROM pairs WHERE bit_count(x) <= 3
 """
-
-_FINGERPRINT_SQL = f"""
-WITH words AS ({_WORDS_CTE}),
-sh AS ({_shingle_cte(3)})
-SELECT doc_id, min({_PH}) AS fp_min, max({_PH}) AS fp_max,
-       CAST(count(*) AS INTEGER) AS fp_size
-FROM sh GROUP BY doc_id
-"""
-
 
 def _q_dedup_filtered_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized dedup: keep only each group's representative row —
@@ -701,144 +692,6 @@ WHERE doc_id % 3 != 0 AND doc_id NOT IN (SELECT doc_id FROM matched)
 """
 
 
-# TF-IDF keyword extraction: top-3 corpus-distinctive tokens per doc.
-# score = tf * (ln((n_docs+1)/(df+1)) + 1) — ln is not cross-engine
-# bit-identical (CLAUDE.md transcendental rule), so both sides emit
-# round(score, 9); the rank window's tie-break (score DESC, token ASC)
-# is deterministic because equal scores arise exactly from equal
-# (tf, df) pairs, which both engines order identically.
-_TFIDF_SQL = """
-WITH tok AS (
-  SELECT doc_id, t.token
-  FROM documents, unnest(string_split(lower(coalesce(text, '')), ' '))
-       AS t(token)
-  WHERE t.token <> ''),
-tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-       FROM tok GROUP BY doc_id, token),
-dfq AS (SELECT token, CAST(count(*) AS BIGINT) AS dfc
-        FROM tf GROUP BY token),
-nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-s AS (SELECT tf.doc_id, tf.token, tf.tf,
-        tf.tf * (ln((nd.n + 1) / (dfq.dfc + 1)) + 1) AS score
-      FROM tf JOIN dfq USING (token) CROSS JOIN nd),
-r AS (SELECT *, row_number() OVER (
-        PARTITION BY doc_id ORDER BY score DESC, token ASC) AS rank
-      FROM s)
-SELECT doc_id, token, tf, round(score, 9) AS score,
-       CAST(rank AS INTEGER) AS rank
-FROM r WHERE rank <= 3
-"""
-
-
-def _q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text_analysis import tfidf_keywords
-
-    return tfidf_keywords(
-        _t(spark, sf_dir, "documents"), k=3
-    ).withColumn("score", F.round("score", 9))
-
-
-# Corpus n-gram boilerplate report (text_analysis.ngram_report): all
-# positional word trigrams, two stacked aggregations (per-(gram, doc)
-# counts, then totals + doc frequency), deterministic top-k on
-# (occurrences DESC, ngram ASC).  All-integer outputs — engine-exact.
-_NGRAM_REPORT_SQL = """
-WITH words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-grams AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           CASE WHEN len(w) >= 3 THEN generate_series(0, len(w) - 3)
-                ELSE [] END,
-           i -> array_to_string(list_slice(w, i + 1, i + 3), ' '))) AS ngram
-  FROM words),
-perdoc AS (SELECT ngram, doc_id, count(*) AS c FROM grams
-           GROUP BY ngram, doc_id),
-tot AS (SELECT ngram, CAST(sum(c) AS BIGINT) AS n_occurrences,
-               CAST(count(*) AS BIGINT) AS n_docs
-        FROM perdoc GROUP BY ngram HAVING count(*) >= 2)
-SELECT ngram, n_occurrences, n_docs FROM tot
-ORDER BY n_occurrences DESC, ngram ASC LIMIT 50
-"""
-
-
-def _q_ngram_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.ngram_report(
-        _t(spark, sf_dir, "documents"), n=3, top_k=50, min_docs=2
-    )
-
-
-# Gate-threshold calibration quantiles: exact linear-interpolated
-# (rank = p*(n-1), the quantile_cont convention both engines implement);
-# interpolation divides doubles → round(value, 9) on both sides.
-_QUANTILE_SQL = """
-WITH f AS (SELECT CAST(length(coalesce(text, '')) AS BIGINT) AS n_chars,
-                  CAST(len(string_split(coalesce(text, ''), ' '))
-                       AS BIGINT) AS n_words
-           FROM documents),
-q AS (SELECT 'n_chars' AS metric,
-             unnest([1e-1, 5e-1, 9e-1]) AS p,
-             unnest(quantile_cont(n_chars, [1e-1, 5e-1, 9e-1])) AS v
-      FROM f
-      UNION ALL
-      SELECT 'n_words',
-             unnest([1e-1, 5e-1, 9e-1]),
-             unnest(quantile_cont(n_words, [1e-1, 5e-1, 9e-1]))
-      FROM f)
-SELECT metric, p, round(v, 9) AS value FROM q
-"""
-
-
-def _q_quantile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.text_analysis import quantile_report
-
-    feats = _t(spark, sf_dir, "documents").select(
-        F.length(F.coalesce(F.col("text"), F.lit("")))
-        .cast("bigint")
-        .alias("n_chars"),
-        F.expr("size(split(coalesce(text, ''), ' '))")
-        .cast("bigint")
-        .alias("n_words"),
-    )
-    return quantile_report(
-        feats, ["n_chars", "n_words"], probs=(0.1, 0.5, 0.9)
-    ).withColumn("value", F.round("value", 9))
-
-
-def _q_gate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.corpus_gate_report(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-
-
-def _gate_report_sql() -> str:
-    """Composes the per-gate oracle CTE bodies on doc_id and aggregates
-    the same integer/boolean conditions the Spark report counts."""
-    return f"""
-WITH g AS ({_GOPHER_SQL}),
-c AS ({_C4_SQL}),
-l AS ({_lang_sql()})
-SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN g.g_keep THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_gopher_keep,
-       CAST(sum(CASE WHEN c.c4_n_sentences >= 3 AND NOT c.c4_has_curly
-                      AND NOT c.c4_has_lorem AND c.c4_n_stop8 >= 2
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_c4_keep,
-       CAST(sum(CASE WHEN c.c4_has_curly THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_has_curly,
-       CAST(sum(CASE WHEN c.c4_has_lorem THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_has_lorem,
-       CAST(sum(CASE WHEN c.c4_n_stop8 >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_stopword_pass,
-       CAST(sum(CASE WHEN l.lang_pred = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_lang_en,
-       CAST(sum(CASE WHEN g.g_keep AND c.c4_n_sentences >= 3
-                      AND NOT c.c4_has_curly AND NOT c.c4_has_lorem
-                      AND c.c4_n_stop8 >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_all_gates
-FROM g JOIN c USING (doc_id) JOIN l USING (doc_id)
-"""
-
-
 _CHUNK_SZ, _CHUNK_ST = 32, 24
 
 
@@ -966,13 +819,6 @@ def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_near_dup_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id", bits=16,
         max_hamming=3, hash_mode="portable",
-    )
-
-
-def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.fingerprint(
-        _t(spark, sf_dir, "documents"), "text", "doc_id", n=3,
-        hash_mode="portable",
     )
 
 
@@ -1245,7 +1091,7 @@ def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_* — language ID / quality / tokens
+# text_* — language ID / quality
 
 
 def _q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1382,57 +1228,6 @@ FROM f
 """
 
 
-def _q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res = text_analysis.token_count(_t(spark, sf_dir, "documents"))
-    return res.select("doc_id", "ws_tokens", "bpe_tokens")
-
-
-_TOKEN_SQL = f"""
-SELECT doc_id,
-  CAST(len(string_split(text, ' ')) AS INTEGER) AS ws_tokens,
-  CAST(len(regexp_extract_all(text, '{text_analysis.TOKEN_PATTERN}'))
-       AS INTEGER) AS bpe_tokens
-FROM documents
-"""
-
-
-def _q_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.token_frequencies(
-        _t(spark, sf_dir, "documents"), min_count=5
-    )
-
-
-_TOKEN_FREQ_SQL = """
-SELECT token, count(*) AS n
-FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-GROUP BY token HAVING count(*) >= 5
-"""
-
-
-def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.repetition_ratio(
-        _t(spark, sf_dir, "documents"), n=2
-    )
-
-
-_REPETITION_SQL = """
-WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-g AS (SELECT doc_id,
-        CASE WHEN len(ws) >= 2 THEN
-          list_transform(generate_series(0, len(ws) - 2),
-            i -> array_to_string(list_slice(ws, i + 1, i + 2), ' '))
-        ELSE [] END AS grams
-      FROM w)
-SELECT doc_id, CAST(len(grams) AS INTEGER) AS n_grams,
-  CASE WHEN len(grams) > 0 THEN
-    CAST(list_aggregate(list_transform(list_distinct(grams),
-           g2 -> len(list_filter(grams, x -> x = g2))), 'max') AS DOUBLE)
-      / len(grams)
-  ELSE 0.0 END AS max_gram_ratio
-FROM g
-"""
-
-
 def _q_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = text_analysis.gopher_rules(_t(spark, sf_dir, "documents"))
     return res.select(
@@ -1546,34 +1341,8 @@ SELECT doc_id, n_emails, n_ips, n_phones, s AS clean_text FROM t3
 """
 
 
-# Gopher duplicate-line stats (word-separated for the oracle twin — the
-# testdata text has no newlines; pytest covers the '\n' case).
-_DUP_LINES_SQL = """
-WITH l AS (SELECT doc_id, unnest(string_split(text, ' ')) AS line
-           FROM documents),
-c AS (SELECT doc_id, line, count(*) AS n, length(line) AS len
-      FROM l GROUP BY 1, 2)
-SELECT doc_id,
-       CAST(sum(n) AS INTEGER) AS n_lines,
-       CAST(count(*) AS INTEGER) AS n_distinct,
-       CAST(sum(n * len) AS BIGINT) AS total_chars,
-       round((sum(n) - count(*)) / sum(n), 6) AS dup_line_frac,
-       CASE WHEN sum(n * len) > 0 THEN
-         round(sum(CASE WHEN n > 1 THEN n * len ELSE 0 END)
-               / sum(n * len), 6)
-       ELSE 0.0 END AS dup_char_frac
-FROM c GROUP BY doc_id
-"""
-
-
-def _q_dup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.duplicate_line_stats(
-        _t(spark, sf_dir, "documents"), sep=" "
-    )
-
-
 # ---------------------------------------------------------------------------
-# benchmark decontamination + per-domain corpus stats
+# benchmark decontamination
 
 _DECONTAM_SQL = f"""
 WITH words AS ({_WORDS_CTE}),
@@ -1602,21 +1371,6 @@ dirty AS (
   GROUP BY c.doc_id, b.bench_id, s.sz
   HAVING count(*) / s.sz >= 0.5)
 SELECT doc_id FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM dirty)
-"""
-
-_DOMAIN_SQL = """
-WITH w AS (SELECT source, lang, text, string_split(text, ' ') AS ws
-           FROM documents)
-SELECT source AS domain,
-       count(*) AS n_docs,
-       CAST(sum(length(text)) AS BIGINT) AS total_chars,
-       CAST(sum(len(ws)) AS BIGINT) AS total_words,
-       count(DISTINCT lang) AS n_langs,
-       round(CAST(sum(len(ws)) AS BIGINT) / count(*), 6) AS mean_words,
-       round(CAST(sum(len(list_filter(ws, x -> length(x) <= 2)))
-                  AS BIGINT)
-             / CAST(sum(len(ws)) AS BIGINT), 6) AS short_word_frac
-FROM w GROUP BY source
 """
 
 
@@ -1649,10 +1403,6 @@ def _q_decontam_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=3,
         threshold=0.5,
     ).select("doc_id")
-
-
-def _q_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.corpus_domain_stats(_t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -2049,18 +1799,6 @@ def _q_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return kept.select("doc_id", F.col("_host").alias("host"))
 
-
-def _q_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.normalize_text(
-        _t(spark, sf_dir, "documents")
-    ).select("doc_id", "norm_text")
-
-
-_NORMALIZE_SQL = (
-    "SELECT doc_id, "
-    + text_analysis.normalize_text_sql_duckdb("text")
-    + " AS norm_text FROM documents"
-)
 
 # per-domain cap: same synthetic url shape as url_domain_filter
 _CAP_URL_EXPR = (
@@ -3031,30 +2769,6 @@ def _q_winnow_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Quantile-bucket assignment (text_analysis.bucket_by_quantiles — the
-# CCNet head/middle/tail shape): quartiles of n_chars, thresholds =
-# quantile_cont ≙ percentile rounded to 9 dp before the compare (the
-# operator's determinism contract), integer column so row values are
-# engine-exact.
-_BUCKET_SQL = """
-WITH q AS (SELECT quantile_cont(n_chars, [2.5e-1, 5e-1, 7.5e-1]) AS t
-           FROM documents)
-SELECT doc_id,
-       CASE WHEN n_chars IS NULL THEN NULL
-            WHEN n_chars <= round(t[1], 9) THEN 'q0'
-            WHEN n_chars <= round(t[2], 9) THEN 'q1'
-            WHEN n_chars <= round(t[3], 9) THEN 'q2'
-            ELSE 'q3' END AS bucket
-FROM documents CROSS JOIN q
-"""
-
-
-def _q_bucket_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return text_analysis.bucket_by_quantiles(
-        _t(spark, sf_dir, "documents"), "n_chars"
-    ).select("doc_id", "bucket")
-
-
 def _q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators import dedup
 
@@ -3063,82 +2777,6 @@ def _q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=_WINNOW_K,
         w=_WINNOW_W,
         hash_mode="portable",
-    )
-
-
-# BM25 ranked retrieval (operators/text_analysis.py bm25_topk): four
-# fixed queries over the documents table, Lucene non-negative idf,
-# k1=1.2 / b=0.75.  idf's ln is not cross-engine bit-identical
-# (CLAUDE.md transcendental rule) so both engines round the token-sorted
-# sequential fold to 9 dp AND rank on the rounded score (rank stays
-# reproducible where raw scores differ at the ulp); float literals are
-# e-notation (the DECIMAL-literal trap); list_reduce's missing 0-init
-# matches Spark's `0.0 + x` because every BM25 term is > 0.
-_BM25_QUERIES = [
-    (0, "key agg row"),
-    (1, "scan slow table"),
-    (2, "spark window join vector"),
-    (3, "nosuchtoken row"),
-]
-
-_BM25_SQL = f"""
-WITH q(query_id, query) AS (VALUES {", ".join(
-    f"({i}, '{s}')" for i, s in _BM25_QUERIES)}),
-tok AS (SELECT doc_id, w FROM
-          (SELECT doc_id,
-                  unnest(string_split(lower(coalesce(text, '')), ' ')) AS w
-           FROM documents)
-        WHERE w <> ''),
-tf AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf
-       FROM tok GROUP BY doc_id, w),
-dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf
-       GROUP BY doc_id),
-dfreq AS (SELECT w, CAST(count(*) AS BIGINT) AS dfc FROM tf GROUP BY w),
-tot AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS nd,
-               (SELECT CAST(coalesce(sum(tf), 0) AS BIGINT) FROM tf)
-                 AS tt),
-qt AS (SELECT DISTINCT query_id, w FROM
-         (SELECT query_id,
-                 unnest(string_split(lower(coalesce(query, '')), ' ')) AS w
-          FROM q)
-       WHERE w <> ''),
-cand AS (SELECT qt.query_id, tf.doc_id, tf.w,
-           ln(1e0 + (tot.nd - dfreq.dfc + 5e-1) / (dfreq.dfc + 5e-1))
-             * tf.tf * 2.2e0
-             / (tf.tf + 1.2e0 * (2.5e-1
-                + 7.5e-1 * dl.dl / (tot.tt / tot.nd))) AS ts
-         FROM tf JOIN qt ON tf.w = qt.w
-                 JOIN dfreq ON tf.w = dfreq.w
-                 JOIN dl ON tf.doc_id = dl.doc_id
-                 CROSS JOIN tot),
-agg AS (SELECT query_id, doc_id,
-               CAST(count(*) AS INTEGER) AS n_hit,
-               list(ts ORDER BY w) AS l
-        FROM cand GROUP BY query_id, doc_id),
-sc AS (SELECT query_id, doc_id, n_hit,
-              round(list_reduce(l, (a, x) -> a + x), 9) AS score_r
-       FROM agg),
-rk AS (SELECT *, row_number() OVER (
-         PARTITION BY query_id ORDER BY score_r DESC, doc_id ASC) AS rnk
-       FROM sc)
-SELECT CAST(query_id AS BIGINT) AS query_id, doc_id, n_hit, score_r,
-       CAST(rnk AS INTEGER) AS rank
-FROM rk WHERE rnk <= 10
-"""
-
-
-def _q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    qf = spark.createDataFrame(
-        _BM25_QUERIES, "query_id long, query string"
-    )
-    return text_analysis.bm25_topk(
-        _t(spark, sf_dir, "documents"), qf, k=10
-    ).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        "doc_id",
-        "n_hit",
-        "score_r",
-        "rank",
     )
 
 
@@ -3168,17 +2806,13 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "corpus_domain_cap": (_q_cap_domain, _CAP_DOMAIN_SQL),
     "sim_cosine_topk": (_q_cosine_topk, _COS_TOPK_SQL),
     "dedup_winnow": (_q_winnow, _WINNOW_SQL),
-    "text_bm25_topk": (_q_bm25, _BM25_SQL),
     "sim_prototype_prune": (_q_prototype_prune, _PROTO_PRUNE_SQL),
     "dedup_cluster_best": (_q_cluster_best, _CLUSTER_BEST_SQL),
     "corpus_boilerplate_filter": (_q_boilerplate_filter, _BP_FILTER_SQL),
     "corpus_boilerplate_lines": (_q_boilerplate_lines, _BP_LINES_SQL),
     "sim_semdedup_pairs": (_q_semdedup_pairs, _SEMDEDUP_PAIRS_SQL),
     "sim_semdedup_corpus": (_q_semdedup_corpus, _SEMDEDUP_CORPUS_SQL),
-    "corpus_ngram_report": (_q_ngram_report, _NGRAM_REPORT_SQL),
     "corpus_pack_tokens": (_q_pack_tokens, _PACK_TOKENS_SQL),
-    "text_tfidf_keywords": (_q_tfidf, _TFIDF_SQL),
-    "corpus_quantile_report": (_q_quantile_report, _QUANTILE_SQL),
     # moved up: implementation changed in the r5 review-hardening
     "extract_html": (_q_extract_html, _HTML_SQL),
     "dedup_url_canonical": (_q_url_dedup, _URL_DEDUP_SQL),
@@ -3204,17 +2838,15 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "text_quality_filter": (_q_quality_filter, _quality_filter_sql()),
     "pii_scrub": (_q_pii_scrub, _pii_sql()),
     "sim_ivf_trained": (_q_ivf_trained, _IVF_TRAINED_SQL),
-    # the two late-close rows below (winnow cross-snapshot pairs,
-    # quantile buckets) sit inside the driver's ~50-entry budget
+    # the late-close winnow cross-snapshot row sits inside the driver's
+    # ~50-entry budget; so does every row down to decontam_clean_corpus
     "dedup_winnow_cross": (_q_winnow_cross, _WINNOW_CROSS_SQL),
-    "corpus_quantile_buckets": (_q_bucket_quantiles, _BUCKET_SQL),
     "corpus_shard": (_q_shard_corpus, _SHARD_SQL),
     "dedup_incremental": (_q_incremental_dedup, _INCREMENTAL_SQL),
     "dedup_incremental_near": (_q_incremental_near, _INCREMENTAL_NEAR_SQL),
     "text_c4_line_filter": (_q_c4_line_filter, _C4_LINE_SQL),
     "text_chunks": (_q_chunk_text, _CHUNK_SQL),
     "text_word_blocklist": (_q_word_blocklist, _WORD_BLOCKLIST_SQL),
-    "corpus_gate_report": (_q_gate_report, _gate_report_sql()),
     "dedup_bloom_bitmap": (_q_bloom_bitmap, _BLOOM_BITMAP_SQL),
     "dedup_latest_capture": (_q_latest_capture, _LATEST_CAPTURE_SQL),
     "text_classifier_score": (_q_classifier_score, _CLS_SCORE_SQL),
@@ -3225,10 +2857,8 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "text_lm_score": (_q_lm_score, _LM_SCORE_SQL),
     "decontam_overlap": (_q_decontam_overlap, _DECONTAM_SQL),
     "decontam_clean_corpus": (_q_decontam_clean, _DECONTAM_CLEAN_SQL),
-    "corpus_domain_stats": (_q_domain_stats, _DOMAIN_SQL),
     "dedup_clusters": (_q_dup_clusters, _CLUSTERS_SQL),
     "dedup_cluster_corpus": (_q_cluster_corpus, _CLUSTER_CORPUS_SQL),
-    "text_normalize": (_q_normalize, _NORMALIZE_SQL),
     # (2) independent-plan oracle rows — training-data dedup
     "dedup_filtered_corpus": (_q_dedup_filtered_corpus, _DEDUP_FILTER_SQL),
     "dedup_minhash": (_q_minhash, _MINHASH_SQL),
@@ -3241,16 +2871,11 @@ _CASES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] =
     "text_c4_rules": (_q_c4_rules, _C4_SQL),
     "events_hour_rollup": (_q_events_hour, _EVENTS_HOUR_SQL),
     # text analysis
-    "text_token_count": (_q_token_count, _TOKEN_SQL),
-    "text_fingerprint": (_q_fingerprint, _FINGERPRINT_SQL),
-    "text_token_freq": (_q_token_freq, _TOKEN_FREQ_SQL),
-    "text_repetition": (_q_repetition, _REPETITION_SQL),
     "text_gopher_rules": (_q_gopher, _GOPHER_SQL),
-    # deterministic dataset split + PII + duplicate-line stats
+    # deterministic dataset split and sampling
     "corpus_split": (_q_assign_split, _SPLIT_SQL),
     "corpus_sample": (_q_sample, _SAMPLE_SQL),
     "corpus_stratified_sample": (_q_stratified, _STRATIFIED_SQL),
-    "text_dup_lines": (_q_dup_lines, _DUP_LINES_SQL),
     # extraction-semantic analogues with independent Spark plans
     # (SURVEY.md §2: P1-P5, F3/F7, S6, A2, A4)
     "ext_ignore_predicates": (_q_ignore_predicates, _IGNORE_SQL),

@@ -2,11 +2,12 @@
 hierarchical text assembly.
 
 Reference: document.py:625-642 (postprocess_court_doc), document.py:196-207 +
-:328 + :389 (text property joins).  These are pure string functions; the
-Spark pipeline evaluates them BOTH in-kernel (oracle) and as SQL expressions
-(higher-order functions over the nested blocks column) — the SQL variant is
-used in the distributed plan, the kernel variant in the pure-Python oracle,
-and tests pin them equal.
+:328 + :389 (text property joins).  These are pure string functions, and
+both the distributed plan and the pure-Python oracle run them: ``extract()``
+applies them per page inside its ``mapInArrow`` routine
+(``extract_udfs._extract_page``).  ``pipeline.POSTPROCESS_BLOCKS_EXPR`` is
+their SQL twin (higher-order functions over the nested blocks column); only
+perfbench's layer-attribution view (``pipeline.postprocess_stage``) runs it.
 """
 
 from __future__ import annotations

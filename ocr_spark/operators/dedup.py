@@ -491,9 +491,9 @@ def boilerplate_lines(
 
     Plan shape: explode → per-(digest, doc) counts (map-side combined)
     → per-digest totals, so document frequency is a plain ``count(*)``
-    instead of a ``count_distinct`` expand over the occurrence list
-    (the ngram_report pattern).  The line text rides through as a
-    ``min`` fold (all occurrences of a digest share it)."""
+    instead of a ``count_distinct`` expand over the occurrence list.
+    The line text rides through as a ``min`` fold (all occurrences of a
+    digest share it)."""
     _check_line_params(delimiter, min_docs)
     keys = ([scope_col] if scope_col is not None else []) + ["digest"]
     digested = _exploded_lines(
@@ -1315,9 +1315,8 @@ def winnow_fingerprints(
     ``w + k - 1`` words between two documents contributes at least one
     IDENTICAL selected fingerprint to both, while only ~``2/(w+1)`` of
     gram hashes are kept — a tunable-density substring-match index
-    (contrast :func:`fingerprint`, which keeps one global min/max pair
-    per doc and can only say "probably same corpus", not "share a
-    passage").
+    (one global min/max hash pair per doc could only say "probably same
+    corpus", not "share a passage").
 
     Output: one row per selected fingerprint, ``(id_col, pos, fp)`` with
     ``pos`` the 1-based gram index.  Documents shorter than ``k`` words

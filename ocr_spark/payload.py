@@ -40,8 +40,14 @@ def _fmt_bbox(bbox: list[float]) -> str:
 
 
 def _parse_bbox(raw: bytes) -> list[float]:
+    """``x1,y1,x2,y2`` → four floats.  Any other coordinate count raises
+    here, inside ``decode_doc``, so a malformed box is a PARSE_ERROR and
+    never reaches the page kernels.  ``nan`` and ``±inf`` parse, as
+    ``float()`` parses them: the kernels then apply the reference's
+    scalar semantics to them (tests/test_properties.py)."""
     # float() accepts ASCII bytes directly; map() keeps the loop in C.
-    return list(map(float, raw.split(b",")))
+    x1, y1, x2, y2 = map(float, raw.split(b","))
+    return [x1, y1, x2, y2]
 
 
 def _b64_spans(spans: list[str]) -> str:

@@ -241,6 +241,39 @@ class TestPayloadCorruption:
         with pytest.raises((ValueError, binascii.Error)):
             decode_doc(broken)
 
+    @pytest.mark.parametrize("n_coords", [3, 5])
+    def test_wrong_bbox_arity_is_parse_error(self, n_coords):
+        """A bbox with other than four coordinates is a malformed payload:
+        the decode raises, so the document is a PARSE_ERROR row (not an
+        EXTRACT_ERROR from the probe's unpack) and the oracle raises."""
+        import pyarrow as pa
+
+        from ocr_spark.operators.extract_udfs import extract_doc_rows
+
+        data = self._doc()
+        start = data.find(b'<nline bbox="') + len(b'<nline bbox="')
+        end = data.find(b'"', start)
+        coords = data[start:end].split(b",")
+        assert len(coords) == 4
+        coords = coords[:3] if n_coords == 3 else coords + [b"1.0"]
+        broken = data[:start] + b",".join(coords) + data[end:]
+
+        batch = pa.RecordBatch.from_pydict(
+            {
+                "url": ["u://bad-bbox"],
+                "warc_ts": pa.array([0], pa.timestamp("us", tz="UTC")),
+                "html": [broken],
+                "lang": ["en"],
+            }
+        )
+        [out] = list(extract_doc_rows(iter([batch])))
+        row = out.to_pylist()[0]
+        assert row["status"] == "FAILED"
+        assert row["error"].startswith("PARSE_ERROR"), row["error"]
+        assert row["pages"] == [] and row["n_pages"] == 0
+        with pytest.raises(ValueError, match="values to unpack"):
+            extract_document(broken, "en")
+
 
 class TestPayloadPageScan:
     """The page scan matches each page's header in place and slices its

@@ -203,7 +203,8 @@ class TestPipelineVariants:
         self, spark
     ):
         """A payload that decodes cleanly but blows up inside the page
-        kernels (here: a 3-coordinate bbox) must become an EXTRACT_ERROR
+        kernels (here: a NaN layout coordinate, which the detector's int
+        cast rejects) must become an EXTRACT_ERROR
         lineage row — never a Spark task failure, and never poison the
         healthy documents sharing its batch."""
         import datetime as dt
@@ -214,7 +215,7 @@ class TestPipelineVariants:
         bad = (
             MAGIC
             + b'<doc dpi="200" kind="A"><page i="0" w="612.0" h="792.0">'
-            b'<layout type="text" bbox="1.0,2.0,3.0"/>'
+            b'<layout type="text" bbox="nan,2.0,3.0,4.0"/>'
             b'<nline bbox="1.0,2.0,3.0,4.0" s="aGk="/></page></doc>'
         )
         good = make_doc(1)
@@ -253,7 +254,7 @@ class TestPipelineVariants:
         )
         bad1 = (
             b'<page i="1" w="612.0" h="792.0">'
-            b'<layout type="text" bbox="1.0,2.0,3.0"/>'
+            b'<layout type="text" bbox="nan,2.0,3.0,4.0"/>'
             b'<nline bbox="74.0,75.0,538.0,99.0" s="YmFk"/></page>'
         )
         good2 = (

@@ -456,35 +456,3 @@ class TestWinnowBm25Plans:
         )
         for op in ("Exchange", "Window", "Join"):
             assert op not in plan, (op, plan)
-
-    def test_bm25_is_query_bounded_with_three_scans(self, spark):
-        """BM25's plan must broadcast-join the token stream against the
-        query terms BEFORE any aggregation: three corpus scans (stats /
-        tf / df — Spark re-instantiates shared build subtrees, CLAUDE.md)
-        and every hash exchange keyed on match-derived columns.  The
-        naive inverted-index shape this guards against instantiated the
-        full-vocabulary (doc, token) tf aggregate four times — ~5 scans
-        plus two corpus-wide shuffles."""
-        import re
-
-        from ocr_spark.operators.text_analysis import bm25_topk
-
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        )
-        qf = spark.createDataFrame(
-            [(0, "key agg row")], "query_id long, query string"
-        )
-        plan = (
-            bm25_topk(docs, qf, k=5)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Scan parquet") == 3, plan
-        allowed = ("query_id", "doc_id", "token", "_salt", "_dl")
-        for keys in re.findall(
-            r"Exchange hashpartitioning\(([^)]*)\)", plan
-        ):
-            names = re.findall(r"([A-Za-z_][A-Za-z0-9_]*)#", keys)
-            assert all(n in allowed for n in names), keys

@@ -66,3 +66,16 @@ def test_unreached_defs_is_transitive(tmp_path, capsys):
         ("f", "bench"),
         ("g", "bench"),
     ]
+
+
+def test_text_analysis_has_no_unreached_defs(capsys):
+    """Every def left in operators/text_analysis.py is reached from a job
+    or an example; an operator that only a bench row, a contract row or a
+    test calls does not belong in the curation chain's module."""
+    assert _load_tool("unreached_defs").main(["x", str(REPO)]) == 0
+    rows = [
+        line
+        for line in capsys.readouterr().out.splitlines()
+        if line.startswith("ocr_spark/operators/text_analysis.py")
+    ]
+    assert rows == []

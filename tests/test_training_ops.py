@@ -331,24 +331,6 @@ class TestTextAnalysis:
                 r.lexical_diversity, r.n_distinct_words / r.n_words
             )
 
-    def test_token_count(self, docs):
-        from ocr_spark.operators.text_analysis import token_count
-
-        out = token_count(docs.limit(20)).collect()
-        for r in out:
-            assert r.ws_tokens == len(r.text.split(" "))
-            assert r.bpe_tokens >= r.ws_tokens  # punct adds tokens, never removes
-
-    def test_fingerprint_stable(self, docs):
-        from ocr_spark.operators.text_analysis import fingerprint
-
-        a = {r.doc_id: (r.fp_min, r.fp_max, r.fp_size)
-             for r in fingerprint(docs.limit(30)).collect()}
-        b = {r.doc_id: (r.fp_min, r.fp_max, r.fp_size)
-             for r in fingerprint(docs.limit(30)).collect()}
-        assert a == b and len(a) == 30
-
-
 class TestUrlCanonicalization:
     def test_normalization_cases(self, spark):
         from pyspark.sql import functions as F
@@ -423,31 +405,6 @@ class TestUrlCanonicalization:
 
 
 class TestCorpusQualityOps:
-    def test_token_frequencies_sum_to_corpus(self, spark):
-        from ocr_spark.operators.text_analysis import token_frequencies
-
-        df = spark.createDataFrame(
-            [(1, "a b a c"), (2, "a b")], "doc_id long, text string"
-        )
-        got = {r.token: r.n for r in token_frequencies(df).collect()}
-        assert got == {"a": 3, "b": 2, "c": 1}
-
-    def test_repetition_ratio_flags_repeats(self, spark):
-        from ocr_spark.operators.text_analysis import repetition_ratio
-
-        df = spark.createDataFrame(
-            [
-                (1, "spam ham " * 20),     # "spam ham"/"ham spam" repeat
-                (2, "one two three four five six seven"),
-                (3, "x"),                   # shorter than n
-            ],
-            "doc_id long, text string",
-        )
-        got = {r.doc_id: r for r in repetition_ratio(df, n=2).collect()}
-        assert got[1].max_gram_ratio > 0.4
-        assert got[2].max_gram_ratio == pytest.approx(1 / 6)
-        assert got[3].n_grams == 0 and got[3].max_gram_ratio == 0.0
-
     def test_gopher_rules_keep_and_reject(self, spark):
         from ocr_spark.operators.text_analysis import gopher_rules
 
@@ -699,27 +656,6 @@ class TestDecontamination:
         assert "SortMergeJoin" not in plan
 
 
-class TestDomainStats:
-    def test_rollup_values(self, spark):
-        from ocr_spark.operators.text_analysis import corpus_domain_stats
-
-        df = spark.createDataFrame(
-            [
-                (1, "a bb ccc dddd", "en", "siteA"),
-                (2, "ee ff gg hh ii jj", "de", "siteA"),
-                (3, "one two", "en", "siteB"),
-            ],
-            "doc_id long, text string, lang string, source string",
-        )
-        got = {r.domain: r for r in corpus_domain_stats(df).collect()}
-        a = got["siteA"]
-        assert (a.n_docs, a.total_words, a.n_langs) == (2, 10, 2)
-        assert a.mean_words == 5.0
-        assert a.short_word_frac == round(8 / 10, 6)  # a,bb + ee..jj
-        b = got["siteB"]
-        assert (b.n_docs, b.total_words, b.n_langs) == (1, 2, 1)
-
-
 class TestPiiScrub:
     def test_redaction_and_counts(self, spark):
         from ocr_spark.operators.pii import pii_document_flags, scrub_pii
@@ -753,26 +689,6 @@ class TestPiiScrub:
         r = scrub_pii(df).collect()[0]
         assert (r.n_emails, r.n_phones) == (1, 0)
         assert r.clean_text == "mail <EMAIL> now"
-
-
-class TestDuplicateLineStats:
-    def test_newline_docs(self, spark):
-        from ocr_spark.operators.text_analysis import duplicate_line_stats
-
-        df = spark.createDataFrame(
-            [
-                (1, "alpha\nbeta\nalpha\ngamma\nalpha"),
-                (2, "one\ntwo\nthree"),
-                (3, ""),
-            ],
-            "doc_id long, text string",
-        )
-        got = {r.doc_id: r for r in duplicate_line_stats(df).collect()}
-        assert (got[1].n_lines, got[1].n_distinct) == (5, 3)
-        assert got[1].dup_line_frac == 0.4          # 2 of 5 are repeats
-        assert got[1].dup_char_frac == 0.625        # 15 of 24 chars
-        assert got[2].dup_line_frac == 0.0
-        assert got[3].total_chars == 0 and got[3].dup_char_frac == 0.0
 
 
 class TestPiiPhonePrecision:
@@ -1404,118 +1320,6 @@ class TestSequencePacking:
         assert stream == want
 
 
-class TestTfidfKeywords:
-    def test_hand_computed_scores_and_ranks(self, spark):
-        """4-doc toy corpus vs hand-computed smoothed tf-idf:
-        score = tf * (ln((n_docs+1)/(df+1)) + 1)."""
-        from ocr_spark.operators.text_analysis import tfidf_keywords
-
-        df = spark.createDataFrame(
-            [
-                (1, "the cat sat on the mat"),
-                (2, "the dog ate the cat food"),
-                (3, "quantum flux capacitor the"),
-                (4, None),  # NULL doc: zero keyword rows (documented)
-            ],
-            "doc_id long, text string",
-        )
-        rows = tfidf_keywords(df, k=3).collect()
-        by_doc = {}
-        for r in rows:
-            by_doc.setdefault(r.doc_id, []).append(r)
-        assert sorted(by_doc) == [1, 2, 3]
-        idf = lambda dfc: math.log(5 / (dfc + 1)) + 1  # noqa: E731
-        d1 = sorted(by_doc[1], key=lambda r: r.rank)
-        # 'the' appears in 3 docs but tf=2 beats the df=1 singletons
-        assert [(r.token, r.tf) for r in d1] == [
-            ("the", 2), ("mat", 1), ("on", 1)  # ties break token ASC
-        ]
-        assert d1[0].score == pytest.approx(2 * idf(3))
-        assert d1[1].score == pytest.approx(idf(1))
-        d3 = sorted(by_doc[3], key=lambda r: r.rank)
-        assert [r.token for r in d3] == ["capacitor", "flux", "quantum"]
-
-    def test_broadcast_counts_identical(self, spark):
-        from ocr_spark.operators.text_analysis import tfidf_keywords
-
-        df = spark.createDataFrame(
-            [(i, f"w{i % 3} shared w{i % 5} shared") for i in range(40)],
-            "doc_id long, text string",
-        )
-        a = sorted(tuple(r) for r in tfidf_keywords(df, k=2).collect())
-        b = sorted(
-            tuple(r)
-            for r in tfidf_keywords(df, k=2, broadcast_counts=True).collect()
-        )
-        assert a == b
-
-    def test_rejects_bad_k(self, spark):
-        from ocr_spark.operators.text_analysis import tfidf_keywords
-
-        df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="k must be"):
-            tfidf_keywords(df, k=0)
-
-
-class TestQuantileReport:
-    def test_exact_matches_linear_interpolation(self, spark):
-        """Exact path (percentile) vs the rank = p*(n-1) linear
-        interpolation convention, computed by hand in Python."""
-        from ocr_spark.operators.text_analysis import quantile_report
-
-        vals = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5]
-        df = spark.createDataFrame(
-            [(i, float(v)) for i, v in enumerate(vals)],
-            "doc_id long, x double",
-        )
-        got = {
-            (r.metric, r.p): r.value
-            for r in quantile_report(
-                df, ["x"], probs=(0.0, 0.25, 0.5, 0.75, 1.0)
-            ).collect()
-        }
-
-        def q(p):
-            s = sorted(vals)
-            rank = p * (len(s) - 1)
-            lo, frac = int(rank), rank - int(rank)
-            hi = min(lo + 1, len(s) - 1)
-            return s[lo] + (s[hi] - s[lo]) * frac
-
-        for p in (0.0, 0.25, 0.5, 0.75, 1.0):
-            assert got[("x", p)] == pytest.approx(q(p)), p
-
-    def test_empty_input_yields_null_values_not_zero_rows(self, spark):
-        from ocr_spark.operators.text_analysis import quantile_report
-
-        df = spark.createDataFrame([], "doc_id long, x double")
-        rows = quantile_report(df, ["x"], probs=(0.5, 0.9)).collect()
-        assert len(rows) == 2
-        assert all(r.value is None for r in rows)
-
-    def test_approx_path_is_close_on_uniform_data(self, spark):
-        from ocr_spark.operators.text_analysis import quantile_report
-
-        df = spark.range(10_000).selectExpr("id", "CAST(id AS DOUBLE) x")
-        got = {
-            r.p: r.value
-            for r in quantile_report(
-                df, ["x"], probs=(0.1, 0.5, 0.9), relative_error=0.01
-            ).collect()
-        }
-        for p in (0.1, 0.5, 0.9):
-            assert abs(got[p] - p * 9999) <= 0.02 * 9999, (p, got[p])
-
-    def test_rejects_empty_cols_and_negative_error(self, spark):
-        from ocr_spark.operators.text_analysis import quantile_report
-
-        df = spark.createDataFrame([(1.0,)], "x double")
-        with pytest.raises(ValueError, match="cols"):
-            quantile_report(df, [])
-        with pytest.raises(ValueError, match="relative_error"):
-            quantile_report(df, ["x"], relative_error=-1.0)
-
-
 class TestConnectedComponents:
     """Duplicate-cluster assignment: min-label propagation vs a pure-
     Python union-find ground truth, convergence audit, and the
@@ -1984,36 +1788,6 @@ class TestSpanDedup:
 
 
 class TestNormalizeAndDomainCap:
-    def test_normalize_semantics(self, spark):
-        from ocr_spark.operators.text_analysis import normalize_text
-
-        df = spark.createDataFrame(
-            [
-                (1, "Hello,  World! (x)\tnew\nline"),
-                (2, "  already clean  "),
-                (3, "a_b-c.d"),
-            ],
-            "doc_id long, text string",
-        )
-        got = {r.doc_id: r.norm_text for r in normalize_text(df).collect()}
-        assert got[1] == "hello world x new line"
-        assert got[2] == "already clean"
-        assert got[3] == "a b c d"
-
-    def test_normalize_idempotent(self, docs, spark):
-        from ocr_spark.operators.text_analysis import normalize_text
-
-        once = normalize_text(docs).select(
-            "doc_id", F.col("norm_text").alias("text")
-        )
-        twice = normalize_text(once).select("doc_id", "norm_text")
-        diff = (
-            once.join(twice, "doc_id")
-            .filter(F.col("text") != F.col("norm_text"))
-            .count()
-        )
-        assert diff == 0
-
     def test_domain_cap_keeps_n_smallest_per_host(self, spark):
         from ocr_spark.operators.text_analysis import cap_per_domain
 
@@ -2627,36 +2401,6 @@ class TestChunkText:
             .toString()
         )
         assert "Exchange" not in plan and "Join" not in plan
-
-
-class TestCorpusGateReport:
-    def test_counts_match_per_doc_gates(self, docs):
-        from ocr_spark.operators.text_analysis import (
-            c4_rules,
-            corpus_gate_report,
-            gopher_rules,
-            language_id,
-        )
-
-        row = corpus_gate_report(docs.select("doc_id", "text")).collect()[0]
-        gated = c4_rules(gopher_rules(language_id(docs)))
-        assert row.n_docs == docs.count()
-        assert row.n_gopher_keep == gated.filter("g_keep").count()
-        assert row.n_c4_keep == gated.filter("c4_keep").count()
-        assert row.n_all_gates == gated.filter("g_keep AND c4_keep").count()
-        assert 0 <= row.n_lang_en <= row.n_docs
-
-    def test_single_aggregate_one_exchange(self, docs):
-        from ocr_spark.operators.text_analysis import corpus_gate_report
-
-        plan = (
-            corpus_gate_report(docs.select("doc_id", "text"))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan.count("Exchange") == 1  # the single-row final agg
-        assert "partial" in plan.lower()  # map-side combine
 
 
 class TestSharedFrameParamGuards:
@@ -3334,78 +3078,6 @@ class TestPrototypePrune:
             )
 
 
-class TestNgramReport:
-    """text_analysis.ngram_report — corpus boilerplate discovery."""
-
-    def test_counts_and_ranks_hand_corpus(self, spark):
-        from ocr_spark.operators.text_analysis import ngram_report
-
-        rows = [
-            (1, "sign up for our newsletter today"),
-            (2, "please sign up for our newsletter"),
-            # doc 3 repeats the gram: occurrences > docs
-            (3, "sign up for fun sign up for profit"),
-            (4, None),
-            (5, ""),
-            (6, "too short"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {
-            r.ngram: (r.n_occurrences, r.n_docs)
-            for r in ngram_report(df, n=3, top_k=100, min_docs=1).collect()
-        }
-        assert got["sign up for"] == (4, 3)
-        assert got["up for our"] == (2, 2)
-        assert got["for our newsletter"] == (2, 2)
-        assert got["up for fun"] == (1, 1)
-        # doc 6 has 2 words -> no trigram; NULL/empty contribute nothing
-        assert not any("too short" in g for g in got)
-
-    def test_min_docs_prunes_singletons(self, spark):
-        from ocr_spark.operators.text_analysis import ngram_report
-
-        df = spark.createDataFrame(
-            [(1, "a b c d"), (2, "a b c e")],
-            "doc_id long, text string",
-        )
-        got = {r.ngram for r in ngram_report(df, n=3, min_docs=2).collect()}
-        assert got == {"a b c"}
-
-    def test_topk_cut_is_deterministic_on_ties(self, spark):
-        from ocr_spark.operators.text_analysis import ngram_report
-
-        # ten distinct trigrams, every count 1: the k=3 cut must take the
-        # lexicographically first three, on any partitioning
-        docs = [(i, f"w{i:02d} x{i:02d} y{i:02d}") for i in range(10)]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        for parts in (1, 7):
-            got = [
-                r.ngram
-                for r in ngram_report(
-                    df.repartition(parts), n=3, top_k=3
-                ).collect()
-            ]
-            assert got == sorted(f"w{i:02d} x{i:02d} y{i:02d}"
-                                 for i in range(10))[:3]
-
-    def test_plan_topk_is_heap_not_global_sort(self, spark, docs):
-        from ocr_spark.operators.text_analysis import ngram_report
-
-        rep = ngram_report(docs, n=3, top_k=50, min_docs=2)
-        plan = rep._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan
-        # the rank must not materialize as a full sort of the gram table
-        assert "Sort " not in plan.replace("TakeOrderedAndProject", "")
-
-    def test_validation(self, spark, docs):
-        from ocr_spark.operators.text_analysis import ngram_report
-
-        with pytest.raises(ValueError, match="n must"):
-            ngram_report(docs, n=0)
-        with pytest.raises(ValueError, match="top_k"):
-            ngram_report(docs, top_k=0)
-
-
 class TestBoilerplateFilter:
     """corpus_boilerplate_filter removes ALL occurrences of high-document-
     frequency lines (vs corpus_line_dedup's keep-one winner), and
@@ -3650,105 +3322,6 @@ class TestWinnowFingerprints:
             winnow_fingerprints(df, w=0)
 
 
-class TestBm25Topk:
-    def test_matches_python_reference(self, spark):
-        from collections import Counter
-
-        from ocr_spark.operators.text_analysis import bm25_topk
-
-        docs = [
-            (1, "the cat sat on the mat"),
-            (2, "the dog ate the cat food"),
-            (3, "quantum flux capacitor the"),
-            (4, None),  # length 0, still counted in N / avgdl
-            (5, "cat cat cat dog"),
-        ]
-        qs = [(0, "cat dog"), (1, "quantum"), (2, "zzz missing"), (3, None)]
-        df = spark.createDataFrame(docs, "doc_id long, text string")
-        qf = spark.createDataFrame(qs, "query_id long, query string")
-        k1, b = 1.2, 0.75
-        toks = {
-            d: [w for w in (t or "").lower().split(" ") if w]
-            for d, t in docs
-        }
-        N = len(docs)
-        dl = {d: len(v) for d, v in toks.items()}
-        avgdl = sum(dl.values()) / N
-        tfd = {d: Counter(v) for d, v in toks.items()}
-        dfc = Counter()
-        for c in tfd.values():
-            for w in c:
-                dfc[w] += 1
-
-        def score(q, d):
-            s, hit = 0.0, 0
-            for w in sorted({w for w in (q or "").lower().split(" ") if w}):
-                tf = tfd[d].get(w, 0)
-                if not tf:
-                    continue
-                hit += 1
-                idf = math.log(1 + (N - dfc[w] + 0.5) / (dfc[w] + 0.5))
-                s += (
-                    idf
-                    * tf
-                    * (k1 + 1)
-                    / (tf + k1 * (1 - b + b * dl[d] / avgdl))
-                )
-            return round(s, 9), hit
-
-        exp = {}
-        for qid, q in qs:
-            scored = [
-                (d,) + score(q, d) for d, _ in docs if score(q, d)[1] > 0
-            ]
-            scored.sort(key=lambda x: (-x[1], x[0]))
-            for r, (d, s, h) in enumerate(scored, 1):
-                exp[(qid, d)] = (h, s, r)
-        got = {
-            (r.query_id, r.doc_id): (r.n_hit, r.score_r, r.rank)
-            for r in bm25_topk(df, qf, k=10).collect()
-        }
-        assert set(got) == set(exp)
-        for key, (h, s, r) in exp.items():
-            gh, gs, gr = got[key]
-            assert (gh, gr) == (h, r), key
-            assert gs == pytest.approx(s, abs=1e-12), key
-
-    def test_k_truncates_and_salted_rank_is_exact(self, spark):
-        from ocr_spark.operators.text_analysis import bm25_topk
-
-        df = spark.createDataFrame(
-            [(i, "common " + " ".join(f"u{i}w{j}" for j in range(i % 7)))
-             for i in range(200)],
-            "doc_id long, text string",
-        )
-        qf = spark.createDataFrame([(0, "common")], "query_id long, query string")
-        a = bm25_topk(df, qf, k=5, salts=8).collect()
-        bq = bm25_topk(df, qf, k=5, salts=1).collect()
-        assert len(a) == 5
-        assert sorted(tuple(r) for r in a) == sorted(tuple(r) for r in bq)
-
-    def test_broadcast_counts_identical_and_guards(self, spark):
-        from ocr_spark.operators.text_analysis import bm25_topk
-
-        df = spark.createDataFrame(
-            [(i, f"w{i % 3} shared w{i % 5}") for i in range(40)],
-            "doc_id long, text string",
-        )
-        qf = spark.createDataFrame(
-            [(0, "shared w1")], "query_id long, query string"
-        )
-        a = sorted(tuple(r) for r in bm25_topk(df, qf, k=3).collect())
-        c = sorted(
-            tuple(r)
-            for r in bm25_topk(df, qf, k=3, broadcast_counts=False).collect()
-        )
-        assert a == c
-        with pytest.raises(ValueError, match="k must be"):
-            bm25_topk(df, qf, k=0)
-        with pytest.raises(ValueError, match="k1 >= 0"):
-            bm25_topk(df, qf, b=1.5)
-
 class TestWinnowDifferential:
     def test_randomized_differential_sweep(self, spark):
         """200 seeded random docs across the degenerate regimes — tiny
@@ -3921,67 +3494,3 @@ class TestWinnowDifferential:
         assert capped == pairs(None)
         assert winnow_hot_fps(old, max_posting=2).count() == 0
 
-
-class TestBucketByQuantiles:
-    def test_quartiles_hand_computed(self, spark):
-        from ocr_spark.operators.text_analysis import bucket_by_quantiles
-
-        # values 1..8: quartile thresholds (rank p*(n-1)) = 2.75, 4.5,
-        # 6.25 -> buckets {1,2}, {3,4}, {5,6}, {7,8}; NULL -> NULL
-        df = spark.createDataFrame(
-            [(i, float(i)) for i in range(1, 9)] + [(99, None)],
-            "doc_id long, score double",
-        )
-        got = {
-            r.doc_id: r.bucket
-            for r in bucket_by_quantiles(df, "score").collect()
-        }
-        assert got == {
-            1: "q0", 2: "q0", 3: "q1", 4: "q1",
-            5: "q2", 6: "q2", 7: "q3", 8: "q3", 99: None,
-        }
-
-    def test_ccnet_head_middle_tail_fractions(self, spark):
-        from ocr_spark.operators.text_analysis import bucket_by_quantiles
-
-        df = spark.createDataFrame(
-            [(i, float(i)) for i in range(300)], "doc_id long, ppl double"
-        )
-        out = bucket_by_quantiles(
-            df, "ppl", probs=(1 / 3, 2 / 3),
-            labels=("head", "middle", "tail"),
-        )
-        counts = {r["bucket"]: r["count"]
-                  for r in out.groupBy("bucket").count().collect()}
-        assert abs(counts["head"] - 100) <= 1
-        assert abs(counts["middle"] - 100) <= 1
-        assert abs(counts["tail"] - 100) <= 1
-
-    def test_empty_and_guards(self, spark):
-        from ocr_spark.operators.text_analysis import bucket_by_quantiles
-
-        df = spark.createDataFrame([], "doc_id long, score double")
-        assert bucket_by_quantiles(df, "score").count() == 0
-        only_null = spark.createDataFrame(
-            [(1, None)], "doc_id long, score double"
-        )
-        rows = bucket_by_quantiles(only_null, "score").collect()
-        assert rows[0].bucket is None
-        with pytest.raises(ValueError, match="labels"):
-            bucket_by_quantiles(df, "score", labels=("a", "b"))
-        with pytest.raises(ValueError, match="strictly increasing"):
-            bucket_by_quantiles(df, "score", probs=(0.5, 0.25))
-        # a colliding output column is refused, never silently renamed
-        with pytest.raises(ValueError, match="'bucket' already exists"):
-            bucket_by_quantiles(
-                df.withColumn("bucket", df.score), "score"
-            )
-        # approx path assigns every row some bucket
-        big = spark.createDataFrame(
-            [(i, float(i % 97)) for i in range(500)],
-            "doc_id long, score double",
-        )
-        assert (
-            bucket_by_quantiles(big, "score", relative_error=0.01)
-            .filter("bucket IS NULL").count() == 0
-        )

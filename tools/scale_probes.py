@@ -14,10 +14,6 @@ known-bad plan shape for comparison); run manually::
                                           # (dsir_weights) vs the
                                           # zero-exchange inline fold
                                           # (dsir_weights_inline)
-    python tools/scale_probes.py bm25     # full inverted-index build
-                                          # (4x tf subtree, two corpus
-                                          # shuffles) vs the shipped
-                                          # query-bounded bm25_topk
 
 Methodology (the bench-hygiene rules from BENCH.md, applied to A/Bs):
 
@@ -456,197 +452,10 @@ def probe_dsir(n_docs: int | None = None, wpd: int | None = None,
     return out
 
 
-# --------------------------------------------------------------- BM25 probe
-
-BM25_DEFAULTS = (200_000, 80, 5000, 16)  # n_docs, wpd, vocab, n_queries
-
-
-def _bm25_queries(spark, vocab: int, n_queries: int):
-    """Deterministic 3-term queries over the corpus vocabulary, matching
-    _dsir_corpus's token formatting (lowercased base36)."""
-    import numpy as np
-
-    rows = []
-    for i in range(n_queries):
-        terms = [
-            "w" + np.base_repr((i * 37 + j * 11 + 1) % vocab, 36).lower()
-            for j in range(3)
-        ]
-        rows.append((i, " ".join(terms)))
-    return spark.createDataFrame(rows, "query_id long, query string")
-
-
-def _bm25_indexed(docs, qf, k=10, k1=1.2, b=0.75):
-    """Replay of the pre-fc12d61 bm25_topk plan: build the FULL
-    inverted index — a (doc, token) tf aggregate whose df / dl / total
-    consumers each re-instantiate the subtree (Spark does not
-    reuse-merge non-broadcast builds) — then semi-join query terms
-    against it.  ~5 corpus scans + two corpus-wide full-vocabulary
-    shuffles; the shipped operator broadcast-joins the query terms
-    BEFORE any aggregation."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    text = F.lower(F.coalesce(F.col("text"), F.lit("")))
-    qtext = F.lower(F.coalesce(F.col("query"), F.lit("")))
-    tok = docs.select(
-        "doc_id", F.explode(F.split(text, " ")).alias("token")
-    ).filter(F.col("token") != "")
-    tf = tok.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("_dl"))
-    dfreq = tf.groupBy("token").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_dfc")
-    )
-    totals = F.broadcast(
-        docs.agg(F.count(F.lit(1)).cast("bigint").alias("_nd")).join(
-            tf.agg(
-                F.coalesce(F.sum("tf"), F.lit(0)).cast("bigint").alias("_tt")
-            )
-        )
-    )
-    qterms = F.broadcast(
-        qf.select(
-            F.col("query_id"),
-            F.explode(F.split(qtext, " ")).alias("token"),
-        )
-        .filter(F.col("token") != "")
-        .distinct()
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("_nd") - F.col("_dfc") + F.lit(0.5))
-        / (F.col("_dfc") + F.lit(0.5))
-    )
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b)
-        + F.lit(b) * F.col("_dl") / (F.col("_tt") / F.col("_nd"))
-    )
-    cand = (
-        tf.join(qterms, "token")
-        .join(dfreq, "token")
-        .join(dl, "doc_id")
-        .join(totals)
-        .select(
-            "query_id",
-            "doc_id",
-            "token",
-            (idf * F.col("tf") * F.lit(k1 + 1.0) / denom).alias("_ts"),
-        )
-    )
-    agg = cand.groupBy("query_id", "doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("token", "_ts"))).alias(
-            "_terms"
-        ),
-        F.count(F.lit(1)).cast("int").alias("n_hit"),
-    )
-    scored = agg.select(
-        "query_id",
-        "doc_id",
-        "n_hit",
-        F.round(
-            F.expr(
-                "aggregate(_terms, CAST(0 AS DOUBLE), (a, s) -> a + s._ts)"
-            ),
-            9,
-        ).alias("score_r"),
-    )
-    order = [F.desc("score_r"), F.col("doc_id").asc()]
-    w1 = Window.partitionBy("query_id", "_salt").orderBy(*order)
-    scored = (
-        scored.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(8))
-        )
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_r1", "_salt")
-    )
-    w2 = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .withColumn("rank", F.col("rank").cast("int"))
-        .select("query_id", "doc_id", "n_hit", "score_r", "rank")
-    )
-
-
-def bm25_time(
-    variant: str, n_docs: int, wpd: int, vocab: int, n_queries: int
-) -> dict:
-    from ocr_spark.operators import text_analysis
-
-    spark = _spark(f"bm25-{variant}")
-    docs = _dsir_corpus(spark, n_docs, wpd, vocab)
-    qf = _bm25_queries(spark, vocab, n_queries)
-    if variant == "indexed":
-        df = _bm25_indexed(docs, qf)
-    elif variant == "bounded":
-        df = text_analysis.bm25_topk(docs, qf, k=10)
-    else:
-        raise SystemExit(f"unknown bm25 variant {variant!r}")
-    before = _shuffle_write_bytes(spark)
-    t0 = time.time()
-    _noop(df)
-    best = time.time() - t0
-    shuffle = _shuffle_write_bytes(spark) - before
-    t0 = time.time()
-    _noop(df)
-    best = min(best, time.time() - t0)
-    spark.stop()
-    return {
-        "variant": variant,
-        "sec": round(best, 2),
-        "shuffle_mb": round(shuffle / 2**20, 1),
-    }
-
-
-def bm25_verify(n_docs: int, wpd: int, vocab: int, n_queries: int) -> dict:
-    from ocr_spark.operators import text_analysis
-
-    spark = _spark("bm25-verify")
-    docs = _dsir_corpus(spark, n_docs, wpd, vocab)
-    qf = _bm25_queries(spark, vocab, n_queries)
-    a = _bm25_indexed(docs, qf)
-    b = text_analysis.bm25_topk(docs, qf, k=10)
-    mismatch = a.exceptAll(b).count() + b.exceptAll(a).count()
-    spark.stop()
-    return {"result_mismatch_rows": mismatch}
-
-
-def probe_bm25(n_docs: int | None = None, wpd: int | None = None,
-               vocab: int | None = None,
-               n_queries: int | None = None) -> dict:
-    n_docs, wpd, vocab, n_queries = (
-        n_docs or BM25_DEFAULTS[0],
-        wpd or BM25_DEFAULTS[1],
-        vocab or BM25_DEFAULTS[2],
-        n_queries or BM25_DEFAULTS[3],
-    )
-    args = [str(n_docs), str(wpd), str(vocab), str(n_queries)]
-    ix = _sub(["bm25-time", "indexed", *args])
-    bd = _sub(["bm25-time", "bounded", *args])
-    parity = _sub(["bm25-verify", *args])
-    out = {
-        "probe": "bm25_indexed_vs_query_bounded",
-        "n_docs": n_docs,
-        "words_per_doc": wpd,
-        "vocab": vocab,
-        "n_queries": n_queries,
-        "result_mismatch_rows": parity["result_mismatch_rows"],
-        "indexed_sec": ix["sec"],
-        "bounded_sec": bd["sec"],
-        "indexed_shuffle_mb": ix["shuffle_mb"],
-        "bounded_shuffle_mb": bd["shuffle_mb"],
-    }
-    out["speedup"] = round(out["indexed_sec"] / out["bounded_sec"], 2)
-    return out
-
-
 if __name__ == "__main__":
     if len(sys.argv) < 2:
         raise SystemExit(
-            "usage: python tools/scale_probes.py {bloom|bpe|dsir|bm25} "
+            "usage: python tools/scale_probes.py {bloom|bpe|dsir} "
             "[sizes...]"
         )
     which, rest = sys.argv[1], sys.argv[2:]
@@ -671,13 +480,5 @@ if __name__ == "__main__":
     elif which == "bpe-verify":
         nd, wp, vc, nm = [int(float(x)) for x in rest[:4]]
         print(json.dumps(bpe_verify(nd, wp, vc, nm)))
-    elif which == "bm25":
-        print(json.dumps(probe_bm25(*[int(float(x)) for x in rest])))
-    elif which == "bm25-time":
-        v, nd, wp, vc, nq = rest[0], *[int(float(x)) for x in rest[1:5]]
-        print(json.dumps(bm25_time(v, nd, wp, vc, nq)))
-    elif which == "bm25-verify":
-        nd, wp, vc, nq = [int(float(x)) for x in rest[:4]]
-        print(json.dumps(bm25_verify(nd, wp, vc, nq)))
     else:
         raise SystemExit(f"unknown probe {which!r}")
