@@ -131,7 +131,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
     timed("dedup_exact", dedup.exact_dedup(docs))
     sigs = dedup.minhash_signatures(docs, num_perm=8)
     timed("dedup_minhash_lsh", dedup.lsh_candidate_pairs(sigs, num_perm=8))
-    timed("dedup_simhash", dedup.simhash(docs))
     timed(
         "sim_cosine_topk",
         similarity.cosine_topk_bruteforce(
@@ -160,14 +159,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
     timed("dedup_line_corpus", dedup.corpus_line_dedup(docs))
     timed("dedup_boilerplate", dedup.corpus_boilerplate_filter(docs))
     timed("dedup_span_corpus", dedup.corpus_span_dedup(docs, width=50))
-    timed("dedup_winnow_fps", dedup.winnow_fingerprints(docs))
-    timed(
-        "dedup_winnow_cross",
-        dedup.winnow_cross_pairs(
-            docs.filter(F.col("doc_id") % 3 != 0),
-            docs.filter(F.col("doc_id") % 3 == 0),
-        ),
-    )
     from ocr_spark.operators import bloom
 
     # cross-snapshot dedup: new two-thirds vs old third, xxhash64 path
@@ -206,19 +197,6 @@ def operator_benches(spark, sf_dir: str) -> dict[str, float]:
     )
     _noop_write(cc)
     out["dedup_clusters"] = round(time.time() - t0, 3)
-    # straggler probe: 256 docs x 50k words with heavy repetition, built
-    # JVM-side, for the per-row cost of the longest documents
-    long_docs = spark.range(256).select(
-        F.col("id").alias("doc_id"),
-        F.expr(
-            "concat(repeat('lorem ipsum dolor sit amet consectetur ', 8000), "
-            "repeat('spam spam ', 1000))"
-        ).alias("text"),
-    )
-    # 64-bit signature over the same 50k-word docs — proves simhash hashes
-    # each token once (the old per-bit re-split shape paid a bits× factor
-    # exactly here: corpus-scale bits=64 on the longest documents)
-    timed("dedup_simhash64_50kword_docs", dedup.simhash(long_docs, bits=64))
     # BPE tokenizer: the sf corpus has a degenerate 31-word vocabulary
     # (train rounds would measure pure job latency), so train over a
     # JVM-synthesized corpus with a real vocab shape: 100k docs x 40

@@ -49,8 +49,8 @@ Word layout uses 63 bits per word (shifts 0..62): bit 63 of a signed
 ``(mask >> bit) & 1`` needs no sign reasoning in either engine.
 
 NULL text is treated as ``''`` throughout (hashing AND verify digest,
-both engines) — the simhash r3 lesson: NULL must not silently change
-row cardinality between code paths.
+both engines): NULL must not silently change row cardinality between
+code paths.
 
 No reference-repo counterpart (the reference is a single-node OCR
 service); this is part of the training-data-pipeline surface the brief

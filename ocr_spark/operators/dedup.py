@@ -3,15 +3,19 @@
 All operators are pure DataFrame plans (no Python in the hot path):
 
 - exact_dedup:        md5 hash-groupBy — one shuffle on the digest.
-- shingles:           word n-grams via higher-order functions (no explode
+- with_shingles:      word n-grams via higher-order functions (no explode
                       until the op that needs rows).
 - minhash_signatures: K-permutation MinHash; one explode + one groupBy.
 - lsh_candidate_pairs: banded LSH — equi-join on (band, band-hash) buckets,
                       the scale path for near-dup at 10^12 docs (bucket join
                       replaces the O(n²) similarity cross-join).
-- ngram_jaccard_pairs: exact verification (or small-corpus direct pairing).
-- simhash:            64/16-bit SimHash entirely via aggregate() higher-order
-                      functions — zero shuffles until the final self-join.
+- lsh_cross_pairs / incremental_near_dedup: the same banded join between
+                      a new and an old snapshot.
+- connected_components / dedup_by_clusters: pairs → clusters → one kept
+                      representative per cluster.
+- corpus_line_dedup / corpus_boilerplate_filter / corpus_span_dedup:
+                      corpus-global line, boilerplate-line and token-span
+                      removal.
 
 ``hash_mode='portable'`` switches xxhash64 → the md5-prefix hash that DuckDB
 can reproduce bit-identically (driver oracle parity); the default is the
@@ -22,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ._frames import fresh_names, resolve_strategy
+from ._frames import fresh_names
 from .bloom import digest_expr
 from .hashing import (
     MERSENNE,
@@ -40,7 +44,8 @@ def _hash_col(col: Column, mode: str) -> Column:
 def _hot_keys(posts: DataFrame, keys: list[str], cap: int) -> DataFrame:
     """``(keys…, n_docs)`` for every key whose posting list holds more
     than ``cap`` rows: the exclusion list of a capped
-    :func:`_posting_pairs` and, as-is, every ``*_hot_*`` audit view — one
+    :func:`_posting_pairs` and, as-is, both audit views
+    (:func:`lsh_hot_buckets`, ``similarity.semdedup_hot_cells``) — one
     definition, so an audit names exactly the keys its cap drops."""
     return (
         posts.groupBy(*keys)
@@ -56,13 +61,14 @@ def _posting_pairs(
     cap: int | None = None,
     other: DataFrame | None = None,
 ) -> DataFrame:
-    """The candidate-pair engine behind every bucket/posting pair
-    operator: an equi-join on ``keys`` (band bucket, shingle, fingerprint,
-    cell), never a cross join.  Without ``other`` it self-joins ``posts``
-    with ``a.id < b.id``; with ``other`` it joins new (``posts``) × old
-    (``other``).  Returns the raw join rows ``(keys…, doc_a, doc_b)`` plus
-    every other posting column once per side as ``<col>_a`` / ``<col>_b``;
-    the caller applies its own post-join step (distinct, verify, count).
+    """The candidate-pair engine behind the MinHash-LSH pair operators and
+    ``similarity.semdedup_pairs``: an equi-join on ``keys`` (a band
+    bucket or a cell), never a cross join.  Without ``other`` it
+    self-joins ``posts`` with ``a.id < b.id``; with ``other`` it joins new
+    (``posts``) × old (``other``).  Returns the raw join rows ``(keys…,
+    doc_a, doc_b)`` plus every other posting column once per side as
+    ``<col>_a`` / ``<col>_b``; the caller applies its own post-join step
+    (distinct, or a cosine verify).
 
     Pair joins carry ids: hand it postings only — payloads (vectors,
     text) rejoin after the pair set exists, or a hot key multiplies them
@@ -93,37 +99,6 @@ def _posting_pairs(
         F.col(f"b.{id_col}").alias("doc_b"),
         *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carried for s in "ab"],
     )
-
-
-def _check_frame(
-    frame: DataFrame,
-    name: str,
-    cols: list[str],
-    meta_col: str,
-    build: str,
-    **params,
-) -> None:
-    """Shared-frame guard: refuse a precomputed ``sig=`` / ``shingled=``
-    / ``fps=`` / ``banded=`` / ``cells=`` frame that lacks ``cols``, or
-    whose ``meta_col`` metadata records a build parameter other than the
-    one this call passed (``params``: metadata key → expected value; a
-    None expectation or an unstamped key is not checked).  Producers stamp
-    the metadata so a mismatch fails loudly instead of silently bucketing
-    under the wrong geometry."""
-    missing = set(cols) - set(frame.columns)
-    if missing:
-        raise ValueError(
-            f"{name} frame lacks columns {sorted(missing)} — build it "
-            f"with {build}"
-        )
-    meta = frame.schema[meta_col].metadata or {}
-    for key, want in params.items():
-        got = meta.get(key)
-        if want is not None and got is not None and got != want:
-            raise ValueError(
-                f"{name} frame was built with {key}={got!r}; this call "
-                f"passed {want!r} — rebuild it with {build}"
-            )
 
 
 def exact_dedup(
@@ -285,59 +260,6 @@ def lsh_candidate_pairs(
     )
 
 
-def _SIG_META(bits: int, hash_mode: str) -> dict:
-    """Column metadata :func:`simhash` stamps on its signature column so
-    a consumer handed a precomputed ``sig=`` frame can refuse a
-    parameter mismatch instead of silently slicing wrong-width bands."""
-    return {"simhash_bits": bits, "hash_mode": hash_mode}
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_posting: int | None = None,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity pairs ≥ threshold.
-
-    Shuffle on shingle (inverted index) → pair counts → join doc sizes.
-    Used to verify LSH candidates; direct use only on bounded corpora.
-
-    ``max_posting`` (off by default — it changes the measure) drops
-    shingles whose posting list exceeds the cap before the self-join: the
-    standard inverted-index stop-list against stop-shingle skew.  Capped
-    shingles still count toward doc sizes, so Jaccard becomes a
-    conservative UNDER-estimate — pairs can only be missed, never
-    inflated.  At verify scale a stop-shingle ("click here to", a
-    boilerplate footer n-gram) otherwise goes quadratic; pass the cap AND
-    run/log :func:`jaccard_hot_shingles` so the drop is never silent —
-    sharing ONE persisted ``(id, shingle)`` frame between the two calls
-    via ``shingled`` (build it with :func:`shingle_postings`; the capped
-    plan references the shingle explode four times otherwise)."""
-    sh = _shingle_posts(df, shingled, text_col, id_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    common = (
-        _posting_pairs(sh, ["shingle"], id_col, max_posting)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "common", "jaccard")
-    )
-
-
 def corpus_line_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -467,58 +389,6 @@ def _exploded_lines(
     )
 
 
-def boilerplate_lines(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-    min_line_chars: int = 5,
-    delimiter: str = "\n",
-    scope_col: str | None = None,
-) -> DataFrame:
-    """Corpus boilerplate-line report: every line occurring in at least
-    ``min_docs`` DISTINCT documents, with its document frequency and
-    total occurrence count — ``([scope,] line, n_docs, n_occurrences)``.
-    The audit twin of :func:`corpus_boilerplate_filter` (same
-    parameters → the report lists exactly the lines the filter removes);
-    run it first to calibrate ``min_docs``, or alongside the filter so
-    what was removed is never silent.
-
-    ``scope_col`` (e.g. a domain column) counts frequency WITHIN each
-    scope — the RefinedWeb/CCNet formulation where "subscribe to our
-    newsletter" is boilerplate because it repeats across one host's
-    pages, not across the web.
-
-    Plan shape: explode → per-(digest, doc) counts (map-side combined)
-    → per-digest totals, so document frequency is a plain ``count(*)``
-    instead of a ``count_distinct`` expand over the occurrence list.
-    The line text rides through as a ``min`` fold (all occurrences of a
-    digest share it)."""
-    _check_line_params(delimiter, min_docs)
-    keys = ([scope_col] if scope_col is not None else []) + ["digest"]
-    digested = _exploded_lines(
-        df, text_col, id_col, delimiter, min_line_chars, scope_col
-    ).filter(F.col("digest").isNotNull())
-    perdoc = digested.groupBy(*keys, id_col).agg(
-        F.count(F.lit(1)).alias("_c"), F.min("line").alias("_line")
-    )
-    out_cols = ([scope_col] if scope_col is not None else []) + [
-        "line",
-        "n_docs",
-        "n_occurrences",
-    ]
-    return (
-        perdoc.groupBy(*keys)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_c").alias("n_occurrences"),
-            F.min("_line").alias("line"),
-        )
-        .filter(F.col("n_docs") >= min_docs)
-        .select(*out_cols)
-    )
-
-
 def corpus_boilerplate_filter(
     df: DataFrame,
     text_col: str = "text",
@@ -543,8 +413,8 @@ def corpus_boilerplate_filter(
     false positives on trivial lines; the real guard is ``min_docs`` —
     a line must repeat across documents to be template chrome.  Both
     parameters change the output; there is no silent default cap, and
-    :func:`boilerplate_lines` with the same parameters IS the audit of
-    what was removed.
+    each row's ``n_lines - n_lines_kept`` counts what was removed from
+    it (curate_job reports their sum).
 
     Returns ``(id_col, clean_text, n_lines, n_lines_kept)`` — the
     corpus_line_dedup output shape, so curation chains can swap or
@@ -758,283 +628,6 @@ def corpus_span_dedup(
     )
 
 
-def shingle_postings(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """The exploded ``(id_col, shingle)`` posting frame both
-    :func:`ngram_jaccard_pairs` and :func:`jaccard_hot_shingles` start
-    from.  For the capped+audited pairing, build it once, ``persist()``,
-    pass to both via their ``shingled`` parameter, and unpersist after
-    materializing (caller-owned lifecycle — bloom-bitmap contract)."""
-    return (
-        with_shingles(df, text_col, n)
-        .select(id_col, F.explode("shingles").alias("shingle"))
-        .select(
-            id_col,
-            # the shingle width rides as column metadata so a consumer
-            # called with a DIFFERENT n can refuse the frame instead of
-            # silently computing the wrong-width Jaccard (never-silent
-            # policy).  Second projection: an alias ON the generator
-            # itself silently drops its metadata.
-            F.col("shingle").alias("shingle", metadata={"shingle_n": n}),
-        )
-    )
-
-
-def jaccard_hot_shingles(
-    df: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_posting: int = 10_000,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
-    """Audit view of the stop-shingles a ``max_posting`` cap would drop
-    from :func:`ngram_jaccard_pairs`: (shingle, n_docs) with n_docs >
-    max_posting.  Run/log this alongside a capped verify job — a cap must
-    never be silent (same contract as :func:`lsh_hot_buckets`); share the
-    capped run's persisted :func:`shingle_postings` frame via
-    ``shingled``."""
-    return _hot_keys(
-        _shingle_posts(df, shingled, text_col, id_col, n),
-        ["shingle"],
-        max_posting,
-    )
-
-
-def _shingle_posts(
-    df: DataFrame | None,
-    shingled: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    n: int,
-) -> DataFrame:
-    """``(id_col, shingle)`` postings: built from ``df``, or the caller's
-    shared :func:`shingle_postings` frame after the param guard."""
-    if shingled is None:
-        if df is None:
-            raise ValueError("pass df or a precomputed shingled frame")
-        return shingle_postings(df, text_col, id_col, n)
-    _check_frame(
-        shingled, "shingled", [id_col, "shingle"], "shingle",
-        f"shingle_postings(df, text_col, {id_col!r}, n)", shingle_n=n,
-    )
-    return shingled.select(id_col, "shingle")
-
-
-def simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-    hash_mode: str = "xxhash64",
-    strategy: str = "auto",
-) -> DataFrame:
-    """Per-row SimHash (the classic bit-majority vote).  Signatures are
-    identical across strategies and hash modes are per-token stable, so
-    the choice is purely physical:
-
-    - ``'hof'``: zero-shuffle higher-order-function fold — one pass over
-      the token-hash array maintains all ``bits`` counters.  Best for
-      short documents at small ``bits`` (no exchange at all).
-    - ``'explode'``: explode tokens → xxhash64 in codegen → ``bits``
-      map-side-combined CASE-sums per doc → pack the signature.  The
-      per-token work runs in WholeStageCodegen instead of interpreted
-      lambda dispatch — measured ~5× faster at ``bits=64`` on 50k-word
-      documents (0.8 s vs 4.1 s, 256 docs × 16 cores); the price is one
-      groupBy exchange of ``bits`` longs per doc (map-side combine makes
-      it doc-count-, not token-count-, proportional).
-    - ``'auto'`` (default): ``explode`` when ``bits > 16`` (the
-      corpus-scale setting, where the lambda-dispatch cost dominates),
-      else ``hof``.
-
-    Each token is hashed exactly ONCE in both strategies.  The previous
-    hof shape (``transform(sequence(0, bits-1), j -> aggregate(split(
-    text), ...))``) re-split the text and re-hashed every token once PER
-    BIT — the CLAUDE.md inlined-array-build trap.  The fix references the
-    arrays only as fold INPUTS (never inside a lambda body), so even
-    CollapseProject inlining them into one projection leaves them
-    evaluated once per row.
-
-    NULL text coalesces to ``''`` BEFORE the split in both strategies
-    (the r3 ADVICE fix: the explode path used to drop NULL-text rows
-    entirely while hof kept them with a NULL signature, so 'auto' changed
-    output cardinality with ``bits``).  A NULL-text document therefore
-    gets the empty-string signature in every strategy and every row
-    survives."""
-    strategy = resolve_strategy(strategy, bits <= 16, ("hof", "explode"))
-    if hash_mode == "portable":
-        th = "CAST(conv(substr(md5(t), 1, 12), 16, 10) AS BIGINT)"
-    else:
-        th = "xxhash64(t)"
-    text = f"coalesce({text_col}, '')"
-    if strategy == "explode":
-        tok = df.select(
-            id_col,
-            F.explode(F.split(F.expr(text), " ")).alias("t"),
-        )
-        h = tok.select(id_col, F.expr(th).alias("h"))
-        aggs = [
-            F.sum(F.expr(f"(shiftright(h, {j}) & 1) * 2 - 1")).alias(f"s{j}")
-            for j in range(bits)
-        ]
-        sums = h.groupBy(id_col).agg(*aggs)
-        sig = " + ".join(
-            f"(CASE WHEN s{j} > 0 THEN shiftleft(1L, {j}) ELSE 0L END)"
-            for j in range(bits)
-        )
-        return sums.select(
-            id_col, F.expr(sig).alias("simhash", metadata=_SIG_META(bits, hash_mode))
-        )
-    hashes = f"transform(split({text}, ' '), t -> {th})"
-    bit_sum = (
-        f"aggregate({hashes}, array_repeat(0L, {bits}), (acc, hv) -> "
-        f"zip_with(acc, sequence(0, {bits - 1}), (c, j) -> "
-        f"c + (CASE WHEN (shiftright(hv, j) & 1) = 1 THEN 1L ELSE -1L END)))"
-    )
-    sig = (
-        f"aggregate(zip_with({bit_sum}, sequence(0, {bits - 1}), "
-        f"(s, j) -> CASE WHEN s > 0 THEN shiftleft(1L, j) ELSE 0L END), "
-        f"0L, (acc, v) -> acc + v)"
-    )
-    return df.select(
-        id_col, F.expr(sig).alias("simhash", metadata=_SIG_META(bits, hash_mode))
-    )
-
-
-def _sig_frame(
-    df: DataFrame,
-    sig: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    bits: int,
-    hash_mode: str,
-) -> DataFrame:
-    """The :func:`simhash` frame: built from ``df``, or the caller's
-    shared ``sig`` frame after the param guard (a wrong ``bits`` would
-    silently slice wrong-width bands)."""
-    if sig is None:
-        return simhash(df, text_col, id_col, bits, hash_mode)
-    _check_frame(
-        sig, "sig", ["simhash"], "simhash", "simhash(df, ...)",
-        simhash_bits=bits, hash_mode=hash_mode,
-    )
-    return sig
-
-
-def _sig_buckets(
-    sig: DataFrame, id_col: str, sig_col: str, bits: int, max_hamming: int
-) -> DataFrame:
-    """Pigeonhole band buckets over a bigint signature column:
-    ``max_hamming + 1`` bands, so any pair within the distance budget
-    shares a whole band.  Emits ``(id, _sig, band, key)``.
-
-    Bits distribute into exactly ``max_hamming + 1`` NONEMPTY bands with
-    balanced widths (⌈bits/bands⌉ then ⌊bits/bands⌋) — the old uniform
-    ceil-width layout could run out of bits and emit FEWER bands (e.g.
-    bits=16, max_hamming=4 → four 4-bit bands and a dropped fifth),
-    silently voiding the exact-recall pigeonhole guarantee for pairs
-    that spread their differences one-per-band.  ``shiftright`` is
-    arithmetic on a signed bigint, but every band key is ``& mask``-ed,
-    so sign-fill bits never reach a key (bit 63 signatures are fine)."""
-    bands = max_hamming + 1
-    if bands > bits:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs {bands} nonempty bands but "
-            f"the signature has only {bits} bits"
-        )
-    base, extra = divmod(bits, bands)
-    band_cols = []
-    start = 0
-    for b in range(bands):
-        w = base + (1 if b < extra else 0)
-        mask = (1 << w) - 1
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(
-                    f"shiftright(`{sig_col}`, {start}) & {mask}"
-                ).alias("key"),
-            )
-        )
-        start += w
-    return sig.select(
-        id_col,
-        F.col(sig_col).alias("_sig"),
-        F.explode(F.array(*band_cols)).alias("bk"),
-    ).select(id_col, "_sig", "bk.band", "bk.key")
-
-
-def simhash_hot_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-    max_hamming: int = 2,
-    hash_mode: str = "xxhash64",
-    max_bucket: int = 10_000,
-    sig: DataFrame | None = None,
-) -> DataFrame:
-    """Audit view of the band buckets a ``max_bucket`` cap would exclude
-    from :func:`simhash_near_dup_pairs` — same never-cap-silently contract
-    as :func:`lsh_hot_buckets`.
-
-    Pass the capped run's persisted :func:`simhash` frame via ``sig`` so
-    the audit reuses the per-token hashing instead of recomputing it
-    (caller owns the persist lifecycle — bloom-bitmap contract)."""
-    sig = _sig_frame(df, sig, text_col, id_col, bits, hash_mode)
-    return _hot_keys(
-        _sig_buckets(sig, id_col, "simhash", bits, max_hamming),
-        ["band", "key"],
-        max_bucket,
-    )
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bits: int = 16,
-    max_hamming: int = 2,
-    hash_mode: str = "xxhash64",
-    max_bucket: int | None = None,
-    sig: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup pairs by SimHash Hamming distance.
-
-    Bucketing uses ``max_hamming + 1`` signature bands: by pigeonhole, any
-    pair within the distance budget agrees on at least one whole band, so
-    recall is EXACT (a two-half scheme only guarantees hamming ≤ 1 — pairs
-    with one flip in each half would be missed).  Each band-sharing pair
-    is then verified with an xor + ``bit_count``; the band equi-join
-    carries (id, signature) rows only.
-
-    Same hot-bucket guard as :func:`lsh_candidate_pairs`, and the same
-    OPT-IN default (``max_bucket=None``): an identical-content
-    mega-cluster shares every band key and makes one bucket quadratic, but
-    bounding recall must be an explicit, audited choice — pass a cap and
-    run/log :func:`simhash_hot_buckets` with it, sharing ONE persisted
-    :func:`simhash` frame between the two calls via ``sig`` (the capped
-    plan references the signature subtree three times and the audit a
-    fourth; Spark does not reuse-merge them — CLAUDE.md).  At corpus
-    scale use ``bits=64`` so the band keyspace doesn't saturate."""
-    sig = _sig_frame(df, sig, text_col, id_col, bits, hash_mode)
-    buck = _sig_buckets(sig, id_col, "simhash", bits, max_hamming)
-    return (
-        _posting_pairs(buck, ["band", "key"], id_col, max_bucket)
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.expr("_sig_a ^ _sig_b")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -1043,8 +636,8 @@ def connected_components(
 ) -> DataFrame:
     """Duplicate-cluster assignment: near-dup PAIRS → (doc_id, cluster_id)
     where ``cluster_id`` is the smallest doc id in the connected
-    component.  The missing last stage of the near-dup pipeline — LSH /
-    simhash / Jaccard emit pairs, but dedup decisions are per CLUSTER
+    component.  The missing last stage of the near-dup pipeline — LSH
+    and SemDeDup emit pairs, but dedup decisions are per CLUSTER
     (keep one representative per component, not one per pair: with pairs
     alone, A~B and B~C can each keep a different winner and the corpus
     retains two near-copies of the same content).
@@ -1138,7 +731,7 @@ def dedup_by_clusters(
     """Cluster-aware near-dup removal: keep ONE representative of every
     connected component of the pair graph, keep all unpaired docs.  The
     end-to-end operator a curation pipeline calls after
-    :func:`lsh_candidate_pairs` / :func:`simhash_near_dup_pairs` —
+    :func:`lsh_candidate_pairs` or ``similarity.semdedup_pairs`` —
     transitive closure means A~B~C keeps exactly one of the three even
     though (A,C) was never emitted as a pair.
 
@@ -1295,251 +888,3 @@ def incremental_near_dedup(
         .distinct()
     )
     return new_df.join(matched, id_col, "left_anti")
-
-
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, the
-    MOSS local-fingerprinting scheme): hash every word ``k``-gram in
-    POSITION order, slide a window of ``w`` consecutive gram hashes, and
-    in each window select the RIGHTMOST minimal hash; the distinct
-    ``(position, hash)`` selections are the document's fingerprint set.
-
-    Guarantees the scheme is used for: any shared run of at least
-    ``w + k - 1`` words between two documents contributes at least one
-    IDENTICAL selected fingerprint to both, while only ~``2/(w+1)`` of
-    gram hashes are kept — a tunable-density substring-match index
-    (one global min/max hash pair per doc could only say "probably same
-    corpus", not "share a passage").
-
-    Output: one row per selected fingerprint, ``(id_col, pos, fp)`` with
-    ``pos`` the 1-based gram index.  Documents shorter than ``k`` words
-    have no grams and emit no rows; documents with 1..w-1 grams emit the
-    rightmost-min over all their grams (one whole-doc window) so short
-    docs still fingerprint.
-
-    Plan shape: three chained per-row projections (split → gram hashes →
-    window fold) and one explode — ZERO exchanges; the output is the
-    posting-list input of :func:`winnow_pairs`.  The word and hash
-    arrays are bound to real columns first (CLAUDE.md: never inline an
-    array build into a lambda body — CollapseProject keeps a bind
-    referenced more than once).  The window fold is a HOF expression —
-    interpreted, not codegen (CLAUDE.md) — with O(grams × w) work per
-    row; measured, though, the fold is NOT the cost driver: per-gram
-    hashing and the selected-row output dominate, so LARGER ``w`` runs
-    faster (density ~2/(w+1) shrinks the explode), 29k docs/s at w=4 →
-    37k at w=16 on 200k 80-word docs × 32 threads (BENCH.md "Winnowing
-    fingerprint cost shape").  Pick ``w`` for the detection guarantee
-    and index density, not fold cost.
-
-    ``hash_mode='portable'`` swaps xxhash64 for the 48-bit md5-prefix
-    hash the DuckDB driver oracle reproduces bit-identically (the
-    rightmost-min tie-break is hash-value-independent, so both modes
-    select the same POSITIONS whenever their hashes order the same
-    way)."""
-    if k < 1 or w < 1:
-        raise ValueError(f"k={k} and w={w} must be >= 1")
-    from .hashing import portable_hash_sql_spark
-
-    ws, hs = fresh_names(df, "_ws", "_hs")
-    gram = f"array_join(slice(`{ws}`, i + 1, {k}), ' ')"
-    h_of = (
-        portable_hash_sql_spark(gram)
-        if hash_mode == "portable"
-        else f"xxhash64({gram})"
-    )
-    bound = df.withColumn(
-        ws, F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
-    ).withColumn(
-        hs,
-        F.expr(
-            f"CASE WHEN size(`{ws}`) >= {k} THEN "
-            f"transform(sequence(0, size(`{ws}`) - {k}), i -> {h_of}) "
-            f"ELSE CAST(array() AS array<bigint>) END"
-        ),
-    )
-    # rightmost minimal hash per window: fold j ascending, replace on
-    # `<=` — equal minima keep the LATER position (the winnowing paper's
-    # robust tie rule, mirrored relationally by the oracle's max(pos)
-    # over h = min).  Struct branches cast identically so the fold's
-    # accumulator type is stable.
-    sel = (
-        f"CASE WHEN size(`{hs}`) >= 1 THEN array_distinct("
-        f"transform(sequence(1, greatest(1, size(`{hs}`) - {w} + 1)), "
-        f"i -> aggregate(sequence(i, least(i + {w} - 1, size(`{hs}`))), "
-        f"named_struct('p', CAST(NULL AS INT), 'h', CAST(NULL AS BIGINT)), "
-        f"(acc, j) -> IF(acc.p IS NULL OR element_at(`{hs}`, j) <= acc.h, "
-        f"named_struct('p', CAST(j AS INT), 'h', element_at(`{hs}`, j)), "
-        f"acc)))) "
-        f"ELSE CAST(array() AS array<struct<p:int,h:bigint>>) END"
-    )
-    picked = bound.select(
-        id_col, F.explode(F.expr(sel)).alias("_fpsel")
-    )
-    # (k, w, hash_mode) ride as column metadata so a consumer handed a
-    # precomputed fps= frame refuses a parameter mismatch instead of
-    # silently ignoring it (shared-frame guard convention; metadata is
-    # set in this SECOND projection — on the generator alias itself it
-    # would be dropped, CLAUDE.md)
-    return picked.select(
-        id_col,
-        F.col("_fpsel.p").alias("pos"),
-        F.col("_fpsel.h").alias(
-            "fp",
-            metadata={
-                "winnow_k": k,
-                "winnow_w": w,
-                "hash_mode": hash_mode,
-            },
-        ),
-    )
-
-
-def _winnow_posts(
-    df: DataFrame | None,
-    fps: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    k: int,
-    w: int,
-    hash_mode: str,
-) -> DataFrame:
-    """Distinct ``(id_col, fp)`` postings from ``df``, or from the
-    caller's shared :func:`winnow_fingerprints` frame after the param
-    guard.  Two windows selecting the same gram yield one posting; two
-    POSITIONS with an identical hash (a repeated passage within one doc)
-    also collapse — shared counts tally distinct shared CONTENT, not
-    occurrences."""
-    if fps is None:
-        if df is None:
-            raise ValueError("pass df or a precomputed fps frame")
-        fps = winnow_fingerprints(df, text_col, id_col, k, w, hash_mode)
-    else:
-        _check_frame(
-            fps, "fps", [id_col, "fp"], "fp",
-            f"winnow_fingerprints(df, ..., {id_col!r})",
-            winnow_k=k, winnow_w=w, hash_mode=hash_mode,
-        )
-    return fps.select(id_col, "fp").distinct()
-
-
-def winnow_pairs(
-    df: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-    min_shared: int = 2,
-    max_posting: int | None = None,
-    hash_mode: str = "xxhash64",
-    fps: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate passage-sharing pairs from winnowed fingerprints: docs
-    sharing at least ``min_shared`` selected fingerprint HASHES, with the
-    shared count — the MOSS-style plagiarism/substring-overlap candidate
-    set (each shared fingerprint witnesses a shared word run of length
-    ≥ ``k``; a shared run of ≥ ``w + k - 1`` words is never missed).
-
-    Same inverted-index shape as :func:`ngram_jaccard_pairs`: posting
-    list per fp hash, self-join, groupBy the id pair — never a cross
-    join.  ``max_posting`` (opt-in, never silent: log
-    :func:`winnow_hot_fps` alongside — the standing cap policy) drops
-    boilerplate fingerprints shared by more documents than that before
-    the join.  Pass a precomputed/persisted :func:`winnow_fingerprints`
-    frame via ``fps`` to share it with the audit view; the pair join
-    carries ids only (fingerprint payloads never enter the shuffle —
-    they ARE the join key).
-
-    Output: ``(doc_a, doc_b, shared)`` with ``doc_a < doc_b``."""
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    posts = _winnow_posts(df, fps, text_col, id_col, k, w, hash_mode)
-    return (
-        _posting_pairs(posts, ["fp"], id_col, max_posting)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-
-
-def winnow_hot_fps(
-    df: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-    max_posting: int = 10_000,
-    hash_mode: str = "xxhash64",
-    fps: DataFrame | None = None,
-) -> DataFrame:
-    """Audit view of the boilerplate fingerprints a ``max_posting`` cap
-    would drop from :func:`winnow_pairs`: ``(fp, n_docs)`` with
-    ``n_docs > max_posting``.  Run/log alongside any capped pair job
-    (cap-audit contract of :func:`jaccard_hot_shingles`); share the
-    capped run's persisted fingerprint frame via ``fps``."""
-    return _hot_keys(
-        _winnow_posts(df, fps, text_col, id_col, k, w, hash_mode),
-        ["fp"],
-        max_posting,
-    )
-
-
-def winnow_cross_pairs(
-    new_df: DataFrame,
-    old_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    w: int = 4,
-    min_shared: int = 2,
-    max_posting: int | None = None,
-    hash_mode: str = "xxhash64",
-    new_fps: DataFrame | None = None,
-    old_fps: DataFrame | None = None,
-) -> DataFrame:
-    """Cross-snapshot passage overlap: (new doc, old doc) pairs sharing
-    at least ``min_shared`` winnowed fingerprint hashes — the
-    SUBSTRING-granularity layer of monthly-recrawl dedup.
-    :func:`~ocr_spark.operators.bloom.incremental_dedup` catches exact
-    re-captures and :func:`incremental_near_dedup` whole-document
-    rewrites (MinHash); this catches the page that QUOTES a prior
-    capture — a shared run of ≥ ``w + k - 1`` words is never missed —
-    so a curation job can audit or down-weight recycled passages
-    instead of only whole-document duplicates.
-
-    Same inverted-index shape as :func:`winnow_pairs`, but the posting
-    join is new×old (never new×new), so the candidate volume is bounded
-    by cross-snapshot sharing.  In a recurring job, PERSIST the old
-    side's fingerprints as the monthly artifact (12 bytes per selected
-    gram) and pass them via ``old_fps`` — the incremental-signature
-    convention of :func:`incremental_near_dedup`.  ``max_posting``
-    (opt-in, audited: log :func:`winnow_hot_fps` over the OLD side —
-    boilerplate lives there) drops fingerprints whose OLD-side posting
-    list exceeds the cap, the :func:`lsh_cross_pairs` rule — so that
-    audit names every dropped fingerprint.
-
-    Output: ``(new_id, old_id, shared)``."""
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    return (
-        _posting_pairs(
-            _winnow_posts(new_df, new_fps, text_col, id_col, k, w, hash_mode),
-            ["fp"],
-            id_col,
-            max_posting,
-            other=_winnow_posts(
-                old_df, old_fps, text_col, id_col, k, w, hash_mode
-            ),
-        )
-        .groupBy(
-            F.col("doc_a").alias("new_id"), F.col("doc_b").alias("old_id")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )

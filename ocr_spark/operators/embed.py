@@ -14,10 +14,11 @@ every downstream operator is unchanged.
 Tokenization is the repo's shared whitespace convention
 (``split(lower(coalesce(text,'')), ' ')`` — identical to operators/lm.py
 and the quality gates), so empty/NULL text yields the single empty token
-and NO document is ever silently dropped (the simhash explode NULL-row
-lesson, r3 ADVICE).
+and NO document is ever silently dropped (an explode of a NULL token
+array emits no rows, so the doc would vanish on that path only).
 
-Two physical strategies, bit-identical output (the simhash precedent):
+Two physical strategies, bit-identical output (integer counts do not
+depend on fold order):
 
 - ``'hof'``: zero-shuffle higher-order-function fold — a pure projection.
   Each token is hashed exactly ONCE into a bound ``_buckets`` column;
@@ -32,8 +33,9 @@ Two physical strategies, bit-identical output (the simhash precedent):
   partition, then ≤ dim entries per doc) — the large-``dim`` /
   long-document path.
 - ``'auto'`` (default): ``explode`` when ``dim > 16``, else ``hof`` —
-  the same flip point simhash measured for interpreted-lambda vs codegen
-  cost.
+  past ~16 lanes the interpreted per-token lambda work costs more than
+  the codegen exchange (a since-deleted 64-lane signature fold measured
+  ~5× in favour of explode on 50k-word documents).
 
 Determinism / oracle parity: counts are exact small integers in float64,
 the norm is a sequential index-order fold (same order in both strategies

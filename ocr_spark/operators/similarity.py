@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ._frames import fresh_names, resolve_strategy, top_n
-from .dedup import _check_frame, _hot_keys, _posting_pairs
+from .dedup import _hot_keys, _posting_pairs
 
 
 def _dot(a: str, b: str) -> str:
@@ -284,7 +284,7 @@ def assign_cells(
     metadata contract — build parameters ride as column metadata so a
     consumer handed a precomputed cells frame (semdedup_pairs ``cells=``)
     can refuse a mismatched geometry instead of silently pairing in the
-    wrong cells (the ``dedup._check_frame`` guard convention) — evolve in
+    wrong cells (the :func:`_check_cells` guard) — evolve in
     exactly one place.  ``strategy`` is
     :func:`prototype_scores`' knob: ``'literal'`` (bit-exact folds, the
     oracle strategy) vs ``'pandas'`` (NumPy matmul, the large-k
@@ -493,12 +493,31 @@ def _check_cells(
     vec_col: str,
     n_cents: int | None = None,
 ) -> None:
-    _check_frame(
-        cells, "cells", [id_col, vec_col, "cell"], "cell",
+    """Shared-frame guard: refuse a precomputed ``cells=`` (or
+    ``scored=``) frame that lacks ``(id, vec, cell)``, or whose ``cell``
+    metadata records an ``n_cents`` / ``vec_col`` other than this call's
+    (a None expectation or an unstamped key is not checked).
+    :func:`prototype_scores` stamps the metadata, so a frame built over
+    other centroids fails loudly instead of silently pairing in the
+    wrong cells."""
+    build = (
         f"assign_cells(df, cents, {vec_col!r}, {id_col!r}) over this "
-        f"call's centroids",
-        n_cents=n_cents, vec_col=vec_col,
+        f"call's centroids"
     )
+    missing = {id_col, vec_col, "cell"} - set(cells.columns)
+    if missing:
+        raise ValueError(
+            f"cells frame lacks columns {sorted(missing)} — build it "
+            f"with {build}"
+        )
+    meta = cells.schema["cell"].metadata or {}
+    for key, want in (("n_cents", n_cents), ("vec_col", vec_col)):
+        got = meta.get(key)
+        if want is not None and got is not None and got != want:
+            raise ValueError(
+                f"cells frame was built with {key}={got!r}; this call "
+                f"passed {want!r} — rebuild it with {build}"
+            )
 
 
 def _cells_frame(

@@ -434,6 +434,22 @@ class TestIncrementalNearDedup:
         # the audit view names what the cap excluded — never silent
         sigs = minhash_signatures(old)
         assert lsh_hot_buckets(sigs, max_bucket=10).count() > 0
+        # the cap counts the OLD side only: three new copies of one old
+        # doc make its band keys hot on the new side alone, so all three
+        # still match under a cap of 2 (and the old-side audit is empty)
+        one_old = spark.createDataFrame(
+            [(300, "one old capture quoted thrice")],
+            "doc_id bigint, text string",
+        )
+        copies = spark.createDataFrame(
+            [(200 + i, "one old capture quoted thrice") for i in range(3)],
+            "doc_id bigint, text string",
+        )
+        kept = incremental_near_dedup(copies, one_old, max_bucket=2)
+        assert kept.count() == 0
+        assert lsh_hot_buckets(
+            minhash_signatures(one_old), max_bucket=2
+        ).count() == 0
 
 
 class TestBitmapFingerprint:

@@ -125,6 +125,71 @@ class TestPipelineVariants:
             want = "ignore" if c.strip().isdigit() else "text"
             assert got[f"u://digit/{i}"] == want, (c, got)
 
+    def test_postprocess_sql_twin_matches_kernel(self, spark):
+        """``pipeline.POSTPROCESS_BLOCKS_EXPR`` (run by
+        ``postprocess_stage``, the SQL twin perfbench's ``post`` layer
+        times) marks exactly the blocks ``kernels.postprocess.
+        should_ignore`` marks: court headings in case and prefix variants,
+        digit-only text with ASCII padding, abandon blocks with 4- and
+        5-char lines, and plain text.  The documented residual gap
+        (pipeline.py, P4: exotic Unicode spaces and superscript digits,
+        which ``str.strip()`` / ``isdigit()`` accept and the regex does
+        not) is left out of the inputs."""
+        from ocr_spark.kernels.postprocess import should_ignore
+        from ocr_spark.pipeline import postprocess_stage
+        from ocr_spark.schemas import BLOCK_TYPE
+        from pyspark.sql import types as T
+
+        heading = "ase 1:23-cv-04567-ABC Document 5 Page 3 of 12"
+        cases = [
+            ("text", ["C" + heading]),
+            ("text", ["CASE 1:23-CV-04567-ABC DOCUMENT 5 PAGE 3 OF 12"]),
+            ("text", ["cAsE 1:23-cv-04567 Filed 01/02/24 page 3 of 12"]),
+            ("abandon", ["Filed 01/02/24 in the District Court, c" + heading]),
+            ("text", ["x" * 49 + "c" + heading]),  # prefix at the 50 cap
+            ("text", ["x" * 50 + "c" + heading]),  # prefix past the cap
+            ("text", ["Case 1:23-cv-04567-ABC Document 5", "Page 3 of 12"]),
+            ("text", ["Case 123 Document 5 Page 3 of 12"]),
+            ("text", ["Case 1:23-cv-04567-ABC Document 5 Page 3"]),
+            ("text", ["42"]),
+            ("text", ["  42  "]),
+            ("text", ["\t7", " "]),
+            ("text", ["\u0664\u0662"]),
+            ("text", ["42a"]),
+            ("text", ["4 2"]),
+            ("text", [""]),
+            ("abandon", ["abcd", "xy"]),
+            ("abandon", ["abcde"]),
+            ("abandon", ["ab", "abcde"]),
+            ("abandon", []),
+            ("abandon", ["Share"]),
+            ("text", ["ab"]),
+            ("text", ["body words here", "and a second line"]),
+        ]
+        box = [0.0, 0.0, 1.0, 1.0]
+        blocks = [
+            (i, box, btype, [(j, box, c) for j, c in enumerate(lines)])
+            for i, (btype, lines) in enumerate(cases)
+        ]
+        schema = T.StructType([
+            T.StructField("url", T.StringType(), False),
+            T.StructField("blocks", T.ArrayType(BLOCK_TYPE), False),
+        ])
+        rows = postprocess_stage(
+            spark.createDataFrame([("u://post/0", blocks)], schema)
+        ).collect()
+        got = [b.type for b in rows[0].blocks]
+        want = [
+            "ignore"
+            if should_ignore(
+                {"type": btype, "lines": [{"content": c} for c in lines]}
+            )
+            else btype
+            for btype, lines in cases
+        ]
+        assert got == want
+        assert {"ignore", "text", "abandon"} <= set(want)
+
     def test_zero_page_doc_survives_as_empty_tree(self, spark):
         """A zero-page document must appear in the output as an empty
         COMPLETED tree (the reference yields pages=[])."""

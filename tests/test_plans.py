@@ -435,24 +435,3 @@ class TestTokenBudgetPlans:
             .toString()
         )
         assert "Exchange SinglePartition" not in plan, plan
-
-
-class TestWinnowBm25Plans:
-    def test_winnow_fingerprints_is_shuffle_free(self, spark):
-        """Winnowing is three chained per-row projections + one explode:
-        no Exchange, no Window, no Join — a 10^12-doc corpus gets its
-        fingerprint postings in the scan stage; only winnow_pairs'
-        posting join shuffles (on the 8-byte fp key)."""
-        from ocr_spark.operators.dedup import winnow_fingerprints
-
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        )
-        plan = (
-            winnow_fingerprints(docs)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        for op in ("Exchange", "Window", "Join"):
-            assert op not in plan, (op, plan)

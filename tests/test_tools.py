@@ -68,6 +68,34 @@ def test_unreached_defs_is_transitive(tmp_path, capsys):
     ]
 
 
+def test_unreached_defs_lists_dead_contract_helpers(tmp_path, capsys):
+    """contract.py is rooted at its registry and at the defs
+    ``__spark_entry__.py`` calls, not at every def it holds: ``_orphan``,
+    which no registry row names, is listed, while the row's ``_q_row``
+    and the library def it calls are not dead contract code."""
+    (tmp_path / "ocr_spark").mkdir()
+    (tmp_path / "ocr_spark" / "mod.py").write_text(
+        "def d():\n    return 1\n"
+    )
+    (tmp_path / "ocr_spark" / "contract.py").write_text(
+        "from .mod import d\n\n\n"
+        "def _q_row():\n    return d()\n\n\n"
+        "def _orphan():\n    return d()\n\n\n"
+        "def queries():\n    return dict(_CASES)\n\n\n"
+        "_CASES = {'row': _q_row}\n"
+    )
+    assert _load_tool("unreached_defs").main(["x", str(tmp_path)]) == 0
+    rows = [
+        line.split("\t")
+        for line in capsys.readouterr().out.splitlines()
+        if not line.startswith("total")
+    ]
+    assert [(r[0].split(":")[0], r[1], r[3]) for r in rows] == [
+        ("ocr_spark/contract.py", "_orphan", "tests-only"),
+        ("ocr_spark/mod.py", "d", "contract"),
+    ]
+
+
 def test_text_analysis_has_no_unreached_defs(capsys):
     """Every def left in operators/text_analysis.py is reached from a job
     or an example; an operator that only a bench row, a contract row or a

@@ -71,124 +71,6 @@ class TestDedup:
         assert got[2] == []
         assert got[3] == []
 
-    def test_simhash_pairs_recall_across_band_boundaries(self, spark):
-        """Regression: pairs whose differing bits span multiple signature
-        regions must still be found (pigeonhole banding, not two halves).
-        Construct signatures via doc text crafted so hamming ≤ 3."""
-        from ocr_spark.operators.dedup import simhash, simhash_near_dup_pairs
-
-        base = "alpha beta gamma delta epsilon zeta eta theta " * 3
-        df = spark.createDataFrame(
-            [(1, base), (2, base + " iota"), (3, base + " iota kappa")],
-            "doc_id long, text string",
-        )
-        sigs = {r.doc_id: r.simhash for r in simhash(df, bits=16).collect()}
-        pairs = simhash_near_dup_pairs(df, bits=16, max_hamming=3).collect()
-        found = {(r.doc_a, r.doc_b) for r in pairs}
-        for a in (1, 2, 3):
-            for b in range(a + 1, 4):
-                ham = bin(sigs[a] ^ sigs[b]).count("1")
-                if ham <= 3:
-                    assert (a, b) in found, (a, b, ham)
-
-    def test_simhash_bands_exactly_max_hamming_plus_one(self, spark):
-        """Regression (r5 review): bits=16, max_hamming=4 used to emit
-        FOUR bands (ceil-width ran out of bits), so a pair differing by
-        one bit in each old band — bits 0,4,8,12 — was silently missed
-        despite hamming 4 <= budget.  Balanced widths guarantee exactly
-        max_hamming+1 nonempty bands, restoring the pigeonhole."""
-        from ocr_spark.operators.dedup import _sig_buckets
-
-        sig = spark.createDataFrame(
-            [(1, 0), (2, 1 | (1 << 4) | (1 << 8) | (1 << 12))],
-            "doc_id long, simhash long",
-        )
-        rows = _sig_buckets(
-            sig, "doc_id", "simhash", bits=16, max_hamming=4
-        ).collect()
-        assert {r.band for r in rows} == {0, 1, 2, 3, 4}
-        by_doc = {
-            d: {(r.band, r.key) for r in rows if r.doc_id == d}
-            for d in (1, 2)
-        }
-        assert by_doc[1] & by_doc[2], "pigeonhole violated: no shared band"
-        with pytest.raises(ValueError, match="nonempty bands"):
-            _sig_buckets(
-                sig, "doc_id", "simhash", bits=4, max_hamming=4
-            ).collect()
-
-    def test_sign_bit_signature_bands_safely(self, spark):
-        """A signature with bit 63 set (negative bigint) must band and
-        pair correctly — arithmetic shiftright's sign-fill is masked."""
-        from ocr_spark.operators.dedup import simhash_near_dup_pairs
-
-        neg = -(2**63) | 1  # bit 63 and bit 0
-        sig = spark.createDataFrame(
-            [(1, neg), (2, neg ^ (1 << 62))],
-            "doc_id long, simhash long",
-        )
-        got = simhash_near_dup_pairs(
-            sig, bits=64, max_hamming=1, sig=sig
-        ).collect()
-        assert [(r.doc_a, r.doc_b, r.hamming) for r in got] == [(1, 2, 1)]
-
-    def test_simhash_strategies_identical(self, docs):
-        """The zero-shuffle hof fold and the codegen explode aggregation
-        must produce bit-identical signatures (integer bit-sums are
-        order-independent), in both hash modes and at both bit widths —
-        the strategy choice is purely physical."""
-        from ocr_spark.operators.dedup import simhash
-
-        sample = docs.limit(40)
-        for bits in (16, 64):
-            for mode in ("xxhash64", "portable"):
-                hof = {
-                    r.doc_id: r.simhash
-                    for r in simhash(
-                        sample, bits=bits, hash_mode=mode, strategy="hof"
-                    ).collect()
-                }
-                exp = {
-                    r.doc_id: r.simhash
-                    for r in simhash(
-                        sample, bits=bits, hash_mode=mode, strategy="explode"
-                    ).collect()
-                }
-                assert hof == exp, (bits, mode)
-
-    def test_simhash_rejects_unknown_strategy(self, docs):
-        """A misspelt strategy must raise, not silently run the hof path."""
-        from ocr_spark.operators.dedup import simhash
-
-        with pytest.raises(ValueError, match="strategy"):
-            simhash(docs, strategy="bogus")
-
-    def test_ngram_jaccard_exact_dup_is_one(self, docs):
-        from ocr_spark.operators.dedup import ngram_jaccard_pairs
-
-        dup = docs.limit(2).withColumn("doc_id", F.col("doc_id") + 1000000)
-        pairs = ngram_jaccard_pairs(
-            docs.limit(2).unionByName(dup), threshold=0.99
-        ).collect()
-        found = {(p.doc_a, p.doc_b): p.jaccard for p in pairs}
-        assert found[(0, 1000000)] == pytest.approx(1.0)
-
-    def test_simhash_deterministic_and_near_dup(self, docs):
-        from ocr_spark.operators.dedup import simhash, simhash_near_dup_pairs
-
-        a = {r.doc_id: r.simhash for r in simhash(docs.limit(20)).collect()}
-        b = {r.doc_id: r.simhash for r in simhash(docs.limit(20)).collect()}
-        assert a == b
-        assert all(0 <= v < (1 << 16) for v in a.values())
-
-        dup = docs.limit(3).withColumn("doc_id", F.col("doc_id") + 1000000)
-        pairs = simhash_near_dup_pairs(
-            docs.limit(30).unionByName(dup), max_hamming=0
-        ).collect()
-        found = {(p.doc_a, p.doc_b) for p in pairs}
-        for i in range(3):
-            assert (i, i + 1000000) in found
-
 
 class TestSimilarity:
     def test_trained_centroids_beat_seed_pick_on_clustered_corpus(
@@ -458,85 +340,6 @@ class TestHotBucketGuards:
         assert len(hot) == 4  # all 4 bands of the mega-cluster
         assert all(r.n_docs == 10_000 for r in hot)
 
-    def test_shared_sig_and_shingled_frames(self, spark):
-        """simhash pairs/audit share a sig frame; jaccard pairs/audit
-        share a shingle_postings frame — identical results either way."""
-        from ocr_spark.operators.dedup import (
-            jaccard_hot_shingles,
-            ngram_jaccard_pairs,
-            shingle_postings,
-            simhash,
-            simhash_hot_buckets,
-            simhash_near_dup_pairs,
-        )
-
-        rows = [(i, "common boilerplate body text here") for i in range(40)]
-        rows += [
-            (101, "alpha beta gamma delta epsilon zeta"),
-            (102, "alpha beta gamma delta epsilon zeta eta"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-
-        sig = simhash(df, bits=16).persist()
-        try:
-            a = sorted(
-                (r.doc_a, r.doc_b)
-                for r in simhash_near_dup_pairs(
-                    df, bits=16, max_hamming=3, max_bucket=10, sig=sig
-                ).collect()
-            )
-            b = sorted(
-                (r.doc_a, r.doc_b)
-                for r in simhash_near_dup_pairs(
-                    df, bits=16, max_hamming=3, max_bucket=10
-                ).collect()
-            )
-            assert a == b
-            ha = sorted(
-                (r.band, r.key, r.n_docs)
-                for r in simhash_hot_buckets(
-                    df, bits=16, max_hamming=3, max_bucket=10, sig=sig
-                ).collect()
-            )
-            hb = sorted(
-                (r.band, r.key, r.n_docs)
-                for r in simhash_hot_buckets(
-                    df, bits=16, max_hamming=3, max_bucket=10
-                ).collect()
-            )
-            assert ha == hb and len(ha) > 0
-        finally:
-            sig.unpersist()
-
-        sh = shingle_postings(df).persist()
-        try:
-            ja = sorted(
-                (r.doc_a, r.doc_b, r.common)
-                for r in ngram_jaccard_pairs(
-                    df, threshold=0.5, max_posting=10, shingled=sh
-                ).collect()
-            )
-            jb = sorted(
-                (r.doc_a, r.doc_b, r.common)
-                for r in ngram_jaccard_pairs(
-                    df, threshold=0.5, max_posting=10
-                ).collect()
-            )
-            assert ja == jb
-            wa = sorted(
-                (r.shingle, r.n_docs)
-                for r in jaccard_hot_shingles(
-                    max_posting=10, shingled=sh
-                ).collect()
-            )
-            wb = sorted(
-                (r.shingle, r.n_docs)
-                for r in jaccard_hot_shingles(df, max_posting=10).collect()
-            )
-            assert wa == wb and len(wa) > 0
-        finally:
-            sh.unpersist()
-
     def test_lsh_guard_disabled_keeps_old_semantics(self, spark):
         from ocr_spark.operators.dedup import (
             lsh_candidate_pairs,
@@ -556,44 +359,6 @@ class TestHotBucketGuards:
             for p in lsh_candidate_pairs(sigs, max_bucket=10_000).collect()
         )
         assert a == b and (100, 101) in a
-
-    def test_jaccard_stop_shingle_capped_and_audited(self, spark):
-        """A stop-shingle shared by 10k docs must not make the verify
-        self-join quadratic when the posting cap is on — and the audit
-        view names exactly what the cap dropped."""
-        import time
-
-        from ocr_spark.operators.dedup import (
-            jaccard_hot_shingles,
-            ngram_jaccard_pairs,
-        )
-
-        # every doc shares the boilerplate trigram run; each also has a
-        # unique tail so docs are not exact dups of each other
-        rows = [
-            (i, f"click here to subscribe now unique{i} tail{i} words{i}")
-            for i in range(10_000)
-        ]
-        rows += [
-            (20_001, "alpha beta gamma delta epsilon zeta"),
-            (20_002, "alpha beta gamma delta epsilon zeta eta"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string").cache()
-
-        t0 = time.time()
-        pairs = ngram_jaccard_pairs(
-            df, threshold=0.5, max_posting=1_000
-        ).collect()
-        elapsed = time.time() - t0
-        # the shared-shingle postings (~10k each → ~50M join rows apiece)
-        # are dropped; the genuine near-dup pair still verifies
-        assert (20_001, 20_002) in {(p.doc_a, p.doc_b) for p in pairs}
-        assert all(p.doc_a > 10_000 for p in pairs)
-        assert elapsed < 60, f"quadratic task suspected: {elapsed:.1f}s"
-
-        hot = jaccard_hot_shingles(df, max_posting=1_000).collect()
-        assert len(hot) == 3  # the three boilerplate trigrams
-        assert all(r.n_docs == 10_000 for r in hot)
 
     def test_default_caps_are_off(self, spark):
         """Recall must never be bounded silently: with no explicit cap,
@@ -1718,7 +1483,8 @@ class TestSpanDedup:
         assert out[3].n_tokens == out[3].n_tokens_kept
         # shorter than width → no windows → untouched
         assert out[5].clean_text == "short doc"
-        # NULL text behaves as '' and the row SURVIVES (simhash r3 lesson)
+        # NULL text behaves as '' and the row SURVIVES: a NULL must not
+        # silently drop a document
         assert out[4].clean_text == ""
         assert out[4].n_dup_spans == 0
 
@@ -2403,62 +2169,6 @@ class TestChunkText:
         assert "Exchange" not in plan and "Join" not in plan
 
 
-class TestSharedFrameParamGuards:
-    """A precomputed shared frame (sig= / shingled= / banded=) built with
-    different parameters than the consuming call would silently bucket
-    under the wrong geometry (r5 review finding) — the producers stamp
-    their parameters as column metadata and the consumers refuse a
-    mismatch."""
-
-    def test_simhash_sig_bits_mismatch_raises(self, docs):
-        from ocr_spark.operators.dedup import (
-            simhash,
-            simhash_hot_buckets,
-            simhash_near_dup_pairs,
-        )
-
-        sig = simhash(docs, bits=64)
-        with pytest.raises(ValueError, match="bits=64"):
-            simhash_near_dup_pairs(docs, bits=16, sig=sig)
-        with pytest.raises(ValueError, match="bits=64"):
-            simhash_hot_buckets(docs, bits=16, sig=sig)
-        # matching params pass through (smoke: plan builds)
-        simhash_near_dup_pairs(docs, bits=64, sig=sig).schema
-
-    def test_simhash_sig_hash_mode_mismatch_raises(self, docs):
-        from ocr_spark.operators.dedup import simhash, simhash_near_dup_pairs
-
-        sig = simhash(docs, bits=16, hash_mode="portable")
-        with pytest.raises(ValueError, match="hash_mode"):
-            simhash_near_dup_pairs(docs, bits=16, sig=sig)
-
-    def test_shingle_postings_n_mismatch_raises(self, docs):
-        from ocr_spark.operators.dedup import (
-            jaccard_hot_shingles,
-            ngram_jaccard_pairs,
-            shingle_postings,
-        )
-
-        sh = shingle_postings(docs, n=3)
-        with pytest.raises(ValueError, match="n=3"):
-            ngram_jaccard_pairs(docs, n=5, shingled=sh)
-        with pytest.raises(ValueError, match="n=3"):
-            jaccard_hot_shingles(docs, n=5, shingled=sh)
-        ngram_jaccard_pairs(docs, n=3, shingled=sh).schema
-
-    def test_metadata_survives_persist_and_select(self, docs):
-        """The guard rides column metadata, which must survive the
-        documented persist-and-share lifecycle."""
-        from ocr_spark.operators.dedup import shingle_postings
-
-        sh = shingle_postings(docs, n=4).select("doc_id", "shingle").persist()
-        try:
-            meta = sh.schema["shingle"].metadata
-            assert meta.get("shingle_n") == 4
-        finally:
-            sh.unpersist()
-
-
 class TestBlockedWordsPlanShape:
     def test_phrase_branch_single_normalize_pass(self, spark):
         """PushDownPredicates inlines a once-referenced alias into the
@@ -3076,12 +2786,40 @@ class TestPrototypePrune:
             prototype_prune(
                 embs, cents, scored=prototype_scores(embs, other)
             )
+        # the metadata the refusal reads survives a shared frame's
+        # persist-and-select lifecycle
+        shared = prototype_scores(embs, other).persist()
+        try:
+            with pytest.raises(ValueError, match="n_cents=2"):
+                prototype_prune(
+                    embs, cents, scored=shared.select(*shared.columns)
+                )
+        finally:
+            shared.unpersist()
+
+
+def _removed_lines(texts, rows):
+    """``{line: {doc ids}}`` of the input lines missing from each filtered
+    row's ``clean_text``; checks that ``n_lines - n_lines_kept`` counts
+    them and that no removed line survives anywhere in its document."""
+    removed = {}
+    for r in rows:
+        lines = (texts[r.doc_id] or "").split("\n")
+        kept = r.clean_text.split("\n")
+        gone = [line for line in lines if line not in kept]
+        assert (r.n_lines, r.n_lines - r.n_lines_kept) == (
+            len(lines), len(gone)
+        ), r
+        for line in gone:
+            removed.setdefault(line, set()).add(r.doc_id)
+    return removed
 
 
 class TestBoilerplateFilter:
     """corpus_boilerplate_filter removes ALL occurrences of high-document-
-    frequency lines (vs corpus_line_dedup's keep-one winner), and
-    boilerplate_lines is its exact audit twin."""
+    frequency lines (vs corpus_line_dedup's keep-one winner), and its own
+    ``clean_text`` / ``n_lines_kept`` outputs are the audit of what it
+    removed."""
 
     @pytest.fixture(scope="class")
     def corpus(self, spark):
@@ -3140,30 +2878,20 @@ class TestBoilerplateFilter:
         assert got[1].n_lines_kept == 3
 
     def test_report_is_the_filters_audit(self, spark, corpus):
-        from ocr_spark.operators.dedup import (
-            boilerplate_lines,
-            corpus_boilerplate_filter,
-        )
+        """The lines the filter removed, read off its own outputs, are
+        exactly the lines in two or more documents, each gone from every
+        document that had it."""
+        from ocr_spark.operators.dedup import corpus_boilerplate_filter
 
-        rep = boilerplate_lines(corpus, min_docs=2).collect()
-        by_line = {r.line: r for r in rep}
-        assert set(by_line) == {
-            "subscribe to our newsletter today",
-            "shared tail line",
+        texts = {r.doc_id: r.text for r in corpus.collect()}
+        rows = corpus_boilerplate_filter(corpus, min_docs=2).collect()
+        assert _removed_lines(texts, rows) == {
+            "subscribe to our newsletter today": {1, 2, 3},
+            "shared tail line": {3, 4},
         }
-        assert by_line["subscribe to our newsletter today"].n_docs == 3
-        assert by_line["shared tail line"].n_docs == 2
-        # every reported line is absent from the filtered corpus
-        cleaned = corpus_boilerplate_filter(corpus, min_docs=2).collect()
-        for r in cleaned:
-            for line in by_line:
-                assert line not in r.clean_text.split("\n")
 
     def test_scope_col_counts_within_scope(self, spark):
-        from ocr_spark.operators.dedup import (
-            boilerplate_lines,
-            corpus_boilerplate_filter,
-        )
+        from ocr_spark.operators.dedup import corpus_boilerplate_filter
 
         nav = "home products about contact"
         df = spark.createDataFrame(
@@ -3174,20 +2902,16 @@ class TestBoilerplateFilter:
             ],
             "doc_id long, domain string, text string",
         )
-        got = {
-            r.doc_id: r.clean_text
-            for r in corpus_boilerplate_filter(
-                df, min_docs=2, scope_col="domain"
-            ).collect()
-        }
+        rows = corpus_boilerplate_filter(
+            df, min_docs=2, scope_col="domain"
+        ).collect()
+        got = {r.doc_id: r.clean_text for r in rows}
         # nav repeats WITHIN a.com → removed there; b.com has it once → kept
         assert got[1] == "alpha site page one"
         assert got[2] == "alpha site page two"
         assert got[3] == f"{nav}\nbeta site single page"
-        rep = boilerplate_lines(df, min_docs=2, scope_col="domain").collect()
-        assert [(r.domain, r.line, r.n_docs) for r in rep] == [
-            ("a.com", nav, 2)
-        ]
+        texts = {r.doc_id: r.text for r in df.collect()}
+        assert _removed_lines(texts, rows) == {nav: {1, 2}}
 
     def test_partitioning_invariant(self, spark, docs):
         from ocr_spark.operators.dedup import corpus_boilerplate_filter
@@ -3210,287 +2934,9 @@ class TestBoilerplateFilter:
                 assert by_id[r[0] - 500000][1] == r[1]
 
     def test_validation(self, spark, corpus):
-        from ocr_spark.operators.dedup import (
-            boilerplate_lines,
-            corpus_boilerplate_filter,
-        )
+        from ocr_spark.operators.dedup import corpus_boilerplate_filter
 
         with pytest.raises(ValueError, match="min_docs"):
             corpus_boilerplate_filter(corpus, min_docs=0)
         with pytest.raises(ValueError, match="delimiter"):
-            boilerplate_lines(corpus, delimiter=".")
-
-
-class TestWinnowFingerprints:
-    """Winnowing (MOSS) local fingerprints: rightmost-min-per-window
-    selection differentially vs a pure-Python reference, the shared-run
-    detection guarantee, and the posting-join pair op."""
-
-    @staticmethod
-    def _pyref(text, k=3, w=4):
-        import hashlib
-
-        wsv = (text or "").split(" ")
-        if len(wsv) < k:
-            return set()
-        grams = [" ".join(wsv[i : i + k]) for i in range(len(wsv) - k + 1)]
-        hs = [
-            int(hashlib.md5(g.encode()).hexdigest()[:12], 16)
-            for g in grams
-        ]
-        n = len(hs)
-        out = set()
-        for i in range(1, max(1, n - w + 1) + 1):
-            best = None
-            for j in range(i, min(i + w - 1, n) + 1):
-                if best is None or hs[j - 1] <= hs[best - 1]:
-                    best = j
-            out.add((best, hs[best - 1]))
-        return out
-
-    def test_matches_python_reference(self, spark):
-        from ocr_spark.operators.dedup import winnow_fingerprints
-
-        rows = [
-            (1, "a b c d e f g h"),
-            (2, "x y a b c d e f"),
-            (3, "q r"),  # < k words: no grams, no rows
-            (4, "p q r s"),  # 2 grams < w: one whole-doc window
-            (5, None),
-            (6, "t t t t t t t t t t"),  # identical grams: tie-break path
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        got = {}
-        for r in winnow_fingerprints(df, hash_mode="portable").collect():
-            got.setdefault(r.doc_id, set()).add((r.pos, r.fp))
-        for d, t in rows:
-            exp = self._pyref(t)
-            assert got.get(d, set()) == exp, f"doc {d}"
-
-    def test_density_and_guarantee(self, spark):
-        """~2/(w+1) of grams selected; any shared (w+k-1)-word run yields
-        a shared fingerprint."""
-        from ocr_spark.operators.dedup import (
-            winnow_fingerprints,
-            winnow_pairs,
-        )
-
-        import random
-
-        rng = random.Random(7)
-        words = [f"t{rng.randrange(5000)}" for _ in range(4000)]
-        shared = ["s1", "s2", "s3", "s4", "s5", "s6"]  # w + k - 1 = 6
-        d1 = " ".join(words[:2000] + shared)
-        d2 = " ".join(shared + words[2000:])
-        df = spark.createDataFrame(
-            [(1, d1), (2, d2)], "doc_id long, text string"
-        )
-        fps = winnow_fingerprints(df).collect()
-        n1 = sum(1 for r in fps if r.doc_id == 1)
-        grams1 = 2006 - 3 + 1
-        assert 0.25 * grams1 < n1 < 0.55 * grams1  # 2/(w+1) = 0.4 ± noise
-        pairs = winnow_pairs(df, min_shared=1).collect()
-        assert any(p.doc_a == 1 and p.doc_b == 2 for p in pairs)
-
-    def test_pairs_cap_with_audit(self, spark):
-        from ocr_spark.operators.dedup import (
-            winnow_fingerprints,
-            winnow_hot_fps,
-            winnow_pairs,
-        )
-
-        # 30 clones + 2 unrelated docs: every clone fp is hot at cap 10
-        clones = [(i, "c1 c2 c3 c4 c5 c6 c7 c8") for i in range(30)]
-        df = spark.createDataFrame(
-            clones + [(100, "u1 u2 u3 u4 u5"), (101, "u1 u2 u3 u4 u5")],
-            "doc_id long, text string",
-        )
-        fps = winnow_fingerprints(df)
-        capped = winnow_pairs(df, min_shared=1, max_posting=10, fps=fps)
-        pairs = capped.collect()
-        assert sorted((p.doc_a, p.doc_b) for p in pairs) == [(100, 101)]
-        hot = winnow_hot_fps(df, max_posting=10, fps=fps).collect()
-        assert all(r.n_docs == 30 for r in hot) and len(hot) >= 1
-
-    def test_rejects_bad_params(self, spark):
-        from ocr_spark.operators.dedup import winnow_fingerprints
-
-        df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="must be >= 1"):
-            winnow_fingerprints(df, k=0)
-        with pytest.raises(ValueError, match="must be >= 1"):
-            winnow_fingerprints(df, w=0)
-
-
-class TestWinnowDifferential:
-    def test_randomized_differential_sweep(self, spark):
-        """200 seeded random docs across the degenerate regimes — tiny
-        alphabets (forcing equal-hash ties inside windows), lengths
-        straddling every edge (empty, < k, < w+k-1), and three (k, w)
-        configs including k=1 (unigram grams) and w=1 (every gram
-        selected) — each config one Spark job, every doc compared to the
-        pure-Python reference."""
-        import random
-
-        from ocr_spark.operators.dedup import winnow_fingerprints
-
-        rng = random.Random(20260821)
-        rows = []
-        for d in range(200):
-            alpha = rng.choice([1, 2, 3, 8])
-            nw = rng.randrange(0, 13)
-            words = [f"a{rng.randrange(alpha)}" for _ in range(nw)]
-            rows.append((d, " ".join(words)))
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        import hashlib
-
-        def pyref(text, k, w):
-            wsv = (text or "").split(" ")
-            if len(wsv) < k:
-                return set()
-            grams = [
-                " ".join(wsv[i : i + k]) for i in range(len(wsv) - k + 1)
-            ]
-            hs = [
-                int(hashlib.md5(g.encode()).hexdigest()[:12], 16)
-                for g in grams
-            ]
-            n = len(hs)
-            out = set()
-            for i in range(1, max(1, n - w + 1) + 1):
-                best = None
-                for j in range(i, min(i + w - 1, n) + 1):
-                    if best is None or hs[j - 1] <= hs[best - 1]:
-                        best = j
-                out.add((best, hs[best - 1]))
-            return out
-
-        for k, w in ((3, 4), (1, 1), (2, 6)):
-            got = {}
-            res = winnow_fingerprints(
-                df, k=k, w=w, hash_mode="portable"
-            ).collect()
-            for r in res:
-                got.setdefault(r.doc_id, set()).add((r.pos, r.fp))
-            for d, t in rows:
-                assert got.get(d, set()) == pyref(t, k, w), (k, w, d, t)
-
-    def test_shared_fps_frame_refuses_param_mismatch(self, spark):
-        from ocr_spark.operators.dedup import (
-            winnow_fingerprints,
-            winnow_hot_fps,
-            winnow_pairs,
-        )
-
-        df = spark.createDataFrame(
-            [(1, "a b c d e f g h")], "doc_id long, text string"
-        )
-        fps = winnow_fingerprints(df, k=3, w=4)
-        with pytest.raises(ValueError, match="winnow_w=4"):
-            winnow_pairs(df, w=8, fps=fps)
-        with pytest.raises(ValueError, match="winnow_k=3"):
-            winnow_hot_fps(df, k=2, fps=fps)
-        with pytest.raises(ValueError, match="hash_mode"):
-            winnow_pairs(df, hash_mode="portable", fps=fps)
-        with pytest.raises(ValueError, match="lacks columns"):
-            winnow_pairs(df, fps=df.select("doc_id"))
-        # matched params pass through
-        assert winnow_pairs(df, min_shared=1, fps=fps).count() == 0
-
-    def test_cross_pairs_detect_quoted_passage(self, spark):
-        """A new doc quoting a 6-word run (= w+k-1) from an old capture
-        must pair with it; unrelated docs must not; and the result
-        matches a brute-force Python cross-join on the reference
-        fingerprint sets."""
-        import hashlib
-
-        from ocr_spark.operators.dedup import (
-            winnow_cross_pairs,
-            winnow_fingerprints,
-        )
-
-        old_rows = [
-            (100, "p1 p2 p3 p4 p5 p6 p7 p8 p9"),
-            (101, "z1 z2 z3 z4 z5"),
-        ]
-        new_rows = [
-            (1, "n1 n2 p3 p4 p5 p6 p7 p8 n3"),  # quotes 6 words of 100
-            (2, "m1 m2 m3 m4 m5 m6"),           # unrelated
-        ]
-        old = spark.createDataFrame(old_rows, "doc_id long, text string")
-        new = spark.createDataFrame(new_rows, "doc_id long, text string")
-
-        def fps(text, k=3, w=4):
-            wsv = text.split(" ")
-            grams = [" ".join(wsv[i:i + k]) for i in range(len(wsv) - k + 1)]
-            hs = [int(hashlib.md5(g.encode()).hexdigest()[:12], 16)
-                  for g in grams]
-            n = len(hs)
-            out = set()
-            for i in range(1, max(1, n - w + 1) + 1):
-                best = None
-                for j in range(i, min(i + w - 1, n) + 1):
-                    if best is None or hs[j - 1] <= hs[best - 1]:
-                        best = j
-                out.add(hs[best - 1])
-            return out
-
-        exp = {}
-        for nid, nt in new_rows:
-            for oid, ot in old_rows:
-                shared = len(fps(nt) & fps(ot))
-                if shared >= 1:
-                    exp[(nid, oid)] = shared
-        got = {
-            (r.new_id, r.old_id): r.shared
-            for r in winnow_cross_pairs(
-                new, old, min_shared=1, hash_mode="portable"
-            ).collect()
-        }
-        assert got == exp
-        assert (1, 100) in got  # the quoted passage is caught
-        # precomputed old-side artifact path gives identical pairs
-        ofps = winnow_fingerprints(old, hash_mode="portable")
-        got2 = {
-            (r.new_id, r.old_id): r.shared
-            for r in winnow_cross_pairs(
-                new, old, min_shared=1, hash_mode="portable", old_fps=ofps
-            ).collect()
-        }
-        assert got2 == got
-        # param-mismatch guard applies to the shared frames too
-        with pytest.raises(ValueError, match="winnow_w"):
-            winnow_cross_pairs(new, old, w=8, old_fps=ofps)
-
-    def test_cross_pairs_cap_counts_old_side_only(self, spark):
-        """``max_posting`` drops only fingerprints hot on the OLD side
-        (the lsh_cross_pairs rule), so winnow_hot_fps over the old side
-        names every dropped fingerprint.  Three new docs quoting one old
-        doc make the quoted fingerprints hot on the NEW side only — they
-        must survive the cap, not vanish unaudited."""
-        from ocr_spark.operators.dedup import (
-            winnow_cross_pairs,
-            winnow_hot_fps,
-        )
-
-        old = spark.createDataFrame(
-            [(100, "p1 p2 p3 p4 p5 p6 p7 p8 p9")], "doc_id long, text string"
-        )
-        new = spark.createDataFrame(
-            [(i, f"n{i} p2 p3 p4 p5 p6 p7 p8 m{i}") for i in (1, 2, 3)],
-            "doc_id long, text string",
-        )
-
-        def pairs(cap):
-            return {
-                (r.new_id, r.old_id): r.shared
-                for r in winnow_cross_pairs(
-                    new, old, min_shared=1, max_posting=cap
-                ).collect()
-            }
-
-        capped = pairs(2)
-        assert set(capped) == {(1, 100), (2, 100), (3, 100)}
-        assert capped == pairs(None)
-        assert winnow_hot_fps(old, max_posting=2).count() == 0
-
+            corpus_boilerplate_filter(corpus, delimiter=".")

@@ -14,7 +14,11 @@ is by bare name, so a shared name can only hide a def, never invent one.
 Each row carries the first label that applies: ``bench`` when the
 benchmark scripts reach the def by the same rule (its bench row would go
 with it), ``contract`` when contract.py does (its contract row would),
-else ``tests-only``.  The script reports; it deletes nothing.
+else ``tests-only``.  contract.py is rooted at its non-def statements
+(the ``_CASES`` registry and the SQL constants) and at the defs
+``__spark_entry__.py`` calls (``entry``, ``queries``, ``oracle_sql``);
+a contract.py def those roots do not reach is listed too.  The script
+reports; it deletes nothing.
 
 Usage: python tools/unreached_defs.py [repo_root]
 """
@@ -28,6 +32,7 @@ from pathlib import Path
 
 SKIP_DIRS = {"tests", ".git", "__pycache__"}
 BENCH_SCRIPTS = {Path("bench.py"), Path("tools/scale_probes.py")}
+CONTRACT_ENTRY = {"entry", "queries", "oracle_sql"}
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -65,6 +70,7 @@ def main(argv: list[str]) -> int:
     contract = root / "ocr_spark" / "contract.py"
     by_name = defaultdict(list)  # def name -> [(path, node)]
     bench_defs = defaultdict(list)  # the benchmark scripts' own defs
+    contract_defs = defaultdict(list)  # contract.py's own defs
     roots, bench_roots, contract_roots = [], [], []
     for path in _sources(root):
         tree = ast.parse(path.read_text(), str(path))
@@ -72,7 +78,10 @@ def main(argv: list[str]) -> int:
         bench = rel in BENCH_SCRIPTS or rel.parts[0] == "perfbench"
         for stmt in tree.body:
             if path == contract:
-                contract_roots.append(stmt)
+                if isinstance(stmt, _DEFS) and stmt.name not in CONTRACT_ENTRY:
+                    contract_defs[stmt.name].append((path, stmt))
+                else:
+                    contract_roots.append(stmt)
             elif isinstance(stmt, _DEFS):
                 (bench_defs if bench else by_name)[stmt.name].append(
                     (path, stmt)
@@ -85,11 +94,17 @@ def main(argv: list[str]) -> int:
         {n: by_name.get(n, []) + bench_defs.get(n, [])
          for n in by_name.keys() | bench_defs.keys()},
     )
-    in_contract = _reach(contract_roots, by_name)
+    in_contract = _reach(
+        contract_roots,
+        {n: by_name.get(n, []) + contract_defs.get(n, [])
+         for n in by_name.keys() | contract_defs.keys()},
+    )
     pkg = root / "ocr_spark"
     unreached = sorted(
-        ((path, node) for defs in by_name.values() for path, node in defs
-         if path.is_relative_to(pkg) and node not in reached),
+        [(path, node) for defs in by_name.values() for path, node in defs
+         if path.is_relative_to(pkg) and node not in reached]
+        + [(path, node) for defs in contract_defs.values()
+           for path, node in defs if node not in in_contract],
         key=lambda d: (d[0], d[1].lineno),
     )
     totals = {"bench": 0, "contract": 0, "tests-only": 0}
